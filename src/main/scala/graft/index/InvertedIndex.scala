@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.AlphaTermCounts
 import graft.ops.TextOps
 
 /** Inverted index — the Spark-native re-expression of the reference's
@@ -20,11 +21,17 @@ import graft.ops.TextOps
   * nondeterministic (ref: InvertedIndex.java:125-130), which would make any
   * cross-engine check impossible.
   *
-  * Scale notes: one shuffle (the groupBy), identical topology to the MR
-  * job but with Spark's map-side partial aggregation. At 100 TB the only
-  * hazard is posting-list skew for stop-words; `postings` keeps the list
-  * as ArrayType so a later consumer can spill per-word, and callers who
-  * only need frequencies should aggregate counts instead of lists.
+  * Scale notes: [[postingStrings]] is one hash shuffle of one row per
+  * distinct (word, doc) pair — the tokenizer itself combines each
+  * document's repeats ([[graft.functions.AlphaTermCounts]]), the map-side
+  * combiner the reference never configured (SURVEY.md §4.2) — then an
+  * external sort by (word, doc_id) within each partition and one streamed
+  * pass that joins each word's run into its posting string. No operator
+  * holds a word's posting list as an array: the sorter spills, and a
+  * stop-word present in every document holds only its output string in
+  * memory, so no salting is needed for skew. [[postings]] and
+  * [[postingsSalted]] keep the ArrayType form for callers that want the
+  * list as data.
   */
 object InvertedIndex {
 
@@ -91,14 +98,11 @@ object InvertedIndex {
     *
     * Measured (Prof `indexsalt`, 1.8 GB / 300k-page dump, hot "p" word
     * in every page). Round 6: 4 cores — plain 21.6 s, salted 22.0 s;
-    * 32 cores — plain 4.9 s, salted 4.6 s (within ~5% both ways, plain
-    * kept the default). Round 7 re-measure at 4 cores: plain
-    * 26.5–31.7 s across reps, salted 25.1–25.5 s — salted is both
-    * faster and visibly more STABLE (the hot-word task no longer
-    * straggles a 4-slot schedule), so the GB-dump pipeline
-    * ([[graft.pipelines.WikiPipelines.invertedIndex]]) now defaults to
-    * salted; the parquet-scale `inverted_index` key keeps the plain
-    * two-level form (one less shuffle, no skew at that scale). */
+    * 32 cores — plain 4.9 s, salted 4.6 s. Round 7 at 4 cores: plain
+    * 26.5–31.7 s across reps, salted 25.1–25.5 s. [[postingStrings]]
+    * streams each word's run and needs no salt; this form serves the
+    * `inverted_index_salted` key and callers that want the ArrayType
+    * list. */
   def postingsSalted(docs: DataFrame, idCol: String, textCol: String,
                      rangeWidth: Long = 16384L): DataFrame =
     occurrences(docs, idCol, textCol)
@@ -114,13 +118,59 @@ object InvertedIndex {
         p => p("part"))).as("postings"))
 
   /** word → "id1,id2,…" string rows, byte-compatible with the reference's
-    * text sink shape (ref: InvertedIndex.java:123-131) modulo sort order.
-    * `salted = true` routes through [[postingsSalted]] (bit-identical
-    * output — see its scaladoc for when it wins). */
+    * text sink shape (ref: InvertedIndex.java:123-131) modulo sort order,
+    * and equal to [[postings]] joined with `concat_ws(",", …)`: ids sorted
+    * by doc id, each repeated once per occurrence, null ids skipped (a
+    * word found only in null-id documents gets "").
+    *
+    * Plan: per-document term counts from the tokenizer, one hash
+    * repartition on word, a sort by (word, doc_id) within each partition,
+    * and one streamed pass per partition ([[joinRuns]]). The row order of
+    * the result is unspecified; callers sort. */
+  def postingStrings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col(idCol).as("doc_id"), inline(AlphaTermCounts.counts(col(textCol))))
+      .repartition(col("word"))
+      .sortWithinPartitions("word", "doc_id")
+      .select(col("word"), col("doc_id").cast("string"), col("n"))
+      .as[(String, String, Int)]
+      .mapPartitions(joinRuns)
+      .toDF("word", "doc_ids")
+  }
+
+  @deprecated("postingStrings has no per-word list left to salt; `salted` has no effect",
+    "0.1.0")
   def postingStrings(docs: DataFrame, idCol: String, textCol: String,
-                     salted: Boolean = false): DataFrame =
-    (if (salted) postingsSalted(docs, idCol, textCol)
-     else postings(docs, idCol, textCol))
-      .select(col("word"),
-        concat_ws(",", transform(col("postings"), _.cast("string"))).as("doc_ids"))
+                     salted: Boolean): DataFrame =
+    postingStrings(docs, idCol, textCol)
+
+  /** Joins runs of equal words in (word, id, n) rows sorted by word into
+    * one (word, "id,id,…") row per word: each id `n` times, null ids
+    * skipped, as `concat_ws` does. Holds one output string at a time. */
+  private def joinRuns(rows: Iterator[(String, String, Int)]): Iterator[(String, String)] = {
+    val in = rows.buffered
+    val sb = new java.lang.StringBuilder
+    new Iterator[(String, String)] {
+      def hasNext: Boolean = in.hasNext
+      def next(): (String, String) = {
+        val word = in.head._1
+        sb.setLength(0)
+        var first = true
+        while (in.hasNext && in.head._1 == word) {
+          val (_, id, n) = in.next()
+          if (id != null) {
+            var k = 0
+            while (k < n) {
+              if (!first) sb.append(',')
+              sb.append(id)
+              first = false
+              k += 1
+            }
+          }
+        }
+        (word, sb.toString)
+      }
+    }
+  }
 }

@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object TextKV {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** S1 — line scan over one or more paths (the reference's comma-joined
     * `addInputPaths`). One `value: string` column, one row per line. */
   def readLines(spark: SparkSession, paths: String*): DataFrame =
@@ -91,15 +93,12 @@ object TextKV {
       // small inputs keep one split and huge ones keep split overhead
       // amortized. Derived from the INPUT size, not the core count alone —
       // the same formula yields the old behavior on sf-scale fixtures.
-      try {
-        val fs = org.apache.hadoop.fs.FileSystem.get(conf)
-        val totalLen = paths.map { p =>
-          fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
-        }.sum
+      val lens = paths.map(contentLength(conf, _))
+      if (lens.forall(_.isDefined)) {
         val waves = 2L * math.max(1, spark.sparkContext.defaultParallelism)
-        val adaptive = math.max(16L << 20, math.min(128L << 20, totalLen / waves))
+        val adaptive = math.max(16L << 20, math.min(128L << 20, lens.flatten.sum / waves))
         conf.setLong("mapreduce.input.fileinputformat.split.maxsize", adaptive)
-      } catch { case _: Exception => () } // metadata miss: default splits
+      }
     }
     val records = paths.map { p =>
       spark.sparkContext
@@ -111,6 +110,20 @@ object TextKV {
     records.toDF("value")
       .select(concat(col("value"), lit("</page>")).as("value"))
   }
+
+  /** Bytes under `p` from its own filesystem, or None — logged, so the
+    * fallback to default input splits is visible — when its metadata
+    * cannot be read (a glob, a missing path, an unreachable store). */
+  private def contentLength(conf: org.apache.hadoop.conf.Configuration,
+                            p: String): Option[Long] =
+    try {
+      val hp = new org.apache.hadoop.fs.Path(p)
+      Some(hp.getFileSystem(conf).getContentSummary(hp).getLength)
+    } catch {
+      case e: Exception =>
+        log.warn(s"readPages: cannot size input '$p' ($e); using default input splits")
+        None
+    }
 
   /** S2 — `key \t value` text sink. Every column after the first is
     * concatenated into the value with the same tab separator the

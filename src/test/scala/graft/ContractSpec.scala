@@ -11,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ContractSpec extends AnyFunSuite {
 
   private val noOracle = Set(
-    "dedup_simhash",   // xxhash64 — engine-specific by design
     "pagerank")        // unrounded twin of pagerank_oracle
 
   test("every query key has an oracle unless documented no-oracle") {

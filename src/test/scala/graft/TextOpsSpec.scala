@@ -1,5 +1,7 @@
 package graft
 
+import scala.annotation.nowarn
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.TextOps
 import graft.index.InvertedIndex
@@ -121,6 +123,44 @@ class TextOpsSpec extends SparkTestBase {
     // sortedness + duplicate preservation survive the concat
     val dog = plain.find(_._1 == "dog").get._2
     assert(dog == dog.sorted && dog.size == 40 + 14)
+  }
+
+  test("streamed postingStrings ≡ two-level postings joined with ','") {
+    // 4 input partitions; filler words spread the runs over every shuffle
+    // partition. Edge rows: a null doc id (skipped, as concat_ws skips
+    // nulls), a doc id shared by two pages (its ids merge in one run), a
+    // word found only in the null-id doc (""), a word in every doc with
+    // text, and null text (no words).
+    val edge: Seq[(Option[Long], Option[String])] = Seq(
+      (Some(1L), Some("stop alpha alpha Beta")),
+      (Some(2L), Some("stop beta gamma")),
+      (Some(2L), Some("stop gamma GAMMA")),
+      (None, Some("stop orphan alpha alpha")),
+      (Some(10L), None),
+      (Some(10L), Some("stop alpha")))
+    val filler = (20L until 80L).map { i =>
+      val w = s"w${('a' + i % 26).toChar}${('a' + i / 26).toChar}"
+      (Some(i), Some(s"stop $w $w beta"))
+    }
+    val docs = (edge ++ filler).toDF("doc_id", "text").repartition(4)
+    assert(docs.rdd.getNumPartitions >= 3)
+    val want = InvertedIndex.postings(docs, "doc_id", "text")
+      .select(col("word"),
+        concat_ws(",", transform(col("postings"), _.cast("string"))).as("doc_ids"))
+      .as[(String, String)].collect().sorted.toSeq
+    def streamed(df: DataFrame) = df.as[(String, String)].collect().sorted.toSeq
+    assert(streamed(InvertedIndex.postingStrings(docs, "doc_id", "text")) == want)
+    Seq(true, false).foreach { salted =>
+      val got = (InvertedIndex.postingStrings(docs, "doc_id", "text", salted)
+        : @nowarn("cat=deprecation"))
+      assert(streamed(got) == want, s"salted = $salted")
+    }
+    val byWord = want.toMap
+    assert(byWord("orphan") == "")
+    assert(byWord("alpha") == "1,1,10")
+    assert(byWord("gamma") == "2,2,2")
+    assert(byWord("beta") == ("1,2" +: (20 until 80).map(_.toString)).mkString(","))
+    assert(byWord("stop") == ("1,2,2,10" +: (20 until 80).map(_.toString)).mkString(","))
   }
 
   test("explodeTokensWithPos preserves in-document order") {

@@ -62,6 +62,51 @@ class TokensSpec extends SparkTestBase {
     assert(fused == composed)
   }
 
+  test("AlphaTermCounts ≡ groupBy(word).count() over AlphaTokens, per document") {
+    // the shared cases plus repeats in every case mix, letters glued to
+    // multibyte UTF-8, no-letter text, and more distinct words than the
+    // kernel's initial capacity
+    val texts: Seq[Option[String]] = None +: (cases ++ Seq(
+      "the The THE tHe", "a a a b a", "ümlautWordümlaut wordÄword WORD",
+      "....!!!123 ---", "😀dog😀DOG😀 ñdogñ",
+      "one two three four five six seven eight nine ten one ten")).map(Some(_))
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val fused = docs
+      .select(col("doc_id"), inline(graft.functions.AlphaTermCounts.counts(col("text"))))
+      .as[(Long, String, Int)].collect().map { case (d, w, n) => (d, w, n.toLong) }
+      .sorted.toSeq
+    val grouped = docs
+      .select(col("doc_id"), explode(graft.functions.AlphaTokens.tokens(col("text"))).as("word"))
+      .groupBy("doc_id", "word").count()
+      .as[(Long, String, Long)].collect().sorted.toSeq
+    assert(fused == grouped)
+    val nullRow = Seq(Option.empty[String]).toDF("v")
+    assert(nullRow.select(graft.functions.AlphaTermCounts.counts(col("v"))).head().isNullAt(0))
+  }
+
+  test("AlphaTermCounts interpreted: distinct words in first-occurrence order") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    def counts(s: String): Seq[(String, Int)] =
+      graft.functions.AlphaTermCounts(Literal(UTF8String.fromString(s), StringType))
+        .eval(null).asInstanceOf[ArrayData].toSeq[InternalRow](
+          graft.functions.AlphaTermCounts.dataType
+            .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType)
+        .map(r => (r.getUTF8String(0).toString, r.getInt(1)))
+    assert(counts("Dog cat DOG, bird; cat dog") == Seq(("dog", 3), ("cat", 2), ("bird", 1)))
+    assert(counts("") == Seq.empty && counts("123 !?") == Seq.empty)
+    cases.foreach { s =>
+      val want = s.replaceAll("[^a-zA-Z]+", " ").toLowerCase(java.util.Locale.ROOT).trim
+        .split("\\s+").toSeq.filter(_.nonEmpty)
+      assert(counts(s) == want.distinct.map(w => (w, want.count(_ == w))),
+        s"interpreted AlphaTermCounts on '$s'")
+    }
+  }
+
   test("fused tokenizers evaluate identically interpreted and codegen'd") {
     // force the interpreted path (eval) next to the codegen path by
     // evaluating the expression directly
