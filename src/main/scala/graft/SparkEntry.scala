@@ -3914,7 +3914,6 @@ object SparkEntry {
         .drop("_commit_version", "_commit_op")
         .writeStream.format("txlog")
         .option("path", dst).option("statsCols", "o_orderdate")
-        .option("streamApi", streamApi)
         .option("checkpointLocation", ckpt.toString)
         .outputMode("append").start()
       val qid = q.id.toString
@@ -3941,7 +3940,8 @@ object SparkEntry {
     // trigger is ∝ touched windows, never the table, and a dashboard
     // reads committed totals with snapshot isolation. This drives the
     // state-store path through the sink (the incremental physical plan
-    // carries the aggregation state; TxLogSink stages its rows once).
+    // carries the aggregation state; the sink's tasks stage its rows
+    // once).
     // The oracle is the batch recompute over all events: the final
     // upsert per window must equal the full aggregate.
     "stream_txlog_window" -> ((s, d) => withStreamPartitions(s) {
@@ -3966,7 +3966,6 @@ object SparkEntry {
           col("n"), col("cents"))
       val q = agg.writeStream.format("txlog")
         .option("path", dst).option("mergeKey", "k")
-        .option("streamApi", streamApi)
         .option("checkpointLocation", ckpt.toString)
         .outputMode("update").start()
       try q.processAllAvailable() finally q.stop()
@@ -4020,7 +4019,6 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
         .writeStream.format("txlog")
         .option("path", dst)
-        .option("streamApi", streamApi)
         .option("checkpointLocation", ckpt.toString)
         .outputMode("complete").start()
       try q.processAllAvailable() finally q.stop()
@@ -4668,7 +4666,6 @@ object SparkEntry {
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       def runOnce(src: org.apache.spark.sql.DataFrame, merge: Boolean): Unit = {
         var w = src.writeStream.format("txlog").option("path", dir)
-          .option("streamApi", streamApi)
           .option("checkpointLocation", ckpt.toString).outputMode("append")
         if (merge) w = w.option("mergeSchema", "true")
         val q = w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -5442,23 +5439,24 @@ object SparkEntry {
     * independent — every stream key is oracle-checked. */
   private val StreamStatePartitions = 8
 
+  /** The txlog streaming READ API for the keys that tail a txlog
+    * table: v2 (the DSv2 MicroBatchStream source) by default;
+    * `SPARK_GRAFT_STREAM_API=v1` flips every such read back to the v1
+    * Source in one knob, and the `graft.streamApi` SYSTEM PROPERTY
+    * overrides per call — that is how `graft.Bench` runs the
+    * same-window per-key v1↔v2 A/B inside one JVM. Writes have one
+    * sink and never see this value. Both read APIs deliver the same
+    * rows and checkpoints interchange, so the keys' oracles hold on
+    * either. */
+  private def streamApi: String =
+    sys.props.get("graft.streamApi")
+      .orElse(sys.env.get("SPARK_GRAFT_STREAM_API")).getOrElse("v2")
+
   /** Runs a streaming key's body with `spark.sql.shuffle.partitions`
     * capped at [[StreamStatePartitions]] (min with the session value,
     * so a small session keeps its own), restored afterwards. The
     * streaming query pins the conf at `.start()`; the post-run batch
     * read of the memory sink executes under the restored value. */
-  /** The txlog streaming API for the `stream_txlog_*` keys: v2 (the
-    * DSv2 MicroBatchStream source and, since this round, the DSv2
-    * StreamingWrite sink) by default; `SPARK_GRAFT_STREAM_API=v1`
-    * flips every key back to the v1 Source/Sink in one knob, and the
-    * `graft.streamApi` SYSTEM PROPERTY overrides per call — that is
-    * how `graft.Bench` runs the same-window per-key v1↔v2 A/B inside
-    * one JVM. Both APIs share the commit machinery and checkpoints
-    * interchange, so the keys' oracles hold on either. */
-  private def streamApi: String =
-    sys.props.get("graft.streamApi")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_API")).getOrElse("v2")
-
   private def withStreamPartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)

@@ -93,8 +93,11 @@ object Triangles {
       .select(col("a"), col("b"),
         sortedInter(col("na"), col("nb")).as("common"), col("da"), col("db"))
     // hub-low: wedge from the low endpoint, closed against the edge set
-    val elong = e.select(col("a").cast("long").as("pa"),
-      col("b").cast("long").as("pb"))
+    // in the probes' long-cast order (the input-type order of `e`
+    // differs on string ids: "10" < "9")
+    val elong = e.select(
+      least(col("a").cast("long"), col("b").cast("long")).as("pa"),
+      greatest(col("a").cast("long"), col("b").cast("long")).as("pb"))
     val hlEdges = et.filter((col("da") <= cap) =!= (col("db") <= cap))
       .localCheckpoint() // left side of the re-attach AND the probe feed
     val hlHits = hlEdges

@@ -1229,8 +1229,8 @@ private[graft] case class ColStats(typeName: String, min: String,
 
   /** TABLE CHECK constraints, enforced at the one choke point every
     * row-adding write funnels through (append/overwrite/replaceWhere/
-    * merge/update rewrites/streaming appends — v1 DataFrame staging
-    * and the v2 StreamingWrite's task-staged segments alike; Delta
+    * merge/update rewrites/streaming appends — DataFrame staging and
+    * the StreamingWrite's task-staged segments alike; Delta
     * enforces its invariants on every write path the same way). One
     * columnar scan of the just-staged bytes, paid ONLY when
     * constraints exist; the staged read makes the check deterministic
@@ -1263,7 +1263,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     }
   }
 
-  /** Promote a TASK-STAGED segment (the v2 streaming sink's
+  /** Promote a TASK-STAGED segment (the streaming sink's
     * DataWriters wrote its parquet files directly) to a commit-ready
     * one: bytes already carry physical names (the writer factory
     * renames), so the common case is just the write-invariant scan —
@@ -2894,16 +2894,18 @@ private[graft] case class ColStats(typeName: String, min: String,
     * different streaming queries (each numbering its batches from 0)
     * writing to ONE table must not share a dedup namespace — without
     * the app id, the second query's first batches silently dedup
-    * against the first query's and are DROPPED. The txlog sinks (v1
-    * and v2) pass the engine's stable query id (it survives restarts
-    * with the checkpoint and is identical on both APIs, so cross-API
-    * checkpoint interchange keeps deduping); foreachBatch callers of
+    * against the first query's and are DROPPED. The txlog streaming
+    * sink passes the engine's stable query id (it survives restarts
+    * with the checkpoint, and a foreachBatch body that passes the
+    * `sql.streaming.queryId` local property commits under the SAME
+    * key, so a query can move between the two and keep deduping);
+    * foreachBatch callers of
     * the raw API pass their own pipeline id, or None for a
     * single-writer table (the legacy `stream-<batch>` key). */
   private def streamOp(txnAppId: Option[String], batchId: Long): String =
     txnAppId.fold(s"stream-$batchId")(a => s"stream-$a-$batchId")
 
-  /** [[appendStream]] over a TASK-STAGED segment (the v2 streaming
+  /** [[appendStream]] over a TASK-STAGED segment (the streaming
     * sink): identical dedup/commit contract; the already-written
     * staging is reclaimed when the batch id turns out committed. */
   private[graft] def appendStreamStaged(spark: SparkSession, dir: String,
@@ -2920,8 +2922,9 @@ private[graft] case class ColStats(typeName: String, min: String,
     val op = streamOp(txnAppId, batchId)
     var snap = state(dir)
     if (snap.streamOps.contains(op)) {
-      // an at-least-once replay of a committed batch: the v1 path has
-      // staged nothing yet; the v2 path's writers already did — reclaim
+      // an at-least-once replay of a committed batch: a foreachBatch
+      // caller has staged nothing yet; the sink's writers already
+      // did — reclaim
       preStaged.foreach(reclaimUnlessLive(dir, snap, _))
       return None
     }

@@ -144,10 +144,6 @@ class TxLogTable(private[txlog] val dir: String,
     * need different schemas). */
   private def streamV2: Boolean =
     TxLogMicroBatch.streamV2(n => Option(props.get(n)))
-  /** The sink's independent default (v2 since r15; write side has no
-    * schema ambiguity — [[TxLogMicroBatch.sinkV2]]). */
-  private def sinkV2: Boolean =
-    TxLogMicroBatch.sinkV2(n => Option(props.get(n)))
   /** The AUTHORITY for the opt-in: schema(), capabilities() and the
     * scan must agree, and only the construction-time props reach all
     * three (per-read scan options never reach capabilities). */
@@ -184,22 +180,21 @@ class TxLogTable(private[txlog] val dir: String,
     // default (no MICRO_BATCH_READ ⇒ DataStreamReader falls back);
     // `streamApi=v2` claims MICRO_BATCH_READ and the DSv2
     // [[TxLogMicroBatchStream]] runs instead, changeFeed mode
-    // included (pre-images resolve reader-side there).
+    // included (pre-images resolve reader-side there). Streaming
+    // WRITES always run the DSv2 [[TxLogStreamingWrite]]: the write
+    // side has no batch/stream schema ambiguity, so `streamApi` is a
+    // read-only option.
     // BATCH_WRITE is declared alongside V1_BATCH_WRITE because
     // DataFrameWriter.save only routes to the v2 write plans when the
     // table claims BATCH_WRITE — the Write we build is a V1Write, and
     // the physical strategy dispatches on THAT (AppendDataExecV1), so
     // toBatch() is never reached
     {
-      // the READ half stays opt-in (schema ambiguity — see
-      // TxLogMicroBatch.streamV2); the SINK defaults to the DSv2
-      // StreamingWrite since r15, with streamApi=v1 the escape hatch
       val caps = java.util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
         TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-        TableCapability.OVERWRITE_DYNAMIC)
+        TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
       if (streamV2) caps.add(TableCapability.MICRO_BATCH_READ)
-      if (sinkV2) caps.add(TableCapability.STREAMING_WRITE)
       caps
     }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -313,9 +308,10 @@ class TxLogWriteBuilder(dir: String, asOf: Int, info: LogicalWriteInfo,
           }
         }
       }
-    /** The `streamApi=v2` streaming SINK ([[TxLogStreamingWrite]]) —
-      * reachable only when the table claimed STREAMING_WRITE (the
-      * same opt-in). The engine's mode dispatch: Append/Update →
+    /** The streaming SINK ([[TxLogStreamingWrite]]) — the one
+      * implementation of `writeStream.format("txlog")`; a `streamApi`
+      * option or table property selects the READ API only and is
+      * ignored here. The engine's mode dispatch: Append/Update →
       * build() (the `SupportsStreamingUpdateAsAppend` base makes
       * Update legal; the two are indistinguishable here, so the
       * mergeKey OPTION selects the upsert), Complete →
@@ -323,13 +319,6 @@ class TxLogWriteBuilder(dir: String, asOf: Int, info: LogicalWriteInfo,
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
       require(asOf < 0,
         "cannot stream-write through a time-travel (asOf) txlog relation")
-      require(TxLogMicroBatch.sinkV2(opt),
-        "txlog streaming write reached the DSv2 path with streamApi=v1: " +
-          "a per-write .option cannot downgrade a CATALOG-resolved table " +
-          "— its stored capabilities already claimed STREAMING_WRITE " +
-          "before options were read. Set the table property streamApi=v1 " +
-          "or SPARK_GRAFT_STREAM_API=v1 process-wide instead (path-based " +
-          "writeStream.format(\"txlog\") honors the per-write option)")
       val mergeKey = opt("mergeKey")
       val mergeSchema = TxLogSource.strictBool(opt, "mergeSchema")
       require(!(mergeKey.nonEmpty && truncateFirst),

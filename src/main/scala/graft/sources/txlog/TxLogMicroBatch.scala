@@ -83,24 +83,6 @@ private[txlog] object TxLogMicroBatch {
         s"option streamApi must be v1 or v2, got '$v'")
     }
 
-  /** The SINK default — v2 since r15 (the r14 in-window A/B measured
-    * no v2 penalty across 24 pairings): the write side has no
-    * batch/stream schema ambiguity, so `writeStream.format("txlog")`
-    * claims STREAMING_WRITE and runs the DSv2 [[TxLogStreamingWrite]]
-    * unless explicitly opted out. Escape hatches, narrowest first:
-    * `streamApi=v1` as a write option or table property, then the
-    * process-wide `graft.streamApi` system property /
-    * `SPARK_GRAFT_STREAM_API` env. v1 sink removal is slated for r16
-    * after this default soaks one round. */
-  def sinkV2(get: String => Option[String]): Boolean =
-    get("streamApi").orElse(sys.props.get("graft.streamApi"))
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_API")) match {
-      case None | Some("v2") => true
-      case Some("v1")        => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"option streamApi must be v1 or v2, got '$v'")
-    }
-
   /** The streaming schema for the mode the options select. */
   def streamSchema(dataSchema: StructType,
                    get: String => Option[String]): StructType =

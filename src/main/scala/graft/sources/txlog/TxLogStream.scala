@@ -2,12 +2,11 @@ package graft.sources.txlog
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
-import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.sources.TxLog
@@ -15,9 +14,11 @@ import graft.sources.TxLog
 /** Streaming CHANGE-DATA-CAPTURE source over a [[TxLog]] table —
   * `spark.readStream.format("txlog").option("path", dir).load()`.
   *
-  * The read half of the exactly-once pair ([[TxLog.appendStream]] is
-  * the sink half): offsets ARE commit versions, so the engine's offset
-  * log gives restart-resume for free — a query restarted from its
+  * The read half of the exactly-once pair (the sink half is
+  * `writeStream.format("txlog")`, [[TxLogStreamingWrite]], or
+  * [[TxLog.appendStream]] from a foreachBatch): offsets ARE commit
+  * versions, so the engine's offset log gives restart-resume for
+  * free — a query restarted from its
   * checkpoint continues at the first unprocessed commit, never
   * re-delivering and never skipping. Each micro-batch is the add-set
   * rows of the commits in `(start, end]`, tagged `_commit_version` /
@@ -76,15 +77,16 @@ import graft.sources.TxLog
   * bounded by the trigger cap — never the table) and compares field
   * names against the construction-time schema; the fix is restarting
   * the query, which re-resolves the merged schema. */
-class TxLogSourceProvider extends StreamSourceProvider with StreamSinkProvider
+class TxLogSourceProvider extends StreamSourceProvider
     with org.apache.spark.sql.connector.catalog.TableProvider
     with DataSourceRegister {
   override def shortName(): String = "txlog"
 
-  // ---- DSv2 BATCH half ([[TxLogBatch]]): spark.read.format("txlog").
-  // By default the table declares no MICRO_BATCH_READ, so readStream/
-  // writeStream fall back to the v1 Source/Sink halves below
-  // unchanged; `.option("streamApi", "v2")` opts a read into the DSv2
+  // ---- DSv2 half ([[TxLogBatch]]): spark.read.format("txlog") and
+  // the one streaming sink, writeStream.format("txlog")
+  // ([[TxLogStreamingWrite]]). By default the table declares no
+  // MICRO_BATCH_READ, so readStream falls back to the v1 Source half
+  // below; `.option("streamApi", "v2")` opts a read into the DSv2
   // [[TxLogMicroBatchStream]] ([[TxLogMicroBatch]] documents why the
   // v2 path cannot be the default: the provider cannot tell a batch
   // resolution from a streaming one, and the two need different
@@ -93,13 +95,13 @@ class TxLogSourceProvider extends StreamSourceProvider with StreamSinkProvider
   /** Deliberately EMPTY: the real schema resolves lazily in
     * [[TxLogTable.schema]]. Both readStream and DataStreamWriter.start
     * probe getTableFromProvider (which always calls inferSchema)
-    * before falling back to the v1 Source/Sink halves — and that probe
-    * consumes ONLY capabilities, never the schema — so resolving here
-    * would charge every stream start/restart one head-state replay +
-    * live-footer read for nothing, and would break sinks, which
-    * legitimately start on tables that do not exist yet. The batch
-    * read path reads Table.schema() lazily and gets the full loud
-    * resolution there. */
+    * before choosing between the v1 Source and the DSv2 table — and
+    * that probe consumes ONLY capabilities, never the schema — so
+    * resolving here would charge every stream start/restart one
+    * head-state replay + live-footer read for nothing, and would break
+    * sinks, which legitimately start on tables that do not exist yet.
+    * The batch read path reads Table.schema() lazily and gets the full
+    * loud resolution there. */
   override def inferSchema(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap
       ): StructType = new StructType()
@@ -244,61 +246,6 @@ class TxLogSourceProvider extends StreamSourceProvider with StreamSinkProvider
       coarseRewrites = coarse)
   }
 
-  /** The SINK half — `df.writeStream.format("txlog").option("path",
-    * dir)` — completing the native CDC pair (read a table's commit log
-    * with the source, apply it to another table with the sink, both
-    * exactly-once). Per [[OutputMode]]:
-    *
-    *  - **Append** → [[TxLog.appendStream]]: one segment per
-    *    micro-batch, batch id in the commit op, replays skipped.
-    *  - **Update** (requires `mergeKey`) → [[TxLog.mergeStreamMoR]]:
-    *    per-batch MERGE-ON-READ upsert on the key — tombstones + one
-    *    batch-sized segment, never a target rewrite; the streaming CDC
-    *    APPLY shape.
-    *  - **Complete** → [[TxLog.overwriteStream]]: the table is REPLACED
-    *    each trigger (a streaming aggregation's refresh), same
-    *    batch-id idempotence.
-    *
-    * Options: `path` (required); `mergeKey` — the Update-mode merge
-    * column; `statsCols` — comma-separated columns whose per-segment
-    * min/max are recorded at each commit, so downstream range reads
-    * prune the freshly-ingested segments; `mergeSchema` — `true` lets
-    * a restarted query with NEW columns evolve the table additively
-    * (default: fail loud on the first drifted batch — see
-    * [[TxLogSink]]). `partitionBy` is rejected
-    * loud: TxLog's skipping story is commit-recorded stats/z-order,
-    * not hive directory layout. All three modes are exactly-once under
-    * the engine's at-least-once replay (batch ids fold into log
-    * checkpoints; the dedup probe is O(checkpoint + tail)). */
-  override def createSink(ctx: SQLContext, parameters: Map[String, String],
-      partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
-    val dir = dirOf(parameters)
-    require(partitionColumns.isEmpty,
-      "txlog sink does not take partitionBy: data skipping comes from " +
-        "commit-recorded stats (statsCols option) and z-order, not " +
-        "directory layout")
-    val mergeKey = parameters.get("mergeKey")
-    val statsCols = parameters.get("statsCols")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val mergeSchema = boolOpt(parameters, "mergeSchema")
-    require(!(mergeSchema && outputMode == OutputMode.Complete()),
-      "mergeSchema is meaningless in Complete mode: each trigger " +
-        "REPLACES the table, so the batch schema always wins")
-    outputMode match {
-      case m if m == OutputMode.Update() =>
-        require(mergeKey.nonEmpty,
-          "txlog sink in Update mode requires .option(\"mergeKey\", <col>) " +
-            "— updates are applied as a merge-on-read upsert on that key")
-      case m if m == OutputMode.Append() || m == OutputMode.Complete() =>
-        require(mergeKey.isEmpty,
-          s"mergeKey is only meaningful in Update mode (got $outputMode); " +
-            "Append appends each batch, Complete replaces the table")
-      case m => throw new IllegalArgumentException(s"unsupported output mode $m")
-    }
-    new TxLogSink(dir, outputMode, mergeKey, statsCols, mergeSchema)
-  }
-
   /** `latest` binds at the FIRST start only: the resolved floor is
     * persisted in the query's metadata path (the engine-managed
     * per-source checkpoint dir), so a restart resumes from the
@@ -312,61 +259,8 @@ class TxLogSourceProvider extends StreamSourceProvider with StreamSinkProvider
       ctx.sparkSession.sparkContext.hadoopConfiguration, metadataPath, dir)
 }
 
-/** The v1 sink: routes each micro-batch through the idempotent
-  * batch-id-deduped TxLog write for the query's output mode. The
-  * engine hands `addBatch` a streaming-tagged plan; [[ColumnShim
-  * .asBatch]] re-tags it so the batch write path (parquet segment +
-  * conditional commit) applies unchanged. Exactly-once composes from
-  * both sides: the engine replays un-committed batches at-least-once,
-  * and the table skips already-committed batch ids.
-  *
-  * SCHEMA-DRIFT guard (Append/Update): a batch carrying columns the
-  * table does not have — a query restarted with an evolved projection
-  * — FAILS LOUD by default instead of silently widening the table
-  * under its readers' feet. `mergeSchema=true` opts into ADDITIVE
-  * evolution: the new column lands with the batch's segment,
-  * pre-evolution rows read null under merged-schema reads, and any
-  * TAILING stream fails its own drift guard and restarts onto the
-  * evolved schema (the fail-loud contract stays with the readers).
-  * The table-column set is resolved ONCE per query start (sink
-  * construction), so the per-batch check is a set compare, not a
-  * metadata replay; batches MISSING table columns are fine either way
-  * (merged-schema reads backfill null, like every append since). */
-private[txlog] class TxLogSink(dir: String, mode: OutputMode,
-    mergeKey: Option[String], statsCols: Seq[String],
-    mergeSchema: Boolean = false) extends Sink {
-  private val guard = new TxLogSchemaDriftGuard(dir, mergeSchema,
-    enabled = mode != OutputMode.Complete())
-  override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val batch = ColumnShim.asBatch(data)
-    val spark = data.sparkSession
-    guard.check(spark, batchId, data.schema)
-    // the dedup namespace is (query id, batch id) — batch ids are PER
-    // QUERY, so without the app id a second query writing to this
-    // table would silently dedup its first batches against the first
-    // query's (see TxLog.streamOp). The engine sets the stable query
-    // id as a local property on the micro-batch thread; it survives
-    // restarts with the checkpoint, and equals the v2 path's
-    // LogicalWriteInfo.queryId, so checkpoints interchange.
-    val appId = Option(spark.sparkContext
-      .getLocalProperty("sql.streaming.queryId"))
-    mergeKey match {
-      case Some(k) =>
-        TxLog.mergeStreamMoR(spark, dir, batch, k, batchId, statsCols,
-          appId)
-      case None if mode == OutputMode.Complete() =>
-        TxLog.overwriteStream(batch, dir, batchId, statsCols, appId)
-      case None =>
-        TxLog.appendStream(batch, dir, batchId, statsCols, appId)
-    }
-    ()
-  }
-  override def toString: String = s"TxLogSink[$dir, $mode]"
-}
-
-/** The sink-side SCHEMA-DRIFT guard, ONE copy for both write APIs
-  * (the v1 [[TxLogSink]] and the v2
-  * [[graft.sources.txlog.TxLogStreamingWrite]] hold one instance per
+/** The sink-side SCHEMA-DRIFT guard
+  * ([[graft.sources.txlog.TxLogStreamingWrite]] holds one instance per
   * query): a batch carrying columns the table does not have — a query
   * restarted with an evolved projection — FAILS LOUD by default
   * instead of silently widening the table under its readers' feet.

@@ -10,28 +10,24 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.TxLog
 
-/** DSv2 `StreamingWrite` port of the txlog streaming SINK —
-  * `df.writeStream.format("txlog").option("path", dir)
-  * .option("streamApi", "v2")` — the symmetric half of the
-  * [[TxLogMicroBatchStream]] source port.
-  *
-  * WHAT THE PORT BUYS over the v1 `Sink`: the v1 engine hands
-  * `addBatch` a RE-PLANNABLE streaming-tagged DataFrame that must be
-  * re-tagged batch (`ColumnShim.asBatch`) before the segment write
-  * runs — a physical-rows workaround this path retires entirely. Here
-  * the engine's own write exec streams the micro-batch's rows through
-  * per-task [[TxLogStreamDataWriter]]s that stage the SEGMENT's
-  * parquet files directly (Spark's own parquet OutputWriter via
-  * [[ParquetWriteDelegate]] — bit-identical bytes to
+/** The txlog streaming SINK — `df.writeStream.format("txlog")
+  * .option("path", dir)`, the one implementation of the write half of
+  * the CDC pair ([[TxLogMicroBatchStream]] / [[TxLogSource]] are the
+  * read half). The engine's own write exec streams each micro-batch's
+  * rows through per-task [[TxLogStreamDataWriter]]s that stage the
+  * SEGMENT's parquet files directly (Spark's own parquet OutputWriter
+  * via [[ParquetWriteDelegate]] — bit-identical bytes to
   * `df.write.parquet`, written ONCE, no driver round-trip, no second
   * copy), and the driver-side [[TxLogStreamingWrite.commit]] promotes
-  * the staged segment through the SAME idempotent batch-id-deduped
-  * commit entry points the v1 sink calls
-  * ([[TxLog.appendStreamStaged]] / [[TxLog.mergeStreamMoRStaged]] /
-  * [[TxLog.overwriteStreamStaged]]) — exactly-once composes
-  * identically: the engine replays un-committed epochs
-  * at-least-once, and the table skips already-committed batch ids
-  * (a replay's freshly staged files are reclaimed on the skip).
+  * the staged segment through the idempotent batch-id-deduped commit
+  * entry points ([[TxLog.appendStreamStaged]] /
+  * [[TxLog.mergeStreamMoRStaged]] / [[TxLog.overwriteStreamStaged]]),
+  * the staged twins of the foreachBatch API ([[TxLog.appendStream]]
+  * and friends) — exactly-once composes identically: the engine
+  * replays un-committed epochs at-least-once, and the table skips
+  * already-committed batch ids (a replay's freshly staged files are
+  * reclaimed on the skip). A `streamApi` option or table property
+  * selects the READ API only; writes ignore it.
   *
   * MODE MAPPING (the engine's `StreamExecution.createWrite` dispatch):
   * Append → `build()` → per-epoch append; Complete →
@@ -40,8 +36,12 @@ import graft.sources.TxLog
   * then calls plain `build()` — Update is NOT distinguishable from
   * Append at the builder (the marker's contract), so on this API the
   * `mergeKey` OPTION selects the merge-on-read upsert, in Update
-  * *and* Append mode alike; the v1 surface's "Append rejects
-  * mergeKey" check is not expressible here (documented, spec-pinned).
+  * *and* Append mode alike, and an "Append rejects mergeKey" or
+  * "Update requires mergeKey" check is not expressible here
+  * (spec-pinned). `partitionBy` never reaches this sink either: the
+  * engine's `DataStreamWriter` hands a DSv2 table only its options,
+  * so the table's own partition spec ([[TxLog.setPartitionColumns]],
+  * `PARTITIONED BY`) governs the segment layout (spec-pinned).
   *
   * Segment staging: epoch E's writers place files at
   * `dir/seg-<writeUuid>-<E>/part-<partition>-<task><ext>` — the name
@@ -57,8 +57,8 @@ import graft.sources.TxLog
   * GENERATED columns are validated by the same staged-bytes scan
   * every write path runs, and DEFAULT/GENERATED columns the batch
   * lacks are filled by a one-time segment rewrite
-  * ([[TxLog]].finalizeStagedSegment). The [[TxLogSchemaDriftGuard]]
-  * is the v1 sink's instance, shared verbatim. */
+  * ([[TxLog]].finalizeStagedSegment). Schema drift is refused by one
+  * [[TxLogSchemaDriftGuard]] per query. */
 private[txlog] class TxLogStreamingWrite(spark: SparkSession, dir: String,
     schema: StructType, queryId: String, complete: Boolean,
     mergeKey: Option[String], statsCols: Seq[String],
@@ -66,8 +66,9 @@ private[txlog] class TxLogStreamingWrite(spark: SparkSession, dir: String,
 
   // the dedup namespace is (query id, batch id): batch ids are per
   // query, and the engine's LogicalWriteInfo.queryId is the STABLE id
-  // (it survives restarts with the checkpoint and equals the v1
-  // sink's thread-local query id — see TxLog.streamOp)
+  // (it survives restarts with the checkpoint and equals the
+  // `sql.streaming.queryId` local property a foreachBatch body sees —
+  // see TxLog.streamOp)
   private val txnAppId = Option(queryId).filter(_.nonEmpty)
 
   private val writeUuid = java.util.UUID.randomUUID.toString
@@ -110,8 +111,8 @@ private[txlog] class TxLogStreamingWrite(spark: SparkSession, dir: String,
       }
     if (!f.exists(segPath) || keep.isEmpty) {
       // an empty batch staged nothing (zero input partitions): commit
-      // an empty segment so the batch id still folds into the log —
-      // v1 parity (newSegment of an empty frame advances the stream)
+      // an empty segment so the batch id still folds into the log, as
+      // appendStream of an empty frame does
       f.delete(segPath, true)
       spark.createDataFrame(
         new java.util.ArrayList[Row](), physSchema)

@@ -50,29 +50,6 @@ object ColumnShim {
     ofRows(df.sparkSession, plan)
   }
 
-  /** The inverse of [[asStreaming]]: rebuild a v1 `Sink.addBatch`
-    * DataFrame as a plain BATCH frame so it can be written through
-    * batch APIs (`df.write` refuses streaming-tagged plans). The ONLY
-    * correct general shape is wrapping the micro-batch's PHYSICAL rows
-    * (`queryExecution.toRdd` over the engine's IncrementalExecution):
-    *  - the analyzed tree still carries the engine's
-    *    `WriteToMicroBatchDataSourceV1` wrapper (only
-    *    `IncrementalExecution.optimizedPlan` strips it, so re-planning
-    *    the tree dies with "No plan for WriteToMicroBatchDataSourceV1"),
-    *  - and for STATEFUL queries (Complete/Update aggregations) the
-    *    state-store operators live only in the incremental PHYSICAL
-    *    plan — re-deriving a batch plan from the logical tree would
-    *    silently recompute this batch's input without state.
-    * The caller must execute the result exactly ONCE (each action
-    * re-runs the incremental plan, including its state-store writes) —
-    * the TxLog sink paths stage the frame to parquet first and do all
-    * further work from the staged bytes, which is also how the
-    * engine's own v1 sinks (FileStreamSink, memory) consume a batch. */
-  def asBatch(df: DataFrame): DataFrame =
-    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
-        isStreaming = false)
-
   /** Wrap an arbitrary BATCH DataFrame as ONE streaming-tagged leaf
     * (`LogicalRDD(isStreaming = true)` over its physical rows) — the
     * Kafka-source shape (`internalCreateDataFrame(rdd, schema,

@@ -333,6 +333,25 @@ class GraphOpsSpec extends SparkTestBase {
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
       assert(confTri === planTri, "conf-gated hybrid")
     } finally spark.conf.unset("graft.graph.degreeCap")
+    // string ids whose string order differs from their numeric order
+    // ("10" < "9"): the same graph shifted to ids 5..34, so the hubs
+    // "5" and "6" meet one- and two-digit neighbors on hub-low edges
+    val sdf = (base ++ base.map(e => (e._2, e._1)))
+      .map { case (a, b) => ((a + 5).toString, (b + 5).toString) }
+      .toDF("a", "b")
+    val strTri = Triangles.perVertex(sdf, "a", "b")
+      .as[(String, Long)].collect().toSet
+    val strJ = Triangles.edgeJaccard(sdf, "a", "b")
+      .as[(String, String, Long, Long)].collect().toSet
+    assert(strTri.map { case (v, t) => (v.toInt - 5, t) } === planTri)
+    for (cap <- Seq(2, 8, 1000)) {
+      assert(Triangles.perVertex(sdf, "a", "b", degreeCap = cap)
+        .as[(String, Long)].collect().toSet === strTri,
+        s"string-id perVertex cap=$cap")
+      assert(Triangles.edgeJaccard(sdf, "a", "b", degreeCap = cap)
+        .as[(String, String, Long, Long)].collect().toSet === strJ,
+        s"string-id edgeJaccard cap=$cap")
+    }
   }
 
   test("weighted PageRank: unit weights reduce to the unweighted recurrence") {

@@ -8,23 +8,40 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 
-  /** Records read across all tasks while `body` runs — the ONE copy of
+  /** Records read by the tasks of `body`'s own jobs — the ONE copy of
     * the listener harness (measurement-protocol changes, e.g. the
-    * 300 ms bus-drain sleep, happen here, not in per-suite clones). */
+    * 300 ms bus-drain sleep, happen here, not in per-suite clones).
+    * The body runs under a unique job group; only tasks of stages
+    * whose job carries that group count, so late task events of an
+    * earlier job (a streaming query stopped just before) cannot leak
+    * into the count. */
   def countRecordsRead[T](body: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val groupKey = "spark.jobGroup.id"
+    val group = s"graft-count-${java.util.UUID.randomUUID}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val recs = new java.util.concurrent.atomic.AtomicLong(0)
     val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(groupKey) == group)
+          j.stageIds.foreach(stages.add)
       override def onTaskEnd(
           t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
+        if (t.taskMetrics != null && stages.contains(t.stageId))
           recs.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
     }
-    spark.sparkContext.addSparkListener(l)
+    val prevGroup = sc.getLocalProperty(groupKey)
+    sc.addSparkListener(l)
+    sc.setLocalProperty(groupKey, group)
     try {
       val r = body
       Thread.sleep(300) // let the listener bus drain
       (r, recs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally {
+      sc.setLocalProperty(groupKey, prevGroup)
+      sc.removeSparkListener(l)
+    }
   }
 }
 

@@ -5,13 +5,25 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.sources.TxLog
 
 /** The native streaming sink over a TxLog table
-  * (`writeStream.format("txlog").option("streamApi", "v1")`) — the write half of the CDC pair:
+  * (`writeStream.format("txlog")`) — the write half of the CDC pair:
   * Append mode appends one idempotent segment per micro-batch, Update
   * mode (with `mergeKey`) applies each batch as a merge-on-read
   * upsert, Complete mode replaces the table per trigger. All three
   * ride the batch-id-deduped commit, so the engine's at-least-once
   * replay composes to exactly-once. */
+object TxLogStreamSinkSpec {
+  /** The sink's task-staged segments are named `seg-<uuid>-<epochId>`
+    * (writers derive the name from the epoch), while every
+    * DataFrame-staged segment (batch writes, the foreachBatch API) is
+    * `seg-<uuid>` — a trailing `-<digits>` group after a full 36-char
+    * uuid is the sink's layout. */
+  def stagedSegs(dir: String): Seq[String] =
+    TxLog.liveSegments(dir).filter(_.matches(
+      "seg-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}-\\d+"))
+}
+
 class TxLogStreamSinkSpec extends SparkTestBase {
+  import TxLogStreamSinkSpec.stagedSegs
   import spark.implicits._
 
   private def freshDir(prefix: String): String =
@@ -35,7 +47,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
   test("append mode: one idempotent commit per micro-batch, replay skipped") {
     val src = feedDir()
     val out = freshDir("graft-sinkout")
-    val q = feed(src).writeStream.format("txlog").option("streamApi", "v1")
+    val q = feed(src).writeStream.format("txlog")
       .option("path", out).option("statsCols", "id")
       .option("checkpointLocation", freshDir("graft-sinkckpt"))
       .outputMode("append").start()
@@ -44,6 +56,8 @@ class TxLogStreamSinkSpec extends SparkTestBase {
     assert(TxLog.headVersion(out) == 3, "4 micro-batches → 4 commits")
     assert((0 to 3).forall(v => TxLog.commitOp(out, v).startsWith("stream-")))
     assert(TxLog.read(spark, out).count() == 40)
+    assert(stagedSegs(out).size == 4,
+      s"task-staged segments expected, got ${TxLog.liveSegments(out)}")
     // the at-least-once failure mode: a replayed batch of the SAME
     // query (same app id) must be skipped
     assert(TxLog.appendStream(
@@ -60,7 +74,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
     val src = feedDir()
     val out = freshDir("graft-sinkout")
     val ckpt = freshDir("graft-sinkckpt")
-    def start() = feed(src).writeStream.format("txlog").option("streamApi", "v1")
+    def start() = feed(src).writeStream.format("txlog")
       .option("path", out).option("checkpointLocation", ckpt)
       .outputMode("append").start()
     val q1 = start()
@@ -81,7 +95,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
     // seed the table with stale values for half the keys
     TxLog.append(spark.range(0L, 20L)
       .select(col("id"), (col("id") % 4).as("k"), lit(-1L).as("v")), out)
-    val q = feed(src).writeStream.format("txlog").option("streamApi", "v1")
+    val q = feed(src).writeStream.format("txlog")
       .option("path", out).option("mergeKey", "id")
       .option("checkpointLocation", freshDir("graft-sinkckpt"))
       .outputMode("update").start()
@@ -116,7 +130,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
       .coalesce(1).write.mode("append").parquet(srcB)
     val out = freshDir("graft-sinkout")
     def run(src: String): Unit = {
-      val q = feed(src).writeStream.format("txlog").option("streamApi", "v1")
+      val q = feed(src).writeStream.format("txlog")
         .option("path", out)
         .option("checkpointLocation", freshDir("graft-sinkckpt"))
         .outputMode("append").start()
@@ -134,7 +148,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
     val out = freshDir("graft-sinkout")
     val q = feed(src)
       .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("v_sum"))
-      .writeStream.format("txlog").option("streamApi", "v1")
+      .writeStream.format("txlog")
       .option("path", out)
       .option("checkpointLocation", freshDir("graft-sinkckpt"))
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
@@ -153,23 +167,33 @@ class TxLogStreamSinkSpec extends SparkTestBase {
       40L, "v0 must be the first trigger's partial aggregate")
   }
 
-  test("guards: partitionBy, bad mode/option combos fail loud") {
+  test("guards: mode/option combos fail loud; partitionBy never reaches the sink") {
     val src = feedDir()
+    val e = intercept[Exception] {
+      val q = feed(src).groupBy("k").agg(sum("v").as("v"))
+        .writeStream.format("txlog").option("path", freshDir("graft-sinkout"))
+        .option("mergeSchema", "true")
+        .option("checkpointLocation", freshDir("graft-sinkckpt"))
+        .outputMode("complete").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+    assert(msgs(e).exists(m => m != null && m.contains("mergeSchema is meaningless")),
+      s"wrong error: $e")
+    // DataStreamWriter hands a DSv2 table its options only, so
+    // partitionBy cannot be seen, let alone refused, by the sink: the
+    // table's own spec governs the layout (none here — unsplit)
     val out = freshDir("graft-sinkout")
-    def tryStart(f: org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] => org.apache.spark.sql.streaming
-        .DataStreamWriter[org.apache.spark.sql.Row]): Throwable =
-      intercept[Exception] {
-        val q = f(feed(src).writeStream.format("txlog").option("streamApi", "v1").option("path", out)
-          .option("checkpointLocation", freshDir("graft-sinkckpt"))).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    val p = tryStart(_.partitionBy("k").outputMode("append"))
-    assert(p.getMessage.contains("partitionBy"), s"wrong error: $p")
-    val u = tryStart(_.outputMode("update"))
-    assert(u.getMessage.contains("mergeKey"), s"wrong error: $u")
-    val a = tryStart(_.option("mergeKey", "id").outputMode("append"))
-    assert(a.getMessage.contains("Update mode"), s"wrong error: $a")
+    val q = feed(src).writeStream.format("txlog").option("path", out)
+      .partitionBy("k")
+      .option("checkpointLocation", freshDir("graft-sinkckpt"))
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(TxLog.read(spark, out).count() == 40)
+    assert(TxLog.partitionColumnsOf(out).isEmpty &&
+      !TxLog.liveSegments(out).exists(_.contains("k=")),
+      s"partitionBy must not split: ${TxLog.liveSegments(out)}")
   }
 
   test("native pipeline: txlog source -> txlog sink relays a table exactly-once") {
@@ -184,7 +208,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
       .filter(col("_commit_op").startsWith("append") ||
         col("_commit_op").startsWith("stream-"))
       .drop("_commit_version", "_commit_op")
-      .writeStream.format("txlog").option("streamApi", "v1")
+      .writeStream.format("txlog")
       .option("path", dstTable).option("checkpointLocation", ckpt)
       .outputMode("append").start()
     val q = relay()
@@ -206,7 +230,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
     val out = freshDir("graft-sinkout")
     val q = feed(src)
       .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("v_sum"))
-      .writeStream.format("txlog").option("streamApi", "v1")
+      .writeStream.format("txlog")
       .option("path", out).option("statsCols", "k")
       .option("checkpointLocation", freshDir("graft-sinkckpt"))
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
@@ -228,7 +252,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
       Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
     def run(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
             merge: Boolean): Throwable = {
-      var w = f(feed(src)).writeStream.format("txlog").option("streamApi", "v1")
+      var w = f(feed(src)).writeStream.format("txlog")
         .option("path", out).option("checkpointLocation", freshDir("graft-sinkckpt"))
       if (merge) w = w.option("mergeSchema", "true")
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -262,7 +286,7 @@ class TxLogStreamSinkSpec extends SparkTestBase {
       val base = feed(src).select(col("id"), col("k"), col("v"))
       val proj = if (extraCol) base.withColumn("tag", concat(lit("t"), col("k")))
                  else base
-      var w = proj.writeStream.format("txlog").option("streamApi", "v1")
+      var w = proj.writeStream.format("txlog")
         .option("path", out).option("checkpointLocation", ckpt)
       if (merge) w = w.option("mergeSchema", "true")
       val q = w.outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -283,6 +307,11 @@ class TxLogStreamSinkSpec extends SparkTestBase {
     assert(msgs(failed).exists(m => m != null && m.contains("mergeSchema") &&
         m.contains("tag")), s"wrong failure: ${failed.getMessage}")
     assert(TxLog.read(spark, out).count() == 40, "failed batch must not commit")
+    // the guard fired AFTER task staging — the staged dir must be gone
+    val stray = new java.io.File(out).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("seg-"))
+      .map(_.getName).filterNot(TxLog.liveSegments(out).contains)
+    assert(stray.isEmpty, s"guard failure must reclaim staging: ${stray.toSeq}")
     // the opt-in path evolves the table additively
     run(extraCol = true, merge = true)
     val evolved = TxLog.read(spark, out, mergeSchema = true)

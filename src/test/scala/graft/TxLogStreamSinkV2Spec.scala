@@ -4,16 +4,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.TxLog
 
-/** The DSv2 `StreamingWrite` sink (`writeStream.format("txlog")
-  * .option("streamApi", "v2")`) — the v1 [[TxLogStreamSinkSpec]]
-  * contract re-run on the v2 API, plus the v2-only surfaces: the
-  * task-staged segment layout, checkpoint interchange with the v1
-  * sink, governance (constraints + default fill) on the staged path,
-  * and the documented Update/Append divergence (the engine's
-  * update-as-append marker makes the two indistinguishable at the
-  * builder, so mergeKey alone selects the upsert). */
+/** The DSv2 `StreamingWrite` surfaces of the one txlog sink
+  * (`writeStream.format("txlog")`; [[TxLogStreamSinkSpec]] holds its
+  * mode contract): the task-staged segment layout and the write-side
+  * `streamApi` contract, continuing a query whose batches were
+  * committed through the foreachBatch API, governance (constraints +
+  * default fill) on the staged path, the documented Update/Append
+  * divergence (the engine's update-as-append marker makes the two
+  * indistinguishable at the builder, so mergeKey alone selects the
+  * upsert), and a v2 source → sink relay. */
 class TxLogStreamSinkV2Spec extends SparkTestBase {
   import spark.implicits._
+  import TxLogStreamSinkSpec.stagedSegs
 
   private def freshDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -31,145 +33,94 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
     spark.readStream.schema(spark.read.parquet(dir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dir + "/*.parquet")
 
-  /** The v2-engagement pin: the sink's staged segments are named
-    * `seg-<uuid>-<epochId>` (writers derive the name from the epoch),
-    * while every v1/newSegment segment is `seg-<uuid>` — a trailing
-    * `-<digits>` group after a full 36-char uuid is the v2 layout. */
-  private def v2Segs(dir: String): Seq[String] =
-    TxLog.liveSegments(dir).filter(_.matches(
-      "seg-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}-\\d+"))
-
   test("the sink DEFAULT is v2 (r15 flip): no option → task-staged segments") {
     val src = feedDir()
+    def drain(w: org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row]): Unit = {
+      val q = w.option("checkpointLocation", freshDir("graft-sinkckpt"))
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     val out = freshDir("graft-sinkout")
-    val q = feed(src).writeStream.format("txlog")
-      .option("path", out)
-      .option("checkpointLocation", freshDir("graft-sinkckpt"))
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    drain(feed(src).writeStream.format("txlog").option("path", out))
     assert(TxLog.read(spark, out).count() == 40)
-    assert(v2Segs(out).size == 4,
-      s"default writeStream must stage v2, got ${TxLog.liveSegments(out)}")
-    // the narrow escape hatch still selects the v1 Sink
+    assert(stagedSegs(out).size == 4,
+      s"default writeStream must task-stage, got ${TxLog.liveSegments(out)}")
+    // streamApi selects the READ API only: v1 on a write still runs
+    // the one sink
     val out1 = freshDir("graft-sinkout")
-    val q1 = feed(src).writeStream.format("txlog")
-      .option("path", out1).option("streamApi", "v1")
-      .option("checkpointLocation", freshDir("graft-sinkckpt"))
-      .outputMode("append").start()
-    try q1.processAllAvailable() finally q1.stop()
+    drain(feed(src).writeStream.format("txlog")
+      .option("path", out1).option("streamApi", "v1"))
     assert(TxLog.read(spark, out1).count() == 40)
-    assert(v2Segs(out1).isEmpty,
-      s"streamApi=v1 must stage v1 segments, got ${TxLog.liveSegments(out1)}")
+    assert(stagedSegs(out1).size == 4,
+      s"streamApi=v1 on a write must task-stage, got ${TxLog.liveSegments(out1)}")
+    // ...and so does a catalog table whose property says v1 (a v1 READ)
+    val out2 = freshDir("graft-sinkout")
+    TxLog.append(spark.read.parquet(src).limit(0), out2)
+    spark.sql("DROP TABLE IF EXISTS sink_v1_prop")
+    spark.sql("CREATE TABLE sink_v1_prop USING txlog " +
+      s"OPTIONS (path '$out2', streamApi 'v1')")
+    try {
+      val q = feed(src).writeStream
+        .option("checkpointLocation", freshDir("graft-sinkckpt"))
+        .outputMode("append").toTable("sink_v1_prop")
+      try q.processAllAvailable() finally q.stop()
+      assert(spark.table("sink_v1_prop").count() == 40)
+      assert(stagedSegs(out2).size == 4,
+        s"a streamApi=v1 table must task-stage, got ${TxLog.liveSegments(out2)}")
+    } finally spark.sql("DROP TABLE IF EXISTS sink_v1_prop")
+    // the value is still validated strictly on a write
+    val bad = intercept[Exception] {
+      drain(feed(src).writeStream.format("txlog")
+        .option("path", freshDir("graft-sinkout")).option("streamApi", "v3"))
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+    assert(msgs(bad).exists(m => m != null &&
+      m.contains("streamApi must be v1 or v2")), s"wrong error: $bad")
   }
 
-  test("v2 append: one idempotent commit per micro-batch, replay skipped") {
-    val src = feedDir()
-    val out = freshDir("graft-sinkout")
-    val q = feed(src).writeStream.format("txlog")
-      .option("path", out).option("streamApi", "v2")
-      .option("statsCols", "id")
-      .option("checkpointLocation", freshDir("graft-sinkckpt"))
-      .outputMode("append").start()
-    val qid = q.id.toString
-    try q.processAllAvailable() finally q.stop()
-    assert(TxLog.headVersion(out) == 3, "4 micro-batches → 4 commits")
-    assert((0 to 3).forall(v => TxLog.commitOp(out, v).startsWith("stream-")))
-    assert(TxLog.read(spark, out).count() == 40)
-    assert(v2Segs(out).size == 4,
-      s"v2 task-staged segments expected, got ${TxLog.liveSegments(out)}")
-    // the at-least-once failure mode: a replayed batch of the SAME
-    // query must be skipped
-    assert(TxLog.appendStream(
-      TxLog.readCommit(spark, out, 0), out, batchId = 0L,
-      txnAppId = Some(qid)).isEmpty)
-    assert(TxLog.headVersion(out) == 3)
-    // statsCols recorded at ingest (driver-side over the staged bytes)
-    val (_, pruned) = TxLog.pruneRange(out, "id", Some("0"), Some("3"))
-    assert(pruned.nonEmpty,
-      "streamed segments must carry prunable stats via statsCols")
-  }
-
-  test("v1 checkpoint restarts onto v2 (and back) without duplicates") {
+  test("foreachBatch appendStream, then the sink: no batch is re-appended") {
     val src = feedDir()
     val out = freshDir("graft-sinkout")
     val ckpt = freshDir("graft-sinkckpt")
-    def run(api: Option[String]): Unit = {
-      var w = feed(src).writeStream.format("txlog")
-        .option("path", out).option("checkpointLocation", ckpt)
-      api.foreach(v => w = w.option("streamApi", v))
-      val q = w.outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run(Some("v1")) // v1 (explicit since the r15 default flip) drains the 4 seed batches
-    assert(TxLog.headVersion(out) == 3)
-    // two more feed files land while the query is down; v2 resumes
+    // batches 0-3 commit through the foreachBatch API under the
+    // engine's stable query id
+    val q1 = feed(src).writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        TxLog.appendStream(batch, out, id, txnAppId = Option(
+          batch.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId")))
+        ()
+      }.start()
+    try q1.processAllAvailable() finally q1.stop()
+    assert(TxLog.headVersion(out) == 3 && stagedSegs(out).isEmpty)
+    // crash between the table commit and the checkpoint commit: batch
+    // 3 is in the table but not in the commit log, so the engine
+    // replays it on restart
+    val commit3 = new java.io.File(ckpt, "commits/3")
+    assert(commit3.delete())
+    new java.io.File(ckpt, "commits/.3.crc").delete()
+    // two more feed files land while the query is down
     (4 until 6).foreach(i =>
       spark.range(i * 10L, (i + 1) * 10L)
         .select(col("id"), (col("id") % 4).as("k"), (col("id") * 10L).as("v"))
         .coalesce(1).write.mode("append").parquet(src))
-    run(Some("v2"))
-    assert(TxLog.headVersion(out) == 5, "v2 must deliver exactly batches 4-5")
-    assert(v2Segs(out).size == 2, "the two resumed batches are v2-staged")
-    // and back to v1
-    (6 until 7).foreach(i =>
-      spark.range(i * 10L, (i + 1) * 10L)
-        .select(col("id"), (col("id") % 4).as("k"), (col("id") * 10L).as("v"))
-        .coalesce(1).write.mode("append").parquet(src))
-    run(Some("v1"))
+    val q2 = feed(src).writeStream.format("txlog")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(commit3.exists(), "the restart must have replayed batch 3")
+    assert(TxLog.headVersion(out) == 5, "only batches 4-5 may commit")
+    assert(stagedSegs(out).size == 2, "the two new batches are task-staged")
     val rows = TxLog.read(spark, out)
-    assert(rows.count() == 70 && rows.select("id").distinct().count() == 70,
-      "cross-API restarts must deliver exactly-once")
-  }
-
-  test("v2 update mode + mergeKey: per-batch MoR upsert, last writer wins") {
-    val src = feedDir()
-    val out = freshDir("graft-sinkout")
-    TxLog.append(spark.range(0L, 20L)
-      .select(col("id"), (col("id") % 4).as("k"), lit(-1L).as("v")), out)
-    val q = feed(src).writeStream.format("txlog")
-      .option("path", out).option("streamApi", "v2")
-      .option("mergeKey", "id")
-      .option("checkpointLocation", freshDir("graft-sinkckpt"))
-      .outputMode("update").start()
-    val qid = q.id.toString
-    try q.processAllAvailable() finally q.stop()
-    val rows = TxLog.read(spark, out).select("id", "v")
-      .as[(Long, Long)].collect().toMap
-    assert(rows.size == 40, "upsert must dedup on the merge key")
-    assert((0L until 40L).forall(i => rows(i) == i * 10L),
-      "every seeded stale value must be replaced by the stream's")
-    // MoR shape: the seed segment was never rewritten, only tombstoned
-    assert(TxLog.liveSegments(out, 0).forall(
-      TxLog.liveSegments(out).contains(_)),
-      "update mode must merge-on-read, not rewrite the seed segment")
-    val head = TxLog.headVersion(out)
-    assert(TxLog.mergeStreamMoR(spark, out,
-      TxLog.readCommit(spark, out, 1), "id", batchId = 0L,
-      txnAppId = Some(qid)).isEmpty)
-    assert(TxLog.headVersion(out) == head)
-  }
-
-  test("v2 complete mode replaces per trigger and records statsCols") {
-    val src = feedDir()
-    val out = freshDir("graft-sinkout")
-    val q = feed(src)
-      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("v_sum"))
-      .writeStream.format("txlog")
-      .option("path", out).option("streamApi", "v2")
-      .option("statsCols", "k")
-      .option("checkpointLocation", freshDir("graft-sinkckpt"))
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination(60000) finally q.stop()
-    val rows = TxLog.read(spark, out).select("k", "n", "v_sum")
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    val expect = spark.read.parquet(src)
-      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("v_sum"))
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    assert(rows.toSeq == expect.toSeq)
-    assert(TxLog.headVersion(out) >= 1, "multiple triggers must commit")
-    val (kept, pruned) = TxLog.pruneRange(out, "k", Some("10"), Some("99"))
-    assert(kept.isEmpty && pruned.nonEmpty,
-      s"statsCols must be recorded in Complete mode: kept=$kept")
+    assert(rows.count() == 60 && rows.select("id").distinct().count() == 60,
+      "the replayed batch must be skipped, not re-appended")
+    // the replay's staged files were reclaimed on the skip
+    val stray = new java.io.File(out).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("seg-"))
+      .map(_.getName).filterNot(TxLog.liveSegments(out).contains)
+    assert(stray.isEmpty, s"skipped replay must reclaim staging: ${stray.toSeq}")
   }
 
   test("v2 staged path enforces constraints and fills defaults") {
@@ -183,7 +134,7 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
     TxLog.addConstraint(spark, out, "v_nonneg", "v >= 0")
     TxLog.setColumnDefault(out, "src", "'stream'")
     val q = feed(src).writeStream.format("txlog")
-      .option("path", out).option("streamApi", "v2")
+      .option("path", out)
       .option("checkpointLocation", freshDir("graft-sinkckpt"))
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -200,7 +151,7 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q2 = spark.readStream.schema(spark.read.parquet(bad).schema)
         .parquet(bad + "/*.parquet").writeStream.format("txlog")
-        .option("path", out).option("streamApi", "v2")
+        .option("path", out)
         .option("checkpointLocation", freshDir("graft-sinkckpt"))
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       try q2.awaitTermination(60000) finally q2.stop()
@@ -212,48 +163,13 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
     assert(TxLog.headVersion(out) == head, "violating batch must not commit")
   }
 
-  test("v2 schema drift fails loud by default and reclaims the staging") {
-    val src = feedDir(2)
-    val out = freshDir("graft-sinkout")
-    TxLog.append(spark.read.parquet(src).limit(1), out)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      val q = feed(src).withColumn("tag", concat(lit("t"), col("k")))
-        .writeStream.format("txlog")
-        .option("path", out).option("streamApi", "v2")
-        .option("checkpointLocation", freshDir("graft-sinkckpt"))
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination(60000) finally q.stop()
-    }
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
-    assert(msgs(e).exists(m => m != null && m.contains("mergeSchema")),
-      s"wrong failure: $e")
-    assert(TxLog.read(spark, out).count() == 1, "drifted batch must not commit")
-    // the guard fired AFTER task staging — the staged dir must be gone
-    val stray = new java.io.File(out).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("seg-"))
-      .map(_.getName).filterNot(TxLog.liveSegments(out).contains)
-    assert(stray.isEmpty, s"guard failure must reclaim staging: ${stray.toSeq}")
-    // and mergeSchema=true evolves additively through the v2 path
-    val q2 = feed(src).withColumn("tag", concat(lit("t"), col("k")))
-      .writeStream.format("txlog")
-      .option("path", out).option("streamApi", "v2")
-      .option("mergeSchema", "true")
-      .option("checkpointLocation", freshDir("graft-sinkckpt"))
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try q2.awaitTermination(60000) finally q2.stop()
-    val evolved = TxLog.read(spark, out, mergeSchema = true)
-    assert(evolved.count() == 21 &&
-      evolved.schema.fieldNames.contains("tag"))
-  }
-
   test("v2 mode guards: Complete+mergeKey loud; Append+mergeKey upserts (documented)") {
     val src = feedDir(2)
     val out = freshDir("graft-sinkout")
     val e = intercept[Exception] {
       val q = feed(src).groupBy("k").agg(sum("v").as("v"))
         .writeStream.format("txlog")
-        .option("path", out).option("streamApi", "v2")
+        .option("path", out)
         .option("mergeKey", "k")
         .option("checkpointLocation", freshDir("graft-sinkckpt"))
         .outputMode("complete").start()
@@ -269,7 +185,7 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
     TxLog.append(spark.range(0L, 20L)
       .select(col("id"), (col("id") % 4).as("k"), lit(-1L).as("v")), out2)
     val q2 = feed(src).writeStream.format("txlog")
-      .option("path", out2).option("streamApi", "v2")
+      .option("path", out2)
       .option("mergeKey", "id")
       .option("checkpointLocation", freshDir("graft-sinkckpt"))
       .outputMode("append").start()
@@ -292,7 +208,7 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
       .option("maxCommitsPerTrigger", "2").load()
       .drop("_commit_version", "_commit_op")
       .writeStream.format("txlog")
-      .option("path", dstTable).option("streamApi", "v2")
+      .option("path", dstTable)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
     val q = relay()
