@@ -307,10 +307,9 @@ object Bench {
     // The reference's own entry points over ONE multi-GB `</page>`-
     // delimited dump file: exercises the SPLITTABLE ingest (a single
     // file fanning out to many tasks), the fused page parse, the
-    // DISTRIBUTED PageRank loop (300k vertices / 3.6M links exceeds the
-    // ≤250k-vertex ∧ ≤5M-edge fast-path gate, so the real Pregel loop
-    // runs) and the inverted-index pipeline at a scale the parquet keys
-    // never reach. One rep each — these are 10–100× the per-key cost
+    // DISTRIBUTED PageRank loop (300k pages exceed GraphTier's bound)
+    // and the inverted-index pipeline at a scale the parquet keys never
+    // reach. One rep each — these are 10–100× the per-key cost
     // above, and the shared host makes single reps noisy anyway (see
     // BASELINE.md's spike note). SPARK_GRAFT_DUMP_PAGES=0 disables.
     val dumpPages = sys.env.getOrElse("SPARK_GRAFT_DUMP_PAGES", "300000").toInt

@@ -2600,13 +2600,13 @@ object SparkEntry {
       // r17: labels materialized ONCE — the kernel's un-persisted RDD was
       // re-evaluated by each of the two join legs — and the attach
       // broadcasts when the label relation is measured small (guide
-      // §3.1; the count is free on the checkpoint). At scale the gate
-      // falls back to the shuffle join — labels is |V|-sized.
+      // §3.1; the count is free on the checkpoint; 24 B is the UnsafeRow
+      // of two longs). At scale it shuffles — labels is |V|-sized.
       val labels = graft.graph.LabelPropagation.run(pairs, rounds = 4,
         assumeCanonical = true).localCheckpoint()
       val m = pairs.count()
-      val lab =
-        if (labels.count() <= (1L << 24)) broadcast(labels) else labels
+      val lab = if (labels.count() * 24L <= s.sessionState.conf.autoBroadcastJoinThreshold)
+        broadcast(labels) else labels
       val e = pairs
         .join(lab.select(col("node").as("a"), col("label").as("la")), "a")
         .join(lab.select(col("node").as("b"), col("label").as("lb")), "b")

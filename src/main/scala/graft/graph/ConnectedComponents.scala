@@ -66,7 +66,7 @@ object ConnectedComponents {
   }
 
   /** Canonical edge relation: Long ids, self-pairs dropped, oriented
-    * (max, min), distinct, MATERIALIZED — the count the fast-path gate
+    * (max, min), distinct, MATERIALIZED — the count the tier decision
     * needs and every star round reuse this checkpoint. */
   private def canonicalize(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
     pairs
@@ -112,26 +112,21 @@ object ConnectedComponents {
     (edges, it)
   }
 
-  /** @param pairs candidate pairs, two Long id columns (undirected; order
+  /** Edge sets [[GraphTier.driver]] admits close in one driver union-find
+    * (each star round schedules ~8 jobs; dedup's candidate pairs survive
+    * banding + verify, so |edges| ≪ |corpus|); the star loop above it is
+    * spec-compared against the union-find.
+    *
+    * @param pairs candidate pairs, two Long id columns (undirected; order
     *              and duplicates irrelevant)
-    * @param fastPathMaxEdges ≤ this many distinct edges → solve in one
-    *              driver union-find instead of star rounds. Each star
-    *              round schedules ~8 jobs; for the candidate-pair graphs
-    *              dedup actually emits (pairs survive banding + verify,
-    *              so |edges| ≪ |corpus|) the whole closure is
-    *              sub-millisecond on the driver, and the collect is
-    *              BOUNDED by the gate — the same bounded-collect call as
-    *              the IVF centroid table and PageRank's ≤250k-vertex
-    *              fast path. The distributed loop is unchanged above the
-    *              gate and spec-compared against this path.
     * @return (node, component) for every node in `pairs`, component = min
     *         id of the node's connected component */
   def run(pairs: DataFrame, aCol: String, bCol: String,
-          maxIters: Int = 50, fastPathMaxEdges: Long = 100000L): DataFrame = {
+          maxIters: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val canonical = canonicalize(pairs, aCol, bCol)
-    if (canonical.count() <= fastPathMaxEdges) {
+    if (GraphTier.driver("ConnectedComponents.run", canonical.count())) {
       val edges = canonical.as[(Long, Long)].collect()
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,8 +23,9 @@ import org.apache.spark.storage.StorageLevel
   * absorbed — the same lock-step trick as `pagerank_oracle`
   * (SURVEY.md §5.3d).
   *
-  * Execution tiers (the PageRank lesson, measured again here):
-  *  - '''small graph''' (≤5M edges): ALL half-steps run inside ONE task
+  * Execution tiers (the PageRank lesson, measured again here;
+  * [[GraphTier.singleTask]] picks one):
+  *  - '''small graph''': ALL half-steps run inside ONE task
   *    over primitive arrays — 20 Catalyst-planned checkpointed rounds
   *    cost 40 s at 185k vertices/900k edges where the array loop costs
   *    ~2 s; scheduling and planning dominate, not math.
@@ -41,10 +42,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Hits {
 
-  /** Test hook (same pattern as PageRank/ConnectedComponents): forces the
-    * distributed loop so specs cover both tiers. */
-  @volatile private[graft] var fastPathEnabled: Boolean = true
-
   // shared valueOf-semantics grid rounding — see GridRound's scaladoc
   private def rnd9(roundTo: Int)(v: Double): Double =
     graft.functions.GridRound.fn(roundTo)(v)
@@ -58,11 +55,8 @@ object Hits {
     import spark.implicits._
     val e = edges.select(col("src"), col("dst")).as[(String, String)]
       .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count()
-    if (fastPathEnabled && nEdges <= 5000000L) {
-      // vertex count ≤ 2·edges ≤ 10M ids + two double arrays — fits a
-      // task comfortably; the whole loop is ONE job, zero shuffles after
-      // the coalesce
+    val out = if (GraphTier.singleTask("Hits.run", e.count())) {
+      // the whole loop is ONE job, zero shuffles after the coalesce
       val rnd = rnd9(roundTo) _
       val res = e.coalesce(1).mapPartitions { it =>
         val edgeArr = it.toArray
@@ -109,27 +103,18 @@ object Hits {
         names.indices.iterator.map(i => (names(i), hub(i), auth(i)))
         }
       }
-      // Materialize (localCheckpoint is eager) so the cached edges RDD can
-      // be released NOW — run() is called repeatedly (bench reps, specs),
-      // and without the unpersist every call leaked a MEMORY_AND_DISK RDD
-      // for the session lifetime (ADVICE r3). Bounded: the fast path is
-      // gated at ≤5M edges.
-      val out = res.toDF("title", "hub", "auth").localCheckpoint()
-      e.unpersist(blocking = false)
-      out
-    } else {
-      // runDistributed eagerly localCheckpoints the edge relation on
-      // entry, so the source RDD cache is droppable as soon as it returns
-      val out = runDistributed(spark, e.toDF("src", "dst"), iters, roundTo)
-      e.unpersist(blocking = false)
-      out
-    }
+      res.toDF("title", "hub", "auth").localCheckpoint()
+    } else runDistributed(e.toDF("src", "dst"), iters, roundTo)
+    // Neither tier reads the edges cache again (both checkpoint eagerly),
+    // so it is released NOW — without it every run() leaked a
+    // MEMORY_AND_DISK RDD for the session lifetime (ADVICE r3).
+    e.unpersist(blocking = false)
+    out
   }
 
   /** The scale tier: Catalyst-planned half-steps, one shuffle each, the
     * max-normalizer carried in-plan as a broadcast 1-row aggregate. */
-  private[graft] def runDistributed(spark: SparkSession, edges: DataFrame,
-                                    iters: Int, roundTo: Int): DataFrame = {
+  private def runDistributed(edges: DataFrame, iters: Int, roundTo: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
     val verts = e.select(col("src").as("title"))
       .unionByName(e.select(col("dst").as("title")))

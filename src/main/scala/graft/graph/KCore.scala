@@ -24,19 +24,16 @@ import org.apache.spark.sql.functions._
   * and each round is a driver-synced fixpoint check — the same scalar
   * sync cadence PageRank's convergence test uses.
   *
-  * Fast tier (≤5M edges, the shared PageRank/HITS/BFS gate): classic
-  * O(E) bucket peeling inside ONE task over int-indexed adjacency —
-  * per-round job scheduling costs seconds for milliseconds of counter
-  * arithmetic at this size. Spec-compared against the distributed tier
-  * on random graphs.
+  * Fast tier ([[GraphTier.singleTask]] on the symmetrized graph):
+  * classic O(E) bucket peeling inside ONE task over int-indexed
+  * adjacency — per-round job scheduling costs seconds for milliseconds
+  * of counter arithmetic at this size. Spec-compared against the
+  * distributed tier on random graphs.
   *
   * Input edges are UNDIRECTED, given once per pair (u < v), no
   * self-loops — the co-purchase pair relation shape.
   */
 object KCore {
-
-  /** Test seam: force the distributed tier (mirrors PageRank/Hits). */
-  @volatile private[graft] var fastPathEnabled: Boolean = true
 
   /** @param pairs (a, b) long vertex ids, one row per undirected edge
     * @param k     minimum degree to keep
@@ -47,8 +44,7 @@ object KCore {
     import spark.implicits._
     val e0 = pairs.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b")).localCheckpoint()
-    val nEdges = e0.count()
-    if (fastPathEnabled && nEdges <= 2500000L) { // ×2 after symmetrize = the 5M gate
+    if (GraphTier.singleTask("KCore.run", 2 * e0.count())) { // symmetrized adjacency
       e0.as[(Long, Long)].rdd.coalesce(1).mapPartitions { it =>
         val edges = it.toArray
         // dense int indexing of the touched vertex ids

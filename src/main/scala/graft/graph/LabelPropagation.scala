@@ -23,17 +23,14 @@ import org.apache.spark.sql.functions._
   * Labels localCheckpoint per round (self-referencing lineage — the
   * PageRank plan-growth lesson). Work per round is O(E) votes.
   *
-  * Fast tier (≤5M edges, the shared PageRank/HITS/BFS/k-core gate):
-  * the same synchronous rounds over int-indexed adjacency in ONE task,
-  * votes counted in a per-vertex hash map.
+  * Fast tier ([[GraphTier.singleTask]]): the same synchronous rounds
+  * over int-indexed adjacency in ONE task, votes counted in a per-vertex
+  * hash map.
   *
   * Input edges are UNDIRECTED, one row per pair (u < v), no self-loops
   * — the co-purchase pair relation shape (same as [[KCore]]).
   */
 object LabelPropagation {
-
-  /** Test seam: force the distributed tier (mirrors PageRank/KCore). */
-  @volatile private[graft] var fastPathEnabled: Boolean = true
 
   /** @param pairs  (a, b) long vertex ids, one row per undirected edge
     * @param rounds synchronous update rounds
@@ -53,8 +50,7 @@ object LabelPropagation {
     val p0 = (if (assumeCanonical) cast
               else cast.filter(col("a") =!= col("b")).distinct())
       .localCheckpoint()
-    val nEdges = p0.count()
-    if (fastPathEnabled && nEdges <= 5000000L) {
+    if (GraphTier.singleTask("LabelPropagation.run", p0.count())) {
       // r16 kernel: int-indexed CSR adjacency + a reusable sort-scratch
       // vote counter instead of boxed HashMap[Long,…] maps per vertex
       // per round (the boxing dominated the single task — measured

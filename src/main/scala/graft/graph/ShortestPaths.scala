@@ -20,17 +20,14 @@ import org.apache.spark.sql.functions._
   * (title, dist) rows — bounded by vertices, never by paths; determinism
   * is structural (min hop count is unique), so any engine agrees.
   *
-  * Fast tier (≤5M edges, the PageRank/HITS gate): the whole traversal
-  * runs inside ONE task over an adjacency hash map — per-hop job
-  * scheduling (≥4 jobs/hop: join, distinct, anti-join, isEmpty) costs
-  * seconds for milliseconds of set arithmetic at this size. Identical
+  * Fast tier ([[GraphTier.singleTask]]): the whole traversal runs
+  * inside ONE task over an adjacency hash map — per-hop job scheduling
+  * (≥4 jobs/hop: join, distinct, anti-join, isEmpty) costs seconds for
+  * milliseconds of set arithmetic at this size. Identical
   * semantics (seeds emit dist 0 even when edge-less; first reach wins;
   * hop cap inclusive), spec-compared against the distributed tier.
   */
 object ShortestPaths {
-
-  /** Test seam: force the distributed tier (mirrors PageRank/Hits). */
-  @volatile private[graft] var fastPathEnabled: Boolean = true
 
   /** @param edges   (src, dst) directed edges
     * @param sources seed vertex relation, column `title` (dist 0)
@@ -40,8 +37,7 @@ object ShortestPaths {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val nEdges = e.count()
-    if (fastPathEnabled && nEdges <= 5000000L) {
+    if (GraphTier.singleTask("ShortestPaths.run", e.count())) {
       // seed set is a query parameter — bounded by definition
       val seeds = sources.select(col("title")).distinct().as[String].collect()
       val seedsSorted = seeds.sorted // deterministic traversal order
@@ -109,7 +105,7 @@ object ShortestPaths {
     * O(E · rounds). Both relations localCheckpoint per round (dist is
     * multi-referenced — the PageRank plan-growth lesson).
     *
-    * Fast tier (≤5M edges, the shared gate): textbook Dijkstra with a
+    * Fast tier ([[GraphTier.singleTask]]): textbook Dijkstra with a
     * binary heap in ONE task — at this size per-round scheduling costs
     * more than the entire traversal.
     */
@@ -119,8 +115,7 @@ object ShortestPaths {
     import spark.implicits._
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .localCheckpoint()
-    val nEdges = e.count()
-    if (fastPathEnabled && nEdges <= 5000000L) {
+    if (GraphTier.singleTask("ShortestPaths.runWeighted", e.count())) {
       val seeds = sources.select(col("title")).distinct().as[String]
         .collect().sorted
       e.as[(String, String, Long)].rdd.coalesce(1).mapPartitions { it =>

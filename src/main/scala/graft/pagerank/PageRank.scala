@@ -3,6 +3,7 @@ package graft.pagerank
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.graph.GraphTier
 
 /** Iterative PageRank with the REFERENCE's exact semantics
   * (ref: PageRankAlgorithm.java:97-114, :323-399; SURVEY.md §2.10):
@@ -34,23 +35,10 @@ import org.apache.spark.storage.StorageLevel
   * At cluster scale the join and groupBy both shuffle on `title`;
   * hash-partitioning is stable across iterations so AQE reuses the
   * exchange layout, and the vertex side stays cached in executor memory.
+  * Each entry point runs a small graph inside one task instead — the
+  * tier is [[GraphTier.pageRankSingleTask]]'s decision.
   */
 object PageRank {
-
-  /** Loop partition sizing. One partition (⇒ the single-task fast path)
-    * only when BOTH the vertex count and the total link occurrences fit a
-    * task comfortably — the vertex bound alone would admit a
-    * small-vertex/high-degree graph whose adjacency lists are GBs.
-    * Otherwise ~50k vertices/partition with the session conf as the
-    * ceiling (below that, per-task scheduling overhead dominates the
-    * per-partition work — measured 2× at 16.5k vertices on 32
-    * partitions; above it, a cluster operator can still bound task
-    * size). The edge-count pass only runs for small-n graphs and reads
-    * the already-persisted RDD. */
-  /** Test hook: lets specs force the distributed loop on small graphs so
-    * both execution tiers stay covered (every test graph would otherwise
-    * take the fast path). Production code never touches this. */
-  @volatile private[graft] var fastPathEnabled: Boolean = true
 
   /** Maps key p (a partition index) to partition p — the carrier for
     * partition-encoded vertex ids ((p&lt;&lt;32)|local). */
@@ -59,21 +47,19 @@ object PageRank {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  private def sizeParts(n: Long, edges: Long, confParts: Int): Int = {
-    val small = fastPathEnabled && n <= 250000L && edges <= 5000000L
-    if (small) 1
-    else
-      // Scale by BOTH vertex and edge mass, capped by the session conf:
-      // the per-iteration cost is the EDGE expansion (flatMap + shuffle),
-      // so a link-dense graph needs more splits than its vertex count
-      // suggests — the 300k-vertex/3.6M-edge bench dump sized to 6 tasks
-      // by vertices alone, leaving 26 of 32 cores idle every iteration.
-      // ~50k vertices / ~150k edges per partition keep scheduling
-      // overhead small next to per-partition work (VERDICT r1 task 4).
-      math.min(confParts.toLong,
-        math.max(1L + (n - 1).max(0L) / 50000L,
-                 1L + (edges - 1).max(0L) / 150000L)).toInt
-  }
+  /** Distributed-loop partition sizing: ~50k vertices or ~150k edges per
+    * partition, whichever needs more (the edge expansion is the
+    * per-iteration cost: sized by vertices alone, the 300k-vertex/3.6M-
+    * edge bench dump left 26 of 32 cores idle), with the session conf as
+    * the ceiling. Below ~50k vertices per-task scheduling overhead
+    * dominates (measured 2× at 16.5k vertices on 32 partitions). The
+    * floor of 2 binds only under `GraphTier.distributedOnly` (a graph the
+    * single task rejects sizes to ≥ 6), so tiny test graphs still route
+    * messages across partitions. */
+  private def sizeParts(n: Long, edges: Long, confParts: Int): Int =
+    math.min(confParts.toLong,
+      math.max(2L, math.max(1L + (n - 1).max(0L) / 50000L,
+                            1L + (edges - 1).max(0L) / 150000L))).toInt
 
   /** ONE materializing pass over the fat cached relation computing both
     * sizing aggregates — r17 (guide §1.2 step 1): `count()` + a separate
@@ -113,21 +99,14 @@ object PageRank {
     // reference formula (init 1/n, constant 1−d base) bit for bit.
     // Seeds are broadcast-size by definition (a query's seed set).
     val seedBc = seeds.map(s => (spark.sparkContext.broadcast(s), 1.0 / s.size))
-    // Partition count scales with DATA, capped by the session conf: at
-    // ~50k vertices/partition the per-task scheduling overhead is already
-    // small next to the per-partition work; below that it dominates
-    // (measured: 16.5k vertices at 32 partitions ran ~2x slower than at
-    // 4 — VERDICT r1 task 4). The conf stays the ceiling, so a cluster
-    // operator can still bound task size at real scale. The raw RDD is
-    // persisted before the sizing count so an expensive upstream plan
-    // (e.g. wiki parse) is evaluated once, not twice.
+    // The raw RDD is persisted before the sizing count so an expensive
+    // upstream plan (e.g. wiki parse) is evaluated once, not twice.
     val raw = vertices.select("title", "outlinks").as[(String, Seq[String])]
       .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // one materializing pass computes BOTH sizing aggregates (r17 —
-    // count() + a separate edge-sum pass read the fat cache twice)
     val (n, nEdges) = sizeCounts(raw)
     val confParts = spark.sessionState.conf.numShufflePartitions
-    val numParts = sizeParts(n, nEdges, confParts)
+    val singleTask = GraphTier.pageRankSingleTask("PageRank.run", n, nEdges, confParts)
+    val numParts = if (singleTask) 1 else sizeParts(n, nEdges, confParts)
     val part = new org.apache.spark.HashPartitioner(numParts)
 
     // Optional per-iteration decimal rounding: pins every iteration's
@@ -138,9 +117,9 @@ object PageRank {
     val rnd: Double => Double = graft.functions.GridRound.fn(roundTo)
 
     val ranks =
-      if (numParts == 1) {
+      if (singleTask) {
         // r17 (guide §2.4): coalesce(1) instead of partitionBy(1) — the
-        // fast path needs ONE partition, not a hash layout, and the
+        // single task needs ONE partition, not a hash layout, and the
         // narrow coalesce reads raw's cache directly (measured 0.24 s vs
         // 0.9 s for the single-partition shuffle at sf0.1/32c, and one
         // materialization job fewer since nothing needs a second cache).
@@ -149,18 +128,18 @@ object PageRank {
         // by the per-iteration rounding contract; all pagerank oracles
         // re-certified at sf0.001/0.01/0.1.
         val links = raw.coalesce(1)
-        // SMALL-GRAPH FAST PATH: the whole vertex set fits one partition,
-        // so per-iteration job scheduling (2 stages × iters roundtrips to
-        // the scheduler for milliseconds of arithmetic) dominates the
-        // distributed loop. Run every iteration inside ONE task over the
-        // single partition instead — identical semantics (red links
+        // SINGLE-TASK TIER: the whole vertex set fits one partition, so
+        // per-iteration job scheduling (2 stages × iters roundtrips to
+        // the scheduler for milliseconds of arithmetic) would dominate
+        // the distributed loop. Run every iteration inside ONE task over
+        // the single partition instead — identical semantics (red links
         // dropped via the index lookup, dangling contribute nothing,
         // contribution-less pages rest at 1−d, duplicates/self-loops
         // kept, same rnd pinning), ~20× less wall-clock at 16.5k
-        // vertices. Graphs above ~50k vertices take the distributed
-        // path below unchanged; summation order differs only within the
-        // float tolerance every consumer already absorbs (specs compare
-        // at 1e-9; the oracle pins each iteration to the 1e-9 grid).
+        // vertices. Summation order differs from the distributed loop
+        // only within the float tolerance every consumer already absorbs
+        // (specs compare at 1e-9; the oracle pins each iteration to the
+        // 1e-9 grid).
         links.mapPartitions({ it =>
           val vertices = it.toArray
           val idx = new java.util.HashMap[String, Integer](vertices.length * 2)
@@ -243,6 +222,7 @@ object PageRank {
           } else {
             val l = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
             l.count()
+            raw.unpersist(false)
             l
           }
         val loopParts = links.getNumPartitions
@@ -377,7 +357,7 @@ object PageRank {
         lastCkpt.foreach(_.unpersist(false))
         named
       }
-    // Materialize before releasing the vertex cache (the fast path's
+    // Materialize before releasing the vertex cache (the single task's
     // result is derived lazily from raw through the coalesce);
     // distributed-path ranks are already checkpointed, so this count is
     // a cache hit there.
@@ -408,19 +388,21 @@ object PageRank {
     import spark.implicits._
     val raw0 = vertices.select("title", "outlinks").as[(String, Seq[String])]
       .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val (n, nEdges0) = sizeCounts(raw0)
+    val (n, nEdges) = sizeCounts(raw0)
     if (n == 0) {
       raw0.unpersist(false)
       return Seq.empty[(String, Double)].toDF("title", "rank")
     }
     val confParts = spark.sessionState.conf.numShufflePartitions
-    val numParts = sizeParts(n, nEdges0, confParts)
+    val singleTask =
+      GraphTier.pageRankSingleTask("PageRank.runNormalized", n, nEdges, confParts)
+    val numParts = if (singleTask) 1 else sizeParts(n, nEdges, confParts)
     // Only the DISTRIBUTED tier closes the graph relationally (explode +
-    // vertex semi-join + regroup): the fast path prunes red links for
+    // vertex semi-join + regroup): the single task prunes red links for
     // free while building its target-index arrays, so the extra pass
     // would be pure overhead exactly where the graph is smallest.
     val raw =
-      if (numParts == 1) raw0
+      if (singleTask) raw0
       else {
         val v = vertices.select("title", "outlinks")
         val titles = v.select(col("title"))
@@ -437,11 +419,11 @@ object PageRank {
         r
       }
     val part = new org.apache.spark.HashPartitioner(numParts)
-    // fast path: a narrow single-partition view of raw's cache (r17 —
+    // single task: a narrow single-partition view of raw's cache (r17 —
     // see run()); distributed tier keeps the hash layout its ids/join
     // machinery reuses, with raw released once links materializes
     val links =
-      if (numParts == 1) raw.coalesce(1)
+      if (singleTask) raw.coalesce(1)
       else {
         val l = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
         l.count()
@@ -454,7 +436,7 @@ object PageRank {
     val base = (1.0 - d) / n
 
     var ranks =
-      if (numParts == 1) {
+      if (singleTask) {
         links.mapPartitions({ it =>
           val vertices = it.toArray
           val m = vertices.length
@@ -544,7 +526,7 @@ object PageRank {
       }
     ranks.localCheckpoint()
     ranks.count()
-    links.unpersist(false) // no-op on the fast path's unpersisted coalesce
+    links.unpersist(false) // no-op on the single task's unpersisted coalesce
     raw.unpersist(false)
     ranks.toDF("title", "rank")
   }
@@ -574,20 +556,22 @@ object PageRank {
     import spark.implicits._
     val raw = vertices.select("title", "outlinks").as[(String, Seq[String])]
       .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val (n, nEdgesC) = sizeCounts(raw)
+    val (n, nEdges) = sizeCounts(raw)
     if (n == 0) {
       raw.unpersist(false)
       return Seq.empty[(String, Double)].toDF("title", "rank")
     }
     val confParts = spark.sessionState.conf.numShufflePartitions
-    val numParts = sizeParts(n, nEdgesC, confParts)
+    val singleTask =
+      GraphTier.pageRankSingleTask("PageRank.runConverged", n, nEdges, confParts)
+    val numParts = if (singleTask) 1 else sizeParts(n, nEdges, confParts)
     val part = new org.apache.spark.HashPartitioner(numParts)
     val links = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
     links.count()
     raw.unpersist(false)
 
-    if (numParts == 1) {
-      // Small-graph fast path (see `run`): sweep-to-convergence inside one
+    if (singleTask) {
+      // Single-task tier (see `run`): sweep-to-convergence inside one
       // task, with the delta check a free local comparison instead of a
       // per-iteration distributed join — the difference between ~130
       // scheduler roundtrips and one job for a cold convergence, which is

@@ -345,14 +345,15 @@ object Prof {
         }
         t("int final count")(r.count())
       case "triskew" =>
-        // r17 VERDICT#7 fixture: hub graph (vertex 0 wired to 1..N, plus
+        // r17 VERDICT#7 fixture: hub graph (vertex 0 wired to 1..N, N =
+        // 80k by default since a 40k hub does not show the hazard, plus
         // the ring i—i+1, so every hub edge closes a triangle) where the
         // pure intersection form pays Σ deg(hub)² merge visits and holds
         // the hub's full adjacency array. A/B: plain vs degreeCap=1000,
         // alternating in one JVM; then the UNIFORM co-purchase graph at
         // sf both ways (the "flat on uniform" check).
         import spark.implicits._
-        val nHub = Integer.parseInt(sys.env.getOrElse("SPARK_GRAFT_TRI_N", "40000"))
+        val nHub = Integer.parseInt(sys.env.getOrElse("SPARK_GRAFT_TRI_N", "80000"))
         val hubEdges = (1 to nHub).map(i => (0L, i.toLong)) ++
           (1 until nHub).map(i => (i.toLong, (i + 1).toLong))
         val hubDf = hubEdges.toDF("a", "b").repartition(32).localCheckpoint()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.graph.ConnectedComponents
+import graft.graph.{ConnectedComponents, GraphTier}
 
 /** Star-algorithm CC: correctness on known graphs, one-row-per-node
   * shape, and the round bound that justifies the O(log² n) claim on the
@@ -18,8 +18,9 @@ class ConnectedComponentsSpec extends SparkTestBase {
     val df = pairs.toDF("a", "b")
     val fast = ConnectedComponents.run(df, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val dist = ConnectedComponents.run(df, "a", "b", fastPathMaxEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    val dist = GraphTier.distributedOnly {
+      ConnectedComponents.run(df, "a", "b").as[(Long, Long)].collect().toMap
+    }
     assert(fast == dist, "fast path and star loop disagree")
     fast
   }
@@ -41,9 +42,10 @@ class ConnectedComponentsSpec extends SparkTestBase {
 
   test("exactly one row per node (star fixpoint is a function)") {
     val pairs = Seq((10L, 11L), (11L, 12L), (12L, 10L), (20L, 21L), (30L, 31L))
-    val df = ConnectedComponents.run(pairs.toDF("a", "b"), "a", "b",
-      fastPathMaxEdges = 0L)
-    assert(df.count() == df.select("node").distinct().count())
+    GraphTier.distributedOnly {
+      val df = ConnectedComponents.run(pairs.toDF("a", "b"), "a", "b")
+      assert(df.count() == df.select("node").distinct().count())
+    }
   }
 
   test("256-node chain converges within the log² bound, not the diameter") {

@@ -160,12 +160,14 @@ object GraftProperties extends Properties("graft") {
 
   property("star-algorithm components equal union-find on random pair graphs") =
     forAll(pairGraphGen) { pairs =>
-      // fastPathMaxEdges = 0 forces the DISTRIBUTED star loop — the
-      // default gate would route these small graphs to the driver
-      // union-find, which is exactly what this property checks against
-      val got = graft.graph.ConnectedComponents
-        .run(pairs.toDF("a", "b"), "a", "b", fastPathMaxEdges = 0L)
-        .as[(Long, Long)].collect().toMap
+      // distributedOnly forces the star loop — the tier policy would
+      // route these small graphs to the driver union-find, which is
+      // exactly what this property checks against
+      val got = graft.graph.GraphTier.distributedOnly {
+        graft.graph.ConnectedComponents
+          .run(pairs.toDF("a", "b"), "a", "b")
+          .as[(Long, Long)].collect().toMap
+      }
       got == unionFind(pairs)
     }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.{KCore, LabelPropagation, ShortestPaths, Triangles}
+import graft.graph.{GraphTier, KCore, LabelPropagation, ShortestPaths, Triangles}
 import scala.util.Random
 
 /** Triangle counting + bounded-hop BFS vs naive in-test interpreters on
@@ -42,8 +42,7 @@ class GraphOpsSpec extends SparkTestBase {
     def bfs() = ShortestPaths.run(edges, seeds, maxHops = 3)
       .as[(String, Long)].collect().toMap
     val fast = bfs()
-    ShortestPaths.fastPathEnabled = false
-    val dist = try bfs() finally ShortestPaths.fastPathEnabled = true
+    val dist = GraphTier.distributedOnly(bfs())
     assert(fast === dist)
     assert(fast("lonely") === 0L && fast("a") === 0L && fast("d") === 3L)
     assert(!fast.contains("x") && !fast.contains("y"))
@@ -128,8 +127,7 @@ class GraphOpsSpec extends SparkTestBase {
       .groupBy(identity).map { case (v, _) => v -> 4L }
     assert(kcoreSpark(e, 4) === expected)  // chain gone, core degs = 4
     assert(kcoreSpark(e, 5) === Map.empty) // K5 has max degree 4
-    KCore.fastPathEnabled = false
-    val dist = try kcoreSpark(e, 4) finally KCore.fastPathEnabled = true
+    val dist = GraphTier.distributedOnly(kcoreSpark(e, 4))
     assert(dist === expected)
   }
 
@@ -144,9 +142,9 @@ class GraphOpsSpec extends SparkTestBase {
       for (k <- Seq(2, 4, 6)) {
         val want = kcoreNaive(edges, k)
         assert(kcoreSpark(edges, k) === want, s"fast tier trial=$trial k=$k")
-        KCore.fastPathEnabled = false
-        try assert(kcoreSpark(edges, k) === want, s"dist tier trial=$trial k=$k")
-        finally KCore.fastPathEnabled = true
+        GraphTier.distributedOnly {
+          assert(kcoreSpark(edges, k) === want, s"dist tier trial=$trial k=$k")
+        }
       }
     }
   }
@@ -197,9 +195,9 @@ class GraphOpsSpec extends SparkTestBase {
       } yield (s"v$i", s"v$j", 1L + rnd.nextInt(4).toLong)
       val want = ssspNaive(edges, "v0", 8L)
       assert(ssspSpark(edges, "v0", 8L) === want, s"fast tier trial=$trial")
-      ShortestPaths.fastPathEnabled = false
-      try assert(ssspSpark(edges, "v0", 8L) === want, s"dist tier trial=$trial")
-      finally ShortestPaths.fastPathEnabled = true
+      GraphTier.distributedOnly {
+        assert(ssspSpark(edges, "v0", 8L) === want, s"dist tier trial=$trial")
+      }
     }
   }
 
@@ -246,9 +244,9 @@ class GraphOpsSpec extends SparkTestBase {
       for (rounds <- Seq(1, 3, 5)) {
         val want = lpaNaive(edges, rounds)
         assert(lpaSpark(edges, rounds) === want, s"fast trial=$trial r=$rounds")
-        LabelPropagation.fastPathEnabled = false
-        try assert(lpaSpark(edges, rounds) === want, s"dist trial=$trial r=$rounds")
-        finally LabelPropagation.fastPathEnabled = true
+        GraphTier.distributedOnly {
+          assert(lpaSpark(edges, rounds) === want, s"dist trial=$trial r=$rounds")
+        }
       }
     }
   }
@@ -269,13 +267,12 @@ class GraphOpsSpec extends SparkTestBase {
         assumeCanonical = true)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got === want, s"rounds=$rounds")
-      LabelPropagation.fastPathEnabled = false
-      try {
-        val gotD = LabelPropagation.run(edges.toDF("a", "b"), rounds,
+      val gotD = GraphTier.distributedOnly {
+        LabelPropagation.run(edges.toDF("a", "b"), rounds,
           assumeCanonical = true)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(gotD === want, s"dist rounds=$rounds")
-      } finally LabelPropagation.fastPathEnabled = true
+      }
+      assert(gotD === want, s"dist rounds=$rounds")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.Hits
+import graft.graph.{GraphTier, Hits}
 
 /** HITS verified against an in-test interpreter running the identical
   * max-normalized half-step recurrence (plain Scala loops — a second,
@@ -87,12 +87,10 @@ class HitsSpec extends SparkTestBase {
     val df = fixture.toDF("src", "dst")
     val fast = Hits.run(df, iters = 6)
       .as[(String, Double, Double)].collect().toSet
-    try {
-      Hits.fastPathEnabled = false
-      val dist = Hits.run(df, iters = 6)
-        .as[(String, Double, Double)].collect().toSet
-      assert(fast == dist)
-    } finally Hits.fastPathEnabled = true
+    val dist = GraphTier.distributedOnly {
+      Hits.run(df, iters = 6).as[(String, Double, Double)].collect().toSet
+    }
+    assert(fast == dist)
   }
 
   test("iteration count changes values (loop really iterates)") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.pagerank.PageRank
+import graft.graph.GraphTier
 import graft.parse.WikiParser
 
 /** Golden end-to-end tests on a hand-written mini wiki-XML fixture covering
@@ -129,11 +130,10 @@ class PageRankSpec extends SparkTestBase {
     // D never receives mass (nothing links to it, it is not a seed)
     assert(got("D") === 0.0)
     // distributed tier computes the same personalized recurrence
-    PageRank.fastPathEnabled = false
-    val dist = try {
+    val dist = GraphTier.distributedOnly {
       PageRank.run(graph, iters = 10, seeds = Some(seeds))
         .as[(String, Double)].collect().toMap
-    } finally PageRank.fastPathEnabled = true
+    }
     assert(dist.keySet == got.keySet)
     got.foreach { case (t, r) => assert(math.abs(r - dist(t)) < 1e-12) }
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.pagerank.PageRank
+import graft.graph.GraphTier
 import graft.streaming.GraphStream
 import graft.streaming.GraphStream.{IncrementalRanker, PageEdit}
 
@@ -103,9 +104,7 @@ class StreamingPageRankSpec extends SparkTestBase {
       PageRank.runNormalized(g, iters = 7).as[(String, Double)].collect().toMap,
       PageRank.runConverged(g, eps = 1e-10).as[(String, Double)].collect().toMap)
     val (f1, f2, f3) = all()
-    PageRank.fastPathEnabled = false
-    val (d1, d2, d3) =
-      try all() finally PageRank.fastPathEnabled = true
+    val (d1, d2, d3) = GraphTier.distributedOnly(all())
     for ((fast, dist) <- Seq((f1, d1), (f2, d2), (f3, d3))) {
       assert(fast.keySet == dist.keySet)
       for ((t, r) <- fast) assert(math.abs(dist(t) - r) < 1e-9, s"$t: $r vs ${dist(t)}")
