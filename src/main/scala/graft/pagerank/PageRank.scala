@@ -47,6 +47,46 @@ object PageRank {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
+  /** One loop partition of [[run]]'s distributed tier, all primitive
+    * arrays: the out-degree of each local vertex (red links counted), a
+    * CSR whose row v — edges off(v) until off(v + 1) — holds each edge's
+    * message slot, the slots of destination partition q at slotOff(q)
+    * until slotOff(q + 1), each slot's destination-local index in outIdx,
+    * and the teleport weights (null: the uniform reference formula). */
+  private final case class LoopGraph(deg: Array[Int], off: Array[Int], slot: Array[Int],
+      slotOff: Array[Int], outIdx: Array[Int], tele: Array[Double])
+
+  /** Stable counting sort of items by bucket `key(k)` in [0, nb): bucket b
+    * holds sorted positions off(b) until off(b + 1), item k goes to
+    * pos(k). */
+  private def bucketSort(nb: Int, key: Array[Int]): (Array[Int], Array[Int]) = {
+    val off = new Array[Int](nb + 1)
+    var k = 0
+    while (k < key.length) { off(key(k) + 1) += 1; k += 1 }
+    var b = 0
+    while (b < nb) { off(b + 1) += off(b); b += 1 }
+    val next = java.util.Arrays.copyOf(off, nb)
+    val pos = new Array[Int](key.length)
+    k = 0
+    while (k < key.length) { pos(k) = next(key(k)); next(key(k)) += 1; k += 1 }
+    (off, pos)
+  }
+
+  /** The non-empty buckets of two bucket-sorted arrays as chunk records
+    * (bucket, (a's slice, b's slice)). */
+  private def chunks[A, B](off: Array[Int], a: Array[A],
+      b: Array[B]): Iterator[(Int, (Array[A], Array[B]))] =
+    (0 until off.length - 1).iterator.filter(q => off(q + 1) > off(q))
+      .map(q => (q, (a.slice(off(q), off(q + 1)), b.slice(off(q), off(q + 1)))))
+
+  /** The partition half of each partition-encoded id (p&lt;&lt;32)|local. */
+  private def partOf(ids: Array[Long]): Array[Int] = {
+    val p = new Array[Int](ids.length)
+    var k = 0
+    while (k < ids.length) { p(k) = (ids(k) >>> 32).toInt; k += 1 }
+    p
+  }
+
   /** Distributed-loop partition sizing: ~50k vertices or ~150k edges per
     * partition, whichever needs more (the edge expansion is the
     * per-iteration cost: sized by vertices alone, the 300k-vertex/3.6M-
@@ -82,11 +122,17 @@ object PageRank {
     * FIXED shape, so Catalyst re-planning + whole-stage codegen per
     * iteration buys nothing and costs a lot — measured ~10 s/iteration of
     * planning + JIT-compilation overhead at 165k vertices vs ~0.5 s of
-    * actual work. With a shared HashPartitioner the links⋈ranks join and
-    * the sums⋈links join are NARROW (no shuffle); only the contribution
-    * reduceByKey shuffles — one shuffle per iteration, the theoretical
-    * minimum. See `runDataFrame` for the Catalyst formulation (kept for
-    * cross-checking; same semantics). */
+    * actual work.
+    *
+    * The distributed tier works on primitive arrays after the row cache:
+    * titles resolve to ids (p&lt;&lt;32)|local in one chunked hash-bucket
+    * pass, each loop partition keeps a counting-sort CSR whose edges point
+    * at slots of one outgoing `Array[Double]` (a slot per distinct
+    * destination, grouped by destination partition — GraphX's routing
+    * table), and each iteration is one narrow sender pass, one shuffle of
+    * at most P² chunk records `(q, (destination indices, slot sums))` and
+    * one narrow receiver pass. See `runDataFrame` for the Catalyst
+    * formulation (kept for cross-checking; same semantics). */
   def run(vertices: DataFrame, iters: Int = 10, d: Double = 0.85,
           checkpointEvery: Int = 3, roundTo: Int = -1,
           seeds: Option[Set[String]] = None): DataFrame = {
@@ -184,36 +230,15 @@ object PageRank {
           vertices.iterator.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
         }, preservesPartitioning = true)
       } else {
-        // PARTITION-ENCODED aggregateMessages loop (the GraphX shape,
-        // hand-tuned): vertices get ids (p<<32)|localIndex, the graph
-        // becomes per-partition primitive arrays (degrees + resolved
-        // target lists), and each iteration ships ONE chunked message
-        // record per (source partition, destination partition) pair —
-        // ≤ numParts² records of primitive arrays instead of millions of
-        // (key, contrib) tuples. Measured on the 300k-vertex/3.6M-edge
-        // bench dump: 10 iterations in ~3.7 s vs ~13 s for the
-        // (Long, Double) reduceByKey loop vs ~22 s for string keys.
-        // Resolution is JOIN-based — the vertex set never visits the
-        // driver. Red links drop in the dst⋈ids join; the ORIGINAL
-        // degree (red links included) stays the divisor, so their
-        // contributions vanish exactly as the reference drops them
-        // (ref :369,:392-394). Dangling/linkless vertices emit nothing
-        // and rest at 1−d. Lineage: cadenced eager localCheckpoint as
-        // before (ADVICE r1) — the delete-behind discipline.
-        // r17 (guide §2.4 remove shuffles outright; §8 move heavy bytes
-        // once): the loop never needs a hash(title) layout — ids, the
-        // message routing and the rank arrays all key by PARTITION INDEX,
-        // so ANY layout works as long as links/csr/ranks share it.
-        // Hash-shuffling the fat (title, outlinks) rows was a full extra
-        // serialization round-trip of the heaviest relation in the job;
-        // when the scan already yields a usable partition count (within
-        // 3x of the sizing target), run the loop on the scan's own layout
-        // (coalesced under the conf ceiling — narrow, no shuffle). Only a
-        // severely under-split scan (one gzip file feeding a big graph)
-        // still pays the spreading shuffle. The title-resolution join
-        // keeps its own HashPartitioner(numParts) parallelism either way
-        // (on the native layout it additionally shuffles `ids` — 16 bytes
-        // a row against the adjacency payload it saves).
+        // ROUTING-TABLE loop (GraphX's aggregateMessages shape, on
+        // primitive arrays): vertices get ids (p<<32)|localIndex on the
+        // loop layout, every partition precomputes once where each of
+        // its edges' contributions goes, and each iteration ships ONE
+        // chunked message per (source, destination) partition pair. The
+        // loop runs on the scan's own layout (coalesced under the conf
+        // ceiling — narrow) unless the scan is severely under-split (one
+        // gzip file feeding a big graph): only then are the fat
+        // (title, outlinks) rows hash-shuffled onto numParts partitions.
         val nativeParts = raw.getNumPartitions
         val useNative = nativeParts >= math.max(1, numParts / 3)
         val links =
@@ -227,111 +252,148 @@ object PageRank {
           }
         val loopParts = links.getNumPartitions
         val pPart = IndexPartitioner(loopParts)
-        val ids = links.mapPartitionsWithIndex({ (p, it) =>
-          it.zipWithIndex.map { case ((t, _), i) => (t, (p.toLong << 32) | i) }
-        }, preservesPartitioning = true)
-        val csr = links.mapPartitionsWithIndex { (p, it) =>
-          it.zipWithIndex.flatMap { case ((_, ls), i) =>
-            val src = (p.toLong << 32) | i
-            ls.iterator.map(dst => (dst, src))
+
+        // 1. Title resolution: each loop partition sends its titles (with
+        // their ids) and its link occurrences (with the source id) to
+        // bucket hash(title) mod numParts, one chunk record per bucket;
+        // each bucket builds one title → id table and streams the
+        // occurrence chunks through it — red links drop here, a
+        // duplicated title resolves to every page carrying it — and sends
+        // the resolved (src, dst) ids back to the source partition,
+        // chunked. Only one occurrence chunk's strings are live at a time.
+        val hPart = IndexPartitioner(numParts)
+        val titleChunks = links.mapPartitionsWithIndex { (p, it) =>
+          val ts = it.map(_._1).toArray
+          val key = new Array[Int](ts.length)
+          for (i <- ts.indices) key(i) = part.getPartition(ts(i))
+          val (off, pos) = bucketSort(numParts, key)
+          val titles = new Array[String](ts.length)
+          val ids = new Array[Long](ts.length)
+          for (i <- ts.indices) { titles(pos(i)) = ts(i); ids(pos(i)) = (p.toLong << 32) | i }
+          chunks(off, titles, ids)
+        }.partitionBy(hPart)
+        val linkChunks = links.mapPartitionsWithIndex { (p, it) =>
+          val vs = it.toArray
+          val key = new Array[Int](vs.iterator.map(_._2.size).sum)
+          var k = 0
+          for (v <- vs; l <- v._2) { key(k) = part.getPartition(l); k += 1 }
+          val (off, pos) = bucketSort(numParts, key)
+          val dsts = new Array[String](key.length)
+          val srcs = new Array[Long](key.length)
+          k = 0
+          for (i <- vs.indices; l <- vs(i)._2) {
+            dsts(pos(k)) = l; srcs(pos(k)) = (p.toLong << 32) | i; k += 1
           }
-        }.join(ids, part)
-          .map { case (_, (src, dstEnc)) =>
-            ((src >> 32).toInt, ((src & 0xffffffffL).toInt, dstEnc)) }
-          .groupByKey(pPart)
-        val graph = links.zipPartitions(csr, preservesPartitioning = true) { (lit, cit) =>
-          val degs = lit.map(_._2.size).toArray
-          val m = degs.length
-          val buf = Array.fill(m)(new scala.collection.mutable.ArrayBuffer[Long]())
-          cit.foreach { case (_, pairs) =>
-            pairs.foreach { case (local, dst) => buf(local) += dst } }
-          Iterator.single((degs, buf.map(_.toArray)))
+          chunks(off, dsts, srcs)
+        }.partitionBy(hPart)
+        val resolved = titleChunks.zipPartitions(linkChunks) { (tit, lit) =>
+          val tcs = tit.map(_._2).toArray
+          // open addressing (id -1 = empty slot, load ≤ 1/2); Fibonacci
+          // hashing takes the high bits, since a bucket's titles share
+          // hashCode mod numParts; null matches null, as in a pair join
+          var cap = 2
+          while (cap < 2 * tcs.map(_._1.length).sum) cap <<= 1
+          val shift = Integer.numberOfLeadingZeros(cap) + 1
+          def home(t: String) = (java.util.Objects.hashCode(t) * 0x9E3779B9) >>> shift
+          val tabTitle = new Array[String](cap)
+          val tabId = new Array[Long](cap)
+          java.util.Arrays.fill(tabId, -1L)
+          for ((ts, is) <- tcs; j <- ts.indices) {
+            var h = home(ts(j))
+            while (tabId(h) >= 0) h = (h + 1) & (cap - 1)
+            tabTitle(h) = ts(j); tabId(h) = is(j)
+          }
+          val src = new scala.collection.mutable.ArrayBuilder.ofLong
+          val dst = new scala.collection.mutable.ArrayBuilder.ofLong
+          for ((_, (ds, ss)) <- lit; j <- ds.indices) {
+            var h = home(ds(j))
+            while (tabId(h) >= 0) {
+              if (tabTitle(h) == ds(j)) { src += ss(j); dst += tabId(h) }
+              h = (h + 1) & (cap - 1)
+            }
+          }
+          val (srcA, dstA) = (src.result(), dst.result())
+          val (off, pos) = bucketSort(loopParts, partOf(srcA))
+          val local = new Array[Int](srcA.length)
+          val dstS = new Array[Long](srcA.length)
+          for (j <- srcA.indices) { local(pos(j)) = srcA(j).toInt; dstS(pos(j)) = dstA(j) }
+          chunks(off, local, dstS)
+        }.partitionBy(pPart)
+
+        // 2. Static graph: a counting-sort CSR over the local vertices,
+        // and one message slot per distinct destination — the sorted
+        // distinct destination ids, so slots group by destination
+        // partition and ascend in destination-local index.
+        val graph = links.zipPartitions(resolved, preservesPartitioning = true) { (lit, rit) =>
+          val vs = lit.toArray
+          val rcs = rit.map(_._2).toArray
+          val (off, pos) = bucketSort(vs.length, Array.concat(rcs.map(_._1).toSeq: _*))
+          val dst = Array.concat(rcs.map(_._2).toSeq: _*)
+          val sorted = dst.clone()
+          java.util.Arrays.sort(sorted)
+          var u = 0; var k = 0
+          while (k < sorted.length) {
+            if (u == 0 || sorted(u - 1) != sorted(k)) { sorted(u) = sorted(k); u += 1 }
+            k += 1
+          }
+          val uniq = java.util.Arrays.copyOf(sorted, u)
+          val slot = new Array[Int](dst.length)
+          k = 0
+          while (k < dst.length) { slot(pos(k)) = java.util.Arrays.binarySearch(uniq, dst(k)); k += 1 }
+          val (slotOff, _) = bucketSort(loopParts, partOf(uniq))
+          val outIdx = new Array[Int](u)
+          for (j <- outIdx.indices) outIdx(j) = uniq(j).toInt
+          val deg = new Array[Int](vs.length)
+          var v = 0
+          while (v < vs.length) { deg(v) = vs(v)._2.size; v += 1 }
+          val tele = seedBc.map { case (bc, invS) =>
+            vs.map(v => if (bc.value(v._1)) invS else 0.0) }.orNull
+          Iterator.single(LoopGraph(deg, off, slot, slotOff, outIdx, tele))
         }.persist(StorageLevel.MEMORY_AND_DISK)
         graph.count()
 
-        // per-partition teleport arrays, aligned with the links order the
-        // rank arrays follow (null sentinel = uniform reference formula)
-        val teleRdd = seedBc.map { case (bc, invS) =>
-          val t = links.mapPartitions({ it =>
-            Iterator.single(it.map { case (title, _) =>
-              if (bc.value(title)) invS else 0.0 }.toArray)
-          }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-          t.count()
-          t
-        }
-
-        var r = teleRdd match {
-          case Some(t) => t.mapPartitions(_.map(_.map(rnd)))
-          case None => graph.mapPartitions(
-            _.map { case (degs, _) => Array.fill(degs.length)(rnd(1.0 / n)) })
-        }
+        // 3. Iterations: the sender sums each edge's contribution into
+        // its slot — per slot in vertex-then-edge order — and ships the
+        // slots of destination partition q as (q, (their outIdx, their sums)).
+        // The divisor is the full out-degree, so red-link shares vanish
+        // as the reference drops them (ref :369, :392-394); dangling
+        // pages send nothing and pages no link reaches rest at 1−d.
+        var r = graph.mapPartitions(_.map { g =>
+          if (g.tele != null) g.tele.map(rnd)
+          else { val a = new Array[Double](g.deg.length); java.util.Arrays.fill(a, rnd(1.0 / n)); a }
+        })
         var lastCkpt: Option[org.apache.spark.rdd.RDD[Array[Double]]] = None
         for (i <- 1 to iters) {
           val msgs = graph.zipPartitions(r) { (git, rit) =>
-            if (git.isEmpty) Iterator.empty
-            else {
-              val (degs, targets) = git.next()
-              val rank = rit.next()
-              val accs = Array.fill(loopParts)(
-                new scala.collection.mutable.LongMap[Double]())
-              var v = 0
-              while (v < degs.length) {
-                if (degs(v) > 0 && targets(v).nonEmpty) {
-                  val c = rank(v) / degs(v)
-                  val ts = targets(v)
-                  var k = 0
-                  while (k < ts.length) {
-                    val tEnc = ts(k)
-                    val acc = accs((tEnc >> 32).toInt)
-                    val key = tEnc & 0xffffffffL
-                    acc(key) = acc.getOrElse(key, 0.0) + c
-                    k += 1
-                  }
-                }
-                v += 1
+            val LoopGraph(deg, off, slot, slotOff, outIdx, _) = git.next()
+            val rank = rit.next()
+            val out = new Array[Double](slotOff(loopParts))
+            var v = 0
+            while (v < deg.length) {
+              var k = off(v)
+              if (k < off(v + 1)) {
+                val c = rank(v) / deg(v)
+                while (k < off(v + 1)) { out(slot(k)) += c; k += 1 }
               }
-              (0 until loopParts).iterator.filter(p => accs(p).nonEmpty).map { p =>
-                val m2 = accs(p)
-                val idx = new Array[Int](m2.size)
-                val s2 = new Array[Double](m2.size)
-                var j = 0
-                m2.foreach { case (k2, v2) => idx(j) = k2.toInt; s2(j) = v2; j += 1 }
-                (p, (idx, s2))
-              }
+              v += 1
             }
+            chunks(slotOff, outIdx, out)
           }.partitionBy(pPart)
-          r = teleRdd match {
-            case None => graph.zipPartitions(msgs) { (git, mit) =>
-              if (git.isEmpty) Iterator.empty
-              else {
-                val (degs, _) = git.next()
-                val sums = new Array[Double](degs.length)
-                mit.foreach { case (_, (idx, s2)) =>
-                  var j = 0
-                  while (j < idx.length) { sums(idx(j)) += s2(j); j += 1 }
-                }
-                var v = 0
-                while (v < sums.length) { sums(v) = rnd(d * sums(v) + (1.0 - d)); v += 1 }
-                Iterator.single(sums)
-              }
+          r = graph.zipPartitions(msgs) { (git, mit) =>
+            val g = git.next()
+            val sums = new Array[Double](g.deg.length)
+            mit.foreach { case (_, (idx, s2)) =>
+              var j = 0
+              while (j < idx.length) { sums(idx(j)) += s2(j); j += 1 }
             }
-            case Some(t) => graph.zipPartitions(msgs, t) { (git, mit, tit) =>
-              if (git.isEmpty) Iterator.empty
-              else {
-                val (degs, _) = git.next()
-                val tele = tit.next()
-                val sums = new Array[Double](degs.length)
-                mit.foreach { case (_, (idx, s2)) =>
-                  var j = 0
-                  while (j < idx.length) { sums(idx(j)) += s2(j); j += 1 }
-                }
-                var v = 0
-                while (v < sums.length) {
-                  sums(v) = rnd(d * sums(v) + (1.0 - d) * tele(v)); v += 1
-                }
-                Iterator.single(sums)
-              }
+            var v = 0
+            while (v < sums.length) {
+              sums(v) =
+                if (g.tele == null) rnd(d * sums(v) + (1.0 - d))
+                else rnd(d * sums(v) + (1.0 - d) * g.tele(v))
+              v += 1
             }
+            Iterator.single(sums)
           }
           if (i % checkpointEvery == 0 || i == iters) {
             r.localCheckpoint()
@@ -343,17 +405,13 @@ object PageRank {
         // restore titles by partition-local position (no join needed —
         // links and the rank arrays share partitioning and order)
         val named = links.zipPartitions(r) { (lit, rit) =>
-          if (lit.isEmpty) Iterator.empty
-          else {
-            val rank = rit.next()
-            lit.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
-          }
+          val rank = rit.next()
+          lit.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
         }
         named.localCheckpoint()
         named.count()
         graph.unpersist(false)
         if (!useNative) links.unpersist(false) // native layout = raw's cache
-        teleRdd.foreach(_.unpersist(false))
         lastCkpt.foreach(_.unpersist(false))
         named
       }

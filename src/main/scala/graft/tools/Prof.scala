@@ -54,64 +54,11 @@ object Prof {
         t("bands")(bands.count())
         val pairs = graft.dedup.Dedup.lshCandidatePairs(sigs)
         t("pairs")(pairs.count())
-      case "prstep" =>
-        // instrumented copy of PageRank.run to localize per-iteration cost
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.storage.StorageLevel
-        val g = graft.SparkEntry.pagerankGraph(spark, sfDir)
-        val verts = g.select(col("title"), col("outlinks"))
-          .repartition(col("title")).persist(StorageLevel.MEMORY_AND_DISK)
-        val n = t("verts count")(verts.count())
-        var ranks = verts.select(col("title"), lit(1.0 / n).as("rank"))
-        for (i <- 1 to 10) {
-          val contribs = ranks.join(verts, "title")
-            .filter(size(col("outlinks")) > 0)
-            .select(explode(col("outlinks")).as("title"),
-              (col("rank") / size(col("outlinks"))).as("c"))
-          val summed = contribs.groupBy("title").agg(sum("c").as("s"))
-          val next = verts.select("title").join(summed, Seq("title"), "left")
-            .select(col("title"),
-              (lit(0.85) * coalesce(col("s"), lit(0.0)) + lit(0.15)).as("rank"))
-          ranks = t(s"iter $i checkpoint")(next.localCheckpoint())
-        }
-        t("final count")(ranks.count())
       case "sigdump" =>
         graft.dedup.Dedup.minhashSignatures(
             graft.Tables.documents(spark, sfDir), "doc_id", "text")
           .orderBy("doc_id").limit(3).collect()
           .foreach(r => println("SIG " + r.mkString("|")))
-      case "prsetup" =>
-        // stage-by-stage fixed-cost breakdown of PageRank.run's setup
-        import org.apache.spark.storage.StorageLevel
-        for (round <- 1 to 2) {
-          val g = graft.SparkEntry.pagerankGraph(spark, sfDir)
-          t(s"df count $round")(g.count())
-          val raw = t(s"rdd convert+persist+count $round") {
-            import spark.implicits._
-            val r = g.select("title", "outlinks").as[(String, Seq[String])]
-              .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-            r.count(); r
-          }
-          val part = new org.apache.spark.HashPartitioner(1)
-          val links = t(s"partitionBy+count $round") {
-            val l = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-            l.count(); l
-          }
-          t(s"10 iters $round") {
-            var ranks = links.mapValues(_ => 1.0 / 16500)
-            for (_ <- 1 to 10) {
-              val contribs = links.join(ranks, part).flatMap { case (_, (ls, r)) =>
-                if (ls.isEmpty) Iterator.empty
-                else { val c = r / ls.size; ls.iterator.map(l => (l, c)) }
-              }
-              val sums = contribs.reduceByKey(part, _ + _)
-              ranks = links.leftOuterJoin(sums, part)
-                .mapValues { case (_, s) => 0.85 * s.getOrElse(0.0) + 0.15 }
-            }
-            ranks.count()
-          }
-          raw.unpersist(false); links.unpersist(false)
-        }
       case "prtwice" =>
         val g = graft.SparkEntry.pagerankGraph(spark, sfDir)
         t("pagerank run A")(graft.pagerank.PageRank.run(g, iters = 10).count())
@@ -277,73 +224,6 @@ object Prof {
         t("parse+links count")(edges.count())
         t("parse+links again")(edges.count())
         t("pagerank e2e")(graft.pipelines.WikiPipelines.pageRank(spark, path).count())
-      case "dumpstep" =>
-        // instrumented copy of PageRank.run's distributed path over the
-        // bench dump: where do the ~30 s go?
-        import org.apache.spark.storage.StorageLevel
-        val path = sys.env.getOrElse("SPARK_GRAFT_DUMP_PATH", "/tmp/graft_dump.xml")
-        val edgesDf = graft.parse.WikiParser.linkGraphFused(
-          graft.sources.TextKV.readPages(spark, path))
-        import spark.implicits._
-        val raw = edgesDf.select("title", "outlinks").as[(String, Seq[String])]
-          .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = t("raw persist+count")(raw.count())
-        val parts = Integer.parseInt(sys.env.getOrElse("SPARK_GRAFT_PROF_PARTS", "24"))
-        val part = new org.apache.spark.HashPartitioner(parts)
-        val links = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-        t("links partitionBy+count")(links.count())
-        var r = links.mapValues(_ => 1.0 / n)
-        for (i <- 1 to 10) {
-          t(s"iter $i") {
-            val contribs = links.join(r, part).flatMap { case (_, (ls, rk)) =>
-              if (ls.isEmpty) Iterator.empty
-              else { val c = rk / ls.size; ls.iterator.map(l => (l, c)) }
-            }
-            val sums = contribs.reduceByKey(part, _ + _)
-            r = links.leftOuterJoin(sums, part)
-              .mapValues { case (_, s) => 0.85 * s.getOrElse(0.0) + 0.15 }
-            if (i % 3 == 0 || i == 10) { r.localCheckpoint(); r.count() }
-          }
-        }
-        t("final count")(r.count())
-      case "dumpint" =>
-        // ceiling probe: same loop with INT vertex ids (broadcast-resolved
-        // here; a real implementation would resolve by join) — how much of
-        // the iteration cost is String keys?
-        import org.apache.spark.storage.StorageLevel
-        val path = sys.env.getOrElse("SPARK_GRAFT_DUMP_PATH", "/tmp/graft_dump.xml")
-        val edgesDf = graft.parse.WikiParser.linkGraphFused(
-          graft.sources.TextKV.readPages(spark, path))
-        import spark.implicits._
-        val raw = edgesDf.select("title", "outlinks").as[(String, Seq[String])]
-          .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = raw.count()
-        val parts = Integer.parseInt(sys.env.getOrElse("SPARK_GRAFT_PROF_PARTS", "6"))
-        val part = new org.apache.spark.HashPartitioner(parts)
-        val idMap = t("id map build")(
-          raw.keys.collect().zipWithIndex.toMap)
-        val bc = spark.sparkContext.broadcast(idMap)
-        val intLinks = t("int links build") {
-          val l = raw.map { case (ti, ls) =>
-            val m = bc.value
-            (m(ti), (ls.size, ls.iterator.flatMap(m.get).toArray))
-          }.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-          l.count(); l
-        }
-        var r = intLinks.mapValues(_ => 1.0 / n)
-        for (i <- 1 to 10) {
-          t(s"int iter $i") {
-            val contribs = intLinks.join(r, part).flatMap { case (_, ((deg, ts), rk)) =>
-              if (deg == 0) Iterator.empty
-              else { val c = rk / deg; ts.iterator.map(tg => (tg, c)) }
-            }
-            val sums = contribs.reduceByKey(part, _ + _)
-            r = intLinks.leftOuterJoin(sums, part)
-              .mapValues { case (_, s) => 0.85 * s.getOrElse(0.0) + 0.15 }
-            if (i % 3 == 0 || i == 10) { r.localCheckpoint(); r.count() }
-          }
-        }
-        t("int final count")(r.count())
       case "triskew" =>
         // r17 VERDICT#7 fixture: hub graph (vertex 0 wired to 1..N, N =
         // 80k by default since a 40k hub does not show the hazard, plus
@@ -501,127 +381,6 @@ object Prof {
             explode(transform(sequence(lit(1), size(graft.ops.TextOps.tokenize(col("text"))) - 4),
               i => concat_ws(" ", (0 until 5).map(k =>
                 element_at(graft.ops.TextOps.tokenize(col("text")), i + lit(k))): _*))).as("s")).count())
-      case "dumpenc" =>
-        // ceiling probe: partition-encoded ids ((p<<32)|local) + chunked
-        // primitive-array message shuffle — the aggregateMessages shape.
-        // Per iteration the shuffle moves ≤ parts² records of primitive
-        // arrays instead of millions of (Long, Double) tuples.
-        import org.apache.spark.storage.StorageLevel
-        val path = sys.env.getOrElse("SPARK_GRAFT_DUMP_PATH", "/tmp/graft_dump.xml")
-        val edgesDf = graft.parse.WikiParser.linkGraphFused(
-          graft.sources.TextKV.readPages(spark, path))
-        import spark.implicits._
-        val raw = edgesDf.select("title", "outlinks").as[(String, Seq[String])]
-          .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = t("raw persist+count")(raw.count())
-        println(s"PROF raw partitions=${raw.getNumPartitions}")
-        val parts = Integer.parseInt(sys.env.getOrElse("SPARK_GRAFT_PROF_PARTS", "24"))
-        val part = new org.apache.spark.HashPartitioner(parts)
-        val pPart = new org.apache.spark.Partitioner {
-          def numPartitions: Int = parts
-          def getPartition(key: Any): Int = key.asInstanceOf[Int]
-        }
-        val links = t("links partitionBy+count") {
-          val l = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-          l.count(); l
-        }
-        raw.unpersist(false)
-        val ids = t("ids build") {
-          val i = links.mapPartitionsWithIndex({ (p, it) =>
-            it.zipWithIndex.map { case ((t, _), i) => (t, (p.toLong << 32) | i) }
-          }, preservesPartitioning = true).persist(StorageLevel.MEMORY_AND_DISK)
-          i.count(); i
-        }
-        val csr = t("csr build") {
-          val c = links.mapPartitionsWithIndex { (p, it) =>
-            it.zipWithIndex.flatMap { case ((_, ls), i) =>
-              val src = (p.toLong << 32) | i
-              ls.iterator.map(dst => (dst, src))
-            }
-          }.join(ids, part)
-            .map { case (_, (src, dstEnc)) =>
-              ((src >> 32).toInt, ((src & 0xffffffffL).toInt, dstEnc)) }
-            .groupByKey(pPart)
-          val r = c.persist(StorageLevel.MEMORY_AND_DISK); r.count(); r
-        }
-        // per-partition graph: degrees (original, incl red links) +
-        // resolved target lists aligned by local index
-        val graph = t("graph build") {
-          val g = links.zipPartitions(csr, preservesPartitioning = true) { (lit, cit) =>
-            val degs = lit.map(_._2.size).toArray
-            val m = degs.length
-            val targets = Array.fill(m)(Array.empty[Long])
-            val buf = Array.fill(m)(new scala.collection.mutable.ArrayBuffer[Long]())
-            cit.foreach { case (_, pairs) =>
-              pairs.foreach { case (local, dst) => buf(local) += dst } }
-            var i = 0
-            while (i < m) { targets(i) = buf(i).toArray; i += 1 }
-            Iterator.single((degs, targets))
-          }.persist(StorageLevel.MEMORY_AND_DISK)
-          g.count(); g
-        }
-        var ranks = graph.mapPartitions(
-          { it => it.map { case (degs, _) => Array.fill(degs.length)(1.0 / n) } },
-          preservesPartitioning = true)
-        for (i <- 1 to 10) {
-          t(s"enc iter $i") {
-            val msgs = graph.zipPartitions(ranks) { (git, rit) =>
-              if (git.isEmpty) Iterator.empty
-              else {
-                val (degs, targets) = git.next()
-                val rank = rit.next()
-                val accs = Array.fill(parts)(new scala.collection.mutable.LongMap[Double]())
-                var v = 0
-                while (v < degs.length) {
-                  if (degs(v) > 0 && targets(v).nonEmpty) {
-                    val c = rank(v) / degs(v)
-                    val ts = targets(v)
-                    var k = 0
-                    while (k < ts.length) {
-                      val tEnc = ts(k)
-                      val acc = accs((tEnc >> 32).toInt)
-                      val key = tEnc & 0xffffffffL
-                      acc(key) = acc.getOrElse(key, 0.0) + c
-                      k += 1
-                    }
-                  }
-                  v += 1
-                }
-                (0 until parts).iterator.filter(p => accs(p).nonEmpty).map { p =>
-                  val m2 = accs(p)
-                  val idx = new Array[Int](m2.size); val s2 = new Array[Double](m2.size)
-                  var j = 0
-                  m2.foreach { case (k2, v2) => idx(j) = k2.toInt; s2(j) = v2; j += 1 }
-                  (p, (idx, s2))
-                }
-              }
-            }.partitionBy(pPart)
-            val next = graph.zipPartitions(msgs) { (git, mit) =>
-              if (git.isEmpty) Iterator.empty
-              else {
-                val (degs, _) = git.next()
-                val sums = new Array[Double](degs.length)
-                mit.foreach { case (_, (idx, s2)) =>
-                  var j = 0
-                  while (j < idx.length) { sums(idx(j)) += s2(j); j += 1 }
-                }
-                var v = 0
-                while (v < sums.length) { sums(v) = 0.85 * sums(v) + 0.15; v += 1 }
-                Iterator.single(sums)
-              }
-            }
-            if (i % 3 == 0 || i == 10) { next.localCheckpoint(); next.count() }
-            ranks = next
-          }
-        }
-        val named = links.zipPartitions(ranks) { (lit, rit) =>
-          if (lit.isEmpty) Iterator.empty
-          else { val r = rit.next(); lit.zipWithIndex.map { case ((t2, _), i) => (t2, r(i)) } }
-        }
-        t("final named count")(named.count())
-      case "explain" =>
-        val q = graft.SparkEntry.queries(args(2))
-        q(spark, sfDir).explain("formatted")
       // `Prof <sfDir> explainfinal <key>`: run the query, then print the
       // FINAL adaptive plan (stage reuse, AQE join conversions) — what
       // actually executed, not the pre-execution estimate

@@ -46,14 +46,23 @@ object GraftProperties extends Properties("graft") {
       Gen.listOfN(3, Gen.oneOf(nodes :+ "RED")).map(_.take(3))))
   } yield nodes.zip(links).toMap
 
-  private def naive(graph: Map[String, Seq[String]], iters: Int): Map[String, Double] = {
-    val titles = graph.keySet
-    var rank = graph.map { case (t, _) => t -> 1.0 / graph.size }
+  private def naive(graph: Map[String, Seq[String]], iters: Int): Map[String, Double] =
+    naive(graph.toSeq, iters, None, -1)
+
+  /** The reference recurrence, personalized when `seeds` is given, each
+    * iteration rounded HALF_UP to `roundTo` decimals when it is ≥ 0. */
+  private def naive(graph: Seq[(String, Seq[String])], iters: Int,
+                    seeds: Option[Set[String]], roundTo: Int): Map[String, Double] = {
+    def rnd(v: Double) =
+      if (roundTo < 0) v else BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def tele(t: String) = seeds.fold(1.0)(s => if (s(t)) 1.0 / s.size else 0.0)
+    val titles = graph.map(_._1).toSet
+    var rank = graph.map { case (t, _) => t -> rnd(seeds.fold(1.0 / graph.size)(_ => tele(t))) }.toMap
     for (_ <- 1 to iters) {
       val contribs = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
       for ((t, ls) <- graph if ls.nonEmpty; l <- ls if titles(l))
         contribs(l) += rank(t) / ls.size
-      rank = graph.map { case (t, _) => t -> (0.85 * contribs(t) + 0.15) }
+      rank = graph.map { case (t, _) => t -> rnd(0.85 * contribs(t) + (1 - 0.85) * tele(t)) }.toMap
     }
     rank
   }
@@ -72,6 +81,41 @@ object GraftProperties extends Properties("graft") {
       val got = PageRank.run(g.toSeq.toDF("title", "outlinks"), iters = 2)
         .as[(String, Double)].collect()
       got.length == g.size && got.forall(_._2 >= 0.15 - 1e-12)
+    }
+
+  // Distributed-tier graphs on a 2–4 partition loop with one partition
+  // left empty: random links (duplicates, self-loops and red links
+  // among them) plus four fixed pages — a self-loop doubled next to a
+  // red link, a dangling page, a page nothing links to, and a null
+  // title that null links reach.
+  private val loopGraphGen = for {
+    n <- Gen.choose(1, 9)
+    nodes = (0 until n).map(i => s"n$i")
+    links <- Gen.listOfN(n, Gen.choose(0, 5).flatMap(Gen.listOfN(_,
+      Gen.frequency(5 -> Gen.oneOf(nodes), 1 -> Gen.oneOf("RED", "n99")))))
+    parts <- Gen.choose(2, 4)
+    empty <- Gen.choose(0, parts - 1)
+    where <- Gen.listOfN(n + 4, Gen.oneOf((0 until parts).filter(_ != empty)))
+    seeds <- Gen.nonEmptyContainerOf[Set, String](Gen.oneOf(nodes :+ "loop"))
+  } yield {
+    val graph = nodes.zip(links) ++ Seq("loop" -> Seq("loop", "RED", "loop"),
+      "dangling" -> Seq.empty[String], "orphan" -> Seq("loop", "dangling", nodes.head, null),
+      (null: String) -> Seq("loop", null))
+    (graph, (0 until parts).map(p => graph.zip(where).collect { case (v, `p`) => v }), seeds)
+  }
+
+  property("distributed tier equals the naive interpreter, with seeds and rounding") =
+    forAll(loopGraphGen) { case (graph, byPart, seeds) =>
+      val df = spark.sparkContext.parallelize(byPart.indices, byPart.size)
+        .flatMap(byPart).toDF("title", "outlinks")
+      Seq((None, -1), (Some(seeds), 9)).forall { case (s, roundTo) =>
+        val got = graft.graph.GraphTier.distributedOnly(
+          PageRank.run(df, iters = 4, roundTo = roundTo, seeds = s))
+          .as[(String, Double)].collect().toMap
+        val want = naive(graph, 4, s, roundTo)
+        got.keySet == want.keySet &&
+          got.forall { case (t, r) => math.abs(r - want(t)) <= 1.000001e-9 }
+      }
     }
 
   // random as-of inputs: few keys + small times force heavy key/time

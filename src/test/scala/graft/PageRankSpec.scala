@@ -138,6 +138,45 @@ class PageRankSpec extends SparkTestBase {
     got.foreach { case (t, r) => assert(math.abs(r - dist(t)) < 1e-12) }
   }
 
+  test("distributed tier: sizing, graph build, one job per checkpoint, named, final") {
+    val graph = Seq("A" -> Seq("A", "B", "B", "X"), "B" -> Seq("A", "C"),
+      "C" -> Seq.empty[String], "D" -> Seq("A")).toDF("title", "outlinks")
+    for (seeds <- Seq(None, Some(Set("A")))) {
+      val (_, jobs) = countOwnJobs {
+        GraphTier.distributedOnly(PageRank.run(graph, iters = 10, seeds = seeds))
+      }
+      // checkpoints after iterations 3, 6, 9 and 10
+      assert(jobs == 1 + 1 + 4 + 1 + 1, s"seeds = $seeds")
+    }
+  }
+
+  test("under-split scan: one input partition under a 6-partition loop matches the single task") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "6")
+    try {
+      // 20k pages × 40 links = 800k link occurrences size the loop to 6
+      // partitions, more than 3× the scan's one, so the rows are
+      // hash-spread first; ids ≥ 20000 are red links, every 97th page is
+      // dangling, duplicates and self-loops occur
+      val graph = spark.range(0, 20000, 1, 1).select(
+        concat(lit("p"), col("id")).as("title"),
+        when(col("id") % 97 === 0, array().cast("array<string>")).otherwise(
+          transform(sequence(lit(0L), lit(39L)), j =>
+            concat(lit("p"), (col("id") * 7919 + j * j * 104729 + j) % 21000)))
+          .as("outlinks"))
+      assert(graph.rdd.getNumPartitions == 1)
+      def ranks(df: org.apache.spark.sql.DataFrame) =
+        df.as[(String, Double)].collect().toMap
+      val single = ranks(PageRank.run(graph, iters = 5))
+      val dist = ranks(GraphTier.distributedOnly(PageRank.run(graph, iters = 5)))
+      assert(dist.size == 20000 && dist.keySet == single.keySet)
+      single.foreach { case (t, r) =>
+        assert(math.abs(r - dist(t)) < 1e-9, s"$t: single $r, distributed ${dist(t)}")
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
   test("ranked output is descending with title tie-break") {
     val rows = PageRank.ranked(WikiParser.linkGraph(parsed), iters = 3)
       .as[(String, Double)].collect()

@@ -2,6 +2,7 @@ package graft
 
 import graft.tools.PlanFingerprint
 import graft.tools.PlanFingerprint.Fp
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan fingerprints of EVERY declared query key (round-6
   * VERDICT item 7 widened the top-20 + mid-tier pins to the full
@@ -349,6 +350,35 @@ class PlanFingerprintSpec extends SparkTestBase {
     assert(pinned.map(_._1).toSet == SparkEntry.queries.keySet,
       "pinned list out of sync with SparkEntry.queries — run " +
         "`Prof <sf> fingerprintall` and refresh")
+  }
+
+  // pagerank_weighted's plan above is its final localCheckpoint, which
+  // hides the loop; this pins the last iteration's plan as it ran, just
+  // before that checkpoint: edges ⋈ ranks, the contribution sum and the
+  // left join from the vertex set
+  test("pagerank_weighted loop plan fingerprint unchanged") {
+    assume(new java.io.File(sf).isDirectory, s"testdata absent at $sf")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(action -> (qe.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan.toString
+          case p => p.toString
+        }))
+      def onFailure(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      SparkEntry.queries("pagerank_weighted")(spark, sf).collect()
+      val deadline = System.nanoTime + 10000000000L // the bus is asynchronous
+      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(l)
+    val loop = plans.asScala.filter(_._1 == "localCheckpoint").last._2
+    assert(PlanFingerprint.of(loop) == Fp(7, 2, 8, 1, 2, 0), loop)
   }
 
   for ((key, want) <- pinned)

@@ -8,24 +8,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 
-  /** Records read by the tasks of `body`'s own jobs — the ONE copy of
-    * the listener harness (measurement-protocol changes, e.g. the
-    * 300 ms bus-drain sleep, happen here, not in per-suite clones).
-    * The body runs under a unique job group; only tasks of stages
-    * whose job carries that group count, so late task events of an
-    * earlier job (a streaming query stopped just before) cannot leak
-    * into the count. */
+  /** Records read by the tasks of `body`'s own jobs (see [[ownJobs]]). */
   def countRecordsRead[T](body: => T): (T, Long) = {
+    val (r, _, recs) = ownJobs(body)
+    (r, recs)
+  }
+
+  /** The number of jobs `body` starts (see [[ownJobs]]). */
+  def countOwnJobs[T](body: => T): (T, Int) = {
+    val (r, jobs, _) = ownJobs(body)
+    (r, jobs)
+  }
+
+  /** `body`'s result, the jobs it started and the records their tasks
+    * read — the ONE copy of the listener harness (measurement-protocol
+    * changes, e.g. the 300 ms bus-drain sleep, happen here, not in
+    * per-suite clones). The body runs under a unique job group; only
+    * jobs carrying that group and tasks of their stages count, so late
+    * events of an earlier job (a streaming query stopped just before)
+    * cannot leak into the counts. */
+  def ownJobs[T](body: => T): (T, Int, Long) = {
     val sc = spark.sparkContext
     val groupKey = "spark.jobGroup.id"
     val group = s"graft-count-${java.util.UUID.randomUUID}"
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val recs = new java.util.concurrent.atomic.AtomicLong(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty(groupKey) == group)
+        if (j.properties != null && j.properties.getProperty(groupKey) == group) {
+          jobs.incrementAndGet()
           j.stageIds.foreach(stages.add)
+        }
       override def onTaskEnd(
           t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (t.taskMetrics != null && stages.contains(t.stageId))
@@ -37,7 +52,7 @@ trait SparkTestBase extends AnyFunSuite {
     try {
       val r = body
       Thread.sleep(300) // let the listener bus drain
-      (r, recs.get())
+      (r, jobs.get(), recs.get())
     } finally {
       sc.setLocalProperty(groupKey, prevGroup)
       sc.removeSparkListener(l)
