@@ -162,7 +162,9 @@ object PageRank {
     // shared valueOf-semantics grid rounding (GridRound scaladoc)
     val rnd: Double => Double = graft.functions.GridRound.fn(roundTo)
 
-    val ranks =
+    // `release` frees the tier's loop state once the shared tail has
+    // materialized the ranks
+    val (ranks, release) =
       if (singleTask) {
         // r17 (guide §2.4): coalesce(1) instead of partitionBy(1) — the
         // single task needs ONE partition, not a hash layout, and the
@@ -228,7 +230,7 @@ object PageRank {
             it2 += 1
           }
           vertices.iterator.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
-        }, preservesPartitioning = true)
+        }, preservesPartitioning = true) -> (() => ())
       } else {
         // ROUTING-TABLE loop (GraphX's aggregateMessages shape, on
         // primitive arrays): vertices get ids (p<<32)|localIndex on the
@@ -395,7 +397,9 @@ object PageRank {
             }
             Iterator.single(sums)
           }
-          if (i % checkpointEvery == 0 || i == iters) {
+          // the last iteration needs no checkpoint of its own: the shared
+          // tail's one job computes it and materializes the named ranks
+          if (i % checkpointEvery == 0 && i < iters) {
             r.localCheckpoint()
             r.count() // materialize NOW — truncation is real, not deferred
             lastCkpt.foreach(_.unpersist(false))
@@ -408,19 +412,19 @@ object PageRank {
           val rank = rit.next()
           lit.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
         }
-        named.localCheckpoint()
-        named.count()
-        graph.unpersist(false)
-        if (!useNative) links.unpersist(false) // native layout = raw's cache
-        lastCkpt.foreach(_.unpersist(false))
-        named
+        named -> { () =>
+          graph.unpersist(false)
+          if (!useNative) links.unpersist(false) // native layout = raw's cache
+          lastCkpt.foreach(_.unpersist(false))
+        }
       }
-    // Materialize before releasing the vertex cache (the single task's
-    // result is derived lazily from raw through the coalesce);
-    // distributed-path ranks are already checkpointed, so this count is
-    // a cache hit there.
+    // ONE job materializes either tier's result before the caches it
+    // reads are released: the single task's ranks derive lazily from raw
+    // through the coalesce, the distributed ranks from the loop graph and
+    // the last checkpoint
     ranks.localCheckpoint()
     ranks.count()
+    release()
     raw.unpersist(false)
     ranks.toDF("title", "rank")
   }

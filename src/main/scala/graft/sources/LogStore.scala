@@ -66,6 +66,10 @@ private[graft] trait LogStore {
   def sizeOf(path: String): Long
   /** Child NAMES (not paths) of a directory; empty when missing. */
   def list(path: String): Seq[String]
+  /** The regular files directly under a directory, as (name, byte
+    * size) — what a writer records of its own output; empty when
+    * missing. */
+  def listFiles(path: String): Seq[(String, Long)]
   /** Move a file within the store (staging part-file → segment dir). */
   def rename(src: String, dst: String): Unit
 }
@@ -196,6 +200,15 @@ private[graft] object NioLogStore extends LogStore {
       try s.iterator.asScala.map(_.getFileName.toString).toSeq
       finally s.close()
     }
+  def listFiles(path: String): Seq[(String, Long)] =
+    if (!Files.isDirectory(p(path))) Seq.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(p(path))
+      try s.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(f => (f.getFileName.toString, Files.size(f))).toSeq
+      finally s.close()
+    }
   def rename(src: String, dst: String): Unit =
     Files.move(p(src), p(dst), StandardCopyOption.ATOMIC_MOVE)
 }
@@ -277,6 +290,10 @@ private[graft] class HadoopLogStore(fs: FileSystem, scheme: String) extends LogS
   def list(path: String): Seq[String] =
     if (!exists(path)) Seq.empty
     else fs.listStatus(p(path)).toSeq.map(_.getPath.getName)
+  def listFiles(path: String): Seq[(String, Long)] =
+    if (!exists(path)) Seq.empty
+    else fs.listStatus(p(path)).toSeq.filter(_.isFile)
+      .map(f => (f.getPath.getName, f.getLen))
   def rename(src: String, dst: String): Unit = {
     if (!fs.rename(p(src), p(dst)))
       throw new java.io.IOException(s"rename $src -> $dst failed")
@@ -449,5 +466,6 @@ private[graft] class CoordinatedLogStore(inner: LogStore,
   def sizeOf(path: String): Long = inner.sizeOf(path)
   def mkdirs(path: String): Unit = inner.mkdirs(path)
   def list(path: String): Seq[String] = inner.list(path)
+  def listFiles(path: String): Seq[(String, Long)] = inner.listFiles(path)
   def rename(src: String, dst: String): Unit = inner.rename(src, dst)
 }

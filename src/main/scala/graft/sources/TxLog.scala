@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
 
 /** Minimal transaction-log table format over parquet — the log/ACID
   * layer the Warehouse sinks stop short of (Delta/Iceberg's core
@@ -144,6 +145,28 @@ private[graft] case class ColStats(typeName: String, min: String,
       case _: java.time.format.DateTimeParseException => None
     }
 
+  /** What a scan needs of one segment, as the log records it: the
+    * physical schema a read of the segment infers (`StructType.json`,
+    * nullable like every file scan) under its content id, and the part
+    * files with their byte sizes. [[scanSegments]] plans from it
+    * without listing the directory or reading a footer. */
+  private[graft] case class SegFiles(schemaId: String, schema: String,
+                              files: Seq[(String, Long)])
+  private[graft] object SegFiles {
+    def apply(schema: String, files: Seq[(String, Long)]): SegFiles =
+      SegFiles(schemaIdOf(schema), schema, files)
+  }
+
+  /** Content id of a schema's JSON: a `schema=` line defines it once,
+    * the `file=` lines of every segment with that schema refer to it. */
+  private def schemaIdOf(json: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(json.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** Segments a write just staged, with what the log records of them. */
+  private case class Staged(segs: Seq[String], files: Map[String, SegFiles])
+  private val NothingStaged = Staged(Seq.empty, Map.empty)
+
   private case class Entry(version: Int, op: String,
                            add: Seq[String], remove: Seq[String],
                            stats: Map[(String, String), ColStats],
@@ -161,7 +184,9 @@ private[graft] case class ColStats(typeName: String, min: String,
                            genUnsets: Seq[String] = Seq.empty,
                            cdfSet: Option[Boolean] = None,
                            cdc: Seq[(String, String)] = Seq.empty,
-                           partCols: Option[Seq[String]] = None)
+                           partCols: Option[Seq[String]] = None,
+                           schemas: Map[String, String] = Map.empty,
+                           files: Seq[(String, String, String, Long)] = Seq.empty)
 
   /** Replayed log state as of some version: what every reader/pruner
     * actually consumes — built from checkpoint + tail, never a full
@@ -183,11 +208,20 @@ private[graft] case class ColStats(typeName: String, min: String,
                            defaults: Map[String, String] = Map.empty,
                            generated: Map[String, String] = Map.empty,
                            cdfEnabled: Boolean = false,
-                           partitionCols: Seq[String] = Seq.empty) {
+                           partitionCols: Seq[String] = Seq.empty,
+                           files: Map[String, SegFiles] = Map.empty) {
     /** logical name → PHYSICAL (stored) name, for mapped columns. */
     def physByLogical: Map[String, String] = renames.map(_.swap)
     /** The physical (stored) name behind a user-facing column name. */
     def physCol(c: String): String = physByLogical.getOrElse(c, c)
+    /** This state with just-staged segments' files known, so a read of
+      * the staged output plans from them too. */
+    def withFiles(staged: Map[String, SegFiles]): State =
+      copy(files = files ++ staged)
+    /** Ids of the schemas live segments use — the ones a commit on
+      * this state need not define again. */
+    def liveSchemaIds: Set[String] =
+      live.iterator.flatMap(files.get).map(_.schemaId).toSet
   }
 
   /** Canonical serialization of a snapshot's WRITE GOVERNANCE — the
@@ -259,8 +293,13 @@ private[graft] case class ColStats(typeName: String, min: String,
     * leave that ANALYZE's stats rows orphaned for segments the DML
     * removed — harmless: stats/bloom lookups key off the LIVE set, so
     * an orphan row for a dead segment is never consulted, and a
-    * checkpoint drops it. */
-  private val PureAppendKeys = Set("op", "ts", "add", "stats", "bloom")
+    * checkpoint drops it. `file` lines describe only the append's own
+    * new segments, and a `schema` line defines a content id (the same
+    * id always names the same schema), so neither can change what our
+    * entry's lines mean: a snapshot defines every schema its live
+    * segments use, and no pure append removes one of them. */
+  private val PureAppendKeys = Set("op", "ts", "add", "stats", "bloom",
+    "file", "schema")
 
   /** True when commit `v`'s entry is a pure blind append, classified
     * from its RAW lines (content, not op name — a future op that
@@ -322,7 +361,8 @@ private[graft] case class ColStats(typeName: String, min: String,
                               alsoReclaim: Seq[String] = Seq.empty,
                               retryPastAppends: Boolean = false,
                               dvs: Seq[(String, String, Long)] = Seq.empty,
-                              reclaimAdds: Boolean = true): Int = {
+                              reclaimAdds: Boolean = true,
+                              files: Map[String, SegFiles] = Map.empty): Int = {
     Option(testBeforeConditionalCommit.getAndSet(null)).foreach(_.run())
     @annotation.tailrec
     def attempt(eh: Int, attempts: Int): Int = {
@@ -331,7 +371,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       // conflicts again and is checked by the next pass)
       val committed =
         try Right(commit(dir, op, add, remove, Some(eh), stats, blooms,
-          dvs = dvs, extraLines = extraLines))
+          dvs = dvs, extraLines = extraLines, files = files))
         catch {
           case e: java.util.ConcurrentModificationException =>
             val head = headVersion(dir)
@@ -506,7 +546,45 @@ private[graft] case class ColStats(typeName: String, min: String,
         case _           => None
       }),
       partCols = vals(lines, "partcols").headOption
-        .map(_.split("\\|", -1).toSeq.map(dec)))
+        .map(_.split("\\|", -1).toSeq.map(dec)),
+      schemas = parseSchemas(lines),
+      files = parseFiles(lines))
+
+  private def parseSchemas(lines: Seq[String]): Map[String, String] =
+    vals(lines, "schema").flatMap(_.split("\\|", -1) match {
+      case Array(id, js) => Some(id -> dec(js))
+      case _             => None
+    }).toMap
+
+  /** `file=` lines as (segment, schema id, part file, byte size). */
+  private def parseFiles(lines: Seq[String]): Seq[(String, String, String, Long)] =
+    vals(lines, "file").flatMap(_.split("\\|", -1) match {
+      case Array(seg, id, f, n) => n.toLongOption.map((dec(seg), id, dec(f), _))
+      case _                    => None
+    })
+
+  /** Parsed `file=` lines grouped per segment, resolved against the
+    * schema definitions in scope; a segment whose schema id is not
+    * defined stays undescribed (scans take the listing path). */
+  private def segFilesOf(files: Seq[(String, String, String, Long)],
+                         schemas: String => Option[String]): Map[String, SegFiles] =
+    files.groupBy(_._1).flatMap { case (seg, fs) =>
+      schemas(fs.head._2).map(js =>
+        seg -> SegFiles(fs.head._2, js, fs.map(f => (f._3, f._4))))
+    }
+
+  /** `schema=` lines for the schemas of `segs` not in `known`, then one
+    * `file=` line per part file of each described segment. */
+  private def fileLines(files: Map[String, SegFiles], segs: Seq[String],
+                        known: Set[String]): Seq[String] = {
+    val described = segs.flatMap(seg => files.get(seg).map(seg -> _))
+    described.map(_._2).filterNot(f => known(f.schemaId))
+      .map(f => f.schemaId -> f.schema).distinct
+      .map { case (id, js) => s"schema=$id|${enc(js)}" } ++
+      described.flatMap { case (seg, f) =>
+        f.files.map { case (n, len) => s"file=${enc(seg)}|${f.schemaId}|${enc(n)}|$len" }
+      }
+  }
 
   private def parseProtocol(s: String): Option[(Int, Int)] =
     s.split("\\|", -1) match {
@@ -574,7 +652,8 @@ private[graft] case class ColStats(typeName: String, min: String,
         }).toMap,
         cdfEnabled = vals(lines, "setcdf").headOption.contains("true"),
         partitionCols = vals(lines, "partcols").headOption
-          .map(_.split("\\|", -1).toSeq.map(dec)).getOrElse(Seq.empty)))
+          .map(_.split("\\|", -1).toSeq.map(dec)).getOrElse(Seq.empty),
+        files = segFilesOf(parseFiles(lines), parseSchemas(lines).get)))
     } catch { case _: java.io.IOException => None }
 
   /** Newest checkpoint at-or-before `asOf` (-1 = no bound): pointer
@@ -621,6 +700,10 @@ private[graft] case class ColStats(typeName: String, min: String,
     var gens = cp.map(_.generated).getOrElse(Map.empty[String, String])
     var cdf = cp.exists(_.cdfEnabled)
     var pcols = cp.map(_.partitionCols).getOrElse(Seq.empty[String])
+    // like stats, a removed segment's files stay until a checkpoint
+    // folds them away: restore and dv_coalesce re-add segments by name
+    var files = cp.map(_.files).getOrElse(Map.empty[String, SegFiles])
+    var schemas = files.values.map(f => f.schemaId -> f.schema).toMap
     var version = cp.map(_.version).getOrElse(-1)
     var v = version + 1
     while ((asOf < 0 || v <= asOf) && st.exists(entryPath(dir, v))) {
@@ -648,6 +731,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       gens = gens ++ e.genSets -- e.genUnsets
       e.cdfSet.foreach(cdf = _)
       e.partCols.foreach(pcols = _)
+      schemas ++= e.schemas
+      files ++= segFilesOf(e.files, schemas.get)
       version = v; v += 1
     }
     // reader gate: refusing is the only safe response to a floor above
@@ -659,7 +744,8 @@ private[graft] case class ColStats(typeName: String, min: String,
           s"supports $SupportedReaderVersion — upgrade the client to read")
     State(version, live.toSeq, stats, blooms, ops, dvs, renames, dropped,
       protocol = proto, constraints = cons, defaults = defs,
-      generated = gens, cdfEnabled = cdf, partitionCols = pcols)
+      generated = gens, cdfEnabled = cdf, partitionCols = pcols,
+      files = files)
   }
 
   /** Fold the state at version `v` into a checkpoint file + advance
@@ -695,7 +781,8 @@ private[graft] case class ColStats(typeName: String, min: String,
             s"generated=${enc(n)}|${enc(c)}" } ++
           (if (s.cdfEnabled) Seq("setcdf=true") else Seq.empty) ++
           (if (s.partitionCols.isEmpty) Seq.empty
-           else Seq("partcols=" + s.partitionCols.map(enc).mkString("|"))))
+           else Seq("partcols=" + s.partitionCols.map(enc).mkString("|"))) ++
+          fileLines(s.files, s.live, known = Set.empty))
           .mkString("", "\n", "\n")
         // idempotent across racing checkpointers: same version folds the
         // same content, so losing the put-if-absent race is fine
@@ -779,7 +866,11 @@ private[graft] case class ColStats(typeName: String, min: String,
     * ConcurrentModificationException — required for ops whose
     * remove set was computed from that snapshot (delete/overwrite/
     * compact); a blind append passes `None` and retries onto the next
-    * free slot. */
+    * free slot.
+    *
+    * `files` describes added segments for scans ([[SegFiles]]); the
+    * entry defines only the schemas the state it claims against does
+    * not already define for a live segment. */
   private[graft] def commit(dir: String, op: String,
                             add: Seq[String], remove: Seq[String],
                             expectedHead: Option[Int] = None,
@@ -787,7 +878,8 @@ private[graft] case class ColStats(typeName: String, min: String,
                             blooms: Map[(String, String), BloomStats] = Map.empty,
                             dvs: Seq[(String, String, Long)] = Seq.empty,
                             extraLines: Seq[String] = Seq.empty,
-                            requireGov: Option[String] = None): Int = {
+                            requireGov: Option[String] = None,
+                            files: Map[String, SegFiles] = Map.empty): Int = {
     val st = store(dir)
     // governance gate for BLIND row-adding commits (expectedHead=None):
     // the staged bytes were validated against some snapshot's
@@ -826,29 +918,35 @@ private[graft] case class ColStats(typeName: String, min: String,
     // log-dir copies/rsyncs/backup-restores that reset every mtime —
     // [[adjustedTimes]] prefers it and falls back to mtime for legacy
     // entries written before this line existed
-    val body = (Seq(s"op=$op", s"ts=${System.currentTimeMillis}") ++
+    val ts = System.currentTimeMillis
+    def bytes(knownSchemas: Set[String]): Array[Byte] =
+      (Seq(s"op=$op", s"ts=$ts") ++
         add.map("add=" + _) ++
         remove.map("remove=" + _) ++ statLines(stats) ++ bloomLines(blooms) ++
-        dvLines(dvs) ++ extraLines)
-      .mkString("", "\n", "\n")
-    val bytes = body.getBytes("UTF-8")
+        dvLines(dvs) ++ fileLines(files, add, knownSchemas) ++ extraLines)
+      .mkString("", "\n", "\n").getBytes("UTF-8")
     val committed = expectedHead match {
       case Some(eh) =>
         // conditional: only the snapshot's successor slot is
         // acceptable — claiming a later slot would validate a stale
         // remove set, and claim-then-withdraw would leave a GAP that
-        // hides every later entry from the dense-scan replay
+        // hides every later entry from the dense-scan replay. The claim
+        // succeeds only if the head is still the one preRead replayed,
+        // so preRead's schemas are exactly the ones in scope.
         val v = eh + 1
-        if (!st.putIfAbsent(entryPath(dir, v), bytes))
+        if (!st.putIfAbsent(entryPath(dir, v),
+              bytes(preRead.map(_.liveSchemaIds).getOrElse(Set.empty))))
           throw new java.util.ConcurrentModificationException(
             s"$op against stale snapshot of $dir: expected head $eh, " +
               s"found ${headVersion(dir)} — recompute and retry")
         v
       case None if requireGov.isEmpty =>
         // ungated blind claim (metadata-only / non-row-adding ops):
-        // cheap headVersion probes, no replay per attempt
+        // cheap headVersion probes, no replay per attempt — so no state
+        // to trust for schema definitions: the entry carries its own
+        val b = bytes(Set.empty)
         var v = headVersion(dir) + 1
-        while (!st.putIfAbsent(entryPath(dir, v), bytes)) v += 1
+        while (!st.putIfAbsent(entryPath(dir, v), b)) v += 1
         v
       case None =>
         // governance-gated blind claim: EVERY attempt derives its slot
@@ -868,7 +966,8 @@ private[graft] case class ColStats(typeName: String, min: String,
           preRead = None // attempt 1 reuses the writer-gate replay
           govOk(cur)
           val v = cur.version + 1
-          if (st.putIfAbsent(entryPath(dir, v), bytes)) committed = v
+          if (st.putIfAbsent(entryPath(dir, v), bytes(cur.liveSchemaIds)))
+            committed = v
         }
         committed
     }
@@ -1139,15 +1238,17 @@ private[graft] case class ColStats(typeName: String, min: String,
 
   private def newSegment(dir: String, df: DataFrame,
                          applyDefaults: Boolean = true,
-                         snapOpt: Option[State] = None): String = {
+                         snapOpt: Option[State] = None): Staged = {
     val name = s"seg-${java.util.UUID.randomUUID}"
     val snap = snapOpt.getOrElse(snapshotOrEmpty(dir))
     val (filled, providedGen) = fillGoverned(df, snap, applyDefaults)
     // segment bytes always carry PHYSICAL column names (column
     // mapping's storage invariant — reads re-label, writes un-label)
     toPhysical(filled, snap).write.mode("overwrite").parquet(s"$dir/$name")
-    enforceWriteInvariants(df.sparkSession, dir, name, snap, providedGen)
-    name
+    val staged = Staged(Seq(name), describe(df.sparkSession, dir, name))
+    enforceWriteInvariants(dir, name, snap, providedGen)(
+      scanSegments(df.sparkSession, dir, snap.withFiles(staged.files), staged.segs))
+    staged
   }
 
   /** Stage a row-adding batch on a PARTITIONED table as ONE SEGMENT
@@ -1170,10 +1271,10 @@ private[graft] case class ColStats(typeName: String, min: String,
     * Zero-row batches stage no leaves and return empty. */
   private def newSegments(dir: String, df: DataFrame,
                           applyDefaults: Boolean = true,
-                          snapOpt: Option[State] = None): Seq[String] = {
+                          snapOpt: Option[State] = None): Staged = {
     val snap = snapOpt.getOrElse(snapshotOrEmpty(dir))
     if (snap.partitionCols.isEmpty)
-      return Seq(newSegment(dir, df, applyDefaults, snapOpt = Some(snap)))
+      return newSegment(dir, df, applyDefaults, snapOpt = Some(snap))
     val (filled, providedGen) = fillGoverned(df, snap, applyDefaults)
     val phys = toPhysical(filled, snap)
     val pPhys = snap.partitionCols.map(snap.physCol)
@@ -1198,9 +1299,10 @@ private[graft] case class ColStats(typeName: String, min: String,
       // (the inferred __graft_part_* path columns ride along unused);
       // a zero-row batch staged no leaves — nothing to validate
       if (found.nonEmpty)
-        enforceWriteInvariants(df.sparkSession, dir, staging, snap,
-          providedGen)
+        enforceWriteInvariants(dir, staging, snap, providedGen)(
+          df.sparkSession.read.parquet(s"$dir/$staging"))
       val promoted = scala.collection.mutable.ArrayBuffer.empty[String]
+      val parts = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Long)]]
       try {
         found.foreach { rel =>
           // human-readable hive labels on the segment dir itself (the
@@ -1212,10 +1314,21 @@ private[graft] case class ColStats(typeName: String, min: String,
           val name = s"seg-${java.util.UUID.randomUUID}$label"
           st.mkdirs(s"$dir/$name")
           promoted += name
-          st.list(s"$dir/$staging$rel").filter(_.startsWith("part-"))
-            .foreach(f => st.rename(s"$dir/$staging$rel/$f", s"$dir/$name/$f"))
+          val files = st.listFiles(s"$dir/$staging$rel")
+            .filter(_._1.startsWith("part-")).sortBy(_._1)
+          files.foreach { case (f, _) =>
+            st.rename(s"$dir/$staging$rel/$f", s"$dir/$name/$f") }
+          parts += files
         }
-        promoted.toSeq
+        // one write job staged every leaf: one footer names the schema
+        val schema = promoted.zip(parts).collectFirst {
+          case (seg, (f, _) +: _) =>
+            graftshim.LogScan.footerSchema(df.sparkSession, s"$dir/$seg/$f")
+        }.flatten.map(_.json)
+        Staged(promoted.toSeq, schema.fold(Map.empty[String, SegFiles])(js =>
+          promoted.zip(parts).collect {
+            case (seg, fs) if fs.nonEmpty => seg -> SegFiles(js, fs)
+          }.toMap))
       } catch {
         // a mid-promotion failure must not leak the already-renamed
         // half: the caller's reclaim scope sees these names only after
@@ -1240,13 +1353,13 @@ private[graft] case class ColStats(typeName: String, min: String,
     * constraints plus equality validation of writer-PROVIDED
     * generated columns (null-safe <=>, so an all-null pre-generated
     * column only passes if the expression is null too). */
-  private def enforceWriteInvariants(spark: SparkSession, dir: String,
-      name: String, snap: State, providedGen: Set[String]): Unit = {
+  private def enforceWriteInvariants(dir: String, name: String, snap: State,
+      providedGen: Set[String])(scan: => DataFrame): Unit = {
     val cs = snap.constraints.toSeq.sorted ++
       providedGen.toSeq.sorted.map(c =>
         s"generated:$c" -> s"`$c` <=> (${snap.generated(c)})")
     if (cs.nonEmpty) {
-      val staged = applyMapping(spark.read.parquet(s"$dir/$name"), snap)
+      val staged = applyMapping(scan, snap)
       // SQL CHECK semantics: only an explicit FALSE violates (NULL passes)
       val counts = staged.select(cs.map { case (n, c) =>
         coalesce(sum(when(not(coalesce(expr(c), lit(true))), 1L)
@@ -1273,24 +1386,25 @@ private[graft] case class ColStats(typeName: String, min: String,
     * DataFrame write path); the raw staging is reclaimed either way
     * on failure. */
   private def finalizeStagedSegment(spark: SparkSession, dir: String,
-      rawSeg: String, snap: State): String =
+      rawSeg: String, snap: State): Staged =
     // ANY failure below reclaims the raw staging (the violation path
     // inside enforceWriteInvariants already deleted it — the repeat
     // delete is a no-op); no entry records it, so vacuum never could
     try {
-      val fields = spark.read.parquet(s"$dir/$rawSeg").schema.fieldNames.toSet
+      val raw = Staged(Seq(rawSeg), describe(spark, dir, rawSeg))
+      val rawScan = scanSegments(spark, dir, snap.withFiles(raw.files), raw.segs)
+      val fields = rawScan.schema.fieldNames.toSet
       val needFill = (snap.defaults.keySet ++ snap.generated.keySet)
         .exists(c => !fields.contains(snap.physCol(c)))
       if (needFill) {
-        val df = applyMapping(spark.read.parquet(s"$dir/$rawSeg"), snap)
-        val seg = newSegment(dir, df, snapOpt = Some(snap))
+        val seg = newSegment(dir, applyMapping(rawScan, snap), snapOpt = Some(snap))
         store(dir).deleteRecursively(s"$dir/$rawSeg")
         seg
       } else {
         val providedGen = snap.generated.keySet
           .filter(c => fields.contains(snap.physCol(c)))
-        enforceWriteInvariants(spark, dir, rawSeg, snap, providedGen)
-        rawSeg
+        enforceWriteInvariants(dir, rawSeg, snap, providedGen)(rawScan)
+        raw
       }
     } catch { case scala.util.control.NonFatal(e) =>
       store(dir).deleteRecursively(s"$dir/$rawSeg"); throw e }
@@ -1305,11 +1419,11 @@ private[graft] case class ColStats(typeName: String, min: String,
     * appended updates frame is tombstone-paired, and its layout debt
     * is OPTIMIZE's, like every MoR rewrite debt.) */
   private def finalizeStagedSegments(spark: SparkSession, dir: String,
-      rawSeg: String, snap: State): Seq[String] =
+      rawSeg: String, snap: State): Staged =
     if (snap.partitionCols.isEmpty)
-      Seq(finalizeStagedSegment(spark, dir, rawSeg, snap))
+      finalizeStagedSegment(spark, dir, rawSeg, snap)
     else try {
-      val df = applyMapping(spark.read.parquet(s"$dir/$rawSeg"), snap)
+      val df = applyMapping(stagedScan(spark, dir, snap, rawSeg), snap)
       val segs = newSegments(dir, df, snapOpt = Some(snap))
       store(dir).deleteRecursively(s"$dir/$rawSeg")
       segs
@@ -1350,6 +1464,76 @@ private[graft] case class ColStats(typeName: String, min: String,
     org.apache.spark.sql.types.StructField("seg",
       org.apache.spark.sql.types.StringType)))
 
+  /** The ONE parquet reader of segment bytes (physical names, no
+    * deletion vectors — [[segScan]] adds those). Segments whose files
+    * the log records (`s.files`, or just-staged output a caller added
+    * with [[State.withFiles]]) are planned from that record: no listing
+    * job, no footer-inference job. A segment without a record — a log
+    * written before records existed, or an external shallow-clone
+    * ref — takes Spark's own path for itself: its directory is listed
+    * and its schema inferred. The schema is the one that path picks:
+    * `schema` when given; else with `mergeSchema` the union of the
+    * segments' schemas in scan order, without it the first segment's. */
+  private def scanSegments(spark: SparkSession, dir: String, s: State,
+      segs: Seq[String], mergeSchema: Boolean = false,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    def listed(ss: Seq[String]): DataFrame = {
+      val reader = schema match {
+        case Some(sc) => spark.read.schema(sc)
+        case None     => spark.read.option("mergeSchema", mergeSchema.toString)
+      }
+      reader.parquet(ss.map(segPath(dir, _)): _*)
+    }
+    val recorded = segs.map(s.files.get)
+    if (recorded.forall(_.isEmpty)) return listed(segs)
+    // None stands for the unrecorded segments: they contribute the one
+    // schema Spark infers over them (needed only when it decides)
+    lazy val unrecorded = listed(segs.filterNot(s.files.contains)).schema
+    def parsed(js: Option[String]): StructType =
+      js.fold(unrecorded)(DataType.fromJson(_).asInstanceOf[StructType])
+    val readSchema =
+      try Some(schema.getOrElse(
+        if (!mergeSchema) parsed(recorded.head.map(_.schema))
+        else graftshim.LogScan.merge(spark,
+          recorded.map(_.map(_.schema)).distinct.map(parsed))))
+      catch { case scala.util.control.NonFatal(_) => None }
+    readSchema match {
+      // incompatible schemas: Spark's own merge raises its own error
+      case None     => listed(segs)
+      case Some(sc) =>
+        graftshim.LogScan.parquet(spark, sc, segs.zip(recorded).map {
+          case (seg, f) => segPath(dir, seg) -> f.map(_.files).getOrElse(dataFiles(dir, seg))
+        })
+    }
+  }
+
+  /** The data files of a segment directory (Spark's own filter: no
+    * `_`/`.`-prefixed names) with their byte sizes, by name. */
+  private def dataFiles(dir: String, seg: String): Seq[(String, Long)] =
+    refStore(dir, seg).listFiles(segPath(dir, seg))
+      .filterNot { case (n, _) => n.startsWith("_") || n.startsWith(".") }
+      .sortBy(_._1)
+
+  /** What the log records of a directory a write just produced: its
+    * data files, and the schema from the first file's footer (every
+    * file of one write shares it) — a driver-side listing and one
+    * footer read, no Spark job. Empty when the directory holds no data
+    * file or no Spark schema (scans of it then take the listing path). */
+  private def describe(spark: SparkSession, dir: String,
+                       seg: String): Map[String, SegFiles] = {
+    val files = dataFiles(dir, seg)
+    files.headOption.flatMap { case (f, _) =>
+      graftshim.LogScan.footerSchema(spark, s"${segPath(dir, seg)}/$f")
+    }.map(sc => seg -> SegFiles(sc.json, files)).toMap
+  }
+
+  /** A scan of what this statement just wrote to `name` (a staging
+    * directory or a sidecar), planned from [[describe]]. */
+  private def stagedScan(spark: SparkSession, dir: String, snap: State,
+                         name: String): DataFrame =
+    scanSegments(spark, dir, snap.withFiles(describe(spark, dir, name)), Seq(name))
+
   /** Scan `segs` with their DELETION VECTORS applied — the one reader
     * every query AND every copy-on-write rewrite must go through (a
     * raw parquet read of a DV-carrying segment would resurrect its
@@ -1361,11 +1545,7 @@ private[graft] case class ColStats(typeName: String, min: String,
                       segs: Seq[String], mergeSchema: Boolean = false,
                       schema: Option[org.apache.spark.sql.types.StructType] = None,
                       withMeta: Boolean = false): DataFrame = {
-    val reader = schema match {
-      case Some(sc) => spark.read.schema(sc)
-      case None     => spark.read.option("mergeSchema", mergeSchema.toString)
-    }
-    val base = reader.parquet(segs.map(s0 => segPath(dir, s0)): _*)
+    val base = scanSegments(spark, dir, s, segs, mergeSchema, schema)
     val probed = segs.flatMap(seg =>
       s.dvs.getOrElse(seg, Seq.empty).map { case (dv, rows) => (dv, rows) })
     val dvNames = probed.map(_._1).distinct
@@ -1477,7 +1657,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // read side sizes its broadcast from metadata alone; bare sidecar
     // names translate back to (possibly external) entry names
     val entryOf = snap.live.map(n => bareName(n) -> n).toMap
-    val dirty = spark.read.parquet(s"$dir/$dvName")
+    val dirty = stagedScan(spark, dir, snap, dvName)
       .groupBy("seg").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
     if (dirty.isEmpty) {
@@ -1519,7 +1699,7 @@ private[graft] case class ColStats(typeName: String, min: String,
                 statsCols: Seq[String] = Nil): Int = {
     require(setExprs.nonEmpty, "update without SET expressions")
     val snap = state(dir)
-    val schema = tableSchema(spark, dir, snap.live)
+    val schema = tableSchema(spark, dir, snap)
     // user-facing (LOGICAL) column list: mapped physical names surface
     // under their labels, dropped ones don't exist
     val visible = logicalSchema(snap, schema).map(_.name)
@@ -1534,7 +1714,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       .withColumn("__seg", segOfFile(col("__file")))
       .write.parquet(s"$dir/$stage")
     try {
-      val m = spark.read.parquet(s"$dir/$stage")
+      val m = stagedScan(spark, dir, snap, stage)
       val dirty = m.groupBy("__seg").agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
       if (dirty.isEmpty)
@@ -1556,18 +1736,18 @@ private[graft] case class ColStats(typeName: String, min: String,
       // commitOrReclaim reclaims newSegs+dvName itself on a true
       // conflict; this catch covers the remaining NonFatal exits
       // (deleteRecursively is a no-op on an already-reclaimed path)
-      try commitOrReclaim(dir, "update_mor", newSegs, Seq.empty,
+      try commitOrReclaim(dir, "update_mor", newSegs.segs, Seq.empty,
         snap.version,
-        stats = segStatsMany(spark, dir, newSegs,
-          (snap.partitionCols ++ statsCols).distinct, snap),
+        stats = segStatsMany(spark, dir, newSegs.segs,
+          (snap.partitionCols ++ statsCols).distinct, snap.withFiles(newSegs.files)),
         dvs = dirty.map { case (seg, n) =>
           (entryOf.getOrElse(seg, seg), dvName, n) },
         extraLines = protoBump(snap), alsoReclaim = Seq(dvName),
-        retryPastAppends = true)
+        retryPastAppends = true, files = newSegs.files)
       catch {
         case scala.util.control.NonFatal(e) =>
           store(dir).deleteRecursively(s"$dir/$dvName")
-          newSegs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
+          newSegs.segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
           throw e
       }
     } finally store(dir).deleteRecursively(s"$dir/$stage")
@@ -1617,19 +1797,20 @@ private[graft] case class ColStats(typeName: String, min: String,
                           statsCols: Seq[String],
                           dedupStreamOp: Boolean,
                           preStaged: Option[String])(
-                          stage: State => String): Option[Int] = {
+                          stage: State => Staged): Option[Int] = {
     var snap = state(dir)
     if (dedupStreamOp && snap.streamOps.contains(op)) {
       preStaged.foreach(reclaimUnlessLive(dir, snap, _))
       return None
     }
     val gov = govFingerprint(snap)
-    val uSeg = stage(snap)
+    val staged = stage(snap)
+    val uSeg = staged.segs.head
     // outer reclaim: any exit that didn't commit deletes the staged
     // updates segment (no entry records it, so vacuum never could)
     try {
       val stats = segStats(spark, dir, uSeg,
-        (snap.partitionCols ++ statsCols).distinct, snap)
+        (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files))
       while (true) {
         // per-attempt probe: tombstone COORDINATES are derived from the
         // exact snapshot the conditional commit is conditioned on — a
@@ -1639,7 +1820,8 @@ private[graft] case class ColStats(typeName: String, min: String,
         var dvName: Option[String] = None
         try {
           // staged bytes carry physical names; probe in logical terms
-          val u = applyMapping(spark.read.parquet(s"$dir/$uSeg"), snap)
+          val u = applyMapping(scanSegments(spark, dir,
+            snap.withFiles(staged.files), staged.segs), snap)
           val bounds = u.agg(min(col(key)).cast("string"),
             max(col(key)).cast("string")).head()
           val (lo, hi) = (Option(bounds.getString(0)), Option(bounds.getString(1)))
@@ -1656,7 +1838,7 @@ private[graft] case class ColStats(typeName: String, min: String,
                 .select(col("__file").as("file"), col("__pos").as("pos"),
                   segOfFile(col("__file")).as("seg"))
                 .write.parquet(s"$dir/$name")
-              val d = spark.read.parquet(s"$dir/$name")
+              val d = stagedScan(spark, dir, snap, name)
                 .groupBy("seg").agg(count(lit(1)).as("n"))
                 .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
               if (d.isEmpty) store(dir).deleteRecursively(s"$dir/$name")
@@ -1678,11 +1860,13 @@ private[graft] case class ColStats(typeName: String, min: String,
           return Some(
             if (dedupStreamOp)
               commit(dir, op, Seq(uSeg), Seq.empty, Some(snap.version),
-                stats = stats, dvs = dvLines, extraLines = bump)
+                stats = stats, dvs = dvLines, extraLines = bump,
+                files = staged.files)
             else
               commitOrReclaim(dir, op, Seq(uSeg), Seq.empty, snap.version,
                 stats = stats, dvs = dvLines, extraLines = bump,
-                alsoReclaim = dvName.toSeq, retryPastAppends = true))
+                alsoReclaim = dvName.toSeq, retryPastAppends = true,
+                files = staged.files))
         } catch {
           case e: java.util.ConcurrentModificationException =>
             dvName.foreach(n => store(dir).deleteRecursively(s"$dir/$n"))
@@ -1875,14 +2059,14 @@ private[graft] case class ColStats(typeName: String, min: String,
     * after this batch was staged and validated ([[govFingerprint]]). */
   def append(df: DataFrame, dir: String): Int = {
     val snap = snapshotOrEmpty(dir)
-    val segs = newSegments(dir, df, snapOpt = Some(snap))
-    reclaimOnFailure(dir, segs) {
+    val staged = newSegments(dir, df, snapOpt = Some(snap))
+    reclaimOnFailure(dir, staged.segs) {
       // partitioned tables ALWAYS record the partition columns' exact
       // (min=max) stats — they are the pruning contract the split buys
-      commit(dir, "append", segs, Seq.empty,
-        stats = segStatsMany(df.sparkSession, dir, segs,
-          snap.partitionCols, snap),
-        requireGov = Some(govFingerprint(snap)))
+      commit(dir, "append", staged.segs, Seq.empty,
+        stats = segStatsMany(df.sparkSession, dir, staged.segs,
+          snap.partitionCols, snap.withFiles(staged.files)),
+        requireGov = Some(govFingerprint(snap)), files = staged.files)
     }
   }
 
@@ -1901,7 +2085,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // stats are keyed by PHYSICAL name (stable across renames): map the
     // caller's logical names down, like every other metadata surface
     val statsCols = statsCols0.map(snap.physCol)
-    val sdf = spark.read.parquet(segPath(dir, seg))
+    val sdf = scanSegments(spark, dir, snap, Seq(seg))
     val types = sdf.schema.map(f => f.name -> f.dataType.typeName).toMap
     statsCols.foreach(c => require(types.contains(c), s"no column $c in segment $seg"))
     val aggs = statsCols.flatMap(c =>
@@ -1946,7 +2130,7 @@ private[graft] case class ColStats(typeName: String, min: String,
                         k: Int = 4): Map[(String, String), BloomStats] = {
     if (bloomCols0.isEmpty) return Map.empty
     val bloomCols = bloomCols0.map(snap.physCol)
-    val sdf = spark.read.parquet(segPath(dir, seg))
+    val sdf = scanSegments(spark, dir, snap, Seq(seg))
     val types = sdf.schema.map(f => f.name -> f.dataType.typeName).toMap
     val n = sdf.count()
     var m = 8192
@@ -1989,14 +2173,16 @@ private[graft] case class ColStats(typeName: String, min: String,
                       statsCols: Seq[String],
                       bloomCols: Seq[String] = Nil): Int = {
     val snap = snapshotOrEmpty(dir)
-    val segs = newSegments(dir, df, snapOpt = Some(snap))
+    val staged = newSegments(dir, df, snapOpt = Some(snap))
+    val segs = staged.segs
+    val withSegs = snap.withFiles(staged.files)
     val allStatsCols = (snap.partitionCols ++ statsCols).distinct
     // stats/bloom failures (e.g. a statsCol missing from the batch)
     // happen AFTER the segment bytes are staged but BEFORE any entry
     // records them — reclaim on the way out or vacuum (which only sees
     // entry-recorded segments) could never delete the orphan
     reclaimOnFailure(dir, segs) {
-      val stats = segStatsMany(spark, dir, segs, allStatsCols, snap)
+      val stats = segStatsMany(spark, dir, segs, allStatsCols, withSegs)
       // ZERO-ROW batch: min/max fold to null, so the segment would
       // commit with NO stats — permanently unprunable, kept forever by
       // every pruning surface (triage/point/DSv2) on a stats-indexed
@@ -2008,7 +2194,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       // zero-row batch already staged no segments at all.)
       if (segs.isEmpty ||
           (statsCols.nonEmpty && stats.isEmpty &&
-            segs.forall(s0 => spark.read.parquet(segPath(dir, s0)).isEmpty))) {
+            segs.forall(s0 => scanSegments(spark, dir, withSegs, Seq(s0)).isEmpty))) {
         segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
         commit(dir, "append", Seq.empty, Seq.empty,
           requireGov = Some(govFingerprint(snap)))
@@ -2016,8 +2202,8 @@ private[graft] case class ColStats(typeName: String, min: String,
         commit(dir, "append", segs, Seq.empty,
           stats = stats,
           blooms = segs.flatMap(s0 =>
-            segBlooms(spark, dir, s0, bloomCols, snap)).toMap,
-          requireGov = Some(govFingerprint(snap)))
+            segBlooms(spark, dir, s0, bloomCols, withSegs)).toMap,
+          requireGov = Some(govFingerprint(snap)), files = staged.files)
     }
   }
 
@@ -2218,18 +2404,18 @@ private[graft] case class ColStats(typeName: String, min: String,
           all.filter(rangeCond(all) && col(c).isNotNull), "delete", snap))
       }
     reclaimOnFailure(dir, cdc.map(_._1)) {
-      val adds = sdf0.toSeq.flatMap { sdf =>
+      val adds = sdf0.fold(NothingStaged) { sdf =>
         newSegments(dir, sdf.filter(!rangeCond(sdf) || col(c).isNull),
           applyDefaults = false, snapOpt = Some(snap))
       }
       // the staged segments join the scope: a segStats/commit failure
       // must not leak dirs no entry records
-      reclaimOnFailure(dir, adds) {
-        commitOrReclaim(dir, "delete", adds, dirty, snap.version,
-          segStatsMany(spark, dir, adds,
-            (snap.partitionCols ++ statsCols).distinct, snap),
+      reclaimOnFailure(dir, adds.segs) {
+        commitOrReclaim(dir, "delete", adds.segs, dirty, snap.version,
+          segStatsMany(spark, dir, adds.segs,
+            (snap.partitionCols ++ statsCols).distinct, snap.withFiles(adds.files)),
           extraLines = cdcLines(cdc), alsoReclaim = cdc.map(_._1),
-          retryPastAppends = true)
+          retryPastAppends = true, files = adds.files)
       }
     }
   }
@@ -2298,13 +2484,14 @@ private[graft] case class ColStats(typeName: String, min: String,
     // PARTITIONED tables re-split through the shared partition stager:
     // maintenance is exactly how unsplit segments (streaming ingest,
     // pre-spec history) regain the one-tuple-per-segment layout
-    val segs =
+    val staged =
       if (snap.partitionCols.nonEmpty)
         newSegments(dir, clustered, applyDefaults = false,
           snapOpt = Some(snap))
       else {
-        val staging = newSegment(dir, clustered, applyDefaults = false,
+        val written = newSegment(dir, clustered, applyDefaults = false,
           snapOpt = Some(snap))
+        val staging = written.segs.head
         val parts = st.list(s"$dir/$staging")
           .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
           .sorted
@@ -2312,20 +2499,25 @@ private[graft] case class ColStats(typeName: String, min: String,
           val name = s"seg-${java.util.UUID.randomUUID}"
           st.mkdirs(s"$dir/$name")
           st.rename(s"$dir/$staging/$p", s"$dir/$name/$p")
-          name
+          name -> p
         }
         // drop the emptied staging dir (only _SUCCESS etc. remain)
         st.deleteRecursively(s"$dir/$staging")
-        named
+        // each part file's segment shares the staging's record and schema
+        Staged(named.map(_._1), written.files.get(staging).fold(
+            Map.empty[String, SegFiles]) { f =>
+          val sizes = f.files.toMap
+          named.map { case (name, p) => name -> f.copy(files = Seq(p -> sizes(p))) }.toMap
+        })
       }
     // the renamed segments join the reclaim scope: a segStats/commit
     // failure must not leak a live-set-sized family of dirs no entry
     // records and no vacuum can find
-    reclaimOnFailure(dir, segs) {
-      commitOrReclaim(dir, op, segs, live, snap.version,
-        segStatsMany(spark, dir, segs,
-          (snap.partitionCols ++ statsCols).distinct, snap),
-        retryPastAppends = true)
+    reclaimOnFailure(dir, staged.segs) {
+      commitOrReclaim(dir, op, staged.segs, live, snap.version,
+        segStatsMany(spark, dir, staged.segs,
+          (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files)),
+        retryPastAppends = true, files = staged.files)
     }
   }
 
@@ -2344,7 +2536,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     if (segs.size == 1)
       return segStats(spark, dir, segs.head, statsCols0, snap)
     val statsCols = statsCols0.map(snap.physCol)
-    val sdf = spark.read.parquet(segs.map(segPath(dir, _)): _*)
+    val sdf = scanSegments(spark, dir, snap, segs)
     val types = sdf.schema.map(f => f.name -> f.dataType.typeName).toMap
     statsCols.foreach(c =>
       require(types.contains(c), s"no column $c in staged segments"))
@@ -2374,9 +2566,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * uniformly: missing columns surface null, exactly like [[read]]
     * with mergeSchema. */
   private def tableSchema(spark: SparkSession, dir: String,
-                          live: Seq[String]): org.apache.spark.sql.types.StructType =
-    spark.read.option("mergeSchema", "true")
-      .parquet(live.map(s => segPath(dir, s)): _*).schema
+                          snap: State): org.apache.spark.sql.types.StructType =
+    scanSegments(spark, dir, snap, snap.live, mergeSchema = true).schema
 
   /** Copy-on-write UPDATE — the third leg of the DML triad (DELETE /
     * MERGE / UPDATE): rows matching `predicate` get `setExprs` applied
@@ -2392,7 +2583,7 @@ private[graft] case class ColStats(typeName: String, min: String,
              statsCols: Seq[String] = Nil): Int = {
     require(setExprs.nonEmpty, "update without SET expressions")
     val snap = state(dir)
-    val schema = tableSchema(spark, dir, snap.live)
+    val schema = tableSchema(spark, dir, snap)
     val unknown = setExprs.keySet -- schema.map(_.name).filterNot(snap.dropped)
       .map(p => snap.renames.getOrElse(p, p)).toSet
     require(unknown.isEmpty, s"SET references unknown column(s): $unknown")
@@ -2431,8 +2622,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       else stageCdc(dir) { buf =>
         val pre = sdf.filter(coalesce(expr(predicate), lit(false)))
         buf += writeCdc(dir, pre, "update_preimage", snap)
-        val preBack = applyMapping(
-          spark.read.parquet(s"$dir/${buf.head._1}"), snap)
+        val preBack = applyMapping(stagedScan(spark, dir, snap, buf.head._1), snap)
         val post = preBack.select(sdf.columns.map { c =>
           setExprs.get(c) match {
             case Some(e) => expr(e).as(c)
@@ -2446,12 +2636,13 @@ private[graft] case class ColStats(typeName: String, min: String,
         snapOpt = Some(snap))
       // the staged segments join the scope: a segStats/commit failure
       // must not leak dirs no entry records
-      reclaimOnFailure(dir, newSegs) {
-        commitOrReclaim(dir, "update", newSegs, dirty, snap.version,
-          segStatsMany(spark, dir, newSegs,
-            (snap.partitionCols ++ statsCols).distinct, snap),
+      reclaimOnFailure(dir, newSegs.segs) {
+        commitOrReclaim(dir, "update", newSegs.segs, dirty, snap.version,
+          segStatsMany(spark, dir, newSegs.segs,
+            (snap.partitionCols ++ statsCols).distinct,
+            snap.withFiles(newSegs.files)),
           extraLines = cdcLines(cdc), alsoReclaim = cdc.map(_._1),
-          retryPastAppends = true)
+          retryPastAppends = true, files = newSegs.files)
       }
     }
   }
@@ -2486,10 +2677,12 @@ private[graft] case class ColStats(typeName: String, min: String,
     val snap = state(dir)
     // pin the updates once as a STAGING segment (never committed —
     // deleted below) so the probe and rewrite jobs don't recompute them
-    val uSeg = newSegment(dir, updates, snapOpt = Some(snap))
+    val staged = newSegment(dir, updates, snapOpt = Some(snap))
+    val uSeg = staged.segs.head
     try {
       // staged bytes carry physical names; probe in logical terms
-      val u = applyMapping(spark.read.parquet(s"$dir/$uSeg"), snap)
+      val u = applyMapping(scanSegments(spark, dir,
+        snap.withFiles(staged.files), staged.segs), snap)
       val bounds = u.agg(min(col(key)).cast("string"), max(col(key)).cast("string")).head()
       val (lo, hi) = (Option(bounds.getString(0)), Option(bounds.getString(1)))
       val candidates = snap.live.filter(seg =>
@@ -2522,8 +2715,9 @@ private[graft] case class ColStats(typeName: String, min: String,
           .unionByName(u)
       // defaults were already applied staging `uSeg` (user data); the
       // dirty-kept rows are a rewrite and must not be back-filled
-      val segs = newSegments(dir, newData, applyDefaults = false,
+      val written = newSegments(dir, newData, applyDefaults = false,
         snapOpt = Some(snap))
+      val segs = written.segs
       // EVERYTHING after the rewrite segments are staged runs inside
       // their reclaim scope: a cdc job, segStats, or commit failure
       // must not leak dirty-set-sized dirs that no entry records and
@@ -2544,7 +2738,7 @@ private[graft] case class ColStats(typeName: String, min: String,
             // matched/unmatched update rows, split on the PRE sidecar's
             // keys (changed-rows-sized, no third dirty-segment scan)
             val preKeys = applyMapping(
-              spark.read.parquet(s"$dir/${buf.head._1}"), snap)
+              stagedScan(spark, dir, snap, buf.head._1), snap)
               .select(col(key)).distinct()
             buf += writeCdc(dir, u.join(preKeys, Seq(key), "left_semi"),
               "update_postimage", snap)
@@ -2553,7 +2747,7 @@ private[graft] case class ColStats(typeName: String, min: String,
             // execution of the anti-join just to probe emptiness)
             val ins = writeCdc(dir, u.join(preKeys, Seq(key), "left_anti"),
               "insert", snap)
-            if (spark.read.parquet(s"$dir/${ins._1}").limit(1).count() > 0)
+            if (stagedScan(spark, dir, snap, ins._1).limit(1).count() > 0)
               buf += ins
             else store(dir).deleteRecursively(s"$dir/${ins._1}")
           }
@@ -2561,9 +2755,10 @@ private[graft] case class ColStats(typeName: String, min: String,
         reclaimOnFailure(dir, sidecars) {
           commitOrReclaim(dir, "merge", segs, dirty, snap.version,
             segStatsMany(spark, dir, segs,
-              (snap.partitionCols ++ statsCols).distinct, snap),
+              (snap.partitionCols ++ statsCols).distinct,
+              snap.withFiles(written.files)),
             extraLines = cdcLines(cdc), alsoReclaim = sidecars,
-            retryPastAppends = true)
+            retryPastAppends = true, files = written.files)
         }
       }
     } finally {
@@ -2664,7 +2859,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     val uSeg = s"seg-${java.util.UUID.randomUUID}"
     source.write.parquet(s"$dir/$uSeg")
     try {
-      val s0 = spark.read.parquet(s"$dir/$uSeg")
+      val s0 = stagedScan(spark, dir, snap, uSeg)
       require(s0.columns.contains(sKey), s"MERGE source lacks key '$sKey'")
       val dup = s0.agg(count(s0(sKey)).as("n"),
         countDistinct(s0(sKey)).as("d")).head()
@@ -2776,7 +2971,7 @@ private[graft] case class ColStats(typeName: String, min: String,
               col(s"t.`$c`").as(s"__graft_pre_$i") }
            else Nil)
         tagged.select(projection: _*).write.parquet(s"$dir/$tagSeg")
-        val staged = spark.read.parquet(s"$dir/$tagSeg")
+        val staged = stagedScan(spark, dir, snap, tagSeg)
         val act = col("__graft_action")
         def outCols = cols.zipWithIndex.map { case (c, i) =>
           col(s"__graft_out_$i").as(c) }
@@ -2789,8 +2984,9 @@ private[graft] case class ColStats(typeName: String, min: String,
         val insertTags = iTags.map(_._2)
         val survives = act.isin(("keep" +: (updateTags ++ insertTags)): _*)
         val newData = staged.filter(survives).select(outCols: _*)
-        val segs = newSegments(dir, newData, applyDefaults = false,
+        val written = newSegments(dir, newData, applyDefaults = false,
           snapOpt = Some(snap))
+        val segs = written.segs
         reclaimOnFailure(dir, segs) {
           // CDF classes ride the staged tags: update pre/post images,
           // delete pre-images, inserts — cost ∝ changed rows
@@ -2800,7 +2996,7 @@ private[graft] case class ColStats(typeName: String, min: String,
               def cls(tags: Seq[String], rows: DataFrame, t: String): Unit =
                 if (tags.nonEmpty) {
                   val w = writeCdc(dir, rows, t, snap)
-                  if (spark.read.parquet(s"$dir/${w._1}").limit(1).count() > 0)
+                  if (stagedScan(spark, dir, snap, w._1).limit(1).count() > 0)
                     buf += w
                   else store(dir).deleteRecursively(s"$dir/${w._1}")
                 }
@@ -2817,9 +3013,10 @@ private[graft] case class ColStats(typeName: String, min: String,
           reclaimOnFailure(dir, sidecars) {
             commitOrReclaim(dir, "merge", segs, dirty, snap.version,
               segStatsMany(spark, dir, segs,
-                (snap.partitionCols ++ statsCols).distinct, snap),
+                (snap.partitionCols ++ statsCols).distinct,
+                snap.withFiles(written.files)),
               extraLines = cdcLines(cdc), alsoReclaim = sidecars,
-              retryPastAppends = true)
+              retryPastAppends = true, files = written.files)
           }
         }
       } finally store(dir).deleteRecursively(s"$dir/$tagSeg")
@@ -2842,15 +3039,16 @@ private[graft] case class ColStats(typeName: String, min: String,
     // the check pass itself throws (e.g. a malformed constraint
     // expression), not just on a counted violation
     val snap = snapshotOrEmpty(dir)
-    val segs = newSegments(dir, df, snapOpt = Some(snap))
+    val written = newSegments(dir, df, snapOpt = Some(snap))
+    val segs = written.segs
+    val withSegs = snap.withFiles(written.files)
     if (segs.isEmpty)
       // partitioned zero-row batch staged nothing: commit the slot
       return commit(dir, "append", Seq.empty, Seq.empty,
         requireGov = Some(govFingerprint(snap)))
     reclaimOnFailure(dir, segs) {
       // constraints are written in logical terms; staged bytes are physical
-      val staged = applyMapping(
-        spark.read.parquet(segs.map(s0 => s"$dir/$s0"): _*), snap)
+      val staged = applyMapping(scanSegments(spark, dir, withSegs, segs), snap)
       // SQL CHECK semantics: a row violates only when the predicate is
       // explicitly FALSE (NULL passes, like Delta's constraints)
       // coalesce: an EMPTY batch sums to null, which must read as 0 violations
@@ -2864,8 +3062,8 @@ private[graft] case class ColStats(typeName: String, min: String,
           violated.map { case (c, n) => s"[$c] $n row(s)" }.mkString("; "))
       commit(dir, "append", segs, Seq.empty,
         stats = segStatsMany(spark, dir, segs,
-          (snap.partitionCols ++ statsCols).distinct, snap),
-        requireGov = Some(govFingerprint(snap)))
+          (snap.partitionCols ++ statsCols).distinct, withSegs),
+        requireGov = Some(govFingerprint(snap)), files = written.files)
     }
   }
 
@@ -2918,7 +3116,7 @@ private[graft] case class ColStats(typeName: String, min: String,
   private def appendStreamVia(spark: SparkSession, dir: String,
       batchId: Long, statsCols: Seq[String], preStaged: Option[String],
       txnAppId: Option[String])(
-      stage: State => Seq[String]): Option[Int] = {
+      stage: State => Staged): Option[Int] = {
     val op = streamOp(txnAppId, batchId)
     var snap = state(dir)
     if (snap.streamOps.contains(op)) {
@@ -2929,17 +3127,18 @@ private[graft] case class ColStats(typeName: String, min: String,
       return None
     }
     val gov = govFingerprint(snap)
-    val segs = stage(snap)
+    val staged = stage(snap)
+    val segs = staged.segs
     // any exit that didn't commit reclaims the staged segments — a
     // stats failure, a raised writer floor, a governance change — not
     // just the duplicate-batch path (no entry records them, so vacuum
     // could never collect the orphans)
     try {
       val stats = segStatsMany(spark, dir, segs,
-        (snap.partitionCols ++ statsCols).distinct, snap)
+        (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files))
       while (true) {
         try return Some(commit(dir, op, segs, Seq.empty,
-          Some(snap.version), stats = stats))
+          Some(snap.version), stats = stats, files = staged.files))
         catch {
           case _: java.util.ConcurrentModificationException =>
             snap = state(dir)
@@ -3014,7 +3213,7 @@ private[graft] case class ColStats(typeName: String, min: String,
   private def overwriteStreamVia(spark: SparkSession, dir: String,
       batchId: Long, statsCols: Seq[String], preStaged: Option[String],
       txnAppId: Option[String])(
-      stage: State => Seq[String]): Option[Int] = {
+      stage: State => Staged): Option[Int] = {
     val op = streamOp(txnAppId, batchId)
     var snap = state(dir)
     if (snap.streamOps.contains(op)) {
@@ -3022,7 +3221,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       return None
     }
     val gov = govFingerprint(snap)
-    val segs = stage(snap)
+    val staged = stage(snap)
+    val segs = staged.segs
     // reclaim the staged segments on ANY non-commit exit (see
     // [[appendStream]]); retries re-resolve the remove set so a racing
     // append is replaced rather than resurrected, and a governance
@@ -3031,10 +3231,10 @@ private[graft] case class ColStats(typeName: String, min: String,
       // stats once, like appendStream: physical names are stable for
       // the table's lifetime, so the snapshot retries need no re-agg
       val stats = segStatsMany(spark, dir, segs,
-        (snap.partitionCols ++ statsCols).distinct, snap)
+        (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files))
       while (true) {
         try return Some(commit(dir, op, segs, snap.live, Some(snap.version),
-          stats = stats))
+          stats = stats, files = staged.files))
         catch {
           case _: java.util.ConcurrentModificationException =>
             snap = state(dir)
@@ -3061,13 +3261,14 @@ private[graft] case class ColStats(typeName: String, min: String,
     * set would be stale. */
   def overwrite(df: DataFrame, dir: String): Int = {
     val snap = snapshotOrEmpty(dir)
-    val segs = newSegments(dir, df, snapOpt = Some(snap))
+    val staged = newSegments(dir, df, snapOpt = Some(snap))
     // the stats job runs inside the reclaim scope like every sibling
     // write path: a transient stats failure must not leak staged dirs
     // no entry records and no vacuum can find
-    reclaimOnFailure(dir, segs) {
-      commitOrReclaim(dir, "overwrite", segs, snap.live, snap.version,
-        segStatsMany(df.sparkSession, dir, segs, snap.partitionCols, snap))
+    reclaimOnFailure(dir, staged.segs) {
+      commitOrReclaim(dir, "overwrite", staged.segs, snap.live, snap.version,
+        segStatsMany(df.sparkSession, dir, staged.segs, snap.partitionCols,
+          snap.withFiles(staged.files)), files = staged.files)
     }
   }
 
@@ -3457,7 +3658,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // hidden) — what read() resolves, derived from the same replay —
     // plus its physical twin (dropped hidden, storage names kept):
     // the delegate parquet scan reads bytes, which carry physical names
-    val raw = tableSchema(spark, dir, s.live)
+    val raw = tableSchema(spark, dir, s)
     val phys = org.apache.spark.sql.types.StructType(
       raw.filterNot(f => s.dropped(f.name)))
     new Dsv2Snapshot(s, logicalSchema(s, raw), phys)
@@ -3717,7 +3918,7 @@ private[graft] case class ColStats(typeName: String, min: String,
   def delete(spark: SparkSession, dir: String, predicate: String): Int = {
     val snap = state(dir)
     if (snap.cdfEnabled)
-      requireCdfDeterministic(spark, snap, tableSchema(spark, dir, snap.live),
+      requireCdfDeterministic(spark, snap, tableSchema(spark, dir, snap),
         Map("DELETE predicate" -> predicate))
     val counts = matchCounts(spark, dir, snap, predicate)
     val dirty = snap.live.filter(seg => counts.get(seg).exists(_._1))
@@ -3740,16 +3941,17 @@ private[graft] case class ColStats(typeName: String, min: String,
         "delete", snap))
     reclaimOnFailure(dir, cdc.map(_._1)) {
       val adds =
-        if (straddling.isEmpty) Seq.empty
+        if (straddling.isEmpty) NothingStaged
         else newSegments(dir,
           segScan(spark, dir, snap, straddling, mergeSchema = true)
             .filter(not(coalesce(expr(predicate), lit(false)))),
           applyDefaults = false, snapOpt = Some(snap))
-      reclaimOnFailure(dir, adds) {
-        commitOrReclaim(dir, "delete", adds, dirty, snap.version,
-          segStatsMany(spark, dir, adds, snap.partitionCols, snap),
+      reclaimOnFailure(dir, adds.segs) {
+        commitOrReclaim(dir, "delete", adds.segs, dirty, snap.version,
+          segStatsMany(spark, dir, adds.segs, snap.partitionCols,
+            snap.withFiles(adds.files)),
           extraLines = cdcLines(cdc), alsoReclaim = cdc.map(_._1),
-          retryPastAppends = true)
+          retryPastAppends = true, files = adds.files)
       }
     }
   }
@@ -3831,7 +4033,7 @@ private[graft] case class ColStats(typeName: String, min: String,
                    df: DataFrame, statsCols: Seq[String] = Nil): Int = {
     val snap = state(dir)
     if (snap.cdfEnabled)
-      requireCdfDeterministic(spark, snap, tableSchema(spark, dir, snap.live),
+      requireCdfDeterministic(spark, snap, tableSchema(spark, dir, snap),
         Map("replaceWhere predicate" -> predicate))
     // one STATS-PRE-PRUNED triage job classifies the candidate
     // segments: all live rows match -> drop wholesale; none -> carry
@@ -3848,6 +4050,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // violation staging the SECOND segment) deletes every
     // already-staged segment, never leaking
     val adds = scala.collection.mutable.ArrayBuffer.empty[String]
+    var addFiles = Map.empty[String, SegFiles]
     val cdc = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     try {
       // CHANGE DATA FEED (when enabled): the REPLACED rows' pre-images
@@ -3858,26 +4061,31 @@ private[graft] case class ColStats(typeName: String, min: String,
         cdc += writeCdc(dir, segScan(spark, dir, snap, withMatch,
           mergeSchema = true).filter(coalesce(expr(predicate), lit(false))),
           "delete", snap)
-      if (straddling.nonEmpty)
+      if (straddling.nonEmpty) {
         // the kept rows are those where the predicate is NOT TRUE —
         // `NOT(pred)` alone would silently DROP a NULL-evaluating row
         // (NOT(NULL) is NULL), losing rows that matched neither the
         // replacement frame nor the incoming data
-        adds ++= newSegments(dir, segScan(spark, dir, snap, straddling,
+        val kept = newSegments(dir, segScan(spark, dir, snap, straddling,
           mergeSchema = true)
             .filter(not(coalesce(expr(predicate), lit(false)))),
           applyDefaults = false, snapOpt = Some(snap))
+        adds ++= kept.segs
+        addFiles ++= kept.files
+      }
       // stage the incoming frame ONCE, then validate the STAGED bytes:
       // `df` executes exactly one time, so a nondeterministic upstream
       // cannot pass validation with one set of rows and commit another
       // (the appendChecked pattern). The check counts rows whose
       // predicate is not TRUE — a NULL-evaluating row is OUTSIDE the
       // declared replacement frame and must be rejected too.
-      val dfSegs = newSegments(dir, df, snapOpt = Some(snap))
+      val incoming = newSegments(dir, df, snapOpt = Some(snap))
+      val dfSegs = incoming.segs
       adds ++= dfSegs
+      addFiles ++= incoming.files
       if (dfSegs.nonEmpty) {
         val staged = applyMapping(
-          spark.read.parquet(dfSegs.map(s0 => s"$dir/$s0"): _*), snap)
+          scanSegments(spark, dir, snap.withFiles(incoming.files), dfSegs), snap)
         val vc = staged.agg(count(lit(1)).as("n"),
           coalesce(sum(when(not(coalesce(expr(predicate), lit(false))), 1L)
             .otherwise(0L)), lit(0L)).as("bad")).head()
@@ -3898,9 +4106,11 @@ private[graft] case class ColStats(typeName: String, min: String,
       val allStatsCols = (snap.partitionCols ++ statsCols).distinct
       val stats =
         if (allStatsCols.isEmpty) Map.empty[(String, String), ColStats]
-        else segStatsMany(spark, dir, adds.toSeq, allStatsCols, snap)
+        else segStatsMany(spark, dir, adds.toSeq, allStatsCols,
+          snap.withFiles(addFiles))
       commit(dir, "replace_where", adds.toSeq, dropped ++ straddling,
-        Some(snap.version), stats, extraLines = cdcLines(cdc.toSeq))
+        Some(snap.version), stats, extraLines = cdcLines(cdc.toSeq),
+        files = addFiles)
     } catch {
       case scala.util.control.NonFatal(e) =>
         (adds ++ cdc.collect { case (f, _) if f.startsWith("cdc-") => f })
@@ -3956,12 +4166,13 @@ private[graft] case class ColStats(typeName: String, min: String,
     // declared layout bounds "one segment" — this is also how unsplit
     // streaming-ingest segments regain it)
     val all = segScan(spark, dir, snap, snap.live, mergeSchema = true).coalesce(1)
-    val segs = newSegments(dir, all, applyDefaults = false,
+    val staged = newSegments(dir, all, applyDefaults = false,
       snapOpt = Some(snap))
-    reclaimOnFailure(dir, segs) {
-      commitOrReclaim(dir, "compact", segs, snap.live, snap.version,
-        segStatsMany(spark, dir, segs, snap.partitionCols, snap),
-        retryPastAppends = true)
+    reclaimOnFailure(dir, staged.segs) {
+      commitOrReclaim(dir, "compact", staged.segs, snap.live, snap.version,
+        segStatsMany(spark, dir, staged.segs, snap.partitionCols,
+          snap.withFiles(staged.files)),
+        retryPastAppends = true, files = staged.files)
     }
   }
 
@@ -4613,7 +4824,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     * diverge. */
   private def visibleSchema(spark: SparkSession, dir: String,
                             snap: State): Seq[(String, String)] =
-    tableSchema(spark, dir, snap.live)
+    tableSchema(spark, dir, snap)
       .filterNot(f => snap.dropped(f.name))
       .map(f => (snap.renames.getOrElse(f.name, f.name),
         f.dataType.catalogString))
@@ -4722,7 +4933,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       blooms = target.blooms.filter { case ((seg, _), _) => readdSet(seg) },
       dvs = readd.flatMap(seg => target.dvs.getOrElse(seg, Seq.empty)
         .map { case (dv, rows) => (seg, dv, rows) }),
-      extraLines = mapLines)
+      extraLines = mapLines,
+      files = target.files.filter { case (seg, _) => readdSet(seg) })
   }
 
   /** The ADJUSTED commit clock: per-version instants monotonized to a
@@ -4809,6 +5021,17 @@ private[graft] case class ColStats(typeName: String, min: String,
     * definition, like [[history]]. */
   private[graft] def allAddedSegments(dir: String): Seq[String] =
     entries(dir).flatMap(_.add).distinct
+
+  /** The schema and part files (name, byte size) the log records for
+    * each live segment as of `asOf` (-1 = head); segments without a
+    * record are absent — the test surface for the scan record. */
+  private[graft] def recordedFilesOf(dir: String, asOf: Int = -1
+      ): Map[String, (org.apache.spark.sql.types.StructType, Seq[(String, Long)])] = {
+    val s = state(dir, asOf)
+    s.live.flatMap(seg => s.files.get(seg).map(f => seg ->
+      (org.apache.spark.sql.types.DataType.fromJson(f.schema)
+        .asInstanceOf[org.apache.spark.sql.types.StructType], f.files))).toMap
+  }
 
   /** DESCRIBE HISTORY: one row per commit — (version, op, n_added,
     * n_removed) — from log metadata alone (intrinsically a full-log

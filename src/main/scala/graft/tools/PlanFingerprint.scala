@@ -6,7 +6,11 @@ package graft.tools
   * from the pins.
   *
   * Counted from `executedPlan.toString` (pre-execution, deterministic
-  * for a fixed input + shuffle-partition config):
+  * for a fixed input + shuffle-partition config). An adaptive plan
+  * that has moved past its initial form prints both its current ("Final
+  * Plan"/"Current Plan") and its "Initial Plan" sections — a cached
+  * relation's materialized plan always does — so the "Initial Plan"
+  * sections are skipped and each exchange counts once:
   *  - `shuffles`: hash/range/single-partition Exchanges — each is a
   *    full shuffle of its input; the number a refactor most easily
   *    regresses.
@@ -26,7 +30,8 @@ object PlanFingerprint {
       s"Fp($shuffles, $broadcasts, $scans, $rddScans, $windows, $sortMergeJoins)"
   }
 
-  def of(plan: String): Fp = {
+  def of(plan0: String): Fp = {
+    val plan = withoutInitialPlans(plan0)
     def n(sub: String): Int = {
       var c = 0; var i = plan.indexOf(sub)
       while (i >= 0) { c += 1; i = plan.indexOf(sub, i + 1) }
@@ -41,5 +46,22 @@ object PlanFingerprint {
       rddScans = n("Scan ExistingRDD"),
       windows = n("Window ["),
       sortMergeJoins = n("SortMergeJoin"))
+  }
+
+  /** `plan` without the lines under each "+- == Initial Plan ==" header:
+    * the header is its node's last child, so its section is every
+    * following line that is blank in the header's three tree columns. */
+  private def withoutInitialPlans(plan: String): String = {
+    val out = new StringBuilder
+    var skipCol = -1
+    plan.linesIterator.foreach { line =>
+      if (skipCol >= 0 && !(line.length > skipCol + 3 &&
+          line.substring(skipCol, skipCol + 3).isBlank)) skipCol = -1
+      if (skipCol < 0) {
+        val h = line.indexOf("+- == Initial Plan ==")
+        if (h >= 0) skipCol = h else out.append(line).append('\n')
+      }
+    }
+    out.toString
   }
 }

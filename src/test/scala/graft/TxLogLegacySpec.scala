@@ -1,0 +1,67 @@
+package graft
+
+import graft.sources.TxLog
+
+/** A table written before the log recorded scan metadata (the
+  * `txlog_legacy` fixture, FIXTURES.md §4): three appended segments,
+  * the third with an added column, and a merge-on-read delete whose
+  * deletion vector names its rows by absolute file path. Its segments
+  * carry no `schema=`/`file=` record, so every scan of them takes the
+  * listing-and-inference path — per segment, next to recorded ones. */
+class TxLogLegacySpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** Where the fixture was written; its deletion vector's file paths
+    * point there, so it is read (and copied for writes) there. */
+  private val home = new java.io.File("/tmp/graft_txlog_legacy/table")
+
+  private def install(): String = {
+    val src = new java.io.File(getClass.getResource("/txlog_legacy").toURI)
+    org.apache.commons.io.FileUtils.deleteDirectory(home)
+    org.apache.commons.io.FileUtils.copyDirectory(src, home)
+    home.getPath
+  }
+
+  private def rows(dir: String, mergeSchema: Boolean) =
+    TxLog.read(spark, dir, mergeSchema = mergeSchema).orderBy("id")
+      .collect().map(_.toSeq).toSeq
+
+  test("the legacy table reads unchanged: evolved schema, deletion vector applied") {
+    val dir = install()
+    assert(TxLog.headVersion(dir) == 3 && TxLog.liveSegments(dir).size == 3)
+    assert(TxLog.recordedFilesOf(dir).isEmpty, "the fixture predates scan records")
+    val base = Seq((1L, "a", 100L), (2L, "b", 200L), (3L, "c", 300L), (4L, "d", 400L),
+      (5L, "e", 500L), (7L, "g", 700L), (8L, "h", 800L), (9L, "i", 900L),
+      (10L, "j", 1000L))
+    assert(rows(dir, mergeSchema = true) == base.map { case (i, n, c) =>
+      Seq(i, n, c, if (i >= 9) "new" else null) })
+    // without mergeSchema the first segment's schema decides
+    assert(rows(dir, mergeSchema = false) == base.map { case (i, n, c) => Seq(i, n, c) })
+    assert(TxLog.readRange(spark, dir, "id", Some("2"), Some("3")).count() == 2)
+  }
+
+  test("merge and update on a copy of the legacy table: recorded and legacy segments mix") {
+    val dir = install()
+    val legacy = TxLog.liveSegments(dir).toSet
+    TxLog.merge(spark, dir,
+      Seq((2L, "b", 250L), (11L, "k", 1100L)).toDF("id", "name", "cents"), "id")
+    TxLog.update(spark, dir, "id = 5", Map("cents" -> "cents + 1"))
+    val live = TxLog.liveSegments(dir)
+    val recorded = TxLog.recordedFilesOf(dir)
+    // the rewritten segments are recorded; the untouched legacy ones
+    // still are not, and scans read both kinds together
+    assert(recorded.nonEmpty && recorded.keySet == live.filterNot(legacy).toSet)
+    assert(live.exists(legacy))
+    val want = Seq((1L, "a", 100L), (2L, "b", 250L), (3L, "c", 300L), (4L, "d", 400L),
+      (5L, "e", 501L), (7L, "g", 700L), (8L, "h", 800L), (9L, "i", 900L),
+      (10L, "j", 1000L), (11L, "k", 1100L))
+    assert(rows(dir, mergeSchema = true) == want.map { case (i, n, c) =>
+      Seq(i, n, c, if (i == 9 || i == 10) "new" else null) })
+    assert(TxLog.read(spark, dir).schema.fieldNames.toSeq ==
+      spark.read.parquet(s"$dir/${live.head}").schema.fieldNames.toSeq)
+    // a recorded scan names the files a listing names, so the legacy
+    // deletion vector still lines up with the rows it deletes
+    assert(TxLog.read(spark, dir).inputFiles.toSet ==
+      spark.read.parquet(live.map(s => s"$dir/$s"): _*).inputFiles.toSet)
+  }
+}
