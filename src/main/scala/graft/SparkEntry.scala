@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.ColumnShim
 import graft.Tables._
 import graft.dedup.Dedup
+import graft.functions.GridRound
 import graft.graph.ConnectedComponents
 import graft.index.InvertedIndex
 import graft.ops.{Features, Relational, TextOps}
@@ -2268,7 +2269,7 @@ object SparkEntry {
     // identical values (SURVEY.md §5.3d)
     "pagerank_oracle" -> ((s, d) =>
       PageRank.run(pagerankGraph(s, d), iters = 10, roundTo = 9)
-        .select(col("title"), round(col("rank"), 6).as("rank"))
+        .select(col("title"), GridRound.binaryRound(col("rank"), 6).as("rank"))
         .orderBy("title")),
 
     // PERSONALIZED PageRank: teleport mass pinned to a 3-customer seed
@@ -2278,7 +2279,7 @@ object SparkEntry {
     "pagerank_personal" -> ((s, d) =>
       PageRank.run(pagerankGraph(s, d), iters = 10, roundTo = 9,
           seeds = Some(Set("c1", "c2", "c3")))
-        .select(col("title"), round(col("rank"), 6).as("rank"))
+        .select(col("title"), GridRound.binaryRound(col("rank"), 6).as("rank"))
         .orderBy("title")),
 
     // NORMALIZED PageRank extension (mass-conserving: (1-d)/N base +
@@ -2292,7 +2293,7 @@ object SparkEntry {
         .select(col("title"), array().cast("array<string>").as("outlinks"))
       PageRank.runNormalized(pagerankGraph(s, d).unionByName(partVerts),
           iters = 10, roundTo = 9)
-        .select(col("title"), round(col("rank"), 6).as("rank"))
+        .select(col("title"), GridRound.binaryRound(col("rank"), 6).as("rank"))
         .orderBy("title")
     }),
 
@@ -5019,7 +5020,7 @@ object SparkEntry {
         concat(lit("o"), col("o_orderkey")).as("src"),
         concat(lit("c"), col("o_custkey")).as("dst"), cents.as("w"))
       PageRank.weightedDataFrame(fwd.unionByName(back), iters = 5)
-        .select(col("title"), round(col("rank"), 6).as("rank"))
+        .select(col("title"), GridRound.binaryRound(col("rank"), 6).as("rank"))
         .orderBy("title")
     }),
 

@@ -1,5 +1,9 @@
 package graft.pagerank
 
+import scala.reflect.ClassTag
+import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -7,54 +11,64 @@ import graft.graph.GraphTier
 
 /** Iterative PageRank with the REFERENCE's exact semantics
   * (ref: PageRankAlgorithm.java:97-114, :323-399; SURVEY.md §2.10):
+  * `rank₀ = 1/N` (:302); a fixed iteration count, default 10 (:98);
+  * `rankᵢ₊₁(p) = d · Σ_{q→p} rankᵢ(q)/outDeg(q) + (1−d)`, d = 0.85 (:395),
+  * the UNNORMALIZED variant; shares sent to red links (targets that are
+  * not pages) are DROPPED (:392-394); a page nothing reaches rests at 1−d
+  * (:369); dangling mass evaporates; self-loops and duplicate links count
+  * in the out-degree (:339). A link reaches EVERY page carrying its title,
+  * and a null link a null title, as in a pair join.
   *
-  *  - `rank₀ = 1/N` (ref: :302);
-  *  - fixed iteration count, default 10 (ref: :98, README.md:70);
-  *  - `rankᵢ₊₁(p) = d · Σ_{q→p} rankᵢ(q)/outDeg(q) + (1−d)` with d = 0.85
-  *    (ref: :395) — the UNNORMALIZED variant: no (1−d)/N, so total mass
-  *    is not conserved;
-  *  - contributions to red links (targets that are not pages) are DROPPED
-  *    — the reference's marker-join `return` (ref: :392-394) is our
-  *    left-join from the vertex set;
-  *  - a page with no inbound contributions survives with rank = 1−d
-  *    (accumulator init, ref: :369);
-  *  - dangling pages (no outlinks) contribute nothing — their mass
-  *    evaporates (explode of an empty array emits no rows);
-  *  - self-loops and duplicate links kept: out-degree counts occurrences
-  *    (ref: :339 `links.length`; README.md:62).
-  *
-  * Spark-first mechanics replacing the reference's 10 HDFS-materialized
-  * MR jobs (SURVEY.md §4.3): one driver loop over immutable DataFrames;
-  * the static vertex relation is persisted once and reused every
-  * iteration (the reference re-reads + re-parses it from disk each job);
-  * `localCheckpoint` every `checkpointEvery` iterations truncates the
-  * logical plan (otherwise analysis time doubles per iteration); the
-  * previous iteration unpersists eagerly — the in-memory analog of the
-  * reference's delete-behind (ref: :112-113).
-  *
-  * At cluster scale the join and groupBy both shuffle on `title`;
-  * hash-partitioning is stable across iterations so AQE reuses the
-  * exchange layout, and the vertex side stays cached in executor memory.
-  * Each entry point runs a small graph inside one task instead — the
-  * tier is [[GraphTier.pageRankSingleTask]]'s decision.
+  * ONE kernel serves [[run]], [[runNormalized]] and [[runConverged]]: one
+  * graph build and one iteration step (GraphX's aggregateMessages shape,
+  * Gonzalez et al., OSDI 2014, on primitive arrays). The variants differ
+  * only in per-vertex values the step takes — divisor, teleport term,
+  * start rank — and two switches: spreading the dangling mass
+  * (normalized) and a max-delta stop (converged). A small graph runs the
+  * same build and step inside one task ([[GraphTier.pageRankSingleTask]]
+  * decides). An RDD loop because the iteration body is a FIXED shape:
+  * Catalyst re-planning per iteration cost ~10 s/iteration of planning +
+  * JIT at 165k vertices vs ~0.5 s of actual work.
   */
-object PageRank {
+object PageRank extends Serializable {
 
-  /** Maps key p (a partition index) to partition p — the carrier for
-    * partition-encoded vertex ids ((p&lt;&lt;32)|local). */
-  private final case class IndexPartitioner(numPartitions: Int)
-      extends org.apache.spark.Partitioner {
-    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  /** What one entry point computes, per vertex v with title t:
+    * `rank'(v) = rnd(d·(s(v) + D/n) + base(t))`, where s(v) sums the
+    * shares rank(u)/deg(u) of v's in-links and D is the dangling mass the
+    * senders spread (0 unless `normalized`). `rnd` pins every iteration
+    * to the 10^-roundTo grid (identity below 0), so an independent engine
+    * running the same rounded recurrence (the DuckDB recursive-CTE
+    * oracle) carries IDENTICAL values. */
+  private final case class Recurrence(n: Long, d: Double, rnd: Double => Double,
+      normalized: Boolean, seeds: Option[(Broadcast[Set[String]], Double)]) {
+    /** The teleport term: (1−d) in the reference formula, (1−d)·1[t∈S]/|S|
+      * personalized, (1−d)/n normalized. */
+    def base(t: String): Double =
+      if (seeds.isDefined) (1.0 - d) * start(t) else if (normalized) (1.0 - d) / n else 1.0 - d
+    /** The cold start rank before rounding: 1/n, or 1[t∈S]/|S| personalized. */
+    def start(t: String): Double =
+      seeds.fold(1.0 / n) { case (bc, invS) => if (bc.value(t)) invS else 0.0 }
   }
 
-  /** One loop partition of [[run]]'s distributed tier, all primitive
-    * arrays: the out-degree of each local vertex (red links counted), a
-    * CSR whose row v — edges off(v) until off(v + 1) — holds each edge's
-    * message slot, the slots of destination partition q at slotOff(q)
-    * until slotOff(q + 1), each slot's destination-local index in outIdx,
-    * and the teleport weights (null: the uniform reference formula). */
+  /** One loop partition, all primitive arrays: each local vertex's divisor
+    * (its full out-degree, red links counted — or, normalized, its
+    * resolved edge count), a CSR whose row v — edges off(v) until
+    * off(v + 1) — holds each edge's message slot, the slots of
+    * destination partition q at slotOff(q) until slotOff(q + 1), each
+    * slot's destination-local index in outIdx, and each vertex's
+    * teleport term and start rank. */
   private final case class LoopGraph(deg: Array[Int], off: Array[Int], slot: Array[Int],
-      slotOff: Array[Int], outIdx: Array[Int], tele: Array[Double])
+      slotOff: Array[Int], outIdx: Array[Int], base: Array[Double], rank0: Array[Double])
+
+  /** A resolution bucket's answer for one loop partition: resolved edges
+    * (source-local index, destination id), or warm-start ranks
+    * (local index, rank). */
+  private type Resolved = Either[(Array[Int], Array[Long]), (Array[Int], Array[Double])]
+
+  /** One sender's message to one destination partition: the slots'
+    * destination-local indices, their sums, and the dangling mass it
+    * spreads. */
+  private type Msg = (Array[Int], Array[Double], Double)
 
   /** Stable counting sort of items by bucket `key(k)` in [0, nb): bucket b
     * holds sorted positions off(b) until off(b + 1), item k goes to
@@ -72,12 +86,29 @@ object PageRank {
     (off, pos)
   }
 
-  /** The non-empty buckets of two bucket-sorted arrays as chunk records
-    * (bucket, (a's slice, b's slice)). */
-  private def chunks[A, B](off: Array[Int], a: Array[A],
-      b: Array[B]): Iterator[(Int, (Array[A], Array[B]))] =
-    (0 until off.length - 1).iterator.filter(q => off(q + 1) > off(q))
-      .map(q => (q, (a.slice(off(q), off(q + 1)), b.slice(off(q), off(q + 1)))))
+  /** Items (a(k), b(k)) stably bucket-sorted by key(k) in [0, nb), one
+    * chunk record (bucket, (a's slice, b's slice)) per non-empty bucket. */
+  private def bucketed[@specialized(Int) A: ClassTag, @specialized(Long, Double) B: ClassTag](
+      nb: Int, key: Array[Int], a: Array[A], b: Array[B]): Iterator[(Int, (Array[A], Array[B]))] = {
+    val (off, pos) = bucketSort(nb, key)
+    val sa = new Array[A](a.length)
+    val sb = new Array[B](b.length)
+    var k = 0
+    while (k < key.length) { sa(pos(k)) = a(k); sb(pos(k)) = b(k); k += 1 }
+    (0 until nb).iterator.filter(q => off(q + 1) > off(q))
+      .map(q => (q, (sa.slice(off(q), off(q + 1)), sb.slice(off(q), off(q + 1)))))
+  }
+
+  /** `vals` keyed by title, bucketed to hash(title) mod nb. */
+  private def byTitle[@specialized(Long, Double) B: ClassTag](part: HashPartitioner,
+      titles: Array[String], vals: Array[B]): Iterator[(Int, (Array[String], Array[B]))] =
+    bucketed(part.numPartitions, titles.map(part.getPartition), titles, vals)
+
+  /** `vals` keyed by partition-encoded id (p&lt;&lt;32)|local, bucketed to
+    * p as (locals, vals). */
+  private def byPart[@specialized(Long, Double) B: ClassTag](parts: Int, ids: Array[Long],
+      vals: Array[B]): Iterator[(Int, (Array[Int], Array[B]))] =
+    bucketed(parts, partOf(ids), ids.map(_.toInt), vals)
 
   /** The partition half of each partition-encoded id (p&lt;&lt;32)|local. */
   private def partOf(ids: Array[Long]): Array[Int] = {
@@ -105,135 +136,288 @@ object PageRank {
     * sizing aggregates — r17 (guide §1.2 step 1): `count()` + a separate
     * edge-sum pass cost two full reads of the (title, outlinks) cache
     * before any ranking work started. */
-  private def sizeCounts(
-      raw: org.apache.spark.rdd.RDD[(String, Seq[String])]): (Long, Long) =
+  private def sizeCounts(raw: RDD[(String, Seq[String])]): (Long, Long) =
     raw.mapPartitions { it =>
       var n = 0L; var e = 0L
       while (it.hasNext) { n += 1L; e += it.next()._2.size }
       Iterator.single((n, e))
     }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
 
+  /** Loop partition p's titles with their ids (p&lt;&lt;32)|local, bucketed
+    * by title. */
+  private def titleChunks(p: Int, vs: Array[(String, Seq[String])],
+      part: HashPartitioner): Iterator[(Int, (Array[String], Array[Long]))] = {
+    val ids = new Array[Long](vs.length)
+    for (i <- ids.indices) ids(i) = (p.toLong << 32) | i
+    byTitle(part, vs.map(_._1), ids)
+  }
+
+  /** Loop partition p's link occurrences with their source ids, bucketed
+    * by target title. */
+  private def linkChunks(p: Int, vs: Array[(String, Seq[String])],
+      part: HashPartitioner): Iterator[(Int, (Array[String], Array[Long]))] = {
+    val dsts = new Array[String](vs.iterator.map(_._2.size).sum)
+    val srcs = new Array[Long](dsts.length)
+    var k = 0
+    for (i <- vs.indices; l <- vs(i)._2) { dsts(k) = l; srcs(k) = (p.toLong << 32) | i; k += 1 }
+    byTitle(part, dsts, srcs)
+  }
+
+  /** One resolution bucket: a title → id table of the bucket's pages;
+    * each link occurrence resolves to every page carrying its title (red
+    * links drop here), each warm-start rank likewise, and both go back to
+    * the owning loop partition, chunked. Only one occurrence chunk's
+    * strings are live at a time. */
+  private def resolve(titles: Iterator[(Array[String], Array[Long])],
+      links: Iterator[(Array[String], Array[Long])],
+      warm: Iterator[(Array[String], Array[Double])],
+      loopParts: Int): Iterator[(Int, Resolved)] = {
+    val tcs = titles.toArray
+    // open addressing (id -1 = empty slot, load ≤ 1/2); Fibonacci
+    // hashing takes the high bits, since a bucket's titles share
+    // hashCode mod numParts; null matches null, as in a pair join
+    var cap = 2
+    while (cap < 2 * tcs.map(_._1.length).sum) cap <<= 1
+    val shift = Integer.numberOfLeadingZeros(cap) + 1
+    def home(t: String) = (java.util.Objects.hashCode(t) * 0x9E3779B9) >>> shift
+    val tabTitle = new Array[String](cap)
+    val tabId = new Array[Long](cap)
+    java.util.Arrays.fill(tabId, -1L)
+    for ((ts, is) <- tcs; j <- ts.indices) {
+      var h = home(ts(j))
+      while (tabId(h) >= 0) h = (h + 1) & (cap - 1)
+      tabTitle(h) = ts(j); tabId(h) = is(j)
+    }
+    val src = new scala.collection.mutable.ArrayBuilder.ofLong
+    val dst = new scala.collection.mutable.ArrayBuilder.ofLong
+    for ((ds, ss) <- links; j <- ds.indices) {
+      var h = home(ds(j))
+      while (tabId(h) >= 0) {
+        if (tabTitle(h) == ds(j)) { src += ss(j); dst += tabId(h) }
+        h = (h + 1) & (cap - 1)
+      }
+    }
+    val at = new scala.collection.mutable.ArrayBuilder.ofLong
+    val rk = new scala.collection.mutable.ArrayBuilder.ofDouble
+    for ((ts, rs) <- warm; j <- ts.indices) {
+      var h = home(ts(j))
+      while (tabId(h) >= 0) {
+        if (tabTitle(h) == ts(j)) { at += tabId(h); rk += rs(j) }
+        h = (h + 1) & (cap - 1)
+      }
+    }
+    byPart(loopParts, src.result(), dst.result()).map { case (q, e) => (q, Left(e): Resolved) } ++
+      byPart(loopParts, at.result(), rk.result()).map { case (q, w) => (q, Right(w): Resolved) }
+  }
+
+  /** A loop partition's static graph from its rows and resolved records:
+    * a counting-sort CSR over the local vertices, one message slot per
+    * distinct destination — the sorted distinct destination ids, so
+    * slots group by destination partition and ascend in
+    * destination-local index — and the recurrence's per-vertex divisor,
+    * teleport term and start rank (a warm-start rank where one
+    * resolved). */
+  private def loopGraph(vs: Array[(String, Seq[String])], res: Iterator[Resolved],
+      loopParts: Int, rec: Recurrence): LoopGraph = {
+    val (es, ws) = res.toArray.partitionMap(identity)
+    val (off, pos) = bucketSort(vs.length, Array.concat(es.map(_._1).toSeq: _*))
+    val dst = Array.concat(es.map(_._2).toSeq: _*)
+    val sorted = dst.clone()
+    java.util.Arrays.sort(sorted)
+    var u = 0; var k = 0
+    while (k < sorted.length) {
+      if (u == 0 || sorted(u - 1) != sorted(k)) { sorted(u) = sorted(k); u += 1 }
+      k += 1
+    }
+    val uniq = java.util.Arrays.copyOf(sorted, u)
+    val slot = new Array[Int](dst.length)
+    k = 0
+    while (k < dst.length) { slot(pos(k)) = java.util.Arrays.binarySearch(uniq, dst(k)); k += 1 }
+    val (slotOff, _) = bucketSort(loopParts, partOf(uniq))
+    val outIdx = new Array[Int](u)
+    for (j <- outIdx.indices) outIdx(j) = uniq(j).toInt
+    val deg = new Array[Int](vs.length)
+    val base = new Array[Double](vs.length)
+    val start = new Array[Double](vs.length)
+    for (v <- vs.indices) {
+      deg(v) = if (rec.normalized) off(v + 1) - off(v) else vs(v)._2.size
+      base(v) = rec.base(vs(v)._1)
+      start(v) = rec.start(vs(v)._1)
+    }
+    for ((at, rk) <- ws; j <- at.indices) start(at(j)) = rk(j)
+    LoopGraph(deg, off, slot, slotOff, outIdx, base, start.map(rec.rnd))
+  }
+
+  /** The sender half of one iteration: each edge's share rank(v)/deg(v)
+    * summed into its slot — per slot in vertex-then-edge order — and the
+    * slots of destination partition q shipped as (q, (their outIdx, their
+    * sums, D)). A vertex without a resolved edge is dangling; `spread`
+    * ships the partition's dangling mass D to EVERY partition, otherwise
+    * it (like each red-link share, the divisor being the full
+    * out-degree) evaporates as the reference drops it (ref :369,
+    * :392-394). */
+  private def send(g: LoopGraph, rank: Array[Double],
+      spread: Boolean): Iterator[(Int, Msg)] = {
+    val LoopGraph(deg, off, slot, slotOff, outIdx, _, _) = g
+    val out = new Array[Double](outIdx.length)
+    var dangling = 0.0
+    var v = 0
+    while (v < deg.length) {
+      var k = off(v)
+      if (k < off(v + 1)) {
+        val c = rank(v) / deg(v)
+        while (k < off(v + 1)) { out(slot(k)) += c; k += 1 }
+      } else dangling += rank(v)
+      v += 1
+    }
+    val shipped = if (spread) dangling else 0.0
+    (0 until slotOff.length - 1).iterator
+      .filter(q => spread || slotOff(q + 1) > slotOff(q))
+      .map(q => (q, (outIdx.slice(slotOff(q), slotOff(q + 1)),
+        out.slice(slotOff(q), slotOff(q + 1)), shipped)))
+  }
+
+  /** The receiver half: the messages' sums per destination vertex, then
+    * every vertex's [[Recurrence]] update; pages no link reaches rest at
+    * their teleport term. */
+  private def receive(g: LoopGraph, msgs: Iterator[(Int, Msg)], rec: Recurrence): Array[Double] = {
+    val sums = new Array[Double](g.deg.length)
+    var dangling = 0.0
+    msgs.foreach { case (_, (idx, s, m)) =>
+      var j = 0
+      while (j < idx.length) { sums(idx(j)) += s(j); j += 1 }
+      dangling += m
+    }
+    val dn = dangling / rec.n
+    val (d, rnd, base) = (rec.d, rec.rnd, g.base)
+    var v = 0
+    while (v < sums.length) { sums(v) = rnd(d * (sums(v) + dn) + base(v)); v += 1 }
+    sums
+  }
+
+  /** max |b(v) − a(v)| — the converged variant's stop measure. */
+  private def maxDelta(a: Array[Double], b: Array[Double]): Double = {
+    var m = 0.0
+    var v = 0
+    while (v < a.length) { val x = math.abs(b(v) - a(v)); if (x > m) m = x; v += 1 }
+    m
+  }
+
   /** @param vertices (title: String, outlinks: Array[String]) — one row
     *                 per page; outlinks may repeat and may self-reference.
-    * @return (title, rank), one row per page.
-    *
-    * Pregel-style RDD inner loop (the GraphX approach, and the one place
-    * this engine drops below the DataFrame API): the iteration body is a
-    * FIXED shape, so Catalyst re-planning + whole-stage codegen per
-    * iteration buys nothing and costs a lot — measured ~10 s/iteration of
-    * planning + JIT-compilation overhead at 165k vertices vs ~0.5 s of
-    * actual work.
-    *
-    * The distributed tier works on primitive arrays after the row cache:
-    * titles resolve to ids (p&lt;&lt;32)|local in one chunked hash-bucket
-    * pass, each loop partition keeps a counting-sort CSR whose edges point
-    * at slots of one outgoing `Array[Double]` (a slot per distinct
-    * destination, grouped by destination partition — GraphX's routing
-    * table), and each iteration is one narrow sender pass, one shuffle of
-    * at most P² chunk records `(q, (destination indices, slot sums))` and
-    * one narrow receiver pass. See `runDataFrame` for the Catalyst
-    * formulation (kept for cross-checking; same semantics). */
+    * @param roundTo  pin every iteration to the 10^-roundTo grid (-1: off)
+    * @param seeds    PERSONALIZED variant (a broadcast-size seed set S):
+    *                 r₀ = 1[v∈S]/|S|, r' = d·Σ shares + (1−d)·1[v∈S]/|S|.
+    * @return (title, rank), one row per page. */
   def run(vertices: DataFrame, iters: Int = 10, d: Double = 0.85,
           checkpointEvery: Int = 3, roundTo: Int = -1,
-          seeds: Option[Set[String]] = None): DataFrame = {
+          seeds: Option[Set[String]] = None): DataFrame =
+    kernel(vertices, "PageRank.run", iters, d, roundTo, checkpointEvery, seeds = seeds)
+
+  /** NORMALIZED PageRank — the textbook mass-conserving variant, built as
+    * an extension beyond reference parity (SURVEY §7.6):
+    *
+    *   rᵢ₊₁(p) = (1−d)/N + d·(Σ_{q→p} rᵢ(q)/deg(q) + Dᵢ/N)
+    *
+    * with deg counting only RESOLVED links (red links pruned, so no mass
+    * leaks to non-vertices) and Dᵢ the total rank of pages without a
+    * resolved link, redistributed uniformly. Total mass is EXACTLY 1
+    * after every iteration (Σr' = (1−d) + d·(Σ_{linked} r + D) = 1) —
+    * the invariant the spec asserts — unlike the reference recurrence
+    * where red-link and dangling mass evaporates. Each sender ships its
+    * partition's D with the chunk records it already sends, so the
+    * spread costs no job of its own. */
+  def runNormalized(vertices: DataFrame, iters: Int = 10, d: Double = 0.85,
+                    roundTo: Int = -1): DataFrame =
+    kernel(vertices, "PageRank.runNormalized", iters, d, roundTo, checkpointEvery = 3,
+      normalized = true)
+
+  /** Fixed-point (converged) variant for incremental/streaming use.
+    *
+    * The recurrence `r' = d·M·r + (1−d)·1` is an affine map whose linear
+    * part has spectral radius ≤ d < 1 (column sums of M are ≤ 1 — dangling
+    * and red-link mass evaporates), so it is a CONTRACTION with a unique
+    * fixed point independent of the start vector. That is what makes
+    * warm-starting sound: iterating from the previous micro-batch's ranks
+    * (`init`) converges to exactly the same answer as a cold 1/N start,
+    * only in far fewer sweeps after a small graph delta.
+    *
+    * Stops when the max per-vertex delta < `eps` (checked every sweep:
+    * one job per sweep materializes the new ranks and their delta, the
+    * honest price of a convergence gate; the single task checks for
+    * free) or at `maxIters`.
+    *
+    * @param init previous (title, rank) relation, resolved by title in
+    *             the pass that resolves links; vertices absent from it
+    *             start at 1/N, titles absent from the graph are dropped. */
+  def runConverged(vertices: DataFrame, d: Double = 0.85, eps: Double = 1e-9,
+                   maxIters: Int = 200, init: Option[DataFrame] = None): DataFrame =
+    kernel(vertices, "PageRank.runConverged", maxIters, d, roundTo = -1,
+      checkpointEvery = 1, init = init, eps = Some(eps))
+
+  /** The one build and loop behind the three entry points: at most
+    * `iters` iterations, each a [[send]] and a [[receive]]; with `eps`,
+    * also stop once no rank moves by `eps` or more. */
+  private def kernel(vertices: DataFrame, algorithm: String, iters: Int, d: Double,
+      roundTo: Int, checkpointEvery: Int, normalized: Boolean = false,
+      seeds: Option[Set[String]] = None, init: Option[DataFrame] = None,
+      eps: Option[Double] = None): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    // PERSONALIZED variant (seeds = Some(S)): teleport mass goes to the
-    // seed set instead of uniformly — init r₀ = 1[v∈S]/|S|, recurrence
-    // r' = d·Σ contributions + (1−d)·1[v∈S]/|S|. Same unnormalized
-    // red-link semantics as the reference recurrence; `None` keeps the
-    // reference formula (init 1/n, constant 1−d base) bit for bit.
-    // Seeds are broadcast-size by definition (a query's seed set).
-    val seedBc = seeds.map(s => (spark.sparkContext.broadcast(s), 1.0 / s.size))
     // The raw RDD is persisted before the sizing count so an expensive
     // upstream plan (e.g. wiki parse) is evaluated once, not twice.
     val raw = vertices.select("title", "outlinks").as[(String, Seq[String])]
       .rdd.persist(StorageLevel.MEMORY_AND_DISK)
     val (n, nEdges) = sizeCounts(raw)
     val confParts = spark.sessionState.conf.numShufflePartitions
-    val singleTask = GraphTier.pageRankSingleTask("PageRank.run", n, nEdges, confParts)
+    val singleTask = GraphTier.pageRankSingleTask(algorithm, n, nEdges, confParts)
+    if (n == 0) {
+      raw.unpersist(false)
+      return Seq.empty[(String, Double)].toDF("title", "rank")
+    }
     val numParts = if (singleTask) 1 else sizeParts(n, nEdges, confParts)
-    val part = new org.apache.spark.HashPartitioner(numParts)
-
-    // Optional per-iteration decimal rounding: pins every iteration's
-    // state to the 10^-roundTo grid so an independent engine running the
-    // same rounded recurrence (the DuckDB recursive-CTE oracle) carries
-    // IDENTICAL values — cross-engine float drift cannot accumulate.
-    // shared valueOf-semantics grid rounding (GridRound scaladoc)
-    val rnd: Double => Double = graft.functions.GridRound.fn(roundTo)
+    val part = new HashPartitioner(numParts)
+    val rec = Recurrence(n, d, graft.functions.GridRound.fn(roundTo), normalized,
+      seeds.map(s => (spark.sparkContext.broadcast(s), 1.0 / s.size)))
+    val warm = init.map(_.select("title", "rank").as[(String, Double)].rdd)
+      .filter(_.getNumPartitions > 0)
+    def warmChunks(it: Iterator[(String, Double)]) = {
+      val ws = it.toArray
+      byTitle(part, ws.map(_._1), ws.map(_._2))
+    }
+    val stop: Double => Boolean = delta => eps.exists(delta < _)
 
     // `release` frees the tier's loop state once the shared tail has
     // materialized the ranks
     val (ranks, release) =
       if (singleTask) {
-        // r17 (guide §2.4): coalesce(1) instead of partitionBy(1) — the
-        // single task needs ONE partition, not a hash layout, and the
-        // narrow coalesce reads raw's cache directly (measured 0.24 s vs
-        // 0.9 s for the single-partition shuffle at sf0.1/32c, and one
-        // materialization job fewer since nothing needs a second cache).
-        // Row order changes once (parent-partition concatenation order —
-        // deterministic), absorbed exactly like any other layout change
-        // by the per-iteration rounding contract; all pagerank oracles
-        // re-certified at sf0.001/0.01/0.1.
+        // SINGLE-TASK TIER: per-iteration job scheduling would dominate
+        // milliseconds of arithmetic, so the build and every iteration run
+        // inside ONE task over a narrow coalesce(1) of raw's cache (r17:
+        // 0.24 s vs 0.9 s for a single-partition shuffle at sf0.1/32c);
+        // one sender, so every sum keeps vertex-then-edge order, and the
+        // `eps` check is a free local comparison.
+        def oneTask(vs: Array[(String, Seq[String])], ws: Iterator[(String, Double)]) = {
+          val res = resolve(titleChunks(0, vs, part).map(_._2),
+            linkChunks(0, vs, part).map(_._2), warmChunks(ws).map(_._2), 1)
+          val g = loopGraph(vs, res.map(_._2), 1, rec)
+          var rank = g.rank0
+          var i = 0
+          var delta = Double.MaxValue
+          while (i < iters && !stop(delta)) {
+            val next = receive(g, send(g, rank, normalized), rec)
+            if (eps.isDefined) delta = maxDelta(rank, next)
+            rank = next
+            i += 1
+          }
+          vs.iterator.zip(rank.iterator).map { case ((t, _), r) => (t, r) }
+        }
         val links = raw.coalesce(1)
-        // SINGLE-TASK TIER: the whole vertex set fits one partition, so
-        // per-iteration job scheduling (2 stages × iters roundtrips to
-        // the scheduler for milliseconds of arithmetic) would dominate
-        // the distributed loop. Run every iteration inside ONE task over
-        // the single partition instead — identical semantics (red links
-        // dropped via the index lookup, dangling contribute nothing,
-        // contribution-less pages rest at 1−d, duplicates/self-loops
-        // kept, same rnd pinning), ~20× less wall-clock at 16.5k
-        // vertices. Summation order differs from the distributed loop
-        // only within the float tolerance every consumer already absorbs
-        // (specs compare at 1e-9; the oracle pins each iteration to the
-        // 1e-9 grid).
-        links.mapPartitions({ it =>
-          val vertices = it.toArray
-          val idx = new java.util.HashMap[String, Integer](vertices.length * 2)
-          vertices.iterator.zipWithIndex.foreach { case ((t, _), i) =>
-            idx.put(t, i)
-          }
-          val targets: Array[Array[Int]] = vertices.map(_._2.iterator.map { l =>
-            val j = idx.get(l); if (j == null) -1 else j.intValue()
-          }.toArray)
-          val m = vertices.length
-          // teleport weight per vertex: 1 for every vertex in the
-          // reference formula, 1[v∈S]/|S| for the personalized variant
-          val tele: Array[Double] = seedBc match {
-            case Some((bc, invS)) =>
-              vertices.map { case (t, _) => if (bc.value(t)) invS else 0.0 }
-            case None => null
-          }
-          val rank =
-            if (tele == null) Array.fill(m)(rnd(1.0 / n))
-            else tele.map(rnd)
-          val sums = new Array[Double](m)
-          var it2 = 0
-          while (it2 < iters) {
-            java.util.Arrays.fill(sums, 0.0)
-            var i = 0
-            while (i < m) {
-              val ts = targets(i)
-              if (ts.length > 0) {
-                val c = rank(i) / ts.length
-                var k = 0
-                while (k < ts.length) { if (ts(k) >= 0) sums(ts(k)) += c; k += 1 }
-              }
-              i += 1
-            }
-            i = 0
-            while (i < m) {
-              val base = if (tele == null) 1.0 - d else (1.0 - d) * tele(i)
-              rank(i) = rnd(d * sums(i) + base); i += 1
-            }
-            it2 += 1
-          }
-          vertices.iterator.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
-        }, preservesPartitioning = true) -> (() => ())
+        warm.fold(links.mapPartitions(it => oneTask(it.toArray, Iterator.empty))) { w =>
+          links.zipPartitions(w.coalesce(1))((lit, wit) => oneTask(lit.toArray, wit))
+        } -> (() => ())
       } else {
-        // ROUTING-TABLE loop (GraphX's aggregateMessages shape, on
-        // primitive arrays): vertices get ids (p<<32)|localIndex on the
+        // ROUTING-TABLE loop: vertices get ids (p<<32)|localIndex on the
         // loop layout, every partition precomputes once where each of
         // its edges' contributions goes, and each iteration ships ONE
         // chunked message per (source, destination) partition pair. The
@@ -253,155 +437,58 @@ object PageRank {
             l
           }
         val loopParts = links.getNumPartitions
-        val pPart = IndexPartitioner(loopParts)
+        // Int keys hash to themselves: chunk record (p, _) goes to partition p
+        val pPart = new HashPartitioner(loopParts)
 
         // 1. Title resolution: each loop partition sends its titles (with
-        // their ids) and its link occurrences (with the source id) to
-        // bucket hash(title) mod numParts, one chunk record per bucket;
-        // each bucket builds one title → id table and streams the
-        // occurrence chunks through it — red links drop here, a
-        // duplicated title resolves to every page carrying it — and sends
-        // the resolved (src, dst) ids back to the source partition,
-        // chunked. Only one occurrence chunk's strings are live at a time.
-        val hPart = IndexPartitioner(numParts)
-        val titleChunks = links.mapPartitionsWithIndex { (p, it) =>
-          val ts = it.map(_._1).toArray
-          val key = new Array[Int](ts.length)
-          for (i <- ts.indices) key(i) = part.getPartition(ts(i))
-          val (off, pos) = bucketSort(numParts, key)
-          val titles = new Array[String](ts.length)
-          val ids = new Array[Long](ts.length)
-          for (i <- ts.indices) { titles(pos(i)) = ts(i); ids(pos(i)) = (p.toLong << 32) | i }
-          chunks(off, titles, ids)
-        }.partitionBy(hPart)
-        val linkChunks = links.mapPartitionsWithIndex { (p, it) =>
-          val vs = it.toArray
-          val key = new Array[Int](vs.iterator.map(_._2.size).sum)
-          var k = 0
-          for (v <- vs; l <- v._2) { key(k) = part.getPartition(l); k += 1 }
-          val (off, pos) = bucketSort(numParts, key)
-          val dsts = new Array[String](key.length)
-          val srcs = new Array[Long](key.length)
-          k = 0
-          for (i <- vs.indices; l <- vs(i)._2) {
-            dsts(pos(k)) = l; srcs(pos(k)) = (p.toLong << 32) | i; k += 1
-          }
-          chunks(off, dsts, srcs)
-        }.partitionBy(hPart)
-        val resolved = titleChunks.zipPartitions(linkChunks) { (tit, lit) =>
-          val tcs = tit.map(_._2).toArray
-          // open addressing (id -1 = empty slot, load ≤ 1/2); Fibonacci
-          // hashing takes the high bits, since a bucket's titles share
-          // hashCode mod numParts; null matches null, as in a pair join
-          var cap = 2
-          while (cap < 2 * tcs.map(_._1.length).sum) cap <<= 1
-          val shift = Integer.numberOfLeadingZeros(cap) + 1
-          def home(t: String) = (java.util.Objects.hashCode(t) * 0x9E3779B9) >>> shift
-          val tabTitle = new Array[String](cap)
-          val tabId = new Array[Long](cap)
-          java.util.Arrays.fill(tabId, -1L)
-          for ((ts, is) <- tcs; j <- ts.indices) {
-            var h = home(ts(j))
-            while (tabId(h) >= 0) h = (h + 1) & (cap - 1)
-            tabTitle(h) = ts(j); tabId(h) = is(j)
-          }
-          val src = new scala.collection.mutable.ArrayBuilder.ofLong
-          val dst = new scala.collection.mutable.ArrayBuilder.ofLong
-          for ((_, (ds, ss)) <- lit; j <- ds.indices) {
-            var h = home(ds(j))
-            while (tabId(h) >= 0) {
-              if (tabTitle(h) == ds(j)) { src += ss(j); dst += tabId(h) }
-              h = (h + 1) & (cap - 1)
+        // their ids) and its link occurrences (with the source id) — and
+        // each warm-start row — to bucket hash(title) mod numParts, one
+        // chunk record per bucket; [[resolve]] answers each loop
+        // partition with its resolved edges and warm ranks.
+        val titles = links.mapPartitionsWithIndex((p, it) => titleChunks(p, it.toArray, part))
+          .partitionBy(part)
+        val occurrences = links.mapPartitionsWithIndex((p, it) => linkChunks(p, it.toArray, part))
+          .partitionBy(part)
+        val resolved = (warm match {
+          case Some(w) =>
+            titles.zipPartitions(occurrences,
+                w.mapPartitions(warmChunks).partitionBy(part)) { (tit, lit, wit) =>
+              resolve(tit.map(_._2), lit.map(_._2), wit.map(_._2), loopParts)
             }
-          }
-          val (srcA, dstA) = (src.result(), dst.result())
-          val (off, pos) = bucketSort(loopParts, partOf(srcA))
-          val local = new Array[Int](srcA.length)
-          val dstS = new Array[Long](srcA.length)
-          for (j <- srcA.indices) { local(pos(j)) = srcA(j).toInt; dstS(pos(j)) = dstA(j) }
-          chunks(off, local, dstS)
-        }.partitionBy(pPart)
+          case None =>
+            titles.zipPartitions(occurrences) { (tit, lit) =>
+              resolve(tit.map(_._2), lit.map(_._2), Iterator.empty, loopParts)
+            }
+        }).partitionBy(pPart)
 
-        // 2. Static graph: a counting-sort CSR over the local vertices,
-        // and one message slot per distinct destination — the sorted
-        // distinct destination ids, so slots group by destination
-        // partition and ascend in destination-local index.
+        // 2. Static graph, once per loop partition.
         val graph = links.zipPartitions(resolved, preservesPartitioning = true) { (lit, rit) =>
-          val vs = lit.toArray
-          val rcs = rit.map(_._2).toArray
-          val (off, pos) = bucketSort(vs.length, Array.concat(rcs.map(_._1).toSeq: _*))
-          val dst = Array.concat(rcs.map(_._2).toSeq: _*)
-          val sorted = dst.clone()
-          java.util.Arrays.sort(sorted)
-          var u = 0; var k = 0
-          while (k < sorted.length) {
-            if (u == 0 || sorted(u - 1) != sorted(k)) { sorted(u) = sorted(k); u += 1 }
-            k += 1
-          }
-          val uniq = java.util.Arrays.copyOf(sorted, u)
-          val slot = new Array[Int](dst.length)
-          k = 0
-          while (k < dst.length) { slot(pos(k)) = java.util.Arrays.binarySearch(uniq, dst(k)); k += 1 }
-          val (slotOff, _) = bucketSort(loopParts, partOf(uniq))
-          val outIdx = new Array[Int](u)
-          for (j <- outIdx.indices) outIdx(j) = uniq(j).toInt
-          val deg = new Array[Int](vs.length)
-          var v = 0
-          while (v < vs.length) { deg(v) = vs(v)._2.size; v += 1 }
-          val tele = seedBc.map { case (bc, invS) =>
-            vs.map(v => if (bc.value(v._1)) invS else 0.0) }.orNull
-          Iterator.single(LoopGraph(deg, off, slot, slotOff, outIdx, tele))
+          Iterator.single(loopGraph(lit.toArray, rit.map(_._2), loopParts, rec))
         }.persist(StorageLevel.MEMORY_AND_DISK)
         graph.count()
 
-        // 3. Iterations: the sender sums each edge's contribution into
-        // its slot — per slot in vertex-then-edge order — and ships the
-        // slots of destination partition q as (q, (their outIdx, their sums)).
-        // The divisor is the full out-degree, so red-link shares vanish
-        // as the reference drops them (ref :369, :392-394); dangling
-        // pages send nothing and pages no link reaches rest at 1−d.
-        var r = graph.mapPartitions(_.map { g =>
-          if (g.tele != null) g.tele.map(rnd)
-          else { val a = new Array[Double](g.deg.length); java.util.Arrays.fill(a, rnd(1.0 / n)); a }
-        })
-        var lastCkpt: Option[org.apache.spark.rdd.RDD[Array[Double]]] = None
-        for (i <- 1 to iters) {
-          val msgs = graph.zipPartitions(r) { (git, rit) =>
-            val LoopGraph(deg, off, slot, slotOff, outIdx, _) = git.next()
-            val rank = rit.next()
-            val out = new Array[Double](slotOff(loopParts))
-            var v = 0
-            while (v < deg.length) {
-              var k = off(v)
-              if (k < off(v + 1)) {
-                val c = rank(v) / deg(v)
-                while (k < off(v + 1)) { out(slot(k)) += c; k += 1 }
-              }
-              v += 1
-            }
-            chunks(slotOff, outIdx, out)
+        // 3. Iterations: one narrow sender pass, one shuffle of at most
+        // P² chunk records, one narrow receiver pass.
+        var r = graph.map(_.rank0)
+        var lastCkpt: Option[RDD[Array[Double]]] = None
+        var i = 0
+        var delta = Double.MaxValue
+        while (i < iters && !stop(delta)) {
+          i += 1
+          val prev = r
+          val msgs = graph.zipPartitions(prev) { (git, rit) =>
+            send(git.next(), rit.next(), normalized)
           }.partitionBy(pPart)
-          r = graph.zipPartitions(msgs) { (git, mit) =>
-            val g = git.next()
-            val sums = new Array[Double](g.deg.length)
-            mit.foreach { case (_, (idx, s2)) =>
-              var j = 0
-              while (j < idx.length) { sums(idx(j)) += s2(j); j += 1 }
-            }
-            var v = 0
-            while (v < sums.length) {
-              sums(v) =
-                if (g.tele == null) rnd(d * sums(v) + (1.0 - d))
-                else rnd(d * sums(v) + (1.0 - d) * g.tele(v))
-              v += 1
-            }
-            Iterator.single(sums)
-          }
-          // the last iteration needs no checkpoint of its own: the shared
-          // tail's one job computes it and materializes the named ranks
-          if (i % checkpointEvery == 0 && i < iters) {
+          r = graph.zipPartitions(msgs)((git, mit) => Iterator.single(receive(git.next(), mit, rec)))
+          // with `eps`, one job per sweep materializes the new ranks and
+          // their max delta; otherwise the last iteration needs no
+          // checkpoint of its own: the shared tail's one job computes it
+          // and materializes the named ranks
+          if (eps.isDefined || (i % checkpointEvery == 0 && i < iters)) {
             r.localCheckpoint()
-            r.count() // materialize NOW — truncation is real, not deferred
+            if (eps.isDefined)
+              delta = prev.zipPartitions(r)((a, b) => Iterator.single(maxDelta(a.next(), b.next()))).max()
+            else r.count() // materialize NOW — truncation is real, not deferred
             lastCkpt.foreach(_.unpersist(false))
             lastCkpt = Some(r)
           }
@@ -427,366 +514,6 @@ object PageRank {
     release()
     raw.unpersist(false)
     ranks.toDF("title", "rank")
-  }
-
-  /** NORMALIZED PageRank — the textbook mass-conserving variant, built as
-    * an extension beyond reference parity (SURVEY §7.6):
-    *
-    *   rᵢ₊₁(p) = (1−d)/N + d·(Σ_{q→p} rᵢ(q)/deg(q) + Dᵢ/N)
-    *
-    * with deg counting only RESOLVED links (red links pruned up front, so
-    * no mass leaks to non-vertices) and Dᵢ the total rank of dangling
-    * pages, redistributed uniformly. Total mass is EXACTLY 1 after every
-    * iteration (Σr' = (1−d) + d·(Σ_{linked} r + D) = 1) — the invariant
-    * the spec asserts — unlike the reference recurrence where red-link
-    * and dangling mass evaporates.
-    *
-    * Same two execution tiers as [[run]]: single-task loop for small
-    * graphs; for large ones the per-iteration dangling sum is one scalar
-    * action over the co-partitioned join (the price of normalization). */
-  def runNormalized(vertices: DataFrame, iters: Int = 10, d: Double = 0.85,
-                    roundTo: Int = -1): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val raw0 = vertices.select("title", "outlinks").as[(String, Seq[String])]
-      .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val (n, nEdges) = sizeCounts(raw0)
-    if (n == 0) {
-      raw0.unpersist(false)
-      return Seq.empty[(String, Double)].toDF("title", "rank")
-    }
-    val confParts = spark.sessionState.conf.numShufflePartitions
-    val singleTask =
-      GraphTier.pageRankSingleTask("PageRank.runNormalized", n, nEdges, confParts)
-    val numParts = if (singleTask) 1 else sizeParts(n, nEdges, confParts)
-    // Only the DISTRIBUTED tier closes the graph relationally (explode +
-    // vertex semi-join + regroup): the single task prunes red links for
-    // free while building its target-index arrays, so the extra pass
-    // would be pure overhead exactly where the graph is smallest.
-    val raw =
-      if (singleTask) raw0
-      else {
-        val v = vertices.select("title", "outlinks")
-        val titles = v.select(col("title"))
-        val resolved = v.select(col("title"), explode(col("outlinks")).as("link"))
-          .join(titles.select(col("title").as("link")).distinct(), Seq("link"), "left_semi")
-          .groupBy("title").agg(collect_list("link").as("outlinks"))
-        val closed = titles.join(resolved, Seq("title"), "left")
-          .select(col("title"),
-            coalesce(col("outlinks"), array().cast("array<string>")).as("outlinks"))
-        val r = closed.as[(String, Seq[String])]
-          .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        r.count()
-        raw0.unpersist(false)
-        r
-      }
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    // single task: a narrow single-partition view of raw's cache (r17 —
-    // see run()); distributed tier keeps the hash layout its ids/join
-    // machinery reuses, with raw released once links materializes
-    val links =
-      if (singleTask) raw.coalesce(1)
-      else {
-        val l = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-        l.count()
-        raw.unpersist(false)
-        l
-      }
-
-    // shared valueOf-semantics grid rounding (GridRound scaladoc)
-    val rnd: Double => Double = graft.functions.GridRound.fn(roundTo)
-    val base = (1.0 - d) / n
-
-    var ranks =
-      if (singleTask) {
-        links.mapPartitions({ it =>
-          val vertices = it.toArray
-          val m = vertices.length
-          val idx = new java.util.HashMap[String, Integer](m * 2)
-          vertices.iterator.zipWithIndex.foreach { case ((t, _), i) => idx.put(t, i) }
-          // red links pruned HERE: unresolved targets simply don't make
-          // it into the index arrays, and deg is the resolved count
-          val targets: Array[Array[Int]] =
-            vertices.map(_._2.iterator.flatMap { l =>
-              val j = idx.get(l)
-              if (j == null) Iterator.empty else Iterator.single(j.intValue())
-            }.toArray)
-          val rank = Array.fill(m)(rnd(1.0 / n))
-          val sums = new Array[Double](m)
-          var it2 = 0
-          while (it2 < iters) {
-            java.util.Arrays.fill(sums, 0.0)
-            var dMass = 0.0
-            var i = 0
-            while (i < m) {
-              val ts = targets(i)
-              if (ts.length > 0) {
-                val c = rank(i) / ts.length
-                var k = 0
-                while (k < ts.length) { sums(ts(k)) += c; k += 1 }
-              } else dMass += rank(i)
-              i += 1
-            }
-            i = 0
-            while (i < m) {
-              rank(i) = rnd(base + d * (sums(i) + dMass / n)); i += 1
-            }
-            it2 += 1
-          }
-          vertices.iterator.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
-        }, preservesPartitioning = true)
-      } else {
-        // Numeric-id loop, as in [[run]] (same measured ~1.6× shuffle
-        // win). Red links are already pruned from `raw` on this path, so
-        // every target resolves and deg == targets.length; dangling
-        // detection stays deg == 0.
-        val ids = links.keys.zipWithIndex()
-          .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-        val resolvedTargets = links
-          .flatMap { case (src, ls) => ls.iterator.map(dst => (dst, src)) }
-          .join(ids, part)
-          .map { case (_, (src, dstId)) => (src, dstId) }
-          .groupByKey(part)
-        val intLinks = ids.join(links.mapValues(_.size), part)
-          .leftOuterJoin(resolvedTargets, part)
-          .map { case (_, ((id, deg), ts)) =>
-            (id, (deg, ts.fold(Array.empty[Long])(_.toArray))) }
-          .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-        intLinks.count()
-
-        var r = intLinks.mapValues(_ => rnd(1.0 / n))
-        var lastCkpt: Option[org.apache.spark.rdd.RDD[(Long, Double)]] = None
-        for (i <- 1 to iters) {
-          val joined = intLinks.join(r, part) // narrow: co-partitioned
-          val dMass = joined.values
-            .map { case ((deg, _), rk) => if (deg == 0) rk else 0.0 }.sum()
-          val contribs = joined.flatMap { case (_, ((deg, ts), rk)) =>
-            if (deg == 0) Iterator.empty
-            else { val c = rk / deg; ts.iterator.map(tg => (tg, c)) }
-          }
-          val sums = contribs.reduceByKey(part, _ + _)
-          r = intLinks.leftOuterJoin(sums, part)
-            .mapValues { case (_, s) =>
-              rnd(base + d * (s.getOrElse(0.0) + dMass / n))
-            }
-          if (i % checkpointCadence == 0 || i == iters) {
-            r.localCheckpoint()
-            r.count()
-            lastCkpt.foreach(_.unpersist(false))
-            lastCkpt = Some(r)
-          }
-        }
-        val named = r
-          .join(ids.map(_.swap).partitionBy(part), part)
-          .map { case (_, (rk, t)) => (t, rk) }
-        named.localCheckpoint()
-        named.count()
-        ids.unpersist(false)
-        intLinks.unpersist(false)
-        lastCkpt.foreach(_.unpersist(false))
-        named
-      }
-    ranks.localCheckpoint()
-    ranks.count()
-    links.unpersist(false) // no-op on the single task's unpersisted coalesce
-    raw.unpersist(false)
-    ranks.toDF("title", "rank")
-  }
-
-  private val checkpointCadence = 3
-
-  /** Fixed-point (converged) variant for incremental/streaming use.
-    *
-    * The recurrence `r' = d·M·r + (1−d)·1` is an affine map whose linear
-    * part has spectral radius ≤ d < 1 (column sums of M are ≤ 1 — dangling
-    * and red-link mass evaporates), so it is a CONTRACTION with a unique
-    * fixed point independent of the start vector. That is what makes
-    * warm-starting sound: iterating from the previous micro-batch's ranks
-    * (`init`) converges to exactly the same answer as a cold 1/N start,
-    * only in far fewer sweeps after a small graph delta.
-    *
-    * Stops when the max per-vertex delta < `eps` (checked every
-    * iteration: the check is a narrow join — both sides share the
-    * partitioner — feeding a max; one extra job per iteration, which is
-    * the honest price of a convergence gate) or at `maxIters`.
-    *
-    * @param init previous (title, rank) relation; vertices absent from it
-    *             start at 1/N, vertices absent from the graph are dropped. */
-  def runConverged(vertices: DataFrame, d: Double = 0.85, eps: Double = 1e-9,
-                   maxIters: Int = 200, init: Option[DataFrame] = None): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val raw = vertices.select("title", "outlinks").as[(String, Seq[String])]
-      .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val (n, nEdges) = sizeCounts(raw)
-    if (n == 0) {
-      raw.unpersist(false)
-      return Seq.empty[(String, Double)].toDF("title", "rank")
-    }
-    val confParts = spark.sessionState.conf.numShufflePartitions
-    val singleTask =
-      GraphTier.pageRankSingleTask("PageRank.runConverged", n, nEdges, confParts)
-    val numParts = if (singleTask) 1 else sizeParts(n, nEdges, confParts)
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    val links = raw.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    links.count()
-    raw.unpersist(false)
-
-    if (singleTask) {
-      // Single-task tier (see `run`): sweep-to-convergence inside one
-      // task, with the delta check a free local comparison instead of a
-      // per-iteration distributed join — the difference between ~130
-      // scheduler roundtrips and one job for a cold convergence, which is
-      // what keeps streaming micro-batch latency flat.
-      val prev = init match {
-        case Some(df) => df.select("title", "rank").as[(String, Double)]
-          .rdd.partitionBy(part)
-        case None => spark.sparkContext.emptyRDD[(String, Double)].partitionBy(part)
-      }
-      val joined = links.leftOuterJoin(prev, part)
-      val res = joined.mapPartitions({ it =>
-        val vertices = it.toArray // (title, (links, Option[prevRank]))
-        val m = vertices.length
-        val idx = new java.util.HashMap[String, Integer](m * 2)
-        vertices.iterator.zipWithIndex.foreach { case ((t, _), i) => idx.put(t, i) }
-        val targets: Array[Array[Int]] = vertices.map(_._2._1.iterator.map { l =>
-          val j = idx.get(l); if (j == null) -1 else j.intValue()
-        }.toArray)
-        val rank = vertices.map(_._2._2.getOrElse(1.0 / n))
-        val sums = new Array[Double](m)
-        var iter = 0
-        var delta = Double.MaxValue
-        while (iter < maxIters && delta >= eps) {
-          java.util.Arrays.fill(sums, 0.0)
-          var i = 0
-          while (i < m) {
-            val ts = targets(i)
-            if (ts.length > 0) {
-              val c = rank(i) / ts.length
-              var k = 0
-              while (k < ts.length) { if (ts(k) >= 0) sums(ts(k)) += c; k += 1 }
-            }
-            i += 1
-          }
-          delta = 0.0
-          i = 0
-          while (i < m) {
-            val next = d * sums(i) + (1.0 - d)
-            val dd = math.abs(next - rank(i))
-            if (dd > delta) delta = dd
-            rank(i) = next
-            i += 1
-          }
-          iter += 1
-        }
-        vertices.iterator.zipWithIndex.map { case ((t, _), i) => (t, rank(i)) }
-      }, preservesPartitioning = true)
-      res.localCheckpoint()
-      res.count()
-      links.unpersist(false)
-      return res.toDF("title", "rank")
-    }
-
-    // Numeric-id loop (see [[run]]). The warm-start init is (title, rank)
-    // by nature — ids are NOT stable across graph deltas — so it joins
-    // through the fresh title→id relation; absent vertices start at 1/N,
-    // departed vertices drop out in the same join.
-    val ids = links.keys.zipWithIndex()
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    val resolvedTargets = links
-      .flatMap { case (src, ls) => ls.iterator.map(dst => (dst, src)) }
-      .join(ids, part)
-      .map { case (_, (src, dstId)) => (src, dstId) }
-      .groupByKey(part)
-    val intLinks = ids.join(links.mapValues(_.size), part)
-      .leftOuterJoin(resolvedTargets, part)
-      .map { case (_, ((id, deg), ts)) =>
-        (id, (deg, ts.fold(Array.empty[Long])(_.toArray))) }
-      .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    intLinks.count()
-
-    var ranks = init match {
-      case Some(df) =>
-        val prev = df.select("title", "rank").as[(String, Double)]
-          .rdd.partitionBy(part)
-        ids.leftOuterJoin(prev, part)
-          .map { case (_, (id, r)) => (id, r.getOrElse(1.0 / n)) }
-          .partitionBy(part)
-      case None => intLinks.mapValues(_ => 1.0 / n)
-    }
-    ranks.localCheckpoint()
-    ranks.count()
-    var prevCkpt = ranks
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < maxIters && delta >= eps) {
-      val contribs = intLinks.join(ranks, part).flatMap { case (_, ((deg, ts), r)) =>
-        if (deg == 0 || ts.isEmpty) Iterator.empty
-        else { val c = r / deg; ts.iterator.map(tg => (tg, c)) }
-      }
-      val sums = contribs.reduceByKey(part, _ + _)
-      val next = intLinks.leftOuterJoin(sums, part)
-        .mapValues { case (_, s) => d * s.getOrElse(0.0) + (1.0 - d) }
-      next.localCheckpoint()
-      // the delta action materializes next's checkpoint in the same job
-      delta = ranks.join(next, part)
-        .map { case (_, (a, b)) => math.abs(a - b) }.max()
-      prevCkpt.unpersist(false)
-      prevCkpt = next
-      ranks = next
-      iter += 1
-    }
-    val named = ranks
-      .join(ids.map(_.swap).partitionBy(part), part)
-      .map { case (_, (rk, t)) => (t, rk) }
-    named.localCheckpoint()
-    named.count()
-    ids.unpersist(false)
-    intLinks.unpersist(false)
-    prevCkpt.unpersist(false)
-    links.unpersist(false)
-    named.toDF("title", "rank")
-  }
-
-  /** The declarative Catalyst formulation of the same semantics — used by
-    * tests to cross-check `run`; prefer `run` for iteration counts > 2. */
-  def runDataFrame(vertices: DataFrame, iters: Int = 10, d: Double = 0.85,
-                   checkpointEvery: Int = 1): DataFrame = {
-    // Pre-partition the static vertex relation by the join key and cache
-    // the PARTITIONED form: InMemoryRelation preserves outputPartitioning,
-    // so none of the 10 iterations re-shuffles the vertex side — the
-    // exchange happens exactly once (the reference instead re-read and
-    // re-parsed the graph from HDFS in every one of its 10 jobs).
-    val verts = vertices.select(col("title"), col("outlinks"))
-      .repartition(col("title"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count() // also materializes the cache (ref job 1's counter)
-
-    var ranks = verts.select(col("title"), lit(1.0 / n).as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = ranks.join(verts, "title")
-        .filter(size(col("outlinks")) > 0)
-        .select(explode(col("outlinks")).as("title"),
-          (col("rank") / size(col("outlinks"))).as("c"))
-      val summed = contribs.groupBy("title").agg(sum("c").as("s"))
-      // left join FROM the vertex set: keeps contribution-less pages at
-      // rank 1-d AND drops red-link targets in one step (ref :369,:392-394)
-      val next = verts.select("title")
-        .join(summed, Seq("title"), "left")
-        .select(col("title"),
-          (lit(d) * coalesce(col("s"), lit(0.0)) + lit(1.0 - d)).as("rank"))
-      // Truncate lineage EVERY `checkpointEvery` iterations (default 1):
-      // persist alone keeps the full logical plan, and Catalyst's
-      // analysis + cache-substitution cost grows superlinearly with plan
-      // depth (measured: ~5 s/iteration by depth 5 at sf0.1, vs ~1 s
-      // flat with truncation). localCheckpoint rewrites the plan to a
-      // materialized LogicalRDD — the in-memory analog of the
-      // reference's per-job HDFS round-trip, minus the disk.
-      ranks =
-        if (i % checkpointEvery == 0 && i < iters) next.localCheckpoint()
-        else next
-    }
-    ranks
   }
 
   /** Ranked output in the reference's sort-job shape (ref: :407-436) with
@@ -820,9 +547,9 @@ object PageRank {
     // W(u) is a WINDOW over the src partitioning instead of a
     // groupBy+self-join (one exchange fewer, exact same LONG sums),
     // and both static relations are PRE-PARTITIONED on their join key
-    // and PERSISTED — runDataFrame's discipline: InMemoryRelation
-    // preserves outputPartitioning (localCheckpoint under AQE reports
-    // UnknownPartitioning and loses it — measured in the tail plan),
+    // and PERSISTED: InMemoryRelation preserves outputPartitioning
+    // (localCheckpoint under AQE reports UnknownPartitioning and loses
+    // it — measured in the tail plan),
     // so every iteration's e⋈ranks join reads the edge side's cached
     // hash(src) layout without re-exchanging it, and the verts left
     // join aligns with the contribution agg's hash(title): the loop
@@ -854,12 +581,12 @@ object PageRank {
         .select(col("title"),
           round(lit(d) * coalesce(col("s"), lit(0.0)) + lit(1.0 - d), roundTo)
             .as("rank"))
-      // Checkpoint cadence knob (runDataFrame's contract): measured
+      // Checkpoint cadence knob: measured
       // NEUTRAL at 5 iterations (~5.3 s at sf0.1 whether every 1st or
       // 2nd) — the fixed cost is Catalyst planning + JIT of each
       // iteration's fresh codegen, which a cadence change cannot
       // remove; kept because higher iteration counts do hit
-      // runDataFrame's superlinear-analysis regime without it.
+      // a superlinear plan-analysis regime without it.
       ranks = if (i % checkpointEvery == 0 && i < iters) next.localCheckpoint()
         else next
     }

@@ -1556,16 +1556,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     val applied =
       if (dvNames.isEmpty) withM
       else {
-        // sidecar `seg` columns carry BARE names; entry names may be
-        // external (shallow-clone refs) — compare on the bare form
-        val segSet = segs.map(bareName).toSet
-        // explicit schema: the sidecar layout is ours by construction,
-        // so no schema-inference job fires during plan construction —
-        // a DV-bearing read costs zero extra jobs over a plain scan
-        val tomb0 = spark.read.schema(DvSchema)
-          .parquet(dvNames.map(n => segPath(dir, n)): _*)
-          .filter(col("seg").isInCollection(segSet))
-          .select(col("file"), col("pos")).distinct()
+        val tomb0 = tombstones(spark, dir, dvNames, segs).distinct()
         // metadata-only sizing: sum of the commit-recorded tombstone
         // counts for the probed segments; any legacy unknown (-1)
         // disables the broadcast (shuffle is always correct)
@@ -1580,6 +1571,33 @@ private[graft] case class ColStats(typeName: String, min: String,
       }
     if (withMeta) applyMapping(applied, s)
     else applyMapping(applied, s).drop("__file", "__pos")
+  }
+
+  /** The (file, pos) tombstones of the sidecars `dvNames` on `segs`.
+    * A sidecar stores the absolute path its delete read; rows match by
+    * (segment, part-file name) — the `seg` column, or a legacy sidecar's
+    * last two path components — re-rooted through [[segPath]], so a
+    * moved table keeps its deletion vectors and shallow-clone segments
+    * resolve as before. The explicit schema (ours by construction) keeps
+    * a DV-bearing read free of a schema-inference job. */
+  private def tombstones(spark: SparkSession, dir: String, dvNames: Seq[String],
+                         segs: Seq[String]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // keyed by bare name, as `seg` columns are; the URI is rebuilt from
+    // its parts, as a scan's file paths are (file:/x/, not file:///x/)
+    val roots = segs.map { seg =>
+      val p = new org.apache.hadoop.fs.Path(segPath(dir, seg))
+      val u = p.getFileSystem(conf).makeQualified(p).toUri
+      bareName(seg) ->
+        new java.net.URI(u.getScheme, u.getAuthority, s"${u.getPath}/", null, null).toString
+    }.toMap
+    spark.read.schema(DvSchema).parquet(dvNames.map(n => segPath(dir, n)): _*)
+      .select(
+        coalesce(col("seg"), regexp_extract(col("file"), "([^/]+)/[^/]*$", 1)).as("seg"),
+        regexp_extract(col("file"), "[^/]*$", 0).as("part"), col("pos"))
+      .filter(col("seg").isInCollection(roots.keySet))
+      .select(concat(element_at(typedLit(roots), col("seg")), col("part")).as("file"),
+        col("pos"))
   }
 
   /** COLUMN MAPPING applied to a physical scan: hide dropped physical
@@ -1642,8 +1660,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * reclaims unreferenced sidecars. Conflicts like every
     * snapshot-dependent op. Row coordinates are parquet metadata
     * (`_metadata.file_path`, `_metadata.row_index`) — stable because
-    * segments are immutable; moving the TABLE directory invalidates
-    * DVs (absolute paths), the usual external-location caveat. */
+    * segments are immutable; reads match them by segment and part-file
+    * name ([[tombstones]]), so the table directory may move. */
   def deleteMoR(spark: SparkSession, dir: String, predicate: String): Int = {
     val snap = state(dir)
     val matches = segScan(spark, dir, snap, snap.live,
@@ -4492,10 +4510,7 @@ private[graft] case class ColStats(typeName: String, min: String,
           val ct = if (e.op == "update_mor") "update_preimage" else "delete"
           val segs = e.dvs.map(_._1).distinct
           val dvNames = e.dvs.map(_._2).distinct
-          val coords = spark.read.schema(DvSchema)
-            .parquet(dvNames.map(n => segPath(dir, n)): _*)
-            .filter(col("seg").isInCollection(segs.map(bareName).toSet))
-            .select(col("file"), col("pos"))
+          val coords = tombstones(spark, dir, dvNames, segs)
           // pre-images from the raw segment bytes (the current state
           // has them tombstoned; the segments themselves are immutable)
           val scan = spark.read.schema(physData)

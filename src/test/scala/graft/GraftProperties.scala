@@ -50,14 +50,18 @@ object GraftProperties extends Properties("graft") {
     naive(graph.toSeq, iters, None, -1)
 
   /** The reference recurrence, personalized when `seeds` is given, each
-    * iteration rounded HALF_UP to `roundTo` decimals when it is ≥ 0. */
+    * iteration rounded HALF_UP to `roundTo` decimals when it is ≥ 0,
+    * starting from `start` where it names a page. */
   private def naive(graph: Seq[(String, Seq[String])], iters: Int,
-                    seeds: Option[Set[String]], roundTo: Int): Map[String, Double] = {
+                    seeds: Option[Set[String]], roundTo: Int,
+                    start: Map[String, Double] = Map.empty): Map[String, Double] = {
     def rnd(v: Double) =
       if (roundTo < 0) v else BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
     def tele(t: String) = seeds.fold(1.0)(s => if (s(t)) 1.0 / s.size else 0.0)
     val titles = graph.map(_._1).toSet
-    var rank = graph.map { case (t, _) => t -> rnd(seeds.fold(1.0 / graph.size)(_ => tele(t))) }.toMap
+    var rank = graph.map { case (t, _) =>
+      t -> rnd(start.getOrElse(t, seeds.fold(1.0 / graph.size)(_ => tele(t))))
+    }.toMap
     for (_ <- 1 to iters) {
       val contribs = scala.collection.mutable.Map.empty[String, Double].withDefaultValue(0.0)
       for ((t, ls) <- graph if ls.nonEmpty; l <- ls if titles(l))
@@ -115,6 +119,38 @@ object GraftProperties extends Properties("graft") {
         val want = naive(graph, 4, s, roundTo)
         got.keySet == want.keySet &&
           got.forall { case (t, r) => math.abs(r - want(t)) <= 1.000001e-9 }
+      }
+    }
+
+  // loopGraphGen's graphs with a random partial warm start: some of the
+  // pages (the null title among them) and titles absent from the graph
+  private val warmGraphGen = for {
+    g <- loopGraphGen
+    picked <- Gen.someOf(g._1.map(_._1) ++ Seq("ghost", "n99"))
+    ranks <- Gen.listOfN(picked.size, Gen.choose(0.0, 2.0))
+  } yield (g._1, g._2, picked.toSeq.zip(ranks))
+
+  property("runNormalized and runConverged equal their naive interpreters on both tiers") =
+    Prop.forAllNoShrink(warmGraphGen) { case (graph, byPart, warm) =>
+      val df = spark.sparkContext.parallelize(byPart.indices, byPart.size)
+        .flatMap(byPart).toDF("title", "outlinks")
+      val init = warm.toDF("title", "rank")
+      def close(got: Map[String, Double], want: Map[String, Double]) =
+        got.keySet == want.keySet &&
+          got.forall { case (t, r) => math.abs(r - want(t)) < 1e-9 }
+      def ranks(df: org.apache.spark.sql.DataFrame) = df.as[(String, Double)].collect().toMap
+      val normalized = PageRankReference.naiveNormalized(graph.toMap, 4)
+      Seq(false, true).forall { distributed =>
+        def tier[T](body: => T): T =
+          if (distributed) graft.graph.GraphTier.distributedOnly(body) else body
+        val norm = ranks(tier(PageRank.runNormalized(df, iters = 4)))
+        // eps = 0 never stops early: exactly maxIters sweeps
+        val cold = ranks(tier(PageRank.runConverged(df, eps = 0.0, maxIters = 4)))
+        val warmed = ranks(tier(PageRank.runConverged(df, eps = 0.0, maxIters = 4,
+          init = Some(init))))
+        close(norm, normalized) && math.abs(norm.values.sum - 1.0) < 1e-12 &&
+          close(cold, naive(graph, 4, None, -1)) &&
+          close(warmed, naive(graph, 4, None, -1, warm.toMap))
       }
     }
 

@@ -366,7 +366,7 @@ class GraphOpsSpec extends SparkTestBase {
     val all = (edges.map(_._1) ++ edges.map(_._2)).distinct
     val vdf = all.map(v => (v, verts.getOrElse(v, Seq.empty)))
       .toDF("title", "outlinks")
-    val ref = graft.pagerank.PageRank.runDataFrame(vdf, iters = 6)
+    val ref = PageRankReference.runDataFrame(vdf, iters = 6)
       .as[(String, Double)].collect().toMap
     assert(wdf.keySet === ref.keySet)
     wdf.foreach { case (k, v) => assert(math.abs(v - ref(k)) < 1e-9, k) }

@@ -66,29 +66,13 @@ class StreamingPageRankSpec extends SparkTestBase {
   test("normalized pagerank matches a naive interpreter and conserves mass exactly") {
     // A links B,X(red); B dangling after X is pruned? no — B links nothing.
     // Closed graph: A→[B], B→[], C→[A,B]. B is dangling.
-    def naive(graph: Map[String, Seq[String]], iters: Int): Map[String, Double] = {
-      val titles = graph.keySet
-      val resolved = graph.map { case (t, ls) => t -> ls.filter(titles) }
-      val nn = graph.size
-      var rank: Map[String, Double] = resolved.map { case (t, _) => t -> 1.0 / nn }
-      for (_ <- 1 to iters) {
-        val contribs = scala.collection.mutable.Map.empty[String, Double]
-          .withDefaultValue(0.0)
-        for ((t, ls) <- resolved if ls.nonEmpty; l <- ls) contribs(l) += rank(t) / ls.size
-        val dMass = resolved.collect { case (t, ls) if ls.isEmpty => rank(t) }.sum
-        rank = resolved.map { case (t, _) =>
-          t -> (0.15 / nn + 0.85 * (contribs(t) + dMass / nn))
-        }
-      }
-      rank
-    }
     val graph = Map(
       "A" -> Seq("B", "X"),          // X is a red link → pruned
       "B" -> Seq[String](),          // dangling
       "C" -> Seq("A", "B"))
     val got = PageRank.runNormalized(graph.toSeq.toDF("title", "outlinks"), iters = 10)
       .as[(String, Double)].collect().toMap
-    val want = naive(graph, 10)
+    val want = PageRankReference.naiveNormalized(graph, 10)
     assert(got.keySet == want.keySet)
     for ((t, r) <- want) assert(math.abs(got(t) - r) < 1e-12, s"$t: ${got(t)} vs $r")
     assert(math.abs(got.values.sum - 1.0) < 1e-12, s"mass ${got.values.sum} != 1")

@@ -49,6 +49,24 @@ class TxLogDvSpec extends SparkTestBase {
     assert(TxLog.read(spark, dir, asOf = 1).filter("id = 37").count() == 1)
   }
 
+  test("a moved table keeps its deletion vectors through reads, deleteMoR and optimize") {
+    val dir = freshDir()
+    TxLog.append(sampleDF(100).filter(col("id") < 50), dir)
+    TxLog.append(sampleDF(100).filter(col("id") >= 50), dir)
+    TxLog.deleteMoR(spark, dir, "k = 3")
+    def ids(d: String) = TxLog.read(spark, d).select("id").as[Long].collect().toSet
+    val want = (0L until 100L).filterNot(_ % 10 == 3).toSet
+    assert(ids(dir) == want)
+    val moved = freshDir() + "/moved"
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(moved))
+    assert(ids(moved) == want, "a moved table must not bring deleted rows back")
+    TxLog.deleteMoR(spark, moved, "k = 4")
+    assert(ids(moved) == want.filterNot(_ % 10 == 4))
+    TxLog.optimize(spark, moved, Seq("id"), numSegments = 1)
+    assert(ids(moved) == want.filterNot(_ % 10 == 4))
+    assert(TxLog.read(spark, moved).filter("k = 3 OR k = 4").count() == 0)
+  }
+
   test("CoW and MoR produce hash-identical tables on the same op sequence") {
     val cow = freshDir(); val mor = freshDir()
     for (dir <- Seq(cow, mor)) {

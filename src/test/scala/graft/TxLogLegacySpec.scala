@@ -11,15 +11,14 @@ import graft.sources.TxLog
 class TxLogLegacySpec extends SparkTestBase {
   import spark.implicits._
 
-  /** Where the fixture was written; its deletion vector's file paths
-    * point there, so it is read (and copied for writes) there. */
-  private val home = new java.io.File("/tmp/graft_txlog_legacy/table")
-
+  /** A fresh copy of the fixture. Its deletion vector names its rows by
+    * the absolute paths of the directory the fixture was written in;
+    * reads match them by segment and part file wherever the copy lives. */
   private def install(): String = {
     val src = new java.io.File(getClass.getResource("/txlog_legacy").toURI)
-    org.apache.commons.io.FileUtils.deleteDirectory(home)
-    org.apache.commons.io.FileUtils.copyDirectory(src, home)
-    home.getPath
+    val dir = java.nio.file.Files.createTempDirectory("graft-txlegacy").toFile
+    org.apache.commons.io.FileUtils.copyDirectory(src, dir)
+    dir.getPath
   }
 
   private def rows(dir: String, mergeSchema: Boolean) =
