@@ -255,54 +255,6 @@ object Bench {
       }
     }
 
-    // ---- same-window v1↔v2 stream-read A/B -------------------------
-    // The r13 residual: the v2-flipped stream_txlog_* keys read
-    // 1.13-1.31× their r12 v1 walls ACROSS rounds, where cross-round
-    // wall ratios are exactly what host steal makes meaningless. This
-    // runs the keys that READ a txlog stream alternating v1,v2,v1,v2
-    // INSIDE one window (the `graft.streamApi` system property
-    // overrides the keys' read API per rep) and records min wall +
-    // that rep's steal per API — the one-field answer to "is v2
-    // slower, or was the window stolen". Keys that only write a txlog
-    // stream are not here: the sink has one implementation, so their
-    // two runs would be the same code. SPARK_GRAFT_STREAM_AB=0
-    // disables.
-    val abKeys = Seq("stream_txlog_source", "stream_txlog_pipeline",
-      "stream_txlog_cdf", "stream_txlog_maintain", "stream_mv_refresh")
-    val abJson =
-      if (sys.env.get("SPARK_GRAFT_STREAM_AB").contains("0") ||
-          onlyKeys.isDefined) ""
-      else {
-        val entries = abKeys.flatMap { name =>
-          SparkEntry.queries.get(name).map { fn =>
-            val walls = scala.collection.mutable.Map[String,
-              (Double, Double)]() // api -> (minWall, itsStealDelta)
-            for (_ <- 1 to 2; api <- Seq("v1", "v2")) {
-              System.setProperty("graft.streamApi", api)
-              try {
-                drain()
-                val st0 = stealCpuSec()
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).count()
-                val wall = (System.nanoTime() - t0) / 1e9
-                val st = math.max(0.0, stealCpuSec() - st0)
-                if (!walls.contains(api) || wall < walls(api)._1)
-                  walls(api) = (wall, st)
-              } catch { case _: Throwable => () }
-              finally System.clearProperty("graft.streamApi")
-            }
-            name -> walls
-          }
-        }.filter(_._2.keySet == Set("v1", "v2"))
-        if (entries.isEmpty) ""
-        else {
-          val body = entries.map { case (k, w) =>
-            s""""$k":{"v1":${fmt(w("v1")._1)},"v2":${fmt(w("v2")._1)},"v1_steal":${fmt(w("v1")._2)},"v2_steal":${fmt(w("v2")._2)}}"""
-          }.mkString("{", ",", "}")
-          s""","stream_ab":$body"""
-        }
-      }
-
     // ---- end-to-end dump drive -------------------------------------
     // The reference's own entry points over ONE multi-GB `</page>`-
     // delimited dump file: exercises the SPLITTABLE ingest (a single
@@ -458,7 +410,7 @@ object Bench {
     val gateJson =
       s""","nondump_s_per_key":${fmt(perKey(nonDump))},"nondump_s_per_key_steal_free":${fmt(perKey(stealFree))},"nondump_steal_free_n":${stealFree.size},"nondump_n":${nonDump.size}"""
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs$stageJson$stealJson$gateJson$abJson,"reps":$reps,$env,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs$stageJson$stealJson$gateJson,"reps":$reps,$env,"sf":"$sfDir"}"""
     // The driver captures only the LAST ~2000 chars of stdout; with 140+
     // keys the full line overflows that window and its parse records
     // `parsed: null` (observed in BENCH_r01..r03.json). Emit the full

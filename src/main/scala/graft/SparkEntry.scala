@@ -3836,11 +3836,7 @@ object SparkEntry {
     "stream_txlog_source" -> ((s, d) => withStreamPartitions(s) {
       val dir = txStatsCache(s, d)
       val q = s.readStream.format("txlog").option("path", dir)
-        .option("skipRewrites", "true")
-        // the DSv2 MicroBatchStream path (plan-time vacuum interlock,
-        // no restart re-plan); v1 remains the bare-load default and is
-        // spec-pinned equivalent (TxLogStreamV2Spec)
-        .option("streamApi", streamApi).load()
+        .option("skipRewrites", "true").load()
         .filter(col("_commit_op") === "append")
         .groupBy(col("_commit_version").as("version"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
@@ -3910,7 +3906,7 @@ object SparkEntry {
         .option("path", src).option("maxCommitsPerTrigger", "2")
         // the source table's history ends in merge+optimize rewrites:
         // skipRewrites advances past them rowlessly (default fails loud)
-        .option("skipRewrites", "true").option("streamApi", streamApi).load()
+        .option("skipRewrites", "true").load()
         .filter(col("_commit_op") === "append")
         .drop("_commit_version", "_commit_op")
         .writeStream.format("txlog")
@@ -3989,8 +3985,7 @@ object SparkEntry {
       val dir = txMorCache(s, d)
       val q = s.readStream.format("txlog")
         .option("path", dir).option("changeFeed", "true")
-        .option("maxCommitsPerTrigger", "2")
-        .option("streamApi", streamApi).load()
+        .option("maxCommitsPerTrigger", "2").load()
         .groupBy(col("_commit_version").as("version"),
           col("_change_type").as("change_type"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
@@ -4052,8 +4047,7 @@ object SparkEntry {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_txmv_ck")
       val q = s.readStream.format("txlog")
         .option("path", src).option("changeFeed", "true")
-        .option("maxCommitsPerTrigger", "1")
-        .option("streamApi", streamApi).load()
+        .option("maxCommitsPerTrigger", "1").load()
         .writeStream.option("checkpointLocation", ckpt.toString)
         .foreachBatch { (changes: DataFrame, id: Long) =>
           val cur =
@@ -4628,8 +4622,7 @@ object SparkEntry {
       graft.sources.TxLog.append(o.filter(col("o_orderkey") % 500 === 8)
         .withColumn("o_orderkey", -col("o_orderkey")), dir)
       // default posture: the first rewrite commit kills the stream loud
-      val unaware = s.readStream.format("txlog").option("path", dir)
-        .option("streamApi", streamApi).load()
+      val unaware = s.readStream.format("txlog").option("path", dir).load()
         .writeStream.format("memory").queryName("graft_txmaint_dead").start()
       val died = try {
         unaware.processAllAvailable(); false
@@ -4640,7 +4633,7 @@ object SparkEntry {
       } finally unaware.stop()
       require(died, "an unaware stream must fail loud on a rewrite commit")
       val q = s.readStream.format("txlog").option("path", dir)
-        .option("skipRewrites", "true").option("streamApi", streamApi).load()
+        .option("skipRewrites", "true").load()
         .groupBy(col("_commit_version").as("version"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
         .writeStream.outputMode("complete")
@@ -5439,19 +5432,6 @@ object SparkEntry {
     * deployment raises it with state size. Results are partitioning-
     * independent — every stream key is oracle-checked. */
   private val StreamStatePartitions = 8
-
-  /** The txlog streaming READ API for the keys that tail a txlog
-    * table: v2 (the DSv2 MicroBatchStream source) by default;
-    * `SPARK_GRAFT_STREAM_API=v1` flips every such read back to the v1
-    * Source in one knob, and the `graft.streamApi` SYSTEM PROPERTY
-    * overrides per call — that is how `graft.Bench` runs the
-    * same-window per-key v1↔v2 A/B inside one JVM. Writes have one
-    * sink and never see this value. Both read APIs deliver the same
-    * rows and checkpoints interchange, so the keys' oracles hold on
-    * either. */
-  private def streamApi: String =
-    sys.props.get("graft.streamApi")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_API")).getOrElse("v2")
 
   /** Runs a streaming key's body with `spark.sql.shuffle.partitions`
     * capped at [[StreamStatePartitions]] (min with the session value,

@@ -3654,11 +3654,10 @@ private[graft] case class ColStats(typeName: String, min: String,
   }
 
   /** One triage-surviving segment as the DSv2 connector consumes it:
-    * the segment's path, its BARE name (what DV sidecar `seg` columns
-    * record — entry names may be external clone refs), and its
-    * deletion-vector sidecars as (sidecar path, commit-recorded
-    * tombstone rows; -1 legacy-unknown). */
-  private[graft] final case class Dsv2Seg(path: String, bare: String,
+    * the segment's path, its log entry name (an external clone ref
+    * keeps its own root), and its deletion-vector sidecars as (sidecar
+    * entry name, commit-recorded tombstone rows; -1 legacy-unknown). */
+  private[graft] final case class Dsv2Seg(path: String, name: String,
       dvs: Seq[(String, Long)])
 
   /** True when `dir` holds no committed live data — the case where a
@@ -3689,25 +3688,21 @@ private[graft] case class ColStats(typeName: String, min: String,
     if (asOf >= 0)
       requireRetained(dir, asOf, snap.live.map(segPath(dir, _)))
     triageByBounds(snap, conjunctBoundsOf(exprs), Some(spark)).map { seg =>
-      Dsv2Seg(segPath(dir, seg), bareName(seg),
-        snap.dvs.getOrElse(seg, Seq.empty)
-          .map { case (dv, rows) => (segPath(dir, dv), rows) })
+      Dsv2Seg(segPath(dir, seg), seg, snap.dvs.getOrElse(seg, Seq.empty))
     }
   }
 
   /** Driver-side tombstone coordinates for the DSv2 DV-filtering scan:
-    * the (file, pos) rows of `dvPaths` restricted to `bareSegs` —
-    * exactly the sidecar relation [[segScan]] anti-joins, collected
-    * (the connector pushes per-FILE position sets into its readers;
-    * the caller has already gated the total on the commit-recorded
-    * counts, so this collect is metadata-bounded like the read-side
-    * broadcast). Deduplication is the reader's binary search —
-    * duplicate coordinates across sidecars are harmless there. */
-  private[graft] def dsv2Tombstones(spark: SparkSession,
-      dvPaths: Seq[String], bareSegs: Set[String]): Array[(String, Long)] =
-    spark.read.schema(DvSchema).parquet(dvPaths.distinct: _*)
-      .filter(col("seg").isInCollection(bareSegs))
-      .select(col("file"), col("pos"))
+    * exactly the sidecar relation [[segScan]] anti-joins
+    * ([[tombstones]], keyed by the table's current location), collected
+    * (the connector pushes per-FILE position sets into its readers; the
+    * caller has already gated the total on the commit-recorded counts,
+    * so this collect is metadata-bounded like the read-side broadcast).
+    * Deduplication is the reader's binary search — duplicate
+    * coordinates across sidecars are harmless there. */
+  private[graft] def dsv2Tombstones(spark: SparkSession, dir: String,
+      segs: Seq[Dsv2Seg]): Array[(String, Long)] =
+    tombstones(spark, dir, segs.flatMap(_.dvs.map(_._1)).distinct, segs.map(_.name))
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
 
@@ -4198,8 +4193,12 @@ private[graft] case class ColStats(typeName: String, min: String,
     * commit-by-commit consumption pattern of a downstream pipeline
     * (for an append-only table this is change-data-capture; a delete/
     * compact commit's add set is its rewrite output, so consumers that
-    * must distinguish logical changes check the entry's `op`). O(1)
-    * metadata: exactly one entry file is read. */
+    * must distinguish logical changes check the entry's `op`). Rows
+    * carry the head's LOGICAL column names, as [[read]] and
+    * [[readChangesSince]] do: the head state's mapping relabels them
+    * and hides dropped columns. Metadata: the commit's entry plus the
+    * head state; segments the log records plan with no listing or
+    * inference job. */
   def readCommit(spark: SparkSession, dir: String, version: Int): DataFrame = {
     if (!store(dir).exists(entryPath(dir, version)))
       throw new IllegalArgumentException(
@@ -4215,7 +4214,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       return read(spark, dir, asOf = version).limit(0)
     require(e.add.nonEmpty, s"commit $version of $dir added no segments")
     requireRetained(dir, version, e.add.map(segPath(dir, _)))
-    spark.read.parquet(e.add.map(s => segPath(dir, s)): _*)
+    val hs = state(dir)
+    applyMapping(scanSegments(spark, dir, hs, e.add), hs)
   }
 
   /** Typed retention error for HISTORICAL reads whose bytes a vacuum
@@ -4334,9 +4334,10 @@ private[graft] case class ColStats(typeName: String, min: String,
     * replace_where) surface their rewrite OUTPUT rows tagged with the
     * op, so consumers that must not re-ingest logically-old rows
     * filter on it (the append-only-table contract makes this exact for
-    * append/stream commits). One scan per new commit's add set and one
-    * entry read per new commit — nothing re-reads older segments or
-    * log prefix. */
+    * append/stream commits). Column names are the head's LOGICAL
+    * labels (dropped columns hidden), like the streaming source's. One
+    * scan per new commit's add set and one entry read per new commit —
+    * nothing re-reads older segments. */
   def readChangesSince(spark: SparkSession, dir: String,
                        fromVersion: Int): DataFrame = {
     val st = store(dir)
@@ -4349,11 +4350,11 @@ private[graft] case class ColStats(typeName: String, min: String,
       return read(spark, dir, mergeSchema = true).limit(0)
         .withColumn("_commit_version", lit(0L))
         .withColumn("_commit_op", lit(""))
+    val hs = state(dir)
     newer.map { e =>
       // mergeSchema + allowMissingColumns: an add-column commit must not
       // break the feed; pre-evolution rows surface null for new columns
-      spark.read.option("mergeSchema", "true")
-        .parquet(e.add.map(s => segPath(dir, s)): _*)
+      applyMapping(scanSegments(spark, dir, hs, e.add, mergeSchema = true), hs)
         .withColumn("_commit_version", lit(e.version.toLong))
         .withColumn("_commit_op", lit(e.op))
     }.reduce(_ unionByName(_, allowMissingColumns = true))
@@ -4534,190 +4535,6 @@ private[graft] case class ColStats(typeName: String, min: String,
     else Some(parts.reduce(_ unionByName _)
       .select((data.fieldNames.toSeq ++
         Seq("_commit_version", "_commit_op", "_change_type")).map(col): _*))
-  }
-
-  /** One deliverable piece of a change-feed slice, as the DSv2
-    * streaming source consumes it: whole files to read with a constant
-    * tag, or pre-images to resolve reader-side. */
-  private[graft] sealed trait CdfPart {
-    def version: Int; def op: String; def changeType: String
-  }
-  /** Files delivered whole (append/cdc-recorded adds): read each and
-    * tag every row `(version, op, changeType)`. */
-  private[graft] final case class CdfFilesPart(version: Int, op: String,
-      changeType: String, paths: Seq[String]) extends CdfPart
-  /** DV pre-images: the rows of `segPaths` at the tombstoned `coords`
-    * (file path, row ordinal) — the reader-side form of
-    * [[changeFeedSlice]]'s semi join, coordinates shipped per file. */
-  private[graft] final case class CdfPreImagePart(version: Int, op: String,
-      changeType: String, segPaths: Seq[String],
-      coords: Array[(String, Long)]) extends CdfPart
-
-  /** [[changeFeedSlice]]'s triage re-expressed as PARTITION DESCRIPTORS
-    * for the DSv2 streaming source ([[graft.sources.txlog
-    * .TxLogMicroBatchStream]]): same range filter, same rearrangement
-    * skip, same mixed-exactness guard, same update_mor/insert/delete
-    * change-type assignment — but the emission is (files, tag) pairs
-    * the stream turns into per-file readers instead of a driver-built
-    * DataFrame plan (a v2 stream delivers rows through
-    * PartitionReaders; it has no getBatch-returns-a-DataFrame
-    * channel). Differences from the batch/v1 path, both deliberate:
-    * (a) every guard — vacuum interlock included — throws at PLAN
-    * time (the v2 engine never re-plans a committed range, so the v1
-    * lazy-frame design is unnecessary); (b) a commit whose recorded
-    * deletion-vector rows exceed [[BroadcastDvLimit]] fails loud with
-    * a pointer at the v1 path (the pre-image coordinates ship inside
-    * the partitions; above the gate the v1 source's shuffle semi join
-    * is the right tool — a DV that large also means OPTIMIZE is
-    * overdue). */
-  private[graft] def cdfStreamPlan(spark: SparkSession, dir: String,
-      from: Int, to: Int, coarseRewrites: Boolean): Seq[CdfPart] = {
-    val st = store(dir)
-    val hs = state(dir)
-    def streamVacuumCheck(version: Int, paths: Seq[String]): Unit = {
-      val gone = missingAdds(dir, paths)
-      if (gone.nonEmpty)
-        throw new IllegalStateException(
-          s"txlog stream over $dir: commit $version's data was vacuumed " +
-            s"(${gone.size} file(s) missing, e.g. ${gone.head}) — " +
-            "retention passed this stream's offset. Increase the vacuum " +
-            "retention, or restart the stream from a newer " +
-            "startingVersion.")
-    }
-    val inRange = (math.max(0, from) to to).iterator
-      .filter(v => st.exists(entryPath(dir, v)))
-      .map(v => readEntry(dir, v))
-      .toSeq
-    val newer = inRange
-      .filter(e => e.add.nonEmpty || e.dvs.nonEmpty || e.cdc.nonEmpty)
-      .filterNot(e => RearrangeOps(e.op))
-    // MIXED-EXACTNESS guard — one formulation, two surfaces: see
-    // [[changeFeedSlice]] for the full rationale
-    if (!coarseRewrites && (hs.cdfEnabled || inRange.exists(_.cdc.nonEmpty))) {
-      inRange.find(e => e.cdc.isEmpty && e.remove.nonEmpty &&
-          !RearrangeOps(e.op))
-        .foreach { e =>
-          throw new IllegalStateException(
-            s"change feed over $dir versions [$from, $to]: commit " +
-              s"${e.version} (op=${e.op}) changes content with no " +
-              "recorded row-level changes (committed before " +
-              "enableChangeDataFeed, or an op that records none) — " +
-              "emitting its add set (if any) would feed phantom inserts " +
-              "and its removed rows would vanish from the feed. Start " +
-              s"the feed at fromVersion >= ${e.version}, or pass " +
-              "coarseRewrites=true to accept op-tagged degradation for " +
-              "such commits. [streaming: set .option(\"coarseRewrites\", " +
-              "\"true\") to accept op-tagged rewrite output, or restart " +
-              "from a newer startingVersion]")
-        }
-    }
-    // phase 1: whole-file descriptors + the per-commit DV-coordinate
-    // REQUESTS — the coordinates themselves load in phase 2 as ONE
-    // job for the whole range. (A per-commit collect was measured at
-    // ~0.3–0.5 s of job round-trip each on this host; a range under
-    // the default admission cap can hold dozens of DV commits, and
-    // that per-batch fixed cost dominated the toy-history scenario
-    // keys. One job is also the batch changeFeedSlice's shape.)
-    final case class DvReq(version: Int, op: String, ct: String,
-        segPaths: Seq[String], dvDirs: Seq[String], bare: Set[String])
-    val reqs = scala.collection.mutable.ArrayBuffer.empty[DvReq]
-    var rangeDvTotal = 0L
-    val fileParts = newer.flatMap { e =>
-      if (e.cdc.nonEmpty) {
-        // exact by construction: the cdc sidecars ARE the changes —
-        // the add set is rewrite output, not changes
-        val cdcPaths = e.cdc.map(f => segPath(dir, f._1))
-        streamVacuumCheck(e.version, cdcPaths)
-        e.cdc.groupBy(_._2).toSeq.sortBy(_._1).map { case (ct, fs) =>
-          CdfFilesPart(e.version, e.op, ct,
-            fs.map(f => segPath(dir, f._1)))
-        }
-      } else {
-        val added =
-          if (e.add.isEmpty) Nil
-          else {
-            val paths = e.add.map(s => segPath(dir, s))
-            streamVacuumCheck(e.version, paths)
-            Seq(CdfFilesPart(e.version, e.op,
-              if (e.op == "update_mor") "update_postimage" else "insert",
-              paths))
-          }
-        if (e.dvs.nonEmpty) {
-          val segs = e.dvs.map(_._1).distinct
-          val dvNames = e.dvs.map(_._2).distinct
-          streamVacuumCheck(e.version,
-            (segs ++ dvNames).map(s => segPath(dir, s)))
-          // gate the driver-side coordinate load on the
-          // commit-recorded counts; a LEGACY entry with unknown
-          // (-1) counts gets ONE bounded count job instead of a
-          // refusal (v1 handles the same case by falling back to a
-          // shuffle join — here the sidecars are a single commit's,
-          // so counting them is a metadata-sized job)
-          val recorded = e.dvs.map(_._3)
-          val dvPaths = dvNames.map(n => segPath(dir, n))
-          val bare = segs.map(bareName).toSet
-          val total =
-            if (recorded.forall(_ >= 0)) recorded.sum
-            else spark.read.schema(DvSchema).parquet(dvPaths: _*)
-              .filter(col("seg").isInCollection(bare)).count()
-          if (total > BroadcastDvLimit)
-            throw new UnsupportedOperationException(
-              s"txlog stream over $dir: commit ${e.version} carries " +
-                s"$total deletion-vector rows (cap $BroadcastDvLimit) " +
-                "— the v2 stream ships pre-image coordinates inside " +
-                "its partitions; read this feed without streamApi=v2 " +
-                "(the v1 source resolves pre-images with a shuffle " +
-                "join), or OPTIMIZE to materialize the tombstones")
-          // the RANGE-level gate: phase 2 materializes EVERY request's
-          // coordinates in one driver-side collect, so the per-commit
-          // cap alone would let maxCommitsPerTrigger under-cap commits
-          // sum to an unbounded driver load — gate the running total
-          // with the same cap (the v1 source's distributed semi join
-          // has no such ceiling; point there)
-          rangeDvTotal += total
-          if (rangeDvTotal > BroadcastDvLimit)
-            throw new UnsupportedOperationException(
-              s"txlog stream over $dir: versions [$from, $to] carry " +
-                s"$rangeDvTotal deletion-vector rows across their DV " +
-                s"commits (cap $BroadcastDvLimit for one micro-batch's " +
-                "driver-side coordinate load) — read this feed without " +
-                "streamApi=v2 (the v1 source resolves pre-images with " +
-                "a distributed semi join), lower maxCommitsPerTrigger, " +
-                "or OPTIMIZE to materialize the tombstones")
-          reqs += DvReq(e.version, e.op,
-            if (e.op == "update_mor") "update_preimage" else "delete",
-            segs.map(s => segPath(dir, s)), dvPaths, bare)
-        }
-        added
-      }
-    }
-    if (reqs.isEmpty) fileParts
-    else {
-      // phase 2: ONE job over every requested sidecar, rows routed
-      // back to their commit by SOURCE SIDECAR DIRECTORY (sidecars
-      // are commit-owned: each delivered DV commit records its own
-      // dv-* names; the rearrangement filter above already dropped
-      // dv_coalesce's merged re-records)
-      def uri(p: String): String =
-        new org.apache.hadoop.fs.Path(p).toUri.getPath
-      val rows = spark.read.schema(DvSchema)
-        .parquet(reqs.flatMap(_.dvDirs).distinct.toSeq: _*)
-        .filter(col("seg").isInCollection(reqs.flatMap(_.bare).toSet))
-        .select(col("file"), col("pos"), col("seg"),
-          col("_metadata.file_path").as("__src"))
-        .collect()
-      val byDir = rows.groupBy { r =>
-        val f = uri(r.getString(3)); f.substring(0, f.lastIndexOf('/'))
-      }
-      fileParts ++ reqs.map { r =>
-        val mine = r.dvDirs
-          .flatMap(p => byDir.getOrElse(uri(p),
-            Array.empty[org.apache.spark.sql.Row]).toSeq)
-          .filter(row => r.bare(row.getString(2)))
-        CdfPreImagePart(r.version, r.op, r.ct, r.segPaths,
-          mine.map(row => (row.getString(0), row.getLong(1))).toArray)
-      }
-    }
   }
 
   /** ANALYZE (compute statistics): backfills min/max stats and Bloom

@@ -87,8 +87,8 @@ class GraftCatalog extends DelegatingCatalogExtension with ProcedureCatalog {
   /** The conversion the builtin catalog runs for the default session
     * catalog: route through the provider's own `getTable`, so catalog
     * resolution and a path `load()` build byte-identical Tables
-    * (external schema for the empty-table case, table properties —
-    * `streamApi` included — as the construction-time options). */
+    * (external schema for the empty-table case, table properties as
+    * the construction-time options). */
   override def loadTable(ident: Identifier): Table =
     pathIdent(ident) match {
       case Some(p) => new TxLogTable(p, -1)
@@ -158,8 +158,8 @@ class GraftCatalog extends DelegatingCatalogExtension with ProcedureCatalog {
     * commits, ADD/DROP CONSTRAINT the CHECK commits (with the
     * existing-rows validation scan), and the `changeDataFeed` table
     * property toggles CDF recording. Property changes the log does
-    * not own (comments, `streamApi`, arbitrary user properties) still
-    * delegate to the metastore. Granularity: ALL changes VALIDATE
+    * not own (comments, arbitrary user properties) still delegate to
+    * the metastore. Granularity: ALL changes VALIDATE
     * before ANY commits — shape checks (nested names, constraint
     * kinds, property values) and the metastore delegate's acceptance
     * both happen up front, so the statically-rejectable failure modes

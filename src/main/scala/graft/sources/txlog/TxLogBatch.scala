@@ -124,7 +124,7 @@ class TxLogTable(private[txlog] val dir: String,
     * was supplied — a just-created table must resolve for its first
     * INSERT (and scan as empty) before any commit exists. */
   @volatile private var snapRef: TxLog.Dsv2Snapshot = null
-  private[txlog] def resolved(): TxLog.Dsv2Snapshot = {
+  private def resolved(): TxLog.Dsv2Snapshot = {
     var r = snapRef
     if (r == null) {
       r = TxLog.dsv2Resolve(SparkSession.active, dir, asOf)
@@ -138,68 +138,33 @@ class TxLogTable(private[txlog] val dir: String,
   private[txlog] def resolvedOpt(): Option[TxLog.Dsv2Snapshot] =
     if (external.exists(_.nonEmpty) && asOf < 0 && TxLog.dsv2Empty(dir)) None
     else Some(resolved())
-  /** The per-read `streamApi=v2` opt-in ([[TxLogMicroBatch]] explains
-    * why the v2 streaming path cannot be the default: the provider
-    * cannot tell a batch resolution from a streaming one, and the two
-    * need different schemas). */
-  private def streamV2: Boolean =
-    TxLogMicroBatch.streamV2(n => Option(props.get(n)))
-  /** The AUTHORITY for the opt-in: schema(), capabilities() and the
-    * scan must agree, and only the construction-time props reach all
-    * three (per-read scan options never reach capabilities). */
-  private[txlog] def isStreamV2: Boolean = streamV2
-  override def schema(): StructType =
-    if (streamV2) {
-      // the STREAMING schema: data + the per-row commit tags (three in
-      // changeFeed mode) — v2 resolves the relation's columns from
-      // Table.schema(), so the meta columns must live here. An EMPTY
-      // table with a supplied schema resolves to that schema instead:
-      // that is the v2 SINK starting on a not-yet-existing table
-      // (writeStream passes the query's schema as external metadata;
-      // readStream never does) — a stream READ of an empty table stays
-      // loud, at scan build.
-      require(asOf < 0, "cannot stream a time-travel (asOf) txlog table")
-      resolvedOpt() match {
-        case Some(r) => TxLogMicroBatch.streamSchema(r.schema,
-          n => Option(props.get(n)))
-        case None => external.get
-      }
-    } else resolvedOpt() match {
-      // data present ⇒ the log's merged schema wins (the catalog copy
-      // can be stale after schema evolution — Delta resolves the same
-      // way); empty ⇒ the declared schema, so INSERT INTO can match
-      case Some(r) => r.schema
-      case None    => external.get
-    }
+  override def schema(): StructType = resolvedOpt() match {
+    // data present ⇒ the log's merged schema wins (the catalog copy
+    // can be stale after schema evolution — Delta resolves the same
+    // way); empty ⇒ the declared schema, so INSERT INTO can match
+    case Some(r) => r.schema
+    case None    => external.get
+  }
   override def capabilities(): java.util.Set[TableCapability] =
     // BATCH_READ + the V1-fallback WRITE half (the InsertableRelation
     // bridge routes INSERT/append into TxLog.append and
     // INSERT OVERWRITE/truncate into TxLog.overwrite — the full
     // stats/bloom/governance/OCC commit machinery, not a parallel
-    // write path). Streaming READS run the spec-pinned v1 Source by
-    // default (no MICRO_BATCH_READ ⇒ DataStreamReader falls back);
-    // `streamApi=v2` claims MICRO_BATCH_READ and the DSv2
-    // [[TxLogMicroBatchStream]] runs instead, changeFeed mode
-    // included (pre-images resolve reader-side there). Streaming
-    // WRITES always run the DSv2 [[TxLogStreamingWrite]]: the write
-    // side has no batch/stream schema ambiguity, so `streamApi` is a
-    // read-only option.
+    // write path). Streaming READS run the v1 Source
+    // ([[TxLogSource]]): with no micro-batch read capability,
+    // DataStreamReader falls back to it. Streaming WRITES run the DSv2
+    // [[TxLogStreamingWrite]].
     // BATCH_WRITE is declared alongside V1_BATCH_WRITE because
     // DataFrameWriter.save only routes to the v2 write plans when the
     // table claims BATCH_WRITE — the Write we build is a V1Write, and
     // the physical strategy dispatches on THAT (AppendDataExecV1), so
     // toBatch() is never reached
-    {
-      val caps = java.util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
-        TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-        TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
-      if (streamV2) caps.add(TableCapability.MICRO_BATCH_READ)
-      caps
-    }
+    java.util.EnumSet.of(TableCapability.BATCH_READ,
+      TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
+      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
+      TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TxLogScanBuilder(SparkSession.active, dir, asOf, this,
-      n => Option(options.get(n)).orElse(Option(props.get(n))))
+    new TxLogScanBuilder(SparkSession.active, dir, asOf, this)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new TxLogWriteBuilder(dir, asOf, info, props)
 }
@@ -309,13 +274,11 @@ class TxLogWriteBuilder(dir: String, asOf: Int, info: LogicalWriteInfo,
         }
       }
     /** The streaming SINK ([[TxLogStreamingWrite]]) — the one
-      * implementation of `writeStream.format("txlog")`; a `streamApi`
-      * option or table property selects the READ API only and is
-      * ignored here. The engine's mode dispatch: Append/Update →
-      * build() (the `SupportsStreamingUpdateAsAppend` base makes
-      * Update legal; the two are indistinguishable here, so the
-      * mergeKey OPTION selects the upsert), Complete →
-      * truncate().build(). */
+      * implementation of `writeStream.format("txlog")`. The engine's
+      * mode dispatch: Append/Update → build() (the
+      * `SupportsStreamingUpdateAsAppend` base makes Update legal; the
+      * two are indistinguishable here, so the mergeKey OPTION selects
+      * the upsert), Complete → truncate().build(). */
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
       require(asOf < 0,
         "cannot stream-write through a time-travel (asOf) txlog relation")
@@ -335,8 +298,7 @@ class TxLogWriteBuilder(dir: String, asOf: Int, info: LogicalWriteInfo,
 }
 
 class TxLogScanBuilder(spark: SparkSession, dir: String, asOf: Int,
-                       table: TxLogTable,
-                       opt: String => Option[String] = _ => None)
+                       table: TxLogTable)
     extends CatalystPushdownScanBuilder {
   private var exprs: Seq[Expression] = Nil
   private var required: Option[StructType] = None
@@ -359,32 +321,6 @@ class TxLogScanBuilder(spark: SparkSession, dir: String, asOf: Int,
     required = Some(requiredSchema)
 
   override def build(): Scan = {
-    // the TABLE (construction-time props) is the authority — for a
-    // path read the scan options ARE the props, so this only diverges
-    // on a catalog table given streamApi as a per-read option, where
-    // schema()/capabilities() could not see it (the relation already
-    // resolved batch-shaped): fail loud instead of building a scan
-    // whose schema disagrees with the relation's
-    if (TxLogMicroBatch.streamV2(opt) && !table.isStreamV2)
-      throw new IllegalArgumentException(
-        "streamApi=v2 must be passed where the table resolves — " +
-          "spark.readStream.format(\"txlog\").option(\"streamApi\", " +
-          "\"v2\").load(dir) for a path read; a per-read option on a " +
-          "catalog table cannot change the already-resolved relation " +
-          "schema. A catalog table CAN carry streamApi=v2 in its " +
-          "CREATE TABLE OPTIONS, but that makes the table STREAM-ONLY " +
-          "(every resolution — batch SELECT included — then sees the " +
-          "streaming schema and batch reads fail): register it only " +
-          "for tables consumed exclusively by readStream, and batch-" +
-          "read the same log via its path or a second registration")
-    if (table.isStreamV2) {
-      // streaming resolution: the engine drives this scan through
-      // toMicroBatchStream; a batch execution fails loud there
-      require(asOf < 0, "cannot stream a time-travel (asOf) txlog table")
-      val r = table.resolved()
-      return new TxLogStreamScan(spark, dir,
-        TxLogMicroBatch.streamSchema(r.schema, opt), r.physSchema, opt)
-    }
     val resolved = table.resolvedOpt() match {
       case Some(r) => r // pinned: one snapshot per Table
       case None    => // created-but-never-written: empty, declared schema
@@ -434,7 +370,7 @@ class TxLogScanBuilder(spark: SparkSession, dir: String, asOf: Int,
       val dirtyScan = ParquetDelegate.scan(spark, dirty.map(_.path),
         resolved.physSchema, Nil,
         Some(requiredPhys.getOrElse(resolved.physSchema)))
-      new TxLogDvScan(spark, cleanScan, dirtyScan, p2l, dirty)
+      new TxLogDvScan(spark, dir, cleanScan, dirtyScan, p2l, dirty)
     }
   }
 }
@@ -468,13 +404,12 @@ case class TxLogDvPartition(file: FilePartition, tombs: Array[Long])
     file.preferredLocations()
 }
 
-/** The ordinal-exactness reshape, ONE copy: both DV-coordinate readers
-  * — the batch scan's tombstone SKIP ([[TxLogDvReader]]) and the v2
-  * stream's pre-image KEEP ([[TxLogTaggedReaderFactory]]) — depend on
-  * a reader's running row count equalling the `_metadata.row_index`
-  * the sidecar recorded, which holds only when each partition is ONE
-  * whole physical file with its splits re-merged in offset order
-  * (a split boundary would restart the ordinal at 0 mid-file). */
+/** The ordinal-exactness reshape the batch scan's tombstone skip
+  * ([[TxLogDvReader]]) depends on: a reader's running row count equals
+  * the `_metadata.row_index` the sidecar recorded only when each
+  * partition is ONE whole physical file with its splits re-merged in
+  * offset order (a split boundary would restart the ordinal at 0
+  * mid-file). */
 private[txlog] object TxLogFileParts {
   /** URI path, the join key between planned file paths and the
     * sidecars' recorded `file` strings. */
@@ -505,7 +440,7 @@ private[txlog] object TxLogFileParts {
   * reports row-based reads: mixing columnar clean partitions with
   * row-based dirty ones in one scan is rejected by Spark, and the
   * clean side still decodes through the same parquet reader. */
-class TxLogDvScan(spark: SparkSession, cleanScan: Option[Scan],
+class TxLogDvScan(spark: SparkSession, dir: String, cleanScan: Option[Scan],
                   dirtyScan: Scan, physToLogical: Map[String, String],
                   dirtySegs: Seq[TxLog.Dsv2Seg])
     extends Scan with Batch {
@@ -521,8 +456,7 @@ class TxLogDvScan(spark: SparkSession, cleanScan: Option[Scan],
     // (gated on the commit-recorded counts at build time), grouped to
     // per-file sorted position arrays — each dirty partition carries
     // only its own file's set
-    val tombs = TxLog.dsv2Tombstones(spark,
-        dirtySegs.flatMap(_.dvs.map(_._1)), dirtySegs.map(_.bare).toSet)
+    val tombs = TxLog.dsv2Tombstones(spark, dir, dirtySegs)
       .groupBy(t => TxLogFileParts.norm(t._1))
       .map { case (f, arr) => f -> arr.map(_._2).sorted }
     val dirty = TxLogFileParts.perFile(dirtyScan.toBatch)

@@ -84,13 +84,12 @@ class TxLogSourceProvider extends StreamSourceProvider
 
   // ---- DSv2 half ([[TxLogBatch]]): spark.read.format("txlog") and
   // the one streaming sink, writeStream.format("txlog")
-  // ([[TxLogStreamingWrite]]). By default the table declares no
-  // MICRO_BATCH_READ, so readStream falls back to the v1 Source half
-  // below; `.option("streamApi", "v2")` opts a read into the DSv2
-  // [[TxLogMicroBatchStream]] ([[TxLogMicroBatch]] documents why the
-  // v2 path cannot be the default: the provider cannot tell a batch
-  // resolution from a streaming one, and the two need different
-  // schemas).
+  // ([[TxLogStreamingWrite]]). The table declares no micro-batch read
+  // capability, so readStream falls back to the v1 Source half below:
+  // `getTable` serves batch and streaming resolution alike and cannot
+  // tell them apart, and the stream's schema adds the commit tag
+  // columns a batch relation must not carry (Delta's source stays on
+  // v1 for the same reason).
 
   /** Deliberately EMPTY: the real schema resolves lazily in
     * [[TxLogTable.schema]]. Both readStream and DataStreamWriter.start
@@ -254,9 +253,22 @@ class TxLogSourceProvider extends StreamSourceProvider
     * down — the same first-start-only contract Delta and Kafka sources
     * keep for their starting-offset options. */
   private def latestFloor(ctx: SQLContext, metadataPath: String,
-                          dir: String): Int =
-    TxLogSource.resolveLatestFloor(
-      ctx.sparkSession.sparkContext.hadoopConfiguration, metadataPath, dir)
+                          dir: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(metadataPath, "graft-txlog-floor")
+    val fs = p.getFileSystem(ctx.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) {
+      val in = fs.open(p)
+      try new String(
+        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt
+      finally in.close()
+    } else {
+      val floor = TxLog.headVersion(dir) + 1
+      fs.mkdirs(p.getParent)
+      val out = fs.create(p, false)
+      try out.write(floor.toString.getBytes("UTF-8")) finally out.close()
+      floor
+    }
+  }
 }
 
 /** The sink-side SCHEMA-DRIFT guard
@@ -337,8 +349,8 @@ private[graft] object TxLogSource {
     * Delta-source posture (maxFilesPerTrigger defaults bounded). */
   val DefaultMaxCommitsPerTrigger = 100
 
-  // ---- strict option parsers, shared by the v1 provider and the v2
-  // [[TxLogMicroBatchStream]] so a typo fails identically on both APIs
+  // ---- strict option parsers (the sink's `mergeSchema` uses
+  // strictBool too)
 
   /** Absent → false; anything but true/false fails loud — a typo must
     * not silently pick the default for a safety-relevant option. */
@@ -368,35 +380,10 @@ private[graft] object TxLogSource {
       case None => Some(DefaultMaxCommitsPerTrigger)
     }
 
-  /** `startingVersion=latest` floor resolution + persistence — ONE
-    * copy for both APIs: the v1↔v2 checkpoint-interchange contract
-    * depends on the file name and format staying byte-identical, so
-    * a second implementation is a silent-downtime-skip waiting to
-    * happen. First call persists `head + 1` under the source's
-    * metadata path; every later call (any API) reads it back. */
-  def resolveLatestFloor(hadoopConf: org.apache.hadoop.conf.Configuration,
-                         metadataPath: String, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(metadataPath, "graft-txlog-floor")
-    val fs = p.getFileSystem(hadoopConf)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt
-      finally in.close()
-    } else {
-      val floor = TxLog.headVersion(dir) + 1
-      fs.mkdirs(p.getParent)
-      val out = fs.create(p, false)
-      try out.write(floor.toString.getBytes("UTF-8")) finally out.close()
-      floor
-    }
-  }
-
-  /** ADDED-column mid-stream drift guard — one copy for the v1 source
-    * and both v2 planners (the specs pin their contracts identical):
-    * one footer-read inference over the BATCH's own read set (bounded
-    * by the admission cap, never the table), failing loud on any
-    * field outside the stream's start-time schema. */
+  /** ADDED-column mid-stream drift guard: one footer-read inference
+    * over the BATCH's own read set (bounded by the admission cap, never
+    * the table), failing loud on any field outside the stream's
+    * start-time schema. */
   def addedColumnDriftGuard(spark: org.apache.spark.sql.SparkSession,
       dir: String, paths: Seq[String], physData: StructType,
       droppedPhys: Set[String]): Unit =

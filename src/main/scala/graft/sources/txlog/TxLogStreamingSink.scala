@@ -12,10 +12,10 @@ import graft.sources.TxLog
 
 /** The txlog streaming SINK — `df.writeStream.format("txlog")
   * .option("path", dir)`, the one implementation of the write half of
-  * the CDC pair ([[TxLogMicroBatchStream]] / [[TxLogSource]] are the
-  * read half). The engine's own write exec streams each micro-batch's
-  * rows through per-task [[TxLogStreamDataWriter]]s that stage the
-  * SEGMENT's parquet files directly (Spark's own parquet OutputWriter
+  * the CDC pair ([[TxLogSource]] is the read half). The engine's own
+  * write exec streams each micro-batch's rows through per-task
+  * [[TxLogStreamDataWriter]]s that stage the SEGMENT's parquet files
+  * directly (Spark's own parquet OutputWriter
   * via [[ParquetWriteDelegate]] — bit-identical bytes to
   * `df.write.parquet`, written ONCE, no driver round-trip, no second
   * copy), and the driver-side [[TxLogStreamingWrite.commit]] promotes
@@ -26,8 +26,7 @@ import graft.sources.TxLog
   * and friends) — exactly-once composes identically: the engine
   * replays un-committed epochs at-least-once, and the table skips
   * already-committed batch ids (a replay's freshly staged files are
-  * reclaimed on the skip). A `streamApi` option or table property
-  * selects the READ API only; writes ignore it.
+  * reclaimed on the skip).
   *
   * MODE MAPPING (the engine's `StreamExecution.createWrite` dispatch):
   * Append → `build()` → per-epoch append; Complete →

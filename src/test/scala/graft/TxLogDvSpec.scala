@@ -60,6 +60,8 @@ class TxLogDvSpec extends SparkTestBase {
     val moved = freshDir() + "/moved"
     java.nio.file.Files.move(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(moved))
     assert(ids(moved) == want, "a moved table must not bring deleted rows back")
+    assert(spark.read.format("txlog").load(moved).select("id").as[Long].collect().toSet ==
+      want, "nor may its DSv2 read")
     TxLog.deleteMoR(spark, moved, "k = 4")
     assert(ids(moved) == want.filterNot(_ % 10 == 4))
     TxLog.optimize(spark, moved, Seq("id"), numSegments = 1)

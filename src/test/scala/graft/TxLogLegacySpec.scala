@@ -36,6 +36,9 @@ class TxLogLegacySpec extends SparkTestBase {
       Seq(i, n, c, if (i >= 9) "new" else null) })
     // without mergeSchema the first segment's schema decides
     assert(rows(dir, mergeSchema = false) == base.map { case (i, n, c) => Seq(i, n, c) })
+    // the DSv2 read matches the copy's tombstones the same way
+    assert(spark.read.format("txlog").load(dir).orderBy("id").collect()
+      .map(_.toSeq).toSeq == rows(dir, mergeSchema = true))
     assert(TxLog.readRange(spark, dir, "id", Some("2"), Some("3")).count() == 2)
   }
 

@@ -175,6 +175,26 @@ class TxLogRenameSpec extends SparkTestBase {
     val sv = spark.table("txren_cdf").as[(String, Long)].collect().toMap
     assert(sv("insert") == (0 until 10).map(_ * 10L).sum)
     assert(sv("delete") == 80L + 90L)
+    val qa = spark.readStream.format("txlog").option("path", dir).load()
+      .writeStream.format("memory").queryName("txren_adds").start()
+    try qa.processAllAvailable() finally qa.stop()
+    val adds = spark.table("txren_adds")
+    assert(adds.columns.toSeq ==
+      Seq("id", "k", "value", "_commit_version", "_commit_op"))
+    assert(adds.agg(sum("value")).as[Long].head == (0 until 10).map(_ * 10L).sum)
+    // the per-commit reads label like the feed, also for a commit
+    // written after the rename, and hide a dropped column
+    TxLog.append(sample(10, 12).withColumnRenamed("v", "value"), dir)
+    val appended = TxLog.headVersion(dir)
+    def perCommit() = Seq(TxLog.readCommit(spark, dir, 0),
+      TxLog.readCommit(spark, dir, appended),
+      TxLog.readChangesSince(spark, dir, fromVersion = -1)
+        .drop("_commit_version", "_commit_op"))
+    assert(perCommit().map(_.columns.toSeq) == Seq.fill(3)(Seq("id", "k", "value")))
+    assert(perCommit().map(_.agg(sum("value")).as[Long].head) == Seq(
+      (0 until 10).map(_ * 10L).sum, 100L + 110L, (0 until 12).map(_ * 10L).sum))
+    TxLog.dropColumn(spark, dir, "k")
+    assert(perCommit().map(_.columns.toSeq) == Seq.fill(3)(Seq("id", "value")))
   }
 
   test("clone carries the mapping; checkpoint fold preserves it") {

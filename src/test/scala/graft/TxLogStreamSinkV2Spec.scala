@@ -6,13 +6,13 @@ import graft.sources.TxLog
 
 /** The DSv2 `StreamingWrite` surfaces of the one txlog sink
   * (`writeStream.format("txlog")`; [[TxLogStreamSinkSpec]] holds its
-  * mode contract): the task-staged segment layout and the write-side
-  * `streamApi` contract, continuing a query whose batches were
-  * committed through the foreachBatch API, governance (constraints +
+  * mode contract): the task-staged segment layout, continuing a query
+  * whose batches were committed through the foreachBatch API,
+  * governance (constraints +
   * default fill) on the staged path, the documented Update/Append
   * divergence (the engine's update-as-append marker makes the two
   * indistinguishable at the builder, so mergeKey alone selects the
-  * upsert), and a v2 source → sink relay. */
+  * upsert), and a txlog source → sink relay. */
 class TxLogStreamSinkV2Spec extends SparkTestBase {
   import spark.implicits._
   import TxLogStreamSinkSpec.stagedSegs
@@ -34,50 +34,14 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
       .option("maxFilesPerTrigger", "1").parquet(dir + "/*.parquet")
 
   test("the sink DEFAULT is v2 (r15 flip): no option → task-staged segments") {
-    val src = feedDir()
-    def drain(w: org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit = {
-      val q = w.option("checkpointLocation", freshDir("graft-sinkckpt"))
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
     val out = freshDir("graft-sinkout")
-    drain(feed(src).writeStream.format("txlog").option("path", out))
+    val q = feed(feedDir()).writeStream.format("txlog").option("path", out)
+      .option("checkpointLocation", freshDir("graft-sinkckpt"))
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
     assert(TxLog.read(spark, out).count() == 40)
     assert(stagedSegs(out).size == 4,
       s"default writeStream must task-stage, got ${TxLog.liveSegments(out)}")
-    // streamApi selects the READ API only: v1 on a write still runs
-    // the one sink
-    val out1 = freshDir("graft-sinkout")
-    drain(feed(src).writeStream.format("txlog")
-      .option("path", out1).option("streamApi", "v1"))
-    assert(TxLog.read(spark, out1).count() == 40)
-    assert(stagedSegs(out1).size == 4,
-      s"streamApi=v1 on a write must task-stage, got ${TxLog.liveSegments(out1)}")
-    // ...and so does a catalog table whose property says v1 (a v1 READ)
-    val out2 = freshDir("graft-sinkout")
-    TxLog.append(spark.read.parquet(src).limit(0), out2)
-    spark.sql("DROP TABLE IF EXISTS sink_v1_prop")
-    spark.sql("CREATE TABLE sink_v1_prop USING txlog " +
-      s"OPTIONS (path '$out2', streamApi 'v1')")
-    try {
-      val q = feed(src).writeStream
-        .option("checkpointLocation", freshDir("graft-sinkckpt"))
-        .outputMode("append").toTable("sink_v1_prop")
-      try q.processAllAvailable() finally q.stop()
-      assert(spark.table("sink_v1_prop").count() == 40)
-      assert(stagedSegs(out2).size == 4,
-        s"a streamApi=v1 table must task-stage, got ${TxLog.liveSegments(out2)}")
-    } finally spark.sql("DROP TABLE IF EXISTS sink_v1_prop")
-    // the value is still validated strictly on a write
-    val bad = intercept[Exception] {
-      drain(feed(src).writeStream.format("txlog")
-        .option("path", freshDir("graft-sinkout")).option("streamApi", "v3"))
-    }
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
-    assert(msgs(bad).exists(m => m != null &&
-      m.contains("streamApi must be v1 or v2")), s"wrong error: $bad")
   }
 
   test("foreachBatch appendStream, then the sink: no batch is re-appended") {
@@ -196,7 +160,7 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
       "mergeKey upserts on the v2 path regardless of declared mode")
   }
 
-  test("v2 native pipeline: v2 source -> v2 sink relays exactly-once") {
+  test("native pipeline: txlog source -> txlog sink relays exactly-once") {
     val srcTable = freshDir("graft-sinksrc")
     val dstTable = freshDir("graft-sinkdst")
     val ckpt = freshDir("graft-sinkckpt")
@@ -204,7 +168,7 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
       spark.range(i * 10L, i * 10L + 10L).select(col("id"),
         (col("id") % 5).as("k")), srcTable))
     def relay() = spark.readStream.format("txlog")
-      .option("path", srcTable).option("streamApi", "v2")
+      .option("path", srcTable)
       .option("maxCommitsPerTrigger", "2").load()
       .drop("_commit_version", "_commit_op")
       .writeStream.format("txlog")

@@ -161,7 +161,7 @@ class TxLogStreamSourceSpec extends SparkTestBase {
     // commits landed after termination: a NEW AvailableNow run resumes
     // from the checkpoint and delivers exactly the tail
     TxLog.append(sample(50, 60), dir)
-    runAvailableNow()
+    assert(runAvailableNow() == 1)
     val out = spark.read.parquet(sink)
     assert(out.count() == 60 && out.select("id").distinct().count() == 60)
   }
@@ -366,13 +366,17 @@ class TxLogStreamSourceSpec extends SparkTestBase {
     }
     runOnce()
     assert(spark.read.parquet(sink).count() == 10)
-    // an MoR delete lands while the stream is DOWN
+    // an MoR delete, a rearrangement and an append land while the
+    // stream is DOWN
     TxLog.deleteMoR(spark, dir, "id >= 7")
+    TxLog.optimize(spark, dir, Seq("id"), 2)
+    TxLog.append(sample(10, 12), dir)
     runOnce()
     val out = spark.read.parquet(sink)
       .groupBy("_change_type").count().as[(String, Long)].collect().toMap
-    // the restart delivers exactly the 3 pre-images, nothing re-sent
-    assert(out == Map("insert" -> 10L, "delete" -> 3L), s"got $out")
+    // the restart delivers exactly the 3 pre-images and the 2 new rows,
+    // nothing re-sent and nothing for the rearrangement
+    assert(out == Map("insert" -> 12L, "delete" -> 3L), s"got $out")
   }
 
   private def rootMessages(t: Throwable): Seq[String] =
@@ -544,32 +548,35 @@ class TxLogStreamSourceSpec extends SparkTestBase {
   }
 
   test("failOnDataLoss=true still restarts over an already-committed vacuumed range") {
-    val dir = freshDir("graft-txfodlr")
-    val sink = freshDir("graft-txfodlrsink")
-    val ckpt = freshDir("graft-txfodlrck")
-    def runOnce(): Unit = {
-      val q = spark.readStream.format("txlog").option("path", dir)
-        .option("skipRewrites", "true")
-        .option("failOnDataLoss", "true").load()
-        .select("id", "k", "_commit_version")
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
+    // the default (lazy) posture restarts too
+    for (fodl <- Seq("true", "false")) {
+      val dir = freshDir("graft-txfodlr")
+      val sink = freshDir("graft-txfodlrsink")
+      val ckpt = freshDir("graft-txfodlrck")
+      def runOnce(): Unit = {
+        val q = spark.readStream.format("txlog").option("path", dir)
+          .option("skipRewrites", "true")
+          .option("failOnDataLoss", fodl).load()
+          .select("id", "k", "_commit_version")
+          .writeStream.format("parquet")
+          .option("path", sink).option("checkpointLocation", ckpt).start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      TxLog.append(sample(0, 10), dir)          // v0
+      TxLog.append(sample(10, 15), dir)         // v1
+      runOnce()                                 // both delivered + committed
+      // retention passes the DELIVERED v1: restart must not wedge — the
+      // re-plan's ceiling is unknown on a fresh instance, so the lazy
+      // posture wins and the discarded re-init frame never executes
+      TxLog.delete(spark, dir, "id >= 10")      // v2: supersedes v1's segment
+      TxLog.vacuum(dir, keepVersions = 1)
+      TxLog.append(sample(20, 23), dir)         // v3: new rows
+      runOnce()
+      val out = spark.read.parquet(sink)
+      assert(out.count() == 18, s"got ${out.count()}")
+      assert(out.groupBy("_commit_version").count().as[(Long, Long)]
+        .collect().toMap == Map(0L -> 10L, 1L -> 5L, 3L -> 3L))
     }
-    TxLog.append(sample(0, 10), dir)          // v0
-    TxLog.append(sample(10, 15), dir)         // v1
-    runOnce()                                 // both delivered + committed
-    // retention passes the DELIVERED v1: restart must not wedge — the
-    // re-plan's ceiling is unknown on a fresh instance, so the lazy
-    // posture wins and the discarded re-init frame never executes
-    TxLog.delete(spark, dir, "id >= 10")      // v2: supersedes v1's segment
-    TxLog.vacuum(dir, keepVersions = 1)
-    TxLog.append(sample(20, 23), dir)         // v3: new rows
-    runOnce()
-    val out = spark.read.parquet(sink)
-    assert(out.count() == 18, s"got ${out.count()}")
-    assert(out.groupBy("_commit_version").count().as[(Long, Long)]
-      .collect().toMap == Map(0L -> 10L, 1L -> 5L, 3L -> 3L))
   }
 
   test("a vacuumed SKIPPED rewrite does not wedge a skipRewrites stream") {
