@@ -13,6 +13,7 @@ import graft.ops.{Features, Relational, TextOps}
 import graft.pagerank.PageRank
 import graft.parse.WikiParser
 import graft.similarity.Similarity
+import graft.sources.LocalFs
 import graft.text.TextAnalysis
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -147,7 +148,7 @@ object SparkEntry {
     "scan_csv" -> ((s, d) => {
       val cache = cachedDir(
         s"/tmp/graft_csv_${new java.io.File(d).getName}", d, Seq("nation")) { out =>
-        nation(s, d).coalesce(1).write.mode("overwrite")
+        LocalFs.writer(nation(s, d).coalesce(1)).mode("overwrite")
           .option("header", "true").csv(out)
       }
       s.read.option("header", "true")
@@ -165,12 +166,12 @@ object SparkEntry {
     "scan_json_corrupt" -> ((s, d) => {
       val cache = cachedDir(
         s"/tmp/graft_jsonbad_${new java.io.File(d).getName}", d, Seq("documents")) { out =>
-        documents(s, d).select(
+        LocalFs.writer(documents(s, d).select(
           when(col("doc_id") % 13 === 0,
             concat(lit("{\"doc_id\": "), col("doc_id"), lit(", \"n_chars\": oops}")))
           .otherwise(concat(lit("{\"doc_id\": "), col("doc_id"),
             lit(", \"n_chars\": "), col("n_chars"), lit("}"))).as("value"))
-          .coalesce(1).write.mode("overwrite").text(out)
+          .coalesce(1)).mode("overwrite").text(out)
       }
       // Parsed/corrupt split derives from _corrupt_record ONLY: with
       // spark.sql.json.enablePartialResults (default true since 3.4) a
@@ -194,7 +195,7 @@ object SparkEntry {
     "scan_orc" -> ((s, d) => {
       val cache = cachedDir(
         s"/tmp/graft_orc_${new java.io.File(d).getName}", d, Seq("supplier")) { out =>
-        supplier(s, d).coalesce(1).write.mode("overwrite").orc(out)
+        LocalFs.writer(supplier(s, d).coalesce(1)).mode("overwrite").orc(out)
       }
       s.read.orc(cache)
         .filter(col("s_acctbal") > 0)
@@ -211,9 +212,9 @@ object SparkEntry {
     "scan_partitioned" -> ((s, d) => {
       val cache = cachedDir(
         s"/tmp/graft_part_${new java.io.File(d).getName}", d, Seq("orders")) { out =>
-        orders(s, d)
-          .withColumn("yr", year(to_date(col("o_orderdate"))).cast("int"))
-          .write.mode("overwrite").partitionBy("yr").parquet(out)
+        LocalFs.writer(orders(s, d)
+          .withColumn("yr", year(to_date(col("o_orderdate"))).cast("int")))
+          .mode("overwrite").partitionBy("yr").parquet(out)
       }
       s.read.parquet(cache)
         .filter(col("yr") === 1996)
@@ -1000,8 +1001,8 @@ object SparkEntry {
     "scan_json" -> ((s, d) => {
       val cache = cachedDir(
         s"/tmp/graft_json_${new java.io.File(d).getName}", d, Seq("orders")) { out =>
-        orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .coalesce(1).write.mode("overwrite").json(out)
+        LocalFs.writer(orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
+          .coalesce(1)).mode("overwrite").json(out)
       }
       s.read
         .schema("o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE")
@@ -4666,14 +4667,14 @@ object SparkEntry {
           .start()
         try q.awaitTermination(120000) finally q.stop()
       }
-      ev.filter(col("event_id") % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(feed)
+      LocalFs.writer(ev.filter(col("event_id") % 2 === 0).coalesce(1))
+        .mode("append").parquet(feed)
       val schema = s.read.parquet(feed).schema
       def stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(feed + "/*.parquet")
       runOnce(stream, merge = false)
-      ev.filter(col("event_id") % 2 === 1).coalesce(1)
-        .write.mode("append").parquet(feed)
+      LocalFs.writer(ev.filter(col("event_id") % 2 === 1).coalesce(1))
+        .mode("append").parquet(feed)
       val evolved = stream.withColumn("src", lit("evt"))
       // default posture: the evolved projection is rejected loud
       val rejected = try { runOnce(evolved, merge = false); false }
@@ -5487,23 +5488,23 @@ object SparkEntry {
     cachedDir(s"/tmp/graft_pqmodel2_${new java.io.File(d).getName}", d,
         Seq("embeddings")) { out =>
       val (cb, codes) = Similarity.pqTrain(embeddings(s, d), "vec_id", "embedding")
-      cb.write.mode("overwrite").parquet(s"$out/cb")
-      codes.select("vec_id", "m", "cell", "d2q")
-        .write.mode("overwrite").parquet(s"$out/codes")
+      LocalFs.writer(cb).mode("overwrite").parquet(s"$out/cb")
+      LocalFs.writer(codes.select("vec_id", "m", "cell", "d2q"))
+        .mode("overwrite").parquet(s"$out/codes")
       val e = embeddings(s, d).select(col("vec_id"),
           Similarity.asDouble(col("embedding")).as("v"))
         .withColumn("nv", Similarity.l2norm(col("v")))
       val cents = Similarity.ivfCentroids(e, 16, 2)
-      cents.write.mode("overwrite").parquet(s"$out/cents")
+      LocalFs.writer(cents).mode("overwrite").parquet(s"$out/cents")
       val assigned = Similarity.assignCells(e, cents).select("vec_id", "cell")
-      assigned.write.mode("overwrite").parquet(s"$out/assigned")
+      LocalFs.writer(assigned).mode("overwrite").parquet(s"$out/assigned")
       // residual PQ model for IVFPQ (codebooks trained on v − centroid)
       val resid = Similarity.residuals(e,
         s.read.parquet(s"$out/cents"), s.read.parquet(s"$out/assigned"))
       val (rcb, rcodes) = Similarity.pqTrain(resid, "vec_id", "r")
-      rcb.write.mode("overwrite").parquet(s"$out/rcb")
-      rcodes.select("vec_id", "m", "cell", "d2q")
-        .write.mode("overwrite").parquet(s"$out/rcodes")
+      LocalFs.writer(rcb).mode("overwrite").parquet(s"$out/rcb")
+      LocalFs.writer(rcodes.select("vec_id", "m", "cell", "d2q"))
+        .mode("overwrite").parquet(s"$out/rcodes")
     }
 
   /** One-time DML + Z-ORDER TxLog scenario for the update/zorder keys:
@@ -5750,7 +5751,7 @@ object SparkEntry {
   private def streamCache4(s: SparkSession, d: String): String =
     cachedDir(s"/tmp/graft_stream4_${new java.io.File(d).getName}", d,
         Seq("events")) { out =>
-      events(s, d).repartition(4).write.mode("overwrite").parquet(out)
+      LocalFs.writer(events(s, d).repartition(4)).mode("overwrite").parquet(out)
     }
 
   /** One-time stats-bearing TxLog table for the data-skipping + MERGE
@@ -5818,7 +5819,7 @@ object SparkEntry {
   private def streamCache(s: SparkSession, d: String): String =
     cachedDir(s"/tmp/graft_stream_ns_${new java.io.File(d).getName}", d,
         Seq("events")) { out =>
-      events(s, d).coalesce(1).write.mode("overwrite").parquet(out)
+      LocalFs.writer(events(s, d).coalesce(1)).mode("overwrite").parquet(out)
     }
 
   /** Derived partsupp: the testdata ships no partsupp table, so the

@@ -131,8 +131,8 @@ object TextKV {
   def writeKV(df: DataFrame, path: String): Unit = {
     val cols = df.columns
     require(cols.length >= 2, s"KV sink needs >= 2 columns, got ${cols.mkString(",")}")
-    df.select(concat_ws("\t", cols.map(c => col(c).cast("string")): _*).as("value"))
-      .write.mode("overwrite").text(path)
+    LocalFs.writer(df.select(concat_ws("\t", cols.map(c => col(c).cast("string")): _*).as("value")))
+      .mode("overwrite").text(path)
   }
 
   /** S2 round-trip reader for two-column KV output (positional split on

@@ -1244,7 +1244,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     val (filled, providedGen) = fillGoverned(df, snap, applyDefaults)
     // segment bytes always carry PHYSICAL column names (column
     // mapping's storage invariant — reads re-label, writes un-label)
-    toPhysical(filled, snap).write.mode("overwrite").parquet(s"$dir/$name")
+    LocalFs.writer(toPhysical(filled, snap)).mode("overwrite").parquet(s"$dir/$name")
     val staged = Staged(Seq(name), describe(df.sparkSession, dir, name))
     enforceWriteInvariants(dir, name, snap, providedGen)(
       scanSegments(df.sparkSession, dir, snap.withFiles(staged.files), staged.segs))
@@ -1289,7 +1289,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     val staging = s"staging-${java.util.UUID.randomUUID}"
     val st = store(dir)
     try {
-      dup.write.partitionBy(dupNames: _*).parquet(s"$dir/$staging")
+      LocalFs.writer(dup).partitionBy(dupNames: _*).parquet(s"$dir/$staging")
       def leaves(rel: String, depth: Int): Seq[String] =
         if (depth == dupNames.size) Seq(rel)
         else st.list(s"$dir/$staging$rel").filter(_.contains("="))
@@ -1528,6 +1528,14 @@ private[graft] case class ColStats(typeName: String, min: String,
     }.map(sc => seg -> SegFiles(sc.json, files)).toMap
   }
 
+  /** The rows this statement just wrote to `name`, summed from its
+    * part files' footers on the driver: exact, since a fresh directory
+    * carries no deletion vectors, and no Spark job. */
+  private def stagedRows(spark: SparkSession, dir: String, name: String): Long =
+    dataFiles(dir, name).collect { case (f, len) if len > 0 =>
+      graftshim.LogScan.footerRows(spark, s"${segPath(dir, name)}/$f")
+    }.sum
+
   /** A scan of what this statement just wrote to `name` (a staging
     * directory or a sidecar), planned from [[describe]]. */
   private def stagedScan(spark: SparkSession, dir: String, snap: State,
@@ -1670,7 +1678,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       .select(col("__file").as("file"), col("__pos").as("pos"),
         segOfFile(col("__file")).as("seg"))
     val dvName = s"dv-${java.util.UUID.randomUUID}"
-    matches.write.parquet(s"$dir/$dvName")
+    LocalFs.writer(matches).parquet(s"$dir/$dvName")
     // per-segment tombstone counts, recorded in the commit entry so the
     // read side sizes its broadcast from metadata alone; bare sidecar
     // names translate back to (possibly external) entry names
@@ -1727,10 +1735,11 @@ private[graft] case class ColStats(typeName: String, min: String,
     // the tombstone sidecar and the new-image segment must be derived
     // from the same bytes even if the scan is nondeterministic
     val stage = s"seg-${java.util.UUID.randomUUID}"
-    segScan(spark, dir, snap, snap.live, schema = Some(schema), withMeta = true)
-      .filter(predicate)
-      .withColumn("__seg", segOfFile(col("__file")))
-      .write.parquet(s"$dir/$stage")
+    LocalFs.writer(
+      segScan(spark, dir, snap, snap.live, schema = Some(schema), withMeta = true)
+        .filter(predicate)
+        .withColumn("__seg", segOfFile(col("__file"))))
+      .parquet(s"$dir/$stage")
     try {
       val m = stagedScan(spark, dir, snap, stage)
       val dirty = m.groupBy("__seg").agg(count(lit(1)).as("n"))
@@ -1739,9 +1748,9 @@ private[graft] case class ColStats(typeName: String, min: String,
         return commitOrReclaim(dir, "update_mor", Seq.empty, Seq.empty,
           snap.version, Map.empty, retryPastAppends = true)
       val dvName = s"dv-${java.util.UUID.randomUUID}"
-      m.select(col("__file").as("file"), col("__pos").as("pos"),
-          col("__seg").as("seg"))
-        .write.parquet(s"$dir/$dvName")
+      LocalFs.writer(m.select(col("__file").as("file"), col("__pos").as("pos"),
+          col("__seg").as("seg")))
+        .parquet(s"$dir/$dvName")
       val newImages = m.select(visible.map { c =>
         setExprs.get(c) match {
           case Some(e) => expr(e).as(c)
@@ -1850,12 +1859,13 @@ private[graft] case class ColStats(typeName: String, min: String,
             if (candidates.isEmpty) Seq.empty
             else {
               val name = s"dv-${java.util.UUID.randomUUID}"
-              segScan(spark, dir, snap, candidates,
-                  mergeSchema = true, withMeta = true)
-                .join(uKeys, Seq(key), "left_semi")
-                .select(col("__file").as("file"), col("__pos").as("pos"),
-                  segOfFile(col("__file")).as("seg"))
-                .write.parquet(s"$dir/$name")
+              LocalFs.writer(
+                segScan(spark, dir, snap, candidates,
+                    mergeSchema = true, withMeta = true)
+                  .join(uKeys, Seq(key), "left_semi")
+                  .select(col("__file").as("file"), col("__pos").as("pos"),
+                    segOfFile(col("__file")).as("seg")))
+                .parquet(s"$dir/$name")
               val d = stagedScan(spark, dir, snap, name)
                 .groupBy("seg").agg(count(lit(1)).as("n"))
                 .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
@@ -2041,11 +2051,11 @@ private[graft] case class ColStats(typeName: String, min: String,
     val dvNames = crowded.flatMap(seg => snap.dvs(seg).map(_._1)).distinct
     val segSet = crowded.map(bareName).toSet
     val merged = s"dv-${java.util.UUID.randomUUID}"
-    spark.read.schema(DvSchema)
+    LocalFs.writer(spark.read.schema(DvSchema)
       .parquet(dvNames.map(n => segPath(dir, n)): _*)
       .filter(col("seg").isInCollection(segSet))
-      .distinct()
-      .write.parquet(s"$dir/$merged")
+      .distinct())
+      .parquet(s"$dir/$merged")
     try {
       val counts = spark.read.schema(DvSchema).parquet(s"$dir/$merged")
         .groupBy("seg").agg(count(lit(1)).as("n"))
@@ -2761,11 +2771,11 @@ private[graft] case class ColStats(typeName: String, min: String,
             buf += writeCdc(dir, u.join(preKeys, Seq(key), "left_semi"),
               "update_postimage", snap)
             // write the inserts once, then drop the sidecar if it came
-            // out empty (a read-back of the tiny file, not a second
+            // out empty (its footers' row counts, not a second
             // execution of the anti-join just to probe emptiness)
             val ins = writeCdc(dir, u.join(preKeys, Seq(key), "left_anti"),
               "insert", snap)
-            if (stagedScan(spark, dir, snap, ins._1).limit(1).count() > 0)
+            if (stagedRows(spark, dir, ins._1) > 0)
               buf += ins
             else store(dir).deleteRecursively(s"$dir/${ins._1}")
           }
@@ -2875,7 +2885,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // stage the source ONCE (raw bytes, arbitrary schema — never
     // committed, so no physical re-label / invariant pass)
     val uSeg = s"seg-${java.util.UUID.randomUUID}"
-    source.write.parquet(s"$dir/$uSeg")
+    LocalFs.writer(source).parquet(s"$dir/$uSeg")
     try {
       val s0 = stagedScan(spark, dir, snap, uSeg)
       require(s0.columns.contains(sKey), s"MERGE source lacks key '$sKey'")
@@ -2988,7 +2998,7 @@ private[graft] case class ColStats(typeName: String, min: String,
             cols.zipWithIndex.map { case (c, i) =>
               col(s"t.`$c`").as(s"__graft_pre_$i") }
            else Nil)
-        tagged.select(projection: _*).write.parquet(s"$dir/$tagSeg")
+        LocalFs.writer(tagged.select(projection: _*)).parquet(s"$dir/$tagSeg")
         val staged = stagedScan(spark, dir, snap, tagSeg)
         val act = col("__graft_action")
         def outCols = cols.zipWithIndex.map { case (c, i) =>
@@ -3014,7 +3024,7 @@ private[graft] case class ColStats(typeName: String, min: String,
               def cls(tags: Seq[String], rows: DataFrame, t: String): Unit =
                 if (tags.nonEmpty) {
                   val w = writeCdc(dir, rows, t, snap)
-                  if (stagedScan(spark, dir, snap, w._1).limit(1).count() > 0)
+                  if (stagedRows(spark, dir, w._1) > 0)
                     buf += w
                   else store(dir).deleteRecursively(s"$dir/${w._1}")
                 }
@@ -3889,7 +3899,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     val name = s"cdc-${java.util.UUID.randomUUID}"
     // self-reclaiming: a mid-job failure must not leave a partial
     // sidecar no entry records and no vacuum can ever find
-    try toPhysical(rows, snap).write.mode("overwrite").parquet(s"$dir/$name")
+    try LocalFs.writer(toPhysical(rows, snap)).mode("overwrite").parquet(s"$dir/$name")
     catch {
       case scala.util.control.NonFatal(e) =>
         store(dir).deleteRecursively(s"$dir/$name"); throw e

@@ -31,7 +31,7 @@ object Warehouse {
     * the failure mode — a 10k-cardinality partition column at 1000
     * executors is 10M files). */
   def writePartitioned(df: DataFrame, path: String, partitionCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+    LocalFs.writer(df).mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 
   /** Compacted parquet sink — the small-files killer: a 1000-executor job
     * naively writes ≥1000 files per partition directory, and a 100 TB
@@ -46,7 +46,7 @@ object Warehouse {
                      knownRows: Long = -1L): Unit = {
     val rows = if (knownRows >= 0) knownRows else df.count()
     val files = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-    df.repartition(files).write.mode("overwrite")
+    LocalFs.writer(df.repartition(files)).mode("overwrite")
       .option("maxRecordsPerFile", targetRows)
       .parquet(path)
   }
@@ -73,11 +73,11 @@ object Warehouse {
     * shrink vs an unordered write. */
   def writeZOrdered(df: DataFrame, path: String, files: Int,
                     x: Column, y: Column, bits: Int = 16): Unit =
-    df.withColumn("__z", zorder2(x, y, bits))
+    LocalFs.writer(df.withColumn("__z", zorder2(x, y, bits))
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .drop("__z"))
+      .mode("overwrite").parquet(path)
 
   /** Idempotent partition backfill: overwrite ONLY the partitions
     * present in `df`, leaving sibling partitions untouched (dynamic
@@ -89,7 +89,7 @@ object Warehouse {
     val spark = df.sparkSession
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+    try LocalFs.writer(df).mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
@@ -99,7 +99,9 @@ object Warehouse {
   /** Bucketed external table: hash-bucketed (and optionally sorted) on
     * `key` at `path`, registered as `table` in the session catalog.
     * Joining two tables bucketed with the SAME bucket count on their join
-    * keys plans with no Exchange on either side. */
+    * keys plans with no Exchange on either side. A plain `df.write`:
+    * `saveAsTable` stores write options in the table's catalog entry,
+    * so [[LocalFs.writeOptions]] would follow every later read of it. */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     buckets: Int, key: String,
                     sorted: Boolean = true): Unit = {

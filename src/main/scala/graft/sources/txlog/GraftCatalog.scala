@@ -85,10 +85,10 @@ class GraftCatalog extends DelegatingCatalogExtension with ProcedureCatalog {
     else None
 
   /** The conversion the builtin catalog runs for the default session
-    * catalog: route through the provider's own `getTable`, so catalog
-    * resolution and a path `load()` build byte-identical Tables
-    * (external schema for the empty-table case, table properties as
-    * the construction-time options). */
+    * catalog: route through the provider, so catalog resolution and a
+    * path `load()` build the same Tables (external schema for the
+    * empty-table case, table properties as the construction-time
+    * options), plus the catalog entry as the v1 streaming fallback. */
   override def loadTable(ident: Identifier): Table =
     pathIdent(ident) match {
       case Some(p) => new TxLogTable(p, -1)
@@ -96,9 +96,8 @@ class GraftCatalog extends DelegatingCatalogExtension with ProcedureCatalog {
         val t = super.loadTable(ident)
         CatalogShim.v1DataSourceOptions(t) match {
           case Some((pr, opts, schema)) if pr.equalsIgnoreCase("txlog") =>
-            new TxLogSourceProvider().getTable(schema,
-              Array.empty[org.apache.spark.sql.connector.expressions.Transform],
-              opts.asCaseSensitiveMap())
+            new TxLogSourceProvider().catalogTable(schema, opts,
+              CatalogShim.catalogEntry(t).get)
           case _ => t
         }
     }

@@ -169,18 +169,6 @@ class TxLogTable(private[txlog] val dir: String,
     new TxLogWriteBuilder(dir, asOf, info, props)
 }
 
-/** The write half: a [[V1Write]] bridge. DSv2 hands the job's rows to
-  * an [[InsertableRelation]] as a resolved DataFrame (logical column
-  * labels, analyzer-matched to [[TxLogTable.schema]]), and the bridge
-  * commits it through the SAME entry points the Scala API uses —
-  * [[TxLog.append]]/[[TxLog.appendWithStats]] (blind append: stats,
-  * blooms, governance fingerprint, slot retry) or [[TxLog.overwrite]]
-  * (conditional commit) — so a SQL INSERT is bit-identical to a
-  * programmatic append, OCC semantics included: an INSERT racing a
-  * concurrent append lands in the next slot (blind appends commute);
-  * racing a governance change it restages, exactly like the API.
-  * `statsCols`/`bloomCols` (write option or table property,
-  * comma-separated) opt the commit into skipping metadata. */
 /** The create-time descriptor for a MANAGED table (`CREATE TABLE …
   * USING txlog` with no LOCATION): the session catalog probes the
   * provider's `getTable` BEFORE assigning the default table path, so
@@ -197,6 +185,18 @@ private[txlog] class TxLogPendingTable(declared: StructType) extends Table {
     java.util.Collections.emptySet()
 }
 
+/** The write half: a [[V1Write]] bridge. DSv2 hands the job's rows to
+  * an [[InsertableRelation]] as a resolved DataFrame (logical column
+  * labels, analyzer-matched to [[TxLogTable.schema]]), and the bridge
+  * commits it through the SAME entry points the Scala API uses —
+  * [[TxLog.append]]/[[TxLog.appendWithStats]] (blind append: stats,
+  * blooms, governance fingerprint, slot retry) or [[TxLog.overwrite]]
+  * (conditional commit) — so a SQL INSERT is bit-identical to a
+  * programmatic append, OCC semantics included: an INSERT racing a
+  * concurrent append lands in the next slot (blind appends commute);
+  * racing a governance change it restages, exactly like the API.
+  * `statsCols`/`bloomCols` (write option or table property,
+  * comma-separated) opt the commit into skipping metadata. */
 class TxLogWriteBuilder(dir: String, asOf: Int, info: LogicalWriteInfo,
                         props: CaseInsensitiveStringMap)
     extends org.apache.spark.sql.graftshim.StreamingCapableWriteBuilder

@@ -143,6 +143,21 @@ class TxLogSourceProvider extends StreamSourceProvider
           "LOCATION) must declare its columns")
   }
 
+  /** The table of a catalog entry (which always has a location): what
+    * [[getTable]] builds from the entry's options, carrying the entry
+    * itself so that `readStream.table(t)` falls back to this provider's
+    * v1 Source — the table declares no micro-batch read capability,
+    * and Spark builds a v1 streaming fallback only from a table's
+    * catalog entry. */
+  private[txlog] def catalogTable(schema: StructType,
+      opts: org.apache.spark.sql.util.CaseInsensitiveStringMap,
+      entry: org.apache.spark.sql.catalyst.catalog.CatalogTable): TxLogTable =
+    new TxLogTable(batchDir(opts), asOfOf(opts),
+        Option(schema).filter(_.nonEmpty), opts)
+        with org.apache.spark.sql.graftshim.V1FallbackTable {
+      override def v1Table = entry
+    }
+
   /** A catalog-declared schema (CREATE TABLE columns / CTAS) is
     * accepted: it resolves the table while the log is still empty —
     * the first-INSERT case — and is superseded by the log's own merged
@@ -664,16 +679,6 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
     }
   }
 
-  /** A schema-correct streaming frame that throws `msg` if EXECUTED —
-    * the lazy half of the vacuum↔reader interlock (see getBatch).
-    * Deliberately best-effort: a sink that never runs the frame (a
-    * foreachBatch that inspects nothing) commits the offset and skips
-    * the vacuumed range silently — the price of not wedging every
-    * restart whose already-delivered bytes were since vacuumed (the
-    * engine re-plans the last committed range on restart and discards
-    * the result; a plan-time throw there is a permanent wedge). Every
-    * shipped sink (parquet/memory/txlog/foreachBatch that reads its
-    * frame) executes the batch and gets the typed error. */
   /** The vacuum↔reader interlock's failure shape. LAZY by default (a
     * schema-correct frame that throws at execution): on restart the
     * engine re-invokes getBatch over the last committed range purely

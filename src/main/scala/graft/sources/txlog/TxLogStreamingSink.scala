@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.graftshim.ParquetWriteDelegate
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.TxLog
+import graft.sources.{LocalFs, TxLog}
 
 /** The txlog streaming SINK — `df.writeStream.format("txlog")
   * .option("path", dir)`, the one implementation of the write half of
@@ -113,9 +113,9 @@ private[txlog] class TxLogStreamingWrite(spark: SparkSession, dir: String,
       // an empty segment so the batch id still folds into the log, as
       // appendStream of an empty frame does
       f.delete(segPath, true)
-      spark.createDataFrame(
-        new java.util.ArrayList[Row](), physSchema)
-        .write.parquet(segPath.toString)
+      LocalFs.writer(spark.createDataFrame(
+        new java.util.ArrayList[Row](), physSchema))
+        .parquet(segPath.toString)
     }
     try guard.check(spark, epochId, schema)
     catch { case e: Throwable => f.delete(segPath, true); throw e }
@@ -159,15 +159,17 @@ private[txlog] case class TxLogStreamWriterFactory(dir: String,
     val file = s"part-$partitionId-$taskId${env.extension}"
     val path = s"$dir/$segPrefix-$epochId/$file"
     new TxLogStreamDataWriter(
-      env.open(path, partitionId, epochId), path, file, partitionId)
+      env.open(path, partitionId, epochId), env.conf.value, path, file, partitionId)
   }
 }
 
 /** Streams one task's rows into one staged parquet file; commit ships
-  * the file's manifest entry, abort best-effort deletes it (the
+  * the file's manifest entry, abort best-effort deletes it through
+  * `conf`, the shipped job conf the file was created with (the
   * driver's off-manifest sweep is the backstop). */
 private[txlog] class TxLogStreamDataWriter(
     writer: org.apache.spark.sql.execution.datasources.OutputWriter,
+    conf: org.apache.hadoop.conf.Configuration,
     path: String, file: String, partitionId: Int)
     extends DataWriter[InternalRow] {
   private var rows = 0L
@@ -180,8 +182,7 @@ private[txlog] class TxLogStreamDataWriter(
   override def abort(): Unit = {
     if (open) { writer.close(); open = false }
     val p = new Path(path)
-    try p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      .delete(p, false)
+    try p.getFileSystem(conf).delete(p, false)
     catch { case _: Exception => () }
     ()
   }

@@ -2,8 +2,8 @@ package org.apache.spark.sql.graftshim
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.catalog.CatalogUtils
-import org.apache.spark.sql.connector.catalog.{Table, V1Table}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogUtils}
+import org.apache.spark.sql.connector.catalog.{Table, V1Table, V2TableWithV1Fallback}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -38,4 +38,17 @@ object CatalogShim {
         }
       case _ => None
     }
+
+  /** The catalog entry a session-catalog `V1Table` wraps. */
+  def catalogEntry(t: Table): Option[CatalogTable] = t match {
+    case v1: V1Table => Some(v1.catalogTable)
+    case _           => None
+  }
 }
+
+/** A v2 table that hands Spark its catalog entry (`v1Table`) for what
+  * the table itself does not support: a streaming read by table name
+  * of a table with no micro-batch read capability resolves to the
+  * provider's v1 streaming source. `V2TableWithV1Fallback` is
+  * `private[sql]`, hence the re-export. */
+trait V1FallbackTable extends V2TableWithV1Fallback

@@ -49,15 +49,23 @@ object LogScan {
   /** The schema a scan of `file` infers (Spark's row schema stored in
     * the parquet footer, made nullable as every file scan makes it),
     * read on the driver; None when the footer carries no Spark schema. */
-  def footerSchema(spark: SparkSession, file: String): Option[StructType] = {
+  def footerSchema(spark: SparkSession, file: String): Option[StructType] =
+    footer(spark, file)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
+      .collect { case st: StructType => st.asNullable })
+
+  /** The rows `file` holds, summed over its footer's row groups on the
+    * driver. */
+  def footerRows(spark: SparkSession, file: String): Long =
+    footer(spark, file)(_.getRecordCount)
+
+  private def footer[T](spark: SparkSession, file: String)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file),
         spark.sparkContext.hadoopConfiguration))
-    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get(ParquetReadSupport.SPARK_METADATA_KEY))
-      .flatMap(s => scala.util.Try(DataType.fromJson(s)).toOption)
-      .collect { case st: StructType => st.asNullable }
-    finally reader.close()
+    try f(reader) finally reader.close()
   }
 
   /** The schema union a `mergeSchema` scan computes: `schemas` folded

@@ -63,9 +63,12 @@ object ParquetWriteDelegate {
     def extension: String = factory.getFileExtension(ctx(0, 0L))
   }
 
+  /** The job conf carries [[graft.sources.LocalFs.writeOptions]], as a
+    * `df.write` through `LocalFs.writer` does. */
   def prepare(spark: SparkSession, schema: StructType): WriterEnv = {
     val job = Job.getInstance(spark.asInstanceOf[
-      org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
+      org.apache.spark.sql.classic.SparkSession].sessionState
+      .newHadoopConfWithOptions(graft.sources.LocalFs.writeOptions))
     val factory = new ParquetFileFormat().prepareWrite(spark, job,
       Map.empty, schema)
     WriterEnv(factory, new SerializableConfiguration(job.getConfiguration),

@@ -53,6 +53,21 @@ class TxLogCatalogSpec extends SparkTestBase {
     assert(TxLog.headVersion(dir2) == 1)
   }
 
+  test("readStream.table streams a txlog catalog table as the path stream does") {
+    val dir = mk("cat_stream", Seq("a" -> 1, "b" -> 2), Seq("c" -> 3))
+    def drain(name: String, df: DataFrame): Seq[Row] = {
+      val q = df.select("k", "v", "_commit_version").writeStream
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name).orderBy("k").collect().toSeq
+    }
+    val byName = drain("cat_stream_by_name", spark.readStream.table("cat_stream"))
+    val byPath = drain("cat_stream_by_path",
+      spark.readStream.format("txlog").option("path", dir).load())
+    assert(byName == byPath)
+    assert(byName.map(_.getString(0)) == Seq("a", "b", "c"))
+  }
+
   test("SQL VERSION AS OF pins the snapshot; stale/fresh agree with the API") {
     val dir = mk("cat_vao", Seq("a" -> 1, "b" -> 2), Seq("c" -> 3))
     assert(ks(spark.sql("SELECT * FROM cat_vao VERSION AS OF 0")) == Seq("a", "b"))

@@ -49,8 +49,10 @@ class TxLogScanJobsSpec extends SparkTestBase {
       Map("rev" -> "rev + 1")))
     // before scans planned from the log (listing and footer-inference
     // jobs included): optimize 8, deleteRange 5, merge 33, update 12,
-    // deleteMoR 6, scan plans 4, no-match update 2
-    val want = Map("optimize" -> 5, "deleteRange" -> 3, "merge" -> 23,
+    // deleteMoR 6, scan plans 4, no-match update 2; merge then ran 23
+    // while a limit(1).count() (two jobs) probed its insert sidecar for
+    // rows, which the sidecar's footers now answer
+    val want = Map("optimize" -> 5, "deleteRange" -> 3, "merge" -> 21,
       "update" -> 7, "deleteMoR" -> 3, "scan plans" -> 0, "no-match update" -> 0)
     assert(jobs.toMap == want, s"jobs per statement: $jobs")
     // the statements did what the tape model says
