@@ -3,9 +3,10 @@ package graft.sources
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{DataFrameWriter, Dataset}
+import org.apache.spark.sql.{DataFrameWriter, Dataset, SparkSession}
 
 /** Hadoop's local (`file:`) filesystem with permissions set in-process.
   * Without the native `libhadoop`, `RawLocalFileSystem.setPermission`
@@ -43,6 +44,11 @@ object LocalFs {
   val writeOptions: Map[String, String] = Map(
     "fs.file.impl" -> classOf[LocalFs].getName,
     "fs.file.impl.disable.cache" -> "true")
+
+  /** The session's Hadoop conf with [[writeOptions]]: what a write job
+    * through [[writer]] sees, for sinks that open their files themselves. */
+  def writeConf(spark: SparkSession): Configuration =
+    spark.sessionState.newHadoopConfWithOptions(writeOptions)
 
   /** `ds.write` with [[writeOptions]]. */
   def writer[T](ds: Dataset[T]): DataFrameWriter[T] = ds.write.options(writeOptions)

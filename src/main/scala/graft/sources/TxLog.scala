@@ -125,7 +125,8 @@ private[graft] case class ColStats(typeName: String, min: String,
   /** Probe value → the column's cast-to-string representation (what
     * [[segBlooms]] hashed). Integral and binary-fp types round-trip
     * through their JVM parse (Spark's cast-to-string is the same
-    * shortest round-trip form); strings are already canonical; any
+    * shortest round-trip form); strings are already canonical, and
+    * date probes arrive rendered canonical by [[literalBound]]; any
     * other type (decimal scale, timestamp formats) returns None and
     * the bloom conservatively cannot prune. */
   private def normalizeProbe(tn: String, value: String): Option[String] =
@@ -134,16 +135,9 @@ private[graft] case class ColStats(typeName: String, min: String,
         Some(java.lang.Long.parseLong(value).toString)
       case "float"  => Some(java.lang.Float.parseFloat(value).toString)
       case "double" => Some(java.lang.Double.parseDouble(value).toString)
-      case "string" => Some(value)
-      // canonical ISO dates only: LocalDate.parse round-trips exactly
-      // the cast-to-string form segBlooms hashed; a non-canonical probe
-      // ("2024-1-5") fails the parse and conservatively cannot prune
-      case "date"   => Some(java.time.LocalDate.parse(value).toString)
+      case "string" | "date" => Some(value)
       case _        => None
-    } catch {
-      case _: NumberFormatException => None
-      case _: java.time.format.DateTimeParseException => None
-    }
+    } catch { case _: NumberFormatException => None }
 
   /** What a scan needs of one segment, as the log records it: the
     * physical schema a read of the segment infers (`StructType.json`,
@@ -1317,7 +1311,7 @@ private[graft] case class ColStats(typeName: String, min: String,
           val files = st.listFiles(s"$dir/$staging$rel")
             .filter(_._1.startsWith("part-")).sortBy(_._1)
           files.foreach { case (f, _) =>
-            st.rename(s"$dir/$staging$rel/$f", s"$dir/$name/$f") }
+            movePart(st, s"$dir/$staging$rel", s"$dir/$name", f) }
           parts += files
         }
         // one write job staged every leaf: one footer names the schema
@@ -1338,6 +1332,15 @@ private[graft] case class ColStats(typeName: String, min: String,
           throw e
       }
     } finally st.deleteRecursively(s"$dir/$staging")
+  }
+
+  /** Move the staged part file `f` from `from` to `to` with its `.f.crc`
+    * sidecar, so reads keep verifying its bytes (a checksummed Hadoop
+    * filesystem's rename carries the sidecar itself). */
+  private def movePart(st: LogStore, from: String, to: String, f: String): Unit = {
+    st.rename(s"$from/$f", s"$to/$f")
+    val crc = s".$f.crc"
+    if (st.exists(s"$from/$crc")) st.rename(s"$from/$crc", s"$to/$crc")
   }
 
   /** TABLE CHECK constraints, enforced at the one choke point every
@@ -1849,11 +1852,7 @@ private[graft] case class ColStats(typeName: String, min: String,
           // staged bytes carry physical names; probe in logical terms
           val u = applyMapping(scanSegments(spark, dir,
             snap.withFiles(staged.files), staged.segs), snap)
-          val bounds = u.agg(min(col(key)).cast("string"),
-            max(col(key)).cast("string")).head()
-          val (lo, hi) = (Option(bounds.getString(0)), Option(bounds.getString(1)))
-          val candidates = snap.live.filter(seg =>
-            !canPrune(snap.stats.get((seg, snap.physCol(key))), lo, hi))
+          val candidates = keyCandidates(spark, snap, u, key, key)
           val uKeys = broadcast(u.select(col(key)).distinct())
           val dirty: Seq[(String, Long)] =
             if (candidates.isEmpty) Seq.empty
@@ -2241,8 +2240,20 @@ private[graft] case class ColStats(typeName: String, min: String,
     * excludes the value; either index missing → conservative keep.
     * False positives only cost an extra scan, never correctness. */
   def prunePoint(dir: String, c: String, value: String,
-                 asOf: Int = -1): (Seq[String], Seq[String]) =
-    prunePointIn(state(dir, asOf), c, value)
+                 asOf: Int = -1): (Seq[String], Seq[String]) = {
+    val s = state(dir, asOf)
+    s.live.partition(triageByBounds(s,
+      probeBounds(c, recordedType(s, c), Some(value), None, point = true)).toSet)
+  }
+
+  /** Split the live set (as of `asOf`) into (kept, pruned) for the
+    * range predicate `col BETWEEN lo AND hi` (None = unbounded side),
+    * using only log metadata — no file is opened. */
+  def pruneRange(dir: String, c: String, lo: Option[String], hi: Option[String],
+                 asOf: Int = -1): (Seq[String], Seq[String]) = {
+    val s = state(dir, asOf)
+    s.live.partition(triageByBounds(s, probeBounds(c, recordedType(s, c), lo, hi)).toSet)
+  }
 
   /** Cap on segments whose BLOOM sidecars one driver-side prune will
     * load: range stats are in-memory log metadata (free to consult at
@@ -2256,56 +2267,170 @@ private[graft] case class ColStats(typeName: String, min: String,
     * — executor-side reads, O(candidates) booleans back — so the
     * 100k-segment needle-in-haystack case still bloom-prunes.
     * Metadata-only callers (no session) skip instead — strictly
-    * conservative (skipping blooms only KEEPS segments).
-    * Overridable via system property (tests pin all sides). */
-  private[graft] def bloomProbeCap: Int =
-    Integer.getInteger("graft.txlog.bloomProbeCap", 256)
+    * conservative (skipping blooms only KEEPS segments). */
+  private val bloomProbeCap = new scala.util.DynamicVariable(256)
 
-  // Two-phase range-then-bloom policy (driver probes under the cap,
-  // one distributed sidecar job above it when a session is in hand):
-  // KEEP IN SYNC with [[triageByBounds]] (the arbitrary-predicate
-  // twin). Not unified because the probe domains differ: this value
-  // is already in the column's own cast-to-string form (no
-  // literal-kind guard), while triage conjuncts carry a parsed
-  // literal kind that must type-family-match the stats/bloom before
-  // any prune.
-  private def prunePointIn(s: State, c: String, value: String,
-                           spark: Option[SparkSession] = None
-                          ): (Seq[String], Seq[String]) = {
+  /** Test seam: every prune this thread runs while `body` runs uses
+    * `cap` as the bloom probe cap, until `body` returns or throws. */
+  private[graft] def withBloomProbeCap[T](cap: Int)(body: => T): T =
+    bloomProbeCap.withValue(cap)(body)
+
+  /** The type the log records for `c` over the live set (its stats and
+    * Bloom entries), when they agree on one: the column type of the
+    * session-less probes [[prunePoint]] and [[pruneRange]]. */
+  private def recordedType(s: State, c: String): Option[org.apache.spark.sql.types.DataType] = {
     val p = s.physCol(c)
-    val (rangeKept, rangePruned) = s.live.partition { seg =>
-      !canPrune(s.stats.get((seg, p)), Some(value), Some(value))
+    s.live.flatMap(seg => s.stats.get((seg, p)).map(_.typeName) ++
+      s.blooms.get((seg, p)).map(_.typeName)).distinct match {
+      case Seq(tn) => scala.util.Try(
+        org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(tn)).toOption
+      case _ => None
     }
-    def split(might: String => Option[Boolean]) = {
-      // None (no bloom / unnormalizable probe / missing sidecar) keeps
-      val (kept, bloomPruned) =
-        rangeKept.partition(seg => might(seg).getOrElse(true))
-      (kept, rangePruned ++ bloomPruned)
+  }
+
+  /** Triage bounds of a typed probe: `c = lo` for a `point` (Blooms can
+    * prove it absent), else `c >= lo AND c <= hi` (None = unbounded), as
+    * SQL's BETWEEN desugars. Each probe is cast to `dt` (TRY semantics,
+    * session zone) into the Catalyst literal [[conjunctBoundsOf]] reads
+    * as it reads a SQL one; a probe that does not cast bounds nothing. */
+  private def probeBounds(c: String, dt: Option[org.apache.spark.sql.types.DataType],
+                          lo: Option[String], hi: Option[String],
+                          point: Boolean = false): Bounds = {
+    import org.apache.spark.sql.catalyst.{expressions => ce}
+    def typed(v: String): Option[ce.Literal] = dt.flatMap { t =>
+      try Option(ce.Cast(ce.Literal(v), t,
+          Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone),
+          ce.EvalMode.TRY).eval()).map(ce.Literal(_, t))
+      catch { case scala.util.control.NonFatal(_) => None }
     }
-    if (rangeKept.size <= bloomProbeCap)
-      split(seg => s.blooms.get((seg, p)).flatMap(_.mightContain(value)))
-    else spark match {
-      case None => (rangeKept, rangePruned) // metadata-only caller: skip
-      case Some(sp) =>
-        val tasks = rangeKept.flatMap(seg => s.blooms.get((seg, p))
-          .map(b => ((seg, p, b.file, b.typeName, b.m, b.k), Seq(value))))
-        val answers = bloomProbeJob(sp, tasks)
-        split(seg => answers.getOrElse((seg, p, value), None))
-    }
+    val a = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(c))
+    conjunctBoundsOf(
+      if (point) lo.flatMap(typed).map(ce.EqualTo(a, _)).toSeq
+      else lo.flatMap(typed).map(ce.GreaterThanOrEqual(a, _)).toSeq ++
+        hi.flatMap(typed).map(ce.LessThanOrEqual(a, _)))
+  }
+
+  /** The live segments that may hold a `c` in [lo, hi], with `c` typed
+    * as the table's merged schema scans it (what DML rewrites read). */
+  private def rangeCandidates(spark: SparkSession, dir: String, snap: State,
+                              c: String, lo: String, hi: String): Seq[String] = {
+    val dt = if (snap.live.isEmpty) None
+      else tableSchema(spark, dir, snap).find(_.name == snap.physCol(c)).map(_.dataType)
+    triageByBounds(snap, probeBounds(c, dt, Some(lo), Some(hi)), Some(spark))
+  }
+
+  /** The live segments that may hold a MERGE source's keys: those
+    * meeting the range of `df`'s key `k`, typed as `df` holds it, on
+    * the target's key column `c`. */
+  private def keyCandidates(spark: SparkSession, snap: State, df: DataFrame,
+                            k: String, c: String): Seq[String] = {
+    val r = df.agg(min(df(k)).cast("string"), max(df(k)).cast("string")).head()
+    triageByBounds(snap, probeBounds(c, Some(df.schema(k).dataType),
+      Option(r.getString(0)), Option(r.getString(1))), Some(spark))
+  }
+
+  /** The live segments holding one of `df`'s keys `k` in the target's
+    * key column `c`: ONE distributed probe over all [[keyCandidates]]
+    * (not a job per segment) semi-joins their scan with the distinct
+    * keys — O(candidates) segment names to the driver, O(1) jobs. */
+  private def keyedSegments(spark: SparkSession, dir: String, snap: State,
+                            df: DataFrame, k: String, c: String): Seq[String] = {
+    val candidates = keyCandidates(spark, snap, df, k, c)
+    if (candidates.isEmpty) return candidates
+    val entryOf = candidates.map(n => bareName(n) -> n).toMap
+    // the probe keys take the TARGET's key name: the semi-join binds by name
+    val hit = segScan(spark, dir, snap, candidates, mergeSchema = true, withMeta = true)
+      .join(broadcast(df.select(df(k).as(c)).distinct()), Seq(c), "left_semi")
+      .select(segOfFile(col("__file"))).distinct().collect()
+      .map(r => entryOf.getOrElse(r.getString(0), r.getString(0))).toSet
+    candidates.filter(hit)
   }
 
   /** Bloom/stats-pruned point lookup: scans ONLY segments that may
     * contain `col = value`. The 100 TB needle-in-haystack path: a key
     * lookup touches the one segment holding it, not the table. */
   def readPoint(spark: SparkSession, dir: String, c: String, value: String,
-                asOf: Int = -1, mergeSchema: Boolean = false): DataFrame = {
+                asOf: Int = -1, mergeSchema: Boolean = false): DataFrame =
+    readPruned(spark, dir, asOf, mergeSchema)(
+      t => probeBounds(c, t(c), Some(value), None, point = true),
+      df => col(c) === lit(value).cast(df.schema(c).dataType))
+
+  /** Stats-pruned range read: scans ONLY segments whose recorded
+    * [min,max] may intersect [lo, hi], then applies the exact residual
+    * filter. At 100 TB this is the difference between a full-table scan
+    * and touching the handful of segments a time/key range lives in.
+    * `mergeSchema` mirrors [[read]]: on a schema-EVOLVED table the range
+    * column may exist only in newer segments, and a single-footer
+    * schema could miss it. */
+  def readRange(spark: SparkSession, dir: String, c: String,
+                lo: Option[String], hi: Option[String],
+                asOf: Int = -1, mergeSchema: Boolean = false): DataFrame =
+    readPruned(spark, dir, asOf, mergeSchema)(
+      t => probeBounds(c, t(c), lo, hi),
+      df => (lo.map(l => col(c) >= lit(l).cast(df.schema(c).dataType)) ++
+        hi.map(h => col(c) <= lit(h).cast(df.schema(c).dataType))).reduceOption(_ && _)
+        .getOrElse(lit(true)))
+
+  /** Stats- AND bloom-pruned read for an ARBITRARY SQL predicate — the
+    * general form of [[readPoint]] (one-column equality) and
+    * [[readRange]] (one-column range): prunable conjuncts of the
+    * predicate are intersected with per-segment min/max stats and — for
+    * point probes — Bloom sidecars, so only segments that can possibly
+    * hold a match are opened; the full predicate then applies as the
+    * exact residual filter. Unanalyzable predicates degrade to a full
+    * scan with the filter (never wrong, just unpruned). The same
+    * [[triageByBounds]] machinery the DML triage uses, exposed as
+    * the read path: at 100 TB, `readWhere(t, "day = X AND user = Y")`
+    * touches the segments whose stats intersect X (and whose blooms
+    * admit Y), never the table. */
+  def readWhere(spark: SparkSession, dir: String, predicate: String,
+                asOf: Int = -1, mergeSchema: Boolean = false): DataFrame =
+    readPruned(spark, dir, asOf, mergeSchema)(
+      _ => prunableConjuncts(spark, predicate), _ => expr(predicate))
+
+  /** The one body of the pruned reads: replay as of `asOf`, refuse an
+    * empty table, raise the typed error for a vacuumed version, scan the
+    * segments [[triageByBounds]] keeps for `bounds` (given a column's
+    * scan type, planned only when asked for) — or nothing, keeping the
+    * schema — and apply the exact `residual` filter. */
+  private def readPruned(spark: SparkSession, dir: String, asOf: Int,
+      mergeSchema: Boolean)(
+      bounds: (String => Option[org.apache.spark.sql.types.DataType]) => Bounds,
+      residual: DataFrame => Column): DataFrame = {
     val s = state(dir, asOf)
-    val (kept, _) = prunePointIn(s, c, value, Some(spark))
+    require(s.live.nonEmpty, s"table $dir is empty as of version $asOf")
+    // time travel gets the typed retention error (head reads skip the
+    // probe: a vacuum never reclaims the head's live set)
+    if (asOf >= 0)
+      requireRetained(dir, asOf, s.live.map(segPath(dir, _)))
+    lazy val whole = segScan(spark, dir, s, s.live, mergeSchema)
+    val kept = triageByBounds(s,
+      bounds(c => whole.schema.find(_.name == c).map(_.dataType)), Some(spark))
     val base =
-      if (kept.isEmpty) // schema-preserving empty
-        read(spark, dir, asOf, mergeSchema).limit(0)
+      if (kept.isEmpty) whole.limit(0) // schema-preserving empty
       else segScan(spark, dir, s, kept, mergeSchema)
-    base.filter(col(c) === lit(value).cast(base.schema(c).dataType))
+    base.filter(residual(base))
+  }
+
+  /** `a < b` in the stat column's own domain (see [[canPrune]]'s
+    * collation notes) — throws NumberFormatException on an unparseable
+    * value, which both callers, [[triageByBounds]] (through
+    * [[canPrune]]) and [[allMatchByStats]], catch as "proves nothing". */
+  private def statLt(tn: String, a: String, b: String): Boolean = {
+    val integral = Set("byte", "short", "integer", "long").contains(tn) ||
+      tn.startsWith("decimal")
+    if (tn == "float")
+      // compare in the FLOAT domain: the residual filter casts the
+      // probe to float, so a probe string carrying more precision
+      // than float holds (double-rounding above the stored max while
+      // float-rounding TO it) must not prune the segment whose max
+      // row the residual >= filter would match
+      java.lang.Float.parseFloat(a) < java.lang.Float.parseFloat(b)
+    else if (tn == "double") java.lang.Double.parseDouble(a) < java.lang.Double.parseDouble(b)
+    else if (integral) BigDecimal(a) < BigDecimal(b)
+    else java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
   }
 
   /** True iff the recorded [min,max] of `c` in `seg` PROVES no row can
@@ -2326,66 +2451,13 @@ private[graft] case class ColStats(typeName: String, min: String,
     * while UTF-8 ranks it above: a segment whose recorded max is an
     * emoji would be falsely pruned for a probe like '�' — for a
     * DML triage that is silent row loss, so the compare must match the
-    * stats' own collation exactly. */
-  /** `a < b` in the stat column's own domain (see [[canPrune]]'s
-    * collation notes) — throws NumberFormatException on unparseable
-    * probes, which every caller treats as "proves nothing". */
-  private def statLt(tn: String, a: String, b: String): Boolean = {
-    val integral = Set("byte", "short", "integer", "long").contains(tn) ||
-      tn.startsWith("decimal")
-    val fp = tn == "float" || tn == "double"
-    if (tn == "float")
-      // compare in the FLOAT domain: the residual filter casts the
-      // probe to float, so a probe string carrying more precision
-      // than float holds (double-rounding above the stored max while
-      // float-rounding TO it) must not prune the segment whose max
-      // row the residual >= filter would match
-      java.lang.Float.parseFloat(a) < java.lang.Float.parseFloat(b)
-    else if (fp) java.lang.Double.parseDouble(a) < java.lang.Double.parseDouble(b)
-    else if (integral) BigDecimal(a) < BigDecimal(b)
-    else java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-  }
-
+    * stats' own collation exactly. Only [[triageByBounds]] calls it,
+    * after its type-family guard. */
   private def canPrune(st: Option[ColStats], lo: Option[String],
                        hi: Option[String]): Boolean = st match {
     case None => false
     case Some(ColStats(tn, mn, mx, _)) =>
       lo.exists(l => statLt(tn, mx, l)) || hi.exists(h => statLt(tn, h, mn))
-  }
-
-  /** Split the live set (as of `asOf`) into (kept, pruned) for the
-    * range predicate `col BETWEEN lo AND hi` (None = unbounded side),
-    * using only log metadata — no file is opened. */
-  def pruneRange(dir: String, c: String, lo: Option[String], hi: Option[String],
-                 asOf: Int = -1): (Seq[String], Seq[String]) = {
-    val s = state(dir, asOf)
-    s.live.partition(seg => !canPrune(s.stats.get((seg, s.physCol(c))), lo, hi))
-  }
-
-  /** Stats-pruned range read: scans ONLY segments whose recorded
-    * [min,max] may intersect [lo, hi], then applies the exact residual
-    * filter. At 100 TB this is the difference between a full-table scan
-    * and touching the handful of segments a time/key range lives in. */
-  def readRange(spark: SparkSession, dir: String, c: String,
-                lo: Option[String], hi: Option[String],
-                asOf: Int = -1, mergeSchema: Boolean = false): DataFrame = {
-    val s = state(dir, asOf)
-    val (kept, _) = s.live.partition(seg =>
-      !canPrune(s.stats.get((seg, s.physCol(c))), lo, hi))
-    // mergeSchema mirrors [[read]]: on a schema-EVOLVED table the range
-    // column may exist only in newer segments, and a single-footer
-    // schema inference could miss it
-    val base =
-      if (kept.isEmpty) // schema-preserving empty
-        read(spark, dir, asOf, mergeSchema).limit(0)
-      else segScan(spark, dir, s, kept, mergeSchema)
-    val dt = base.schema(c).dataType
-    val cond = (lo.map(l => col(c) >= lit(l).cast(dt)) ++
-      hi.map(h => col(c) <= lit(h).cast(dt)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    base.filter(cond)
   }
 
   /** Copy-on-write range delete: stats-prune first (segments whose
@@ -2396,9 +2468,7 @@ private[graft] case class ColStats(typeName: String, min: String,
                   lo: String, hi: String,
                   statsCols: Seq[String] = Nil): Int = {
     val snap = state(dir)
-    val (candidates, _) = snap.live
-      .partition(seg =>
-        !canPrune(snap.stats.get((seg, snap.physCol(c))), Some(lo), Some(hi)))
+    val candidates = rangeCandidates(spark, dir, snap, c, lo, hi)
     def rangeCond(df: DataFrame) = {
       val dt = df.schema(c).dataType
       col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
@@ -2491,8 +2561,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     require(sortCols.nonEmpty && numSegments >= 1,
       "need sort columns and >=1 segments")
     val snap = state(dir)
-    val candidates = snap.live.filterNot(seg =>
-      canPrune(snap.stats.get((seg, snap.physCol(c))), Some(lo), Some(hi)))
+    val candidates = rangeCandidates(spark, dir, snap, c, lo, hi)
     if (candidates.size < 2) return None
     val clustered = segScan(spark, dir, snap, candidates, mergeSchema = true)
       .repartitionByRange(numSegments, sortCols.map(col): _*)
@@ -2526,7 +2595,7 @@ private[graft] case class ColStats(typeName: String, min: String,
         val named = parts.map { p =>
           val name = s"seg-${java.util.UUID.randomUUID}"
           st.mkdirs(s"$dir/$name")
-          st.rename(s"$dir/$staging/$p", s"$dir/$name/$p")
+          movePart(st, s"$dir/$staging", s"$dir/$name", p)
           name -> p
         }
         // drop the emptied staging dir (only _SUCCESS etc. remain)
@@ -2711,28 +2780,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       // staged bytes carry physical names; probe in logical terms
       val u = applyMapping(scanSegments(spark, dir,
         snap.withFiles(staged.files), staged.segs), snap)
-      val bounds = u.agg(min(col(key)).cast("string"), max(col(key)).cast("string")).head()
-      val (lo, hi) = (Option(bounds.getString(0)), Option(bounds.getString(1)))
-      val candidates = snap.live.filter(seg =>
-        !canPrune(snap.stats.get((seg, snap.physCol(key))), lo, hi))
       val uKeys = broadcast(u.select(col(key)).distinct())
-      // ONE distributed probe over all candidates (not a job per
-      // segment): semi-join the candidate scan against the update keys
-      // and collect the distinct match-bearing segment names —
-      // O(candidates) rows to the driver, O(1) jobs
-      val dirtySet: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else {
-          val entryOf = candidates.map(n => bareName(n) -> n).toMap
-          segScan(spark, dir, snap, candidates, mergeSchema = true,
-              withMeta = true)
-            .join(uKeys, Seq(key), "left_semi")
-            .select(segOfFile(col("__file")).as("seg")).distinct()
-            .collect()
-            .map(r => entryOf.getOrElse(r.getString(0), r.getString(0)))
-            .toSet
-        }
-      val dirty = candidates.filter(dirtySet)
+      val dirty = keyedSegments(spark, dir, snap, u, key, key)
       // every update row lands exactly once (replacing or inserting), and
       // clean segments contain no matching keys by construction — so the
       // rewrite is: (dirty rows not matched) ∪ updates
@@ -2895,32 +2944,9 @@ private[graft] case class ColStats(typeName: String, min: String,
         s"MERGE source keys must be unique on '$sKey': ${dup.getLong(0)} " +
           s"rows, ${dup.getLong(1)} distinct — a duplicate key would " +
           "multiply its matched target row")
-      val rewriteAll = notMatchedBySource.nonEmpty
-      val candidates =
-        if (rewriteAll) snap.live
-        else {
-          val bounds = s0.agg(min(s0(sKey)).cast("string"),
-            max(s0(sKey)).cast("string")).head()
-          val (lo, hi) = (Option(bounds.getString(0)),
-            Option(bounds.getString(1)))
-          snap.live.filter(seg =>
-            !canPrune(snap.stats.get((seg, snap.physCol(key))), lo, hi))
-        }
-      // probe keys carry the TARGET's key name so the semi-join binds
-      // by name against the candidate scan
-      val uKeys = broadcast(s0.select(s0(sKey).as(key)).distinct())
       val dirty =
-        if (rewriteAll || candidates.isEmpty) candidates
-        else {
-          val entryOf = candidates.map(n => bareName(n) -> n).toMap
-          segScan(spark, dir, snap, candidates, mergeSchema = true,
-              withMeta = true)
-            .join(uKeys, Seq(key), "left_semi")
-            .select(segOfFile(col("__file")).as("seg")).distinct()
-            .collect()
-            .map(r => entryOf.getOrElse(r.getString(0), r.getString(0)))
-            .toSet match { case s => candidates.filter(s) }
-        }
+        if (notMatchedBySource.nonEmpty) snap.live
+        else keyedSegments(spark, dir, snap, s0, sKey, key)
       // target side: the dirty rows (logical columns); when nothing
       // matched the join degenerates to source-only rows, but the
       // TARGET SCHEMA is still needed for projections — a zero-row
@@ -3300,6 +3326,9 @@ private[graft] case class ColStats(typeName: String, min: String,
     }
   }
 
+  /** Per prunable conjunct: (column, literal kind, alternative ranges). */
+  private[graft] type Bounds = Seq[(String, String, Seq[(Option[String], Option[String])])]
+
   /** PRUNABLE CONJUNCTS of an arbitrary SQL predicate: (logical
     * column, literal kind, alternative [lo,hi] ranges) parsed out of
     * top-level AND terms of the form `col {=,<,<=,>,>=} literal`
@@ -3323,8 +3352,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     * (`'2024-1-5'`) ordered against canonical ISO stats can prune a
     * segment that holds matches. A falsely-pruned DML segment is
     * silent row loss, so every unprovable pairing is rejected. */
-  private[graft] def prunableConjuncts(spark: SparkSession, predicate: String
-                                      ): Seq[(String, String, Seq[(Option[String], Option[String])])] = {
+  private[graft] def prunableConjuncts(spark: SparkSession, predicate: String): Bounds = {
     val parsed =
       try spark.sessionState.sqlParser.parseExpression(predicate)
       catch { case scala.util.control.NonFatal(_) => return Seq.empty }
@@ -3340,8 +3368,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     * recorded). Anything unrecognized contributes no bound —
     * strictly conservative. */
   private[graft] def conjunctBoundsOf(
-      predicates: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-      ): Seq[(String, String, Seq[(Option[String], Option[String])])] = {
+      predicates: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Bounds = {
     import org.apache.spark.sql.catalyst.{expressions => ce}
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.types._
@@ -3498,32 +3525,27 @@ private[graft] case class ColStats(typeName: String, min: String,
     }
   }
 
-  /** Live segments that can possibly hold a `predicate` match, from
-    * log metadata alone: each prunable conjunct is intersected with
-    * the per-segment stats via [[canPrune]]; segments without stats on
-    * a conjunct's column stay in (conservative, the same rule
-    * [[optimizeWhere]] applies). This is what makes a date-sliced
-    * `delete`/`replaceWhere`/`update` on a 100 TB table touch only the
-    * handful of segments whose [min,max] intersect the slice instead
-    * of reading the predicate columns of EVERY live row. */
-  private def triageCandidates(snap: State, predicate: String,
-                               spark: SparkSession): Seq[String] =
-    triageByBounds(snap, prunableConjuncts(spark, predicate), Some(spark))
-
-  /** [[triageCandidates]] over already-extracted conjunct bounds — the
-    * form the DSv2 pushdown path calls with the optimizer's resolved
-    * expressions run through [[conjunctBoundsOf]]. */
-  private def triageByBounds(snap: State,
-      bounds: Seq[(String, String, Seq[(Option[String], Option[String])])],
+  /** Live segments that can possibly hold a match of `bounds`, from
+    * log metadata alone — the ONE place a txlog decides a segment can
+    * be skipped. The bounds come from a SQL predicate
+    * ([[prunableConjuncts]]: DML triage, [[readWhere]]), the
+    * optimizer's resolved filters (DSv2 pushdown) or a typed
+    * one-column probe ([[probeBounds]]). Each conjunct is intersected
+    * with the per-segment stats via [[canPrune]] and, for point
+    * alternatives, the Bloom sidecars; segments without stats on a
+    * conjunct's column stay in (conservative). This is what makes a
+    * date-sliced `delete`/`replaceWhere`/`update` on a 100 TB table
+    * touch only the handful of segments whose [min,max] intersect the
+    * slice instead of reading the predicate columns of EVERY live row. */
+  private def triageByBounds(snap: State, bounds: Bounds,
       spark: Option[SparkSession] = None): Seq[String] = {
     if (bounds.isEmpty) return snap.live
     // the conjunct is an OR of its ranges: skippable only when EVERY
     // alternative is excluded. An alternative is excluded by RANGE
     // stats (min/max outside it) or — for the point alternatives
     // equality and IN produce — by a BLOOM sidecar PROVING the value
-    // absent (the readPoint machinery, now shared by every
-    // arbitrary-predicate surface). An unparseable probe (e.g.
-    // `long_col = 'abc'`) proves nothing — keep, never throw.
+    // absent. An unparseable probe (e.g. `long_col = 'abc'`) proves
+    // nothing — keep, never throw.
     // `probe` answers (seg, physCol, value): Some(false) = proven
     // absent; anything else keeps.
     def excluded(seg: String,
@@ -3558,10 +3580,9 @@ private[graft] case class ColStats(typeName: String, min: String,
     // ranges don't discriminate — O(candidates) tiny reads belong on
     // executors, not serialized through the driver). Metadata-only
     // callers with no session in hand keep the conservative skip
-    // (only ever KEEPS segments). KEEP IN SYNC with [[prunePointIn]],
-    // the point-probe twin of this policy.
+    // (only ever KEEPS segments)
     val rangeKept = snap.live.filterNot(seg => excluded(seg, noBloom))
-    if (rangeKept.size <= bloomProbeCap)
+    if (rangeKept.size <= bloomProbeCap.value)
       rangeKept.filterNot(seg => excluded(seg, driverProbe))
     else spark match {
       case None => rangeKept
@@ -3584,8 +3605,9 @@ private[graft] case class ColStats(typeName: String, min: String,
   /** ONE Spark job probing Bloom sidecars EXECUTOR-side — the
     * above-cap form of the lazy driver probe: each task re-opens its
     * sidecar via [[LogStore.forPath]] (nothing driver-held is
-    * serialized), decodes with exactly [[BloomStats]]'s rules
-    * (truncated/missing sidecar → no answer → keep), and ships back
+    * serialized) into a task-local [[BloomStats]], so it decodes by
+    * the driver probe's own rules (truncated/missing sidecar → no
+    * answer → keep), and ships back
     * one Option[Boolean] per (segment, column, value) — O(candidates)
     * booleans, never bitsets. Tasks are keyed (seg, physCol, sidecar
     * file, typeName, m, k) with their distinct probe values so each
@@ -3599,17 +3621,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       spark.sparkContext.defaultParallelism * 2))
     spark.sparkContext.parallelize(tasks, slices)
       .flatMap { case ((seg, p, file, tn, m, k), values) =>
-        val bits =
-          try {
-            val b = LogStore.forPath(file).readBytes(file)
-            if (b.length == (m + 7) / 8) Some(b) else None
-          } catch { case _: java.io.IOException => None }
-        values.map { v =>
-          val ans = for (nv <- normalizeProbe(tn, v); b <- bits) yield
-            bloomPositions(nv, m, k)
-              .forall(pos => (b(pos / 8) & (1 << (pos % 8))) != 0)
-          ((seg, p, v), ans)
-        }
+        val b = BloomStats(tn, m, k, LogStore.forPath(file), file)
+        values.map(v => ((seg, p, v), b.mightContain(v)))
       }.collect().toMap
   }
 
@@ -3617,31 +3630,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * would scan (entry names, possibly external clone refs). */
   private[graft] def triageCandidatesOf(spark: SparkSession, dir: String,
                                         predicate: String): Seq[String] =
-    triageCandidates(state(dir), predicate, spark)
+    triageByBounds(state(dir), prunableConjuncts(spark, predicate), Some(spark))
 
-  /** Stats- AND bloom-pruned read for an ARBITRARY SQL predicate — the
-    * general form of [[readPoint]] (one-column equality) and
-    * [[readRange]] (one-column range): prunable conjuncts of the
-    * predicate are intersected with per-segment min/max stats and — for
-    * point probes — Bloom sidecars, so only segments that can possibly
-    * hold a match are opened; the full predicate then applies as the
-    * exact residual filter. Unanalyzable predicates degrade to a full
-    * scan with the filter (never wrong, just unpruned). The same
-    * [[triageCandidates]] machinery the DML triage uses, exposed as
-    * the read path: at 100 TB, `readWhere(t, "day = X AND user = Y")`
-    * touches the segments whose stats intersect X (and whose blooms
-    * admit Y), never the table. */
-  /** Snapshot surface for the DSv2 batch connector
-    * (`spark.read.format("txlog")`): the merged table schema plus the
-    * live segments surviving stats+bloom pruning for the optimizer's
-    * resolved filter `exprs` — the same triage every other
-    * arbitrary-predicate surface uses, so a pushed `day = X` filter
-    * opens only X's segments. Deletion vectors and column mapping are
-    * carried as PLAN METADATA (per-segment DV sidecar refs, the
-    * physical↔logical name maps) for the connector to apply — a
-    * DV-filtering reader wrapper and a schema relabel — so the SQL
-    * surface stays usable on exactly the tables that saw MoR deletes
-    * or renames. */
   /** Opaque resolved snapshot for the DSv2 connector: ONE metadata
     * replay (+ footer merge) serves BOTH `Table.schema()` and every
     * scan build of the same Table — without it each query paid two
@@ -3691,6 +3681,16 @@ private[graft] case class ColStats(typeName: String, min: String,
     new Dsv2Snapshot(s, logicalSchema(s, raw), phys)
   }
 
+  /** Scan surface for the DSv2 batch connector
+    * (`spark.read.format("txlog")`): the live segments surviving
+    * stats+bloom pruning for the optimizer's resolved filter `exprs` —
+    * the same triage every other arbitrary-predicate surface uses, so a
+    * pushed `day = X` filter opens only X's segments. Deletion vectors
+    * and column mapping are carried as PLAN METADATA (per-segment DV
+    * sidecar refs here, the physical↔logical name maps on
+    * [[Dsv2Snapshot]]) for the connector to apply — a DV-filtering
+    * reader wrapper and a schema relabel — so the SQL surface stays
+    * usable on exactly the tables that saw MoR deletes or renames. */
   private[graft] def dsv2ScanInfo(spark: SparkSession, dir: String, asOf: Int,
       exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       resolved: Dsv2Snapshot): Seq[Dsv2Seg] = {
@@ -3716,25 +3716,11 @@ private[graft] case class ColStats(typeName: String, min: String,
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
 
-  def readWhere(spark: SparkSession, dir: String, predicate: String,
-                asOf: Int = -1, mergeSchema: Boolean = false): DataFrame = {
-    val s = state(dir, asOf)
-    require(s.live.nonEmpty, s"table $dir is empty as of version $asOf")
-    if (asOf >= 0)
-      requireRetained(dir, asOf, s.live.map(segPath(dir, _)))
-    val kept = triageCandidates(s, predicate, spark)
-    val base =
-      if (kept.isEmpty) // schema-preserving empty
-        read(spark, dir, asOf, mergeSchema).limit(0)
-      else segScan(spark, dir, s, kept, mergeSchema)
-    base.filter(expr(predicate))
-  }
-
   /** Per-segment LIVE-row (any-match, all-match) flags for `predicate`,
     * computed by ONE distributed job — not a probe job per segment: at
     * 100k-segment scale, O(segments) job submissions is a driver/
     * scheduler bottleneck regardless of how little data each probe
-    * reads. The scan is STATS-PRE-PRUNED ([[triageCandidates]]): only
+    * reads. The scan is STATS-PRE-PRUNED ([[triageByBounds]]): only
     * segments whose recorded [min,max] may intersect the predicate's
     * prunable conjuncts are read at all, so a date-sliced DML touches
     * the slice, never the table. The single pass reads only the
@@ -3745,7 +3731,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     * external clone refs). */
   private def matchCounts(spark: SparkSession, dir: String, snap: State,
                           predicate: String): Map[String, (Boolean, Boolean)] = {
-    val cands = triageCandidates(snap, predicate, spark)
+    val cands = triageByBounds(snap, prunableConjuncts(spark, predicate), Some(spark))
     // stats-PROVEN all-match segments classify from METADATA and skip
     // the scan: a partition-predicate DELETE/REPLACE WHERE on a
     // partitioned table (every segment single-valued, min=max,
@@ -3928,7 +3914,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     cdc.map { case (f, t) => s"cdc=${enc(f)}|${enc(t)}" }
 
   /** Copy-on-write delete of rows matching `predicate`: the triage is
-    * STATS-PRE-PRUNED ([[triageCandidates]] — a `day = X` slice opens
+    * STATS-PRE-PRUNED ([[triageByBounds]] — a `day = X` slice opens
     * only segments whose recorded [min,max] intersect X) and runs as
     * ONE job ([[matchCounts]]) to find the match-bearing segments,
     * then ONE multi-path scan rewrites exactly those; clean segments

@@ -1,10 +1,13 @@
 package graft.sources.kv
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.LocalFs
 
 /** Write half of the graftkv connector — the reference's TextOutputFormat
   * sink (`key \t value` lines, ref: PageRankAlgorithm.java:67) as a V2
@@ -26,7 +29,9 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *    NOTE this truncate is NOT atomic — a job that fails after launch
   *    has already dropped the old data (a transactional overwrite
   *    needs a manifest/commit protocol, i.e. a table format; out of
-  *    scope for a text sink).
+  *    scope for a text sink);
+  *  - the truncate, the abort and every task's writer share ONE Hadoop
+  *    conf: the session's plus [[LocalFs.writeOptions]].
   */
 class KVWriteBuilder(path: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -46,43 +51,45 @@ class KVWriteBuilder(path: String, info: LogicalWriteInfo)
 class KVWrite(path: String, schema: StructType, truncate: Boolean)
     extends Write with BatchWrite {
 
+  private val conf = new SerializableConfiguration(LocalFs.writeConf(SparkSession.active))
+
   override def toBatch: BatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // driver-side, before any task: clear prior contents on overwrite
     if (truncate) {
       val p = new Path(path)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(conf.value)
       if (fs.exists(p)) fs.delete(p, true)
       fs.mkdirs(p)
     }
-    KVWriterFactory(path, schema.fields.length)
+    KVWriterFactory(path, schema.fields.length, conf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case KVCommit(file) =>
       val p = new Path(file)
-      p.getFileSystem(conf).delete(p, false)
+      p.getFileSystem(conf.value).delete(p, false)
     }
-  }
 }
 
 case class KVCommit(file: String) extends WriterCommitMessage
 
-case class KVWriterFactory(path: String, nCols: Int) extends DataWriterFactory {
+case class KVWriterFactory(path: String, nCols: Int, conf: SerializableConfiguration)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KVDataWriter(path, nCols, partitionId, taskId)
+    new KVDataWriter(path, nCols, partitionId, taskId, conf)
 }
 
-class KVDataWriter(dir: String, nCols: Int, partitionId: Int, taskId: Long)
+class KVDataWriter(dir: String, nCols: Int, partitionId: Int, taskId: Long,
+                   conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
 
   private val finalFile = new Path(dir, f"part-$partitionId%05d-$taskId.txt")
   private val tempFile = new Path(dir, finalFile.getName + ".inprogress")
-  private val fs = finalFile.getFileSystem(new Configuration())
+  private val fs = finalFile.getFileSystem(conf.value)
   private val out = {
     fs.mkdirs(new Path(dir))
     new java.io.BufferedOutputStream(fs.create(tempFile, true), 1 << 16)

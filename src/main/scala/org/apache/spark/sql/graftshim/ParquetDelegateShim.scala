@@ -66,9 +66,7 @@ object ParquetWriteDelegate {
   /** The job conf carries [[graft.sources.LocalFs.writeOptions]], as a
     * `df.write` through `LocalFs.writer` does. */
   def prepare(spark: SparkSession, schema: StructType): WriterEnv = {
-    val job = Job.getInstance(spark.asInstanceOf[
-      org.apache.spark.sql.classic.SparkSession].sessionState
-      .newHadoopConfWithOptions(graft.sources.LocalFs.writeOptions))
+    val job = Job.getInstance(graft.sources.LocalFs.writeConf(spark))
     val factory = new ParquetFileFormat().prepareWrite(spark, job,
       Map.empty, schema)
     WriterEnv(factory, new SerializableConfiguration(job.getConfiguration),

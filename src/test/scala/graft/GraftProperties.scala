@@ -1,10 +1,11 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 import org.apache.spark.sql.functions._
 import graft.ops.TextOps
 import graft.pagerank.PageRank
+import graft.sources.TxLog
 import graft.text.TextAnalysis
 
 /** Property tests (SURVEY.md §5.2.1). Each case runs a real Spark job, so
@@ -371,5 +372,91 @@ object GraftProperties extends Properties("graft") {
         }.toSet
         got == want
       }
+    }
+
+  // -- typed txlog probes ----------------------------------------------
+  private val probeCols = Seq("l" -> "BIGINT", "d" -> "DOUBLE", "s" -> "STRING", "day" -> "DATE")
+  private val probeDoubles = Seq(-1.5, 0.0, 0.1, 2.25, 1000.0, 1.0e-5)
+  private val probeStrings = Seq("", "a", "ab", "b", "ba", "z")
+  private val day0 = java.time.LocalDate.of(2024, 1, 1)
+
+  private val probeRow: Gen[(Long, Double, String, java.time.LocalDate)] = for {
+    l <- Gen.choose(-20L, 20L)
+    d <- Gen.oneOf(probeDoubles)
+    s <- Gen.oneOf(probeStrings)
+    n <- Gen.choose(0L, 59L)
+  } yield (l, d, s, day0.plusDays(n))
+
+  /** A probe string for column `c`: the canonical rendering of a value,
+    * a non-canonical rendering of it, or one that does not cast. */
+  private def probeOf(c: String): Gen[String] = c match {
+    case "l" => Gen.choose(-25L, 25L).flatMap(v =>
+      Gen.oneOf(v.toString, if (v < 0) s"-0${-v}" else s"+$v", s" $v ", "abc"))
+    case "d" => Gen.oneOf(probeDoubles :+ 0.5).flatMap(v =>
+      Gen.oneOf(v.toString, BigDecimal(v).bigDecimal.toPlainString + "0", s"+$v", "1x"))
+    case "s" => Gen.oneOf(probeStrings ++ Seq("abc", "zz"))
+    case _ => Gen.choose(-3L, 62L).flatMap { n =>
+      val d = day0.plusDays(n)
+      Gen.oneOf(d.toString, s"${d.getYear}-${d.getMonthValue}-${d.getDayOfMonth}", "2024-13-01")
+    }
+  }
+
+  private val probeCase = for {
+    segs <- Gen.choose(2, 4).flatMap(Gen.listOfN(_, Gen.choose(1, 4).flatMap(Gen.listOfN(_, probeRow))))
+    probes <- Gen.sequence[List[List[String]], List[String]](
+      probeCols.map { case (c, _) => Gen.listOfN(3, probeOf(c)).map(c :: _) })
+  } yield (segs, probes)
+
+  property("typed txlog probes keep what the SQL triage keeps, and every matching segment") =
+    Prop.forAllNoShrink(probeCase) { case (segs, probes) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-probeprop").toString
+      val rowsOf = segs.map { rows =>
+        TxLog.appendWithStats(spark, rows.toDF("l", "d", "s", "day"), dir, probeCols.map(_._1))
+        TxLog.liveSegments(dir).last -> rows
+      }
+      // the probe as the column's type, by SQL's own try_cast
+      def typed(c: String, p: String): Option[Any] =
+        Option(spark.sql(s"SELECT try_cast('$p' AS ${probeCols.toMap.apply(c)})").head().get(0)).map {
+          case d: java.sql.Date => d.toLocalDate
+          case v => v
+        }
+      def sqlLit(v: Option[Any]): String = v.fold("NULL") {
+        case l: Long => s"${l}L"
+        case d: Double => s"${d}D"
+        case s: String => s"'$s'"
+        case d => s"DATE '$d'"
+      }
+      def cmp(a: Any, b: Any): Int = (a, b) match {
+        case (x: Long, y: Long) => x.compare(y)
+        case (x: Double, y: Double) => java.lang.Double.compare(x, y)
+        case (x: String, y: String) => x.compareTo(y)
+        case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
+        case _ => sys.error(s"incomparable $a, $b")
+      }
+      def cell(r: (Long, Double, String, java.time.LocalDate), c: String): Any =
+        r.productElement(probeCols.indexWhere(_._1 == c))
+      Prop.all(probes.flatMap { case c :: p :: lo :: hi :: Nil =>
+        val (tp, tlo, thi) = (typed(c, p), typed(c, lo), typed(c, hi))
+        val inPoint = (v: Any) => tp.exists(cmp(v, _) == 0)
+        val inRange = (v: Any) => tlo.exists(cmp(v, _) >= 0) && thi.exists(cmp(v, _) <= 0)
+        def holders(in: Any => Boolean) =
+          rowsOf.collect { case (seg, rs) if rs.exists(r => in(cell(r, c))) => seg }.toSet
+        def matching(in: Any => Boolean) = rowsOf.flatMap(_._2).count(r => in(cell(r, c)))
+        val point = TxLog.prunePoint(dir, c, p)._1
+        val range = TxLog.pruneRange(dir, c, Some(lo), Some(hi))._1
+        val pointSql = TxLog.triageCandidatesOf(spark, dir, s"$c = ${sqlLit(tp)}")
+        val rangeSql = TxLog.triageCandidatesOf(spark, dir,
+          s"$c >= ${sqlLit(tlo)} AND $c <= ${sqlLit(thi)}")
+        Seq(
+          (point == pointSql) :| s"prunePoint($c, '$p') kept $point, SQL triage $pointSql",
+          (range == rangeSql) :| s"pruneRange($c, '$lo', '$hi') kept $range, SQL triage $rangeSql",
+          holders(inPoint).subsetOf(point.toSet) :| s"prunePoint($c, '$p') pruned a match",
+          holders(inRange).subsetOf(range.toSet) :| s"pruneRange($c, '$lo', '$hi') pruned a match",
+          (tp.isEmpty || TxLog.readPoint(spark, dir, c, p).count() == matching(inPoint)) :|
+            s"readPoint($c, '$p')",
+          (tlo.isEmpty || thi.isEmpty ||
+            TxLog.readRange(spark, dir, c, Some(lo), Some(hi)).count() == matching(inRange)) :|
+            s"readRange($c, '$lo', '$hi')")
+      }: _*)
     }
 }

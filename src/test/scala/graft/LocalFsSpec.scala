@@ -16,9 +16,10 @@ import graft.sources.{LocalFs, TextKV, TxLog, Warehouse}
 
 /** Local writes set file and directory permissions in-process: a
   * JFR census of process starts over a miniature txlog tape, a
-  * streaming sink batch, a `key\tvalue` sink and a warehouse sink
-  * counts no forked `chmod`, and the files keep the modes and `.crc`
-  * sidecars Hadoop's local filesystem gives them. */
+  * streaming sink batch, the `key\tvalue` and `graftkv` sinks and a
+  * warehouse sink counts no forked `chmod`, and the files keep the
+  * modes and `.crc` sidecars Hadoop's local filesystem gives them —
+  * part files a txlog statement moves into fresh segments included. */
 class LocalFsSpec extends SparkTestBase {
 
   private def freshDir(prefix: String): String =
@@ -79,6 +80,10 @@ class LocalFsSpec extends SparkTestBase {
     }
     phase("writeKV")(TextKV.writeKV(docs(0L until 50L, 0).select("doc_id", "text"), s"$out/kv"))
     phase("warehouse")(Warehouse.writePartitioned(docs(0L until 50L, 0), s"$out/wh", "bucket"))
+    phase("graftkv") {
+      docs(0L until 50L, 0).select(col("doc_id").cast("string"), col("text"))
+        .repartition(4).write.format("graftkv").mode("overwrite").save(s"$out/gkv")
+    }
 
     val chmods = phases.map { case (n, evs) =>
       n -> evs.filter(e => Option(e.getString("command")).exists(_.startsWith("chmod")))
@@ -94,25 +99,51 @@ class LocalFsSpec extends SparkTestBase {
     assert(TxLog.read(spark, stream).count() == 20)
     assert(spark.read.text(s"$out/kv").count() == 50)
     assert(spark.read.parquet(s"$out/wh").count() == 50)
+    assert(spark.read.format("graftkv").load(s"$out/gkv").count() == 50)
 
     // modes and checksum sidecars as Hadoop's local filesystem leaves
     // them: rw-r--r-- part files, rwxr-xr-x directories, and a .crc
-    // beside each file a write left in place (optimize moves its part
-    // files into fresh segments without their sidecars)
-    val written = Seq(dir, stream, s"$out/kv", s"$out/wh").flatMap { root =>
+    // beside each file, those optimize moved into fresh segments too
+    val written = Seq(dir, stream, s"$out/kv", s"$out/wh", s"$out/gkv").flatMap { root =>
       Files.walk(java.nio.file.Paths.get(root)).iterator().asScala.toSeq
         .filter(p => p.getFileName.toString.startsWith("part-"))
     }
-    def movedByOptimize(p: JPath): Boolean =
-      p.startsWith(dir) && !Files.exists(p.resolveSibling("_SUCCESS"))
-    assert(written.count(!movedByOptimize(_)) > 20, s"part files written: $written")
+    assert(written.count(p => p.startsWith(dir) && !Files.exists(p.resolveSibling("_SUCCESS"))) > 0,
+      s"no part file moved by optimize: $written")
+    assert(written.size > 20, s"part files written: $written")
     written.foreach { p =>
       assert(mode(p) == "rw-r--r--", s"$p")
       assert(mode(p.getParent) == "rwxr-xr-x", s"${p.getParent}")
-      val crc = p.resolveSibling(s".${p.getFileName}.crc")
-      if (!movedByOptimize(p))
-        assert(Files.exists(crc) && mode(crc) == "rw-r--r--", s"$crc")
+      val crc = crcOf(p)
+      assert(Files.exists(crc) && mode(crc) == "rw-r--r--", s"$crc")
     }
+  }
+
+  private def crcOf(p: JPath): JPath = p.resolveSibling(s".${p.getFileName}.crc")
+
+  test("optimized and partitioned segments keep their .crc sidecars, and reads verify them") {
+    val optimized = freshDir("graft-crc-opt")
+    TxLog.append(docs(0L until 200L, 0).repartition(4), optimized)
+    TxLog.optimize(spark, optimized, Seq("bucket"), 10)
+    val partitioned = freshDir("graft-crc-part")
+    TxLog.setPartitionColumns(partitioned, Seq("bucket"))
+    TxLog.append(docs(0L until 200L, 0), partitioned)
+    def liveParts(dir: String): Seq[JPath] = TxLog.liveSegments(dir).flatMap { seg =>
+      Files.list(java.nio.file.Paths.get(dir, seg)).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("part-"))
+    }
+    val parts = Seq(optimized, partitioned).map(liveParts)
+    assert(parts.forall(_.size > 1), s"part files: $parts")
+    parts.flatten.foreach(p => assert(Files.exists(crcOf(p)), s"no checksum beside $p"))
+    // one flipped byte in an optimized segment's data fails the read
+    val victim = parts.head.head
+    val bytes = Files.readAllBytes(victim)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x5a).toByte
+    Files.write(victim, bytes)
+    val e = intercept[Exception](TxLog.read(spark, optimized).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]),
+      s"expected a ChecksumException, got ${chain.map(_.getClass.getName)}")
   }
 
   test("LocalFs.Raw leaves the modes the forking RawLocalFileSystem leaves; a sticky bit delegates") {

@@ -13,13 +13,8 @@ import graft.sources.TxLog
 class TxLogBloomProbeSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def withCap[T](cap: Int)(body: => T): T = {
-    val old = System.getProperty("graft.txlog.bloomProbeCap")
-    System.setProperty("graft.txlog.bloomProbeCap", cap.toString)
-    try body
-    finally if (old == null) System.clearProperty("graft.txlog.bloomProbeCap")
-    else System.setProperty("graft.txlog.bloomProbeCap", old)
-  }
+  private def withCap[T](cap: Int)(body: => T): T =
+    TxLog.withBloomProbeCap(cap)(body)
 
   /** 12 segments whose `id` ranges all overlap (1..1000 with one
     * shared outlier pattern) but whose bloom'd `key` values are

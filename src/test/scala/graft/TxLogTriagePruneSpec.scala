@@ -244,10 +244,7 @@ class TxLogTriagePruneSpec extends SparkTestBase {
           .toDF("id", "v"), dir, Seq("id"), bloomCols = Seq("id"))
     }
     val probe = "id = 12" // lives in exactly segment i=2
-    def withCap[T](cap: Int)(body: => T): T = {
-      System.setProperty("graft.txlog.bloomProbeCap", cap.toString)
-      try body finally System.clearProperty("graft.txlog.bloomProbeCap")
-    }
+    def withCap[T](cap: Int)(body: => T): T = TxLog.withBloomProbeCap(cap)(body)
     // under the cap: blooms prune to the single holder via DRIVER-side
     // lazy sidecar reads (observable in metaReads)
     val before = graft.sources.LogStore.metaReads.get()
