@@ -1794,22 +1794,17 @@ private[graft] case class ColStats(typeName: String, min: String,
     * stale-snapshot conflict semantics. Assumes `key` unique within
     * `updates` (the usual MERGE contract). */
   def mergeMoR(spark: SparkSession, dir: String, updates: DataFrame, key: String,
-               statsCols: Seq[String] = Nil): Int =
-    mergeMoRAs(spark, dir, updates, key, "merge_mor", statsCols,
-      dedupStreamOp = false).get
-
-  /** When `dedupStreamOp`, the already-committed check runs against THE
-    * SAME snapshot the conditional commit is conditioned on (not a
-    * separate earlier state read): a concurrent writer replaying the
-    * same batch id between check and commit necessarily moves the head
-    * past `snap.version`, so the commit conflicts loud instead of
-    * double-applying the batch. */
-  private def mergeMoRAs(spark: SparkSession, dir: String, updates: DataFrame,
-                         key: String, op: String,
-                         statsCols: Seq[String],
-                         dedupStreamOp: Boolean): Option[Int] =
-    mergeMoRVia(spark, dir, key, op, statsCols, dedupStreamOp, None)(
-      snap => newSegment(dir, updates, snapOpt = Some(snap)))
+               statsCols: Seq[String] = Nil): Int = {
+    val snap = state(dir)
+    val staged = newSegment(dir, updates, snapOpt = Some(snap))
+    // any exit that didn't commit deletes the staged updates segment
+    // (no entry records it, so vacuum never could)
+    reclaimOnFailure(dir, staged.segs) {
+      mergeMoRAt(spark, dir, key, "merge_mor", stream = false)(snap, staged,
+        segStatsMany(spark, dir, staged.segs,
+          (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files)))
+    }
+  }
 
   /** [[mergeStreamMoR]] over a TASK-STAGED updates segment (the v2
     * streaming sink's upsert mode): identical dedup/tombstone/commit
@@ -1817,109 +1812,73 @@ private[graft] case class ColStats(typeName: String, min: String,
   private[graft] def mergeStreamMoRStaged(spark: SparkSession, dir: String,
       rawSeg: String, key: String, batchId: Long,
       statsCols: Seq[String] = Nil,
-      txnAppId: Option[String] = None): Option[Int] =
-    mergeMoRVia(spark, dir, key, streamOp(txnAppId, batchId), statsCols,
-      dedupStreamOp = true, preStaged = Some(rawSeg))(
-      snap => finalizeStagedSegment(spark, dir, rawSeg, snap))
+      txnAppId: Option[String] = None): Option[Int] = {
+    val op = streamOp(txnAppId, batchId)
+    commitStreamOp(spark, dir, op, statsCols, Some(rawSeg))(
+      snap => finalizeStagedSegment(spark, dir, rawSeg, snap))(
+      mergeMoRAt(spark, dir, key, op, stream = true))
+  }
 
-  private def mergeMoRVia(spark: SparkSession, dir: String,
-                          key: String, op: String,
-                          statsCols: Seq[String],
-                          dedupStreamOp: Boolean,
-                          preStaged: Option[String])(
-                          stage: State => Staged): Option[Int] = {
-    var snap = state(dir)
-    if (dedupStreamOp && snap.streamOps.contains(op)) {
-      preStaged.foreach(reclaimUnlessLive(dir, snap, _))
-      return None
-    }
-    val gov = govFingerprint(snap)
-    val staged = stage(snap)
+  /** One attempt of a MoR upsert of the staged updates segment against
+    * `snap`, the snapshot its conditional commit is conditioned on.
+    * Tombstone COORDINATES are derived per attempt: a retry against a
+    * newer head must recompute them (a concurrent compaction may have
+    * rewritten the very segments stale coordinates pointed into), and
+    * a failed attempt reclaims its own DV sidecar. */
+  private def mergeMoRAt(spark: SparkSession, dir: String, key: String,
+      op: String, stream: Boolean)(snap: State, staged: Staged,
+      stats: Map[(String, String), ColStats]): Int = {
     val uSeg = staged.segs.head
-    // outer reclaim: any exit that didn't commit deletes the staged
-    // updates segment (no entry records it, so vacuum never could)
+    var dvName: Option[String] = None
     try {
-      val stats = segStats(spark, dir, uSeg,
-        (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files))
-      while (true) {
-        // per-attempt probe: tombstone COORDINATES are derived from the
-        // exact snapshot the conditional commit is conditioned on — a
-        // retry against a newer head must recompute them (a concurrent
-        // compaction may have rewritten the very segments the stale
-        // coordinates pointed into)
-        var dvName: Option[String] = None
-        try {
-          // staged bytes carry physical names; probe in logical terms
-          val u = applyMapping(scanSegments(spark, dir,
-            snap.withFiles(staged.files), staged.segs), snap)
-          val candidates = keyCandidates(spark, snap, u, key, key)
-          val uKeys = broadcast(u.select(col(key)).distinct())
-          val dirty: Seq[(String, Long)] =
-            if (candidates.isEmpty) Seq.empty
-            else {
-              val name = s"dv-${java.util.UUID.randomUUID}"
-              LocalFs.writer(
-                segScan(spark, dir, snap, candidates,
-                    mergeSchema = true, withMeta = true)
-                  .join(uKeys, Seq(key), "left_semi")
-                  .select(col("__file").as("file"), col("__pos").as("pos"),
-                    segOfFile(col("__file")).as("seg")))
-                .parquet(s"$dir/$name")
-              val d = stagedScan(spark, dir, snap, name)
-                .groupBy("seg").agg(count(lit(1)).as("n"))
-                .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-              if (d.isEmpty) store(dir).deleteRecursively(s"$dir/$name")
-              else dvName = Some(name)
-              d
-            }
-          val entryOf = snap.live.map(n => bareName(n) -> n).toMap
-          val dvLines = dirty.map { case (seg, n) =>
-            (entryOf.getOrElse(seg, seg), dvName.get, n) }
-          val bump = if (dirty.nonEmpty) protoBump(snap) else Seq.empty
-          // BATCH merge commutes with pure blind appends like every
-          // DML (serial order ⟨merge, appends⟩; the staged DV's
-          // coordinates stay valid — appends move no segment), so it
-          // re-claims through commitOrReclaim. The STREAMING path must
-          // NOT: its dedup contract re-checks streamOps against every
-          // newer head, and a content-classified retry would skip that
-          // re-check (a concurrent duplicate of the same batch id is
-          // itself a pure add — retrying past it double-applies).
-          return Some(
-            if (dedupStreamOp)
-              commit(dir, op, Seq(uSeg), Seq.empty, Some(snap.version),
-                stats = stats, dvs = dvLines, extraLines = bump,
-                files = staged.files)
-            else
-              commitOrReclaim(dir, op, Seq(uSeg), Seq.empty, snap.version,
-                stats = stats, dvs = dvLines, extraLines = bump,
-                alsoReclaim = dvName.toSeq, retryPastAppends = true,
-                files = staged.files))
-        } catch {
-          case e: java.util.ConcurrentModificationException =>
-            dvName.foreach(n => store(dir).deleteRecursively(s"$dir/$n"))
-            // a TRUE batch-merge conflict stays loud (commitOrReclaim
-            // above already reclaimed uSeg + sidecar; these deletes
-            // no-op); the STREAMING sink falls through to its dedup
-            // re-check loop (sink liveness — appendStream's contract)
-            if (!dedupStreamOp) throw e
-            snap = state(dir)
-            if (snap.streamOps.contains(op)) {
-              store(dir).deleteRecursively(s"$dir/$uSeg")
-              return None // a concurrent duplicate of this batch id won
-            }
-            if (govFingerprint(snap) != gov)
-              throw new java.util.ConcurrentModificationException(
-                s"$op against $dir: table governance changed after the " +
-                  "batch was staged — the retried batch restages")
-          case scala.util.control.NonFatal(e) =>
-            dvName.foreach(n => store(dir).deleteRecursively(s"$dir/$n"))
-            throw e
+      // staged bytes carry physical names; probe in logical terms
+      val u = applyMapping(scanSegments(spark, dir,
+        snap.withFiles(staged.files), staged.segs), snap)
+      val candidates = keyCandidates(spark, snap, u, key, key)
+      val uKeys = broadcast(u.select(col(key)).distinct())
+      val dirty: Seq[(String, Long)] =
+        if (candidates.isEmpty) Seq.empty
+        else {
+          val name = s"dv-${java.util.UUID.randomUUID}"
+          LocalFs.writer(
+            segScan(spark, dir, snap, candidates,
+                mergeSchema = true, withMeta = true)
+              .join(uKeys, Seq(key), "left_semi")
+              .select(col("__file").as("file"), col("__pos").as("pos"),
+                segOfFile(col("__file")).as("seg")))
+            .parquet(s"$dir/$name")
+          val d = stagedScan(spark, dir, snap, name)
+            .groupBy("seg").agg(count(lit(1)).as("n"))
+            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
+          if (d.isEmpty) store(dir).deleteRecursively(s"$dir/$name")
+          else dvName = Some(name)
+          d
         }
-      }
-      None // unreachable
+      val entryOf = snap.live.map(n => bareName(n) -> n).toMap
+      val dvLines = dirty.map { case (seg, n) =>
+        (entryOf.getOrElse(seg, seg), dvName.get, n) }
+      val bump = if (dirty.nonEmpty) protoBump(snap) else Seq.empty
+      // BATCH merge commutes with pure blind appends like every
+      // DML (serial order ⟨merge, appends⟩; the staged DV's
+      // coordinates stay valid — appends move no segment), so it
+      // re-claims through commitOrReclaim, and a TRUE conflict stays
+      // loud. The STREAMING path must NOT: its dedup contract re-checks
+      // streamOps against every newer head ([[commitStreamOp]]), and a
+      // content-classified retry would skip that re-check (a concurrent
+      // duplicate of the same batch id is itself a pure add — retrying
+      // past it double-applies).
+      if (stream)
+        commit(dir, op, Seq(uSeg), Seq.empty, Some(snap.version),
+          stats = stats, dvs = dvLines, extraLines = bump,
+          files = staged.files)
+      else
+        commitOrReclaim(dir, op, Seq(uSeg), Seq.empty, snap.version,
+          stats = stats, dvs = dvLines, extraLines = bump,
+          alsoReclaim = dvName.toSeq, retryPastAppends = true,
+          files = staged.files)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        store(dir).deleteRecursively(s"$dir/$uSeg")
+        dvName.foreach(n => store(dir).deleteRecursively(s"$dir/$n"))
         throw e
     }
   }
@@ -2414,8 +2373,10 @@ private[graft] case class ColStats(typeName: String, min: String,
 
   /** `a < b` in the stat column's own domain (see [[canPrune]]'s
     * collation notes) — throws NumberFormatException on an unparseable
-    * value, which both callers, [[triageByBounds]] (through
-    * [[canPrune]]) and [[allMatchByStats]], catch as "proves nothing". */
+    * value. Both readers of [[conjunctBoundsOf]]'s conjuncts compare
+    * through it, exclusion ([[triageByBounds]], via [[canPrune]]) and
+    * the all-match proof ([[allMatchByStats]]), and both catch that as
+    * "proves nothing". */
   private def statLt(tn: String, a: String, b: String): Boolean = {
     val integral = Set("byte", "short", "integer", "long").contains(tn) ||
       tn.startsWith("decimal")
@@ -3138,8 +3099,9 @@ private[graft] case class ColStats(typeName: String, min: String,
   def appendStream(df: DataFrame, dir: String, batchId: Long,
                    statsCols: Seq[String] = Nil,
                    txnAppId: Option[String] = None): Option[Int] =
-    appendStreamVia(df.sparkSession, dir, batchId, statsCols, None,
-      txnAppId)(snap => newSegments(dir, df, snapOpt = Some(snap)))
+    writeStreamVia(df.sparkSession, dir, streamOp(txnAppId, batchId),
+      statsCols, None, replace = false)(
+      snap => newSegments(dir, df, snapOpt = Some(snap)))
 
   /** The committed-batch dedup KEY. `txnAppId` is Delta's
     * txnAppId/txnVersion split: batch ids are PER WRITER, so two
@@ -3164,15 +3126,47 @@ private[graft] case class ColStats(typeName: String, min: String,
       rawSeg: String, batchId: Long,
       statsCols: Seq[String] = Nil,
       txnAppId: Option[String] = None): Option[Int] =
-    appendStreamVia(spark, dir, batchId, statsCols, Some(rawSeg),
-      txnAppId)(snap => finalizeStagedSegments(spark, dir, rawSeg, snap))
+    writeStreamVia(spark, dir, streamOp(txnAppId, batchId), statsCols,
+      Some(rawSeg), replace = false)(
+      snap => finalizeStagedSegments(spark, dir, rawSeg, snap))
 
-  private def appendStreamVia(spark: SparkSession, dir: String,
-      batchId: Long, statsCols: Seq[String], preStaged: Option[String],
-      txnAppId: Option[String])(
-      stage: State => Staged): Option[Int] = {
-    val op = streamOp(txnAppId, batchId)
-    var snap = state(dir)
+  /** The one body of [[appendStream]] and [[overwriteStream]] and their
+    * task-staged forms. `replace` removes the live set of the snapshot
+    * each attempt is conditioned on, re-resolved on every retry, so a
+    * racing append is replaced rather than resurrected. */
+  private def writeStreamVia(spark: SparkSession, dir: String, op: String,
+      statsCols: Seq[String], preStaged: Option[String], replace: Boolean)(
+      stage: State => Staged): Option[Int] =
+    commitStreamOp(spark, dir, op, statsCols, preStaged)(stage) {
+      (snap, staged, stats) =>
+        commit(dir, op, staged.segs, if (replace) snap.live else Seq.empty,
+          Some(snap.version), stats = stats, files = staged.files)
+    }
+
+  /** The exactly-once commit of stream op `op`, the one loop every
+    * stream write (append, Complete-mode replace, MoR upsert) commits
+    * through. An op the head already records is skipped (None), and
+    * the task-staged bytes `preStaged` of a replayed sink batch are
+    * reclaimed. Otherwise the batch is staged against that head, its
+    * stats are computed once (physical names are stable for the
+    * table's lifetime, so retries need no re-agg), and `attempt` runs
+    * against the snapshot its conditional commit is conditioned on —
+    * the SAME snapshot the dedup check read, so a racing writer of the
+    * same op moves the head and conflicts instead of double-applying.
+    * On a conflict the head is re-read: if the op is now committed, a
+    * concurrent duplicate won the slot, and the staged segments are
+    * reclaimed (None); if governance changed, the staged bytes were
+    * validated against a stale contract, and the call fails loud so
+    * the engine's batch retry restages (the same gate as [[commit]]'s
+    * blind path); any other commit just retries at the new head, which
+    * keeps the blind-append liveness of a busy table. Any other exit
+    * that does not commit reclaims the staged segments too: no entry
+    * records them, so vacuum never could. */
+  private def commitStreamOp(spark: SparkSession, dir: String, op: String,
+      statsCols: Seq[String], preStaged: Option[String])(
+      stage: State => Staged)(
+      attempt: (State, Staged, Map[(String, String), ColStats]) => Int): Option[Int] = {
+    val snap = state(dir)
     if (snap.streamOps.contains(op)) {
       // an at-least-once replay of a committed batch: a foreachBatch
       // caller has staged nothing yet; the sink's writers already
@@ -3182,42 +3176,25 @@ private[graft] case class ColStats(typeName: String, min: String,
     }
     val gov = govFingerprint(snap)
     val staged = stage(snap)
-    val segs = staged.segs
-    // any exit that didn't commit reclaims the staged segments — a
-    // stats failure, a raised writer floor, a governance change — not
-    // just the duplicate-batch path (no entry records them, so vacuum
-    // could never collect the orphans)
-    try {
-      val stats = segStatsMany(spark, dir, segs,
+    reclaimOnFailure(dir, staged.segs) {
+      val stats = segStatsMany(spark, dir, staged.segs,
         (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files))
-      while (true) {
-        try return Some(commit(dir, op, segs, Seq.empty,
-          Some(snap.version), stats = stats, files = staged.files))
-        catch {
-          case _: java.util.ConcurrentModificationException =>
-            snap = state(dir)
-            if (snap.streamOps.contains(op)) {
-              // the duplicate won the slot: our staged segments are
-              // referenced by no entry — reclaim, report already-committed
-              segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
-              return None
-            }
-            // unrelated commit: retry at the new head — unless it
-            // changed governance, in which case the staged bytes were
-            // validated against a stale contract; fail loud so the
-            // engine's batch retry restages (same gate as [[commit]]'s
-            // blind path)
-            if (govFingerprint(snap) != gov)
-              throw new java.util.ConcurrentModificationException(
-                s"$op against $dir: table governance changed after the " +
-                  "batch was staged — the retried batch restages")
+      @annotation.tailrec
+      def loop(at: State): Option[Int] =
+        (try Right(attempt(at, staged, stats))
+         catch { case _: java.util.ConcurrentModificationException => Left(state(dir)) }
+        ) match {
+          case Right(v) => Some(v)
+          case Left(snap) if snap.streamOps.contains(op) =>
+            staged.segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
+            None
+          case Left(snap) if govFingerprint(snap) != gov =>
+            throw new java.util.ConcurrentModificationException(
+              s"$op against $dir: table governance changed after the " +
+                "batch was staged — the retried batch restages")
+          case Left(snap) => loop(snap)
         }
-      }
-      None // unreachable
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
-        throw e
+      loop(snap)
     }
   }
 
@@ -3230,16 +3207,19 @@ private[graft] case class ColStats(typeName: String, min: String,
     * like every stream op, and the dedup probe stays
     * O(checkpoint + tail). Write cost per batch ∝ |batch| (tombstones
     * + the batch segment) — never a target rewrite. The dedup check
-    * runs inside [[mergeMoRAs]] against the SAME snapshot the
+    * runs in [[commitStreamOp]] against the SAME snapshot the
     * conditional commit is conditioned on, so a cross-process duplicate
-    * of the same batch id conflicts loud instead of double-applying
-    * (the failed batch retries, sees the committed op, and skips). */
+    * of the same batch id conflicts instead of double-applying (the
+    * loser re-reads, sees the committed op, and skips). */
   def mergeStreamMoR(spark: SparkSession, dir: String, updates: DataFrame,
                      key: String, batchId: Long,
                      statsCols: Seq[String] = Nil,
-                     txnAppId: Option[String] = None): Option[Int] =
-    mergeMoRAs(spark, dir, updates, key, streamOp(txnAppId, batchId),
-      statsCols, dedupStreamOp = true)
+                     txnAppId: Option[String] = None): Option[Int] = {
+    val op = streamOp(txnAppId, batchId)
+    commitStreamOp(spark, dir, op, statsCols, None)(
+      snap => newSegment(dir, updates, snapOpt = Some(snap)))(
+      mergeMoRAt(spark, dir, key, op, stream = true))
+  }
 
   /** Idempotent streaming OVERWRITE — [[appendStream]]'s contract for
     * Complete-mode sinks (a streaming aggregation that REPLACES the
@@ -3252,8 +3232,9 @@ private[graft] case class ColStats(typeName: String, min: String,
   def overwriteStream(df: DataFrame, dir: String, batchId: Long,
                       statsCols: Seq[String] = Nil,
                       txnAppId: Option[String] = None): Option[Int] =
-    overwriteStreamVia(df.sparkSession, dir, batchId, statsCols, None,
-      txnAppId)(snap => newSegments(dir, df, snapOpt = Some(snap)))
+    writeStreamVia(df.sparkSession, dir, streamOp(txnAppId, batchId),
+      statsCols, None, replace = true)(
+      snap => newSegments(dir, df, snapOpt = Some(snap)))
 
   /** [[overwriteStream]] over a TASK-STAGED segment (the v2 streaming
     * sink's Complete mode): identical dedup/replace contract. */
@@ -3261,54 +3242,9 @@ private[graft] case class ColStats(typeName: String, min: String,
       rawSeg: String, batchId: Long,
       statsCols: Seq[String] = Nil,
       txnAppId: Option[String] = None): Option[Int] =
-    overwriteStreamVia(spark, dir, batchId, statsCols, Some(rawSeg),
-      txnAppId)(snap => finalizeStagedSegments(spark, dir, rawSeg, snap))
-
-  private def overwriteStreamVia(spark: SparkSession, dir: String,
-      batchId: Long, statsCols: Seq[String], preStaged: Option[String],
-      txnAppId: Option[String])(
-      stage: State => Staged): Option[Int] = {
-    val op = streamOp(txnAppId, batchId)
-    var snap = state(dir)
-    if (snap.streamOps.contains(op)) {
-      preStaged.foreach(reclaimUnlessLive(dir, snap, _))
-      return None
-    }
-    val gov = govFingerprint(snap)
-    val staged = stage(snap)
-    val segs = staged.segs
-    // reclaim the staged segments on ANY non-commit exit (see
-    // [[appendStream]]); retries re-resolve the remove set so a racing
-    // append is replaced rather than resurrected, and a governance
-    // change fails loud so the engine's batch retry restages
-    try {
-      // stats once, like appendStream: physical names are stable for
-      // the table's lifetime, so the snapshot retries need no re-agg
-      val stats = segStatsMany(spark, dir, segs,
-        (snap.partitionCols ++ statsCols).distinct, snap.withFiles(staged.files))
-      while (true) {
-        try return Some(commit(dir, op, segs, snap.live, Some(snap.version),
-          stats = stats, files = staged.files))
-        catch {
-          case _: java.util.ConcurrentModificationException =>
-            snap = state(dir)
-            if (snap.streamOps.contains(op)) {
-              segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
-              return None
-            }
-            if (govFingerprint(snap) != gov)
-              throw new java.util.ConcurrentModificationException(
-                s"$op against $dir: table governance changed after the " +
-                  "batch was staged — the retried batch restages")
-        }
-      }
-      None // unreachable
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        segs.foreach(s0 => store(dir).deleteRecursively(s"$dir/$s0"))
-        throw e
-    }
-  }
+    writeStreamVia(spark, dir, streamOp(txnAppId, batchId), statsCols,
+      Some(rawSeg), replace = true)(
+      snap => finalizeStagedSegments(spark, dir, rawSeg, snap))
 
   /** Replace the table contents with `df`. Conflicts (fails) if any
     * commit lands between the snapshot and this commit — the replaced
@@ -3326,32 +3262,22 @@ private[graft] case class ColStats(typeName: String, min: String,
     }
   }
 
-  /** Per prunable conjunct: (column, literal kind, alternative ranges). */
-  private[graft] type Bounds = Seq[(String, String, Seq[(Option[String], Option[String])])]
+  /** One alternative range of a conjunct: [lo, hi] (None = unbounded),
+    * each side strict (`<`, `>`) or inclusive (`=`, `<=`, `>=`, IN). */
+  private[graft] final case class Alt(lo: Option[String], loStrict: Boolean,
+                                      hi: Option[String], hiStrict: Boolean)
 
-  /** PRUNABLE CONJUNCTS of an arbitrary SQL predicate: (logical
-    * column, literal kind, alternative [lo,hi] ranges) parsed out of
-    * top-level AND terms of the form `col {=,<,<=,>,>=} literal`
-    * (either operand order), `col BETWEEN lo AND hi` (desugared to the
-    * >=/<= pair) and `col IN (...)` (an OR of point ranges, ≤64
-    * elements). Because the predicate is a CONJUNCTION, a segment
-    * whose recorded [min,max] proves any single conjunct unsatisfiable
-    * — i.e. excludes EVERY one of its alternative ranges — can hold no
-    * matching row: arbitrary-predicate DML triage skips it from log
-    * metadata alone, never opening a file. Anything unanalyzable (OR,
-    * NOT, function calls, casts, non-literal operands) contributes
-    * nothing: strictly conservative.
-    *
-    * Literal/stat TYPE-FAMILY guard (correctness, not pedantry): a
-    * bound is only usable when the literal compares in the same domain
-    * [[canPrune]] compares stats in. Numeric literals pair with
-    * numeric stat types (BigDecimal/double compare, exact); string
-    * literals pair ONLY with string stat columns — `long_col = '05'`
-    * under a lexicographic compare would falsely prune the segment
-    * whose row int-compares equal, and a non-canonical date string
-    * (`'2024-1-5'`) ordered against canonical ISO stats can prune a
-    * segment that holds matches. A falsely-pruned DML segment is
-    * silent row loss, so every unprovable pairing is rejected. */
+  /** One recognized top-level conjunct: its logical column, its literal
+    * kind (see [[statComparable]]) and its alternative ranges, an OR:
+    * one for a comparison, one point per element for IN. */
+  private[graft] final case class Conj(column: String, kind: Char, alts: Seq[Alt])
+
+  /** A predicate as [[conjunctBoundsOf]] reads it: per top-level
+    * conjunct, its bounds, or None when the conjunct is unrecognized. */
+  private[graft] type Bounds = Seq[Option[Conj]]
+
+  /** [[conjunctBoundsOf]] over a SQL predicate string, parsed to the
+    * UNRESOLVED form; an unparseable predicate reads as no conjuncts. */
   private[graft] def prunableConjuncts(spark: SparkSession, predicate: String): Bounds = {
     val parsed =
       try spark.sessionState.sqlParser.parseExpression(predicate)
@@ -3359,34 +3285,52 @@ private[graft] case class ColStats(typeName: String, min: String,
     conjunctBoundsOf(Seq(parsed))
   }
 
-  /** The conjunct-bounds walker shared by the string-predicate surface
-    * ([[prunableConjuncts]], which parses to the UNRESOLVED form) and
-    * the DSv2 pushdown surface (which hands the optimizer's RESOLVED
-    * expressions straight in — AttributeReference instead of
-    * UnresolvedAttribute, internal literal values like UTF8String,
-    * whose toString is the same cast-to-string domain the stats
-    * recorded). Anything unrecognized contributes no bound —
-    * strictly conservative. */
+  /** The ONE predicate walker of the txlog: per top-level AND term, its
+    * (logical column, literal kind, alternative ranges) when the term is
+    * `col {=,<,<=,>,>=} literal` (either operand order), `col BETWEEN lo
+    * AND hi` (desugared to the >=/<= pair) or `col IN (...)` (an OR of
+    * point ranges, ≤ 1024 elements, all literals of one kind), and None
+    * for anything else (OR, NOT, function calls, casts, non-literal
+    * operands). Each range keeps its strictness. Its two readers:
+    * exclusion ([[triageByBounds]]) skips a segment whose recorded
+    * [min,max] rules out every alternative of ANY recognized conjunct,
+    * ignoring strictness and unrecognized conjuncts (both only ever
+    * keep more); the all-match proof ([[allMatchByStats]]) needs EVERY
+    * conjunct recognized, strictness intact.
+    *
+    * It reads the string-predicate surface ([[prunableConjuncts]]:
+    * unresolved attributes) and the DSv2 pushdown surface (the
+    * optimizer's RESOLVED expressions — AttributeReference, internal
+    * literal values like UTF8String, whose toString is the same
+    * cast-to-string domain the stats recorded) alike.
+    *
+    * Literal/stat TYPE-FAMILY guard (correctness, not pedantry): a
+    * bound is only usable when the literal compares in the same domain
+    * the stats compare in ([[literalBound]], [[statComparable]]).
+    * `long_col = '05'` under a lexicographic compare would falsely
+    * prune the segment whose row int-compares equal, and a
+    * non-canonical date string (`'2024-1-5'`) ordered against canonical
+    * ISO stats can prune a segment that holds matches. A falsely-pruned
+    * DML segment is silent row loss, so every unprovable pairing is
+    * rejected. */
   private[graft] def conjunctBoundsOf(
       predicates: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Bounds = {
     import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
     def split(e: ce.Expression): Seq[ce.Expression] = e match {
       case ce.And(a, b) => split(a) ++ split(b)
       // the parser leaves BETWEEN unresolved ('between(col, lo, hi) —
       // its replacement is only built at analysis); desugar to the
       // >=/<= pair ourselves, plus the RuntimeReplaceable node for
       // programmatically-built trees
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+      case f: UnresolvedFunction
         if f.nameParts.map(_.toLowerCase) == Seq("between") &&
           f.arguments.size == 3 && !f.isDistinct && f.filter.isEmpty =>
-        split(ce.And(ce.GreaterThanOrEqual(f.arguments(0), f.arguments(1)),
-          ce.LessThanOrEqual(f.arguments(0), f.arguments(2))))
+        Seq(ce.GreaterThanOrEqual(f.arguments(0), f.arguments(1)),
+          ce.LessThanOrEqual(f.arguments(0), f.arguments(2)))
       case ce.Between(input, lower, upper, _) =>
-        split(ce.And(ce.GreaterThanOrEqual(input, lower),
-          ce.LessThanOrEqual(input, upper)))
-      case other        => Seq(other)
+        Seq(ce.GreaterThanOrEqual(input, lower), ce.LessThanOrEqual(input, upper))
+      case other => Seq(other)
     }
     def attr(e: ce.Expression): Option[String] = e match {
       case a: UnresolvedAttribute if a.nameParts.size == 1 =>
@@ -3394,51 +3338,44 @@ private[graft] case class ColStats(typeName: String, min: String,
       case a: ce.AttributeReference => Some(a.name)
       case _ => None
     }
-    // literal kinds: the shared [[literalBound]] recognizer (r16) —
-    // exact numerics, gated float/double, binary-collation strings,
-    // and date/timestamp literals rendered to the stats' string domain
-    def lit(e: ce.Expression): Option[(String, Char)] = literalBound(e)
-    // one conjunct = (col, kind, ALTERNATIVE ranges): the conjunct is
-    // an OR of its ranges (one for comparisons, k for IN), so a
-    // segment is skippable only when EVERY alternative is excluded
-    type Conj = (String, Char, Seq[(Option[String], Option[String])])
+    // `col op v` reads as mk(v), the swapped `v op col` as flip(v)
     def cmp(a: ce.Expression, b: ce.Expression,
-            mk: String => (Option[String], Option[String]),
-            flip: String => (Option[String], Option[String])): Option[Conj] =
-      attr(a).flatMap(c => lit(b).map { case (v, k) => (c, k, Seq(mk(v))) })
-        .orElse(attr(b).flatMap(c => lit(a).map { case (v, k) => (c, k, Seq(flip(v))) }))
-    val conjuncts: Seq[Conj] = predicates.flatMap(split).flatMap {
-      case ce.EqualTo(a, b) =>
-        cmp(a, b, v => (Some(v), Some(v)), v => (Some(v), Some(v)))
+            mk: String => Alt, flip: String => Alt): Option[Conj] =
+      attr(a).flatMap(c => literalBound(b).map { case (v, k) => Conj(c, k, Seq(mk(v))) })
+        .orElse(attr(b).flatMap(c =>
+          literalBound(a).map { case (v, k) => Conj(c, k, Seq(flip(v))) }))
+    def point(v: String) = Alt(Some(v), false, Some(v), false)
+    def above(strict: Boolean)(v: String) = Alt(Some(v), strict, None, false)
+    def below(strict: Boolean)(v: String) = Alt(None, false, Some(v), strict)
+    predicates.flatMap(split).map {
+      case ce.EqualTo(a, b) => cmp(a, b, point, point)
       case ce.GreaterThan(a, b) => // col > v | v > col ≡ col < v
-        cmp(a, b, v => (Some(v), None), v => (None, Some(v)))
+        cmp(a, b, above(strict = true), below(strict = true))
       case ce.GreaterThanOrEqual(a, b) =>
-        cmp(a, b, v => (Some(v), None), v => (None, Some(v)))
+        cmp(a, b, above(strict = false), below(strict = false))
       case ce.LessThan(a, b) => // col < v | v < col ≡ col > v
-        cmp(a, b, v => (None, Some(v)), v => (Some(v), None))
+        cmp(a, b, below(strict = true), above(strict = true))
       case ce.LessThanOrEqual(a, b) =>
-        cmp(a, b, v => (None, Some(v)), v => (Some(v), None))
+        cmp(a, b, below(strict = false), above(strict = false))
       case ce.In(a, list) if list.nonEmpty && list.size <= 1024 =>
         // IN = OR of point probes; usable only when every element is a
         // literal of ONE kind (bounded at 1024 to cap per-segment
         // driver metadata work — the same bound overwriteDynamic
         // enforces so its IN-shaped predicate is always recognized)
         attr(a).flatMap { c =>
-          val ls = list.map(lit)
+          val ls = list.map(literalBound)
           if (ls.exists(_.isEmpty)) None
           else ls.flatten.map(_._2).distinct match {
-            case Seq(k) => Some((c, k, ls.flatten.map {
-              case (v, _) => (Some(v), Some(v)) }))
+            case Seq(k) => Some(Conj(c, k, ls.flatten.map { case (v, _) => point(v) }))
             case _ => None
           }
         }
       case _ => None
     }
-    conjuncts.map { case (c, k, alts) => (c, k.toString, alts) }
   }
 
   /** True iff `tn` (a stat column's recorded type name) and a literal
-    * kind from [[prunableConjuncts]] compare in the same domain.
+    * kind from [[conjunctBoundsOf]] compare in the same domain.
     *
     * Kinds (r16, ADVICE r15): `N` = exact numeric literal (integral /
     * decimal — compares exactly in any numeric stat domain), `F` =
@@ -3451,17 +3388,17 @@ private[graft] case class ColStats(typeName: String, min: String,
     * `D`/`T`/`U` = date / timestamp / timestamp_ntz literals rendered
     * to the stats' own cast-to-string domain (ISO forms, byte-ordered
     * chronologically — see [[literalBound]]). */
-  private def statComparable(tn: String, kind: String): Boolean = {
+  private def statComparable(tn: String, kind: Char): Boolean = {
     val fpTn = tn == "float" || tn == "double"
     val exactTn = Set("byte", "short", "integer", "long").contains(tn) ||
       tn.startsWith("decimal")
     kind match {
-      case "N" => exactTn || fpTn
-      case "F" => fpTn
-      case "S" => tn == "string"
-      case "D" => tn == "date"
-      case "T" => tn == "timestamp"
-      case "U" => tn == "timestamp_ntz"
+      case 'N' => exactTn || fpTn
+      case 'F' => fpTn
+      case 'S' => tn == "string"
+      case 'D' => tn == "date"
+      case 'T' => tn == "timestamp"
+      case 'U' => tn == "timestamp_ntz"
       case _   => false
     }
   }
@@ -3469,7 +3406,7 @@ private[graft] case class ColStats(typeName: String, min: String,
   /** True when the session's DEFAULT string collation is binary.
     * Non-binary defaults (UTF8_LCASE) make every byte-order string
     * proof unsound — `col = 'apple'` matches 'APPLE' rows that byte
-    * stats order far from the literal — so the walkers refuse string
+    * stats order far from the literal — so the walker refuses string
     * bounds entirely under them (ADVICE r15). */
   private def binaryCollationDefault: Boolean =
     try org.apache.spark.sql.internal.SQLConf.get
@@ -3499,9 +3436,8 @@ private[graft] case class ColStats(typeName: String, min: String,
         s.substring(0, 4).forall(c => c >= '0' && c <= '9'))
   }
 
-  /** The shared literal recognizer of both triage walkers
-    * ([[conjunctBoundsOf]] exclusion, [[allMatchByStats]] all-match):
-    * Some((rendered value, kind)) for literals that compare soundly
+  /** The literal recognizer of [[conjunctBoundsOf]]: Some((rendered
+    * value, kind)) for literals that compare soundly
     * against recorded stats, None for everything else (strictly
     * conservative — an unrecognized literal just means a scan). */
   private def literalBound(
@@ -3530,8 +3466,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * be skipped. The bounds come from a SQL predicate
     * ([[prunableConjuncts]]: DML triage, [[readWhere]]), the
     * optimizer's resolved filters (DSv2 pushdown) or a typed
-    * one-column probe ([[probeBounds]]). Each conjunct is intersected
-    * with the per-segment stats via [[canPrune]] and, for point
+    * one-column probe ([[probeBounds]]). Each recognized conjunct is
+    * intersected with the per-segment stats via [[canPrune]] and, for point
     * alternatives, the Bloom sidecars; segments without stats on a
     * conjunct's column stay in (conservative). This is what makes a
     * date-sliced `delete`/`replaceWhere`/`update` on a 100 TB table
@@ -3539,7 +3475,10 @@ private[graft] case class ColStats(typeName: String, min: String,
     * slice instead of reading the predicate columns of EVERY live row. */
   private def triageByBounds(snap: State, bounds: Bounds,
       spark: Option[SparkSession] = None): Seq[String] = {
-    if (bounds.isEmpty) return snap.live
+    // unrecognized conjuncts and strictness only ever keep more: a
+    // segment excluded for `c >= v` is excluded for `c > v` too
+    val conjs = bounds.flatten
+    if (conjs.isEmpty) return snap.live
     // the conjunct is an OR of its ranges: skippable only when EVERY
     // alternative is excluded. An alternative is excluded by RANGE
     // stats (min/max outside it) or — for the point alternatives
@@ -3550,11 +3489,11 @@ private[graft] case class ColStats(typeName: String, min: String,
     // absent; anything else keeps.
     def excluded(seg: String,
                  probe: (String, String, String) => Option[Boolean]): Boolean =
-      bounds.exists { case (c, kind, alts) =>
+      conjs.exists { case Conj(c, kind, alts) =>
         val p = snap.physCol(c)
         val st = snap.stats.get((seg, p))
         val statsOk = st.exists(s0 => statComparable(s0.typeName, kind))
-        alts.nonEmpty && alts.forall { case (lo, hi) =>
+        alts.nonEmpty && alts.forall { case Alt(lo, _, hi, _) =>
           val byRange = statsOk &&
             (try canPrune(st, lo, hi)
              catch { case _: NumberFormatException => false })
@@ -3588,8 +3527,8 @@ private[graft] case class ColStats(typeName: String, min: String,
       case None => rangeKept
       case Some(sp) =>
         val tasks = (for {
-          (c, kind, alts) <- bounds
-          v <- alts.collect { case (Some(lo), Some(hi)) if lo == hi => lo }
+          Conj(c, kind, alts) <- conjs
+          v <- alts.collect { case Alt(Some(lo), _, Some(hi), _) if lo == hi => lo }
           seg <- rangeKept
           p = snap.physCol(c)
           b <- snap.blooms.get((seg, p))
@@ -3731,109 +3670,42 @@ private[graft] case class ColStats(typeName: String, min: String,
     * external clone refs). */
   private def matchCounts(spark: SparkSession, dir: String, snap: State,
                           predicate: String): Map[String, (Boolean, Boolean)] = {
-    val cands = triageByBounds(snap, prunableConjuncts(spark, predicate), Some(spark))
+    val bounds = prunableConjuncts(spark, predicate)
+    val cands = triageByBounds(snap, bounds, Some(spark))
     // stats-PROVEN all-match segments classify from METADATA and skip
     // the scan: a partition-predicate DELETE/REPLACE WHERE on a
     // partitioned table (every segment single-valued, min=max,
     // zero-null recorded) drops whole segments having read NOTHING
-    val proven = allMatchByStats(snap, predicate, spark, cands)
+    val proven = allMatchByStats(snap, bounds, cands)
     matchCountsOn(spark, dir, snap, cands.filterNot(proven),
       _ => expr(predicate)) ++ proven.iterator.map(_ -> (true, true))
   }
 
-  /** Candidate segments `predicate` PROVABLY matches EVERY row of,
-    * from log metadata alone — the metadata-only half of the DML
-    * triage (exclusion's dual). Sufficient proof, strictly
-    * conservative: every top-level conjunct must be a recognized
-    * col-vs-literal shape WITH ITS STRICTNESS intact (`col > v` over
-    * min=v is NOT all-match — the shared exclusion walker collapses
-    * strict/inclusive because for pruning that is conservative, so
-    * this one re-walks carrying it), and per conjunct the segment's
-    * stats must record ZERO nulls (a null row fails every comparison)
-    * and one alternative range covering [min,max] in the comparable
-    * type domain. Anything else — unrecognized conjunct, missing/
-    * legacy stats (nulls=-1), type-family mismatch, unparseable probe
-    * — proves nothing and the segment takes the ordinary scan. */
-  private def allMatchByStats(snap: State, predicate: String,
-      spark: SparkSession, cands: Seq[String]): Set[String] = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types._
-    if (cands.isEmpty) return Set.empty
-    val parsed =
-      try spark.sessionState.sqlParser.parseExpression(predicate)
-      catch { case scala.util.control.NonFatal(_) => return Set.empty }
-    def split(e: ce.Expression): Seq[ce.Expression] = e match {
-      case ce.And(a, b) => split(a) ++ split(b)
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-        if f.nameParts.map(_.toLowerCase) == Seq("between") &&
-          f.arguments.size == 3 && !f.isDistinct && f.filter.isEmpty =>
-        split(ce.And(ce.GreaterThanOrEqual(f.arguments(0), f.arguments(1)),
-          ce.LessThanOrEqual(f.arguments(0), f.arguments(2))))
-      case ce.Between(input, lower, upper, _) =>
-        split(ce.And(ce.GreaterThanOrEqual(input, lower),
-          ce.LessThanOrEqual(input, upper)))
-      case other => Seq(other)
-    }
-    def attr(e: ce.Expression): Option[String] = e match {
-      case a: UnresolvedAttribute if a.nameParts.size == 1 =>
-        Some(a.nameParts.head)
-      case a: ce.AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def lit(e: ce.Expression): Option[(String, Char)] = literalBound(e)
-    // one recognized conjunct = (col, kind, alternatives), each
-    // alternative (lo, loStrict, hi, hiStrict); the conjunct matches a
-    // whole segment when SOME alternative's range covers [min,max]
-    type Alt = (Option[String], Boolean, Option[String], Boolean)
-    type Conj = (String, Char, Seq[Alt])
-    def cmp(a: ce.Expression, b: ce.Expression,
-            mk: String => Alt, flip: String => Alt): Option[Conj] =
-      attr(a).flatMap(c => lit(b).map { case (v, k) => (c, k, Seq(mk(v))) })
-        .orElse(attr(b).flatMap(c =>
-          lit(a).map { case (v, k) => (c, k, Seq(flip(v))) }))
-    val mapped: Seq[Option[Conj]] = split(parsed).map {
-      case ce.EqualTo(a, b) =>
-        cmp(a, b, v => (Some(v), false, Some(v), false),
-          v => (Some(v), false, Some(v), false))
-      case ce.GreaterThan(a, b) =>
-        cmp(a, b, v => (Some(v), true, None, false),
-          v => (None, false, Some(v), true))
-      case ce.GreaterThanOrEqual(a, b) =>
-        cmp(a, b, v => (Some(v), false, None, false),
-          v => (None, false, Some(v), false))
-      case ce.LessThan(a, b) =>
-        cmp(a, b, v => (None, false, Some(v), true),
-          v => (Some(v), true, None, false))
-      case ce.LessThanOrEqual(a, b) =>
-        cmp(a, b, v => (None, false, Some(v), false),
-          v => (Some(v), false, None, false))
-      case ce.In(a, list) if list.nonEmpty && list.size <= 1024 =>
-        attr(a).flatMap { c =>
-          val ls = list.map(lit)
-          if (ls.exists(_.isEmpty)) None
-          else ls.flatten.map(_._2).distinct match {
-            case Seq(k) => Some((c, k, ls.flatten.map {
-              case (v, _) => (Some(v), false, Some(v), false): Alt }))
-            case _ => None
-          }
-        }
-      case _ => None
-    }
-    if (mapped.isEmpty || mapped.exists(_.isEmpty)) return Set.empty
-    val conjuncts = mapped.flatten
+  /** Candidate segments a predicate, walked into `bounds` by
+    * [[conjunctBoundsOf]], PROVABLY matches EVERY row of, from log
+    * metadata alone — the metadata-only half of the DML triage
+    * (exclusion's dual). Sufficient proof, strictly conservative:
+    * every top-level conjunct must be recognized, and per conjunct the
+    * segment's stats must record ZERO nulls (a null row fails every
+    * comparison) and one alternative range covering [min,max] in the
+    * comparable type domain, WITH ITS STRICTNESS (`col > v` over min=v
+    * is NOT all-match). Anything else — unrecognized conjunct,
+    * missing/legacy stats (nulls=-1), type-family mismatch, unparseable
+    * probe — proves nothing and the segment takes the ordinary scan. */
+  private def allMatchByStats(snap: State, bounds: Bounds,
+                              cands: Seq[String]): Set[String] = {
+    if (cands.isEmpty || bounds.isEmpty || bounds.exists(_.isEmpty)) return Set.empty
     def covers(tn: String, mn: String, mx: String, alt: Alt): Boolean = {
-      val (lo, loStrict, hi, hiStrict) = alt
       // lo covers min when lo < min (always) or lo == min (inclusive
       // only); dually for hi/max — strict bounds exclude the boundary
-      def loOk = lo.forall(l =>
-        statLt(tn, l, mn) || (!loStrict && !statLt(tn, mn, l)))
-      def hiOk = hi.forall(h =>
-        statLt(tn, mx, h) || (!hiStrict && !statLt(tn, h, mx)))
+      def loOk = alt.lo.forall(l =>
+        statLt(tn, l, mn) || (!alt.loStrict && !statLt(tn, mn, l)))
+      def hiOk = alt.hi.forall(h =>
+        statLt(tn, mx, h) || (!alt.hiStrict && !statLt(tn, h, mx)))
       try loOk && hiOk catch { case _: NumberFormatException => false }
     }
     cands.filter { seg =>
-      conjuncts.forall { case (c, kind, alts) =>
+      bounds.flatten.forall { case Conj(c, kind, alts) =>
         snap.stats.get((seg, snap.physCol(c))).exists(st =>
           st.nulls == 0L &&
             // FLOATING-POINT columns never classify all-match: Spark
@@ -3845,7 +3717,7 @@ private[graft] case class ColStats(typeName: String, min: String,
             // dual is not.) Integrals/decimals/strings compare exactly
             // in one domain, so they stay provable.
             st.typeName != "float" && st.typeName != "double" &&
-            statComparable(st.typeName, kind.toString) &&
+            statComparable(st.typeName, kind) &&
             alts.exists(covers(st.typeName, st.min, st.max, _)))
       }
     }.toSet
@@ -3994,7 +3866,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       // loaders still observe a version per run)
       return commitOrReclaim(dir, "replace_where", Seq.empty, Seq.empty,
         snap.version, Map.empty)
-    // 1024 = the triage walkers' IN-recognition bound: staying inside
+    // 1024 = the triage walker's IN-recognition bound: staying inside
     // it keeps the touched-partition classification METADATA-ONLY (a
     // wider batch would silently degrade the triage to a full-table
     // scan — reject loud instead and point at the whole-table op)
@@ -4005,7 +3877,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     def sqlLit(v: Any): String =
       org.apache.spark.sql.catalyst.expressions.Literal(v).sql
     // ONE partition column (the common spec) compiles to the `IN`
-    // shape the triage walkers recognize (point alternatives), so
+    // shape the triage walker recognizes (point alternatives), so
     // exclusion AND all-match both classify from metadata; a
     // multi-column tuple disjunction has no conjunct form — correct
     // but conservatively scan-classified

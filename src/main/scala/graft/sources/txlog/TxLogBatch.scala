@@ -514,10 +514,6 @@ class TxLogDvReader(delegate: PartitionReader[InternalRow],
   override def close(): Unit = delegate.close()
 }
 
-/** Every segment pruned: a zero-partition scan carrying the pruned
-  * schema (the planner still resolves the relation's output from it).
-  * The reader factory is unreachable by construction — zero
-  * partitions — and throws rather than fabricate rows. */
 object TxLogBatch {
   /** Segment dirs among a frame's ACTUAL planned scan files — the
     * exact pin for "pruning reached the plan" assertions. Neither of
@@ -554,6 +550,10 @@ object TxLogBatch {
   }
 }
 
+/** Every segment pruned: a zero-partition scan carrying the pruned
+  * schema (the planner still resolves the relation's output from it).
+  * The reader factory is unreachable by construction — zero
+  * partitions — and throws rather than fabricate rows. */
 class TxLogEmptyScan(schema: StructType) extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this

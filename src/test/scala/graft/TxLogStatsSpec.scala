@@ -388,7 +388,7 @@ class TxLogStatsSpec extends SparkTestBase {
     assert(TxLog.commitOp(dir, 0) == "stream-0" && TxLog.commitOp(dir, 1) == "stream-1")
   }
 
-  test("CONCURRENT duplicates of one batch id apply exactly once (append + MoR merge)") {
+  test("CONCURRENT duplicates of a batch id apply exactly once (every stream op)") {
     // the cross-process at-least-once race: two writers replay the SAME
     // batch id concurrently — the dedup check and the commit run against
     // one snapshot, so the loser either conflicts-and-skips or observes
@@ -418,12 +418,15 @@ class TxLogStatsSpec extends SparkTestBase {
       s"batch 7 must commit exactly once, got $appendResults")
     assert(TxLog.read(spark, dir).filter("id = 1").count() == 1)
     // no orphaned staging segment from the losing duplicate
-    val recorded = (0 to TxLog.headVersion(dir))
-      .flatMap(v => TxLog.liveSegments(dir, v)).toSet
-    val onDisk = new java.io.File(dir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("seg-"))
-      .map(_.getName).toSet
-    assert(onDisk == recorded, s"leaked segments: ${onDisk -- recorded}")
+    def assertNoLeak(): Unit = {
+      val recorded = (0 to TxLog.headVersion(dir))
+        .flatMap(v => TxLog.liveSegments(dir, v)).toSet
+      val onDisk = new java.io.File(dir).listFiles
+        .filter(f => f.isDirectory && f.getName.startsWith("seg-"))
+        .map(_.getName).toSet
+      assert(onDisk == recorded, s"leaked segments: ${onDisk -- recorded}")
+    }
+    assertNoLeak()
     val mergeResults = race(
       TxLog.mergeStreamMoR(spark, dir,
         Seq((1L, "a2"), (2L, "c")).toDF("id", "v"), "id", batchId = 8L))
@@ -431,6 +434,13 @@ class TxLogStatsSpec extends SparkTestBase {
       s"batch 8 must merge exactly once, got $mergeResults")
     assert(TxLog.read(spark, dir).orderBy("id").as[(Long, String)].collect()
       .toList == List((0L, "seed"), (1L, "a2"), (2L, "c")))
+    val overwriteResults = race(
+      TxLog.overwriteStream(Seq((3L, "o")).toDF("id", "v"), dir, batchId = 9L))
+    assert(overwriteResults.count(_.nonEmpty) == 1,
+      s"batch 9 must replace the table exactly once, got $overwriteResults")
+    assert(TxLog.read(spark, dir).as[(Long, String)].collect().toList ==
+      List((3L, "o")))
+    assertNoLeak()
   }
 
   test("merge against a stale snapshot conflicts instead of double-applying") {

@@ -12,7 +12,7 @@ import graft.sources.TxLog
   * default fill) on the staged path, the documented Update/Append
   * divergence (the engine's update-as-append marker makes the two
   * indistinguishable at the builder, so mergeKey alone selects the
-  * upsert), and a txlog source → sink relay. */
+  * upsert). */
 class TxLogStreamSinkV2Spec extends SparkTestBase {
   import spark.implicits._
   import TxLogStreamSinkSpec.stagedSegs
@@ -158,33 +158,5 @@ class TxLogStreamSinkV2Spec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(rows.size == 20 && (0L until 20L).forall(i => rows(i) == i * 10L),
       "mergeKey upserts on the v2 path regardless of declared mode")
-  }
-
-  test("native pipeline: txlog source -> txlog sink relays exactly-once") {
-    val srcTable = freshDir("graft-sinksrc")
-    val dstTable = freshDir("graft-sinkdst")
-    val ckpt = freshDir("graft-sinkckpt")
-    (0 until 6).foreach(i => TxLog.append(
-      spark.range(i * 10L, i * 10L + 10L).select(col("id"),
-        (col("id") % 5).as("k")), srcTable))
-    def relay() = spark.readStream.format("txlog")
-      .option("path", srcTable)
-      .option("maxCommitsPerTrigger", "2").load()
-      .drop("_commit_version", "_commit_op")
-      .writeStream.format("txlog")
-      .option("path", dstTable)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val q = relay()
-    try q.processAllAvailable() finally q.stop()
-    assert(TxLog.headVersion(dstTable) == 2, "6 commits / cap 2 → 3 batches")
-    assert(TxLog.read(spark, dstTable).count() == 60)
-    TxLog.append(spark.range(60L, 70L).select(col("id"),
-      (col("id") % 5).as("k")), srcTable)
-    val q2 = relay()
-    try q2.processAllAvailable() finally q2.stop()
-    val got = TxLog.read(spark, dstTable)
-    assert(got.count() == 70 && got.select("id").distinct().count() == 70,
-      "restart must deliver exactly the downtime commit, no duplicates")
   }
 }

@@ -289,6 +289,25 @@ class TxLogTriagePruneSpec extends SparkTestBase {
     // the empty append yields the empty frame, not an exception
     assert(TxLog.readCommit(spark, dir, v).count() == 0)
   }
+
+  test("all-match proof keeps strictness and needs every conjunct recognized") {
+    // each segment holds ids X00..X07 with zero nulls, so an inclusive
+    // bound at its min or max would prove the segment all-match; a
+    // strict one must not, or the boundary row is dropped with it
+    val (dir, _) = slicedTable()
+    def ids = TxLog.read(spark, dir).select("id").as[Long].collect().toSet
+    TxLog.delete(spark, dir, "id > 500 AND id <= 507")
+    assert(ids.contains(500L), "id > min must keep the min row")
+    TxLog.delete(spark, dir, "id >= 600 AND id < 607")
+    assert(ids.contains(607L), "id < max must keep the max row")
+    TxLog.delete(spark, dir, "700 < id AND id <= 707")
+    assert(ids.contains(700L), "min < id must keep the min row")
+    // `id % 2 = 0` is unrecognized: the segment must be rewritten, not
+    // dropped because its recognized conjunct covers it
+    TxLog.delete(spark, dir, "id >= 800 AND id % 2 = 0")
+    assert(ids == Set(500L, 607L, 700L, 801L, 803L, 805L, 807L), s"ids=$ids")
+  }
+
   test("float columns never classify all-match: the DOUBLE-domain literal mismatch") {
     // Spark evaluates `f = 0.1` on a float column in the DOUBLE domain,
     // where (double)0.1f != 0.1 — the predicate matches NO rows. A
