@@ -161,7 +161,7 @@ private[graft] case class ColStats(typeName: String, min: String,
   private case class Staged(segs: Seq[String], files: Map[String, SegFiles])
   private val NothingStaged = Staged(Seq.empty, Map.empty)
 
-  private case class Entry(version: Int, op: String,
+  private[sources] case class Entry(version: Int, op: String,
                            add: Seq[String], remove: Seq[String],
                            stats: Map[(String, String), ColStats],
                            blooms: Map[(String, String), BloomStats],
@@ -190,7 +190,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     * reads subtract the tombstoned (file, pos) rows. The recorded row
     * count makes the read-side broadcast decision a metadata lookup
     * (no probe job); a rewrite drops the mapping with the segment. */
-  private case class State(version: Int, live: Seq[String],
+  private[graft] case class State(version: Int, live: Seq[String],
                            stats: Map[(String, String), ColStats],
                            blooms: Map[(String, String), BloomStats],
                            streamOps: Set[String],
@@ -587,7 +587,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       case _ => None
     }
 
-  private def readEntry(dir: String, v: Int): Entry =
+  private[sources] def readEntry(dir: String, v: Int): Entry =
     parse(dir, v,
       new String(store(dir).readBytes(entryPath(dir, v)), "UTF-8").linesIterator.toSeq)
 
@@ -675,7 +675,7 @@ private[graft] case class ColStats(typeName: String, min: String,
   /** Replayed state as of `asOf` (-1 = head): newest usable checkpoint
     * plus the tail entries after it — the O(checkpoint + tail) read
     * path. Requires `asOf` to exist when given. */
-  private def state(dir: String, asOf: Int = -1): State = {
+  private[graft] def state(dir: String, asOf: Int = -1): State = {
     val st = store(dir)
     require(asOf < 0 || st.exists(entryPath(dir, asOf)),
       s"version $asOf does not exist in $dir (head=${headVersion(dir)})")
@@ -812,7 +812,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     name.startsWith("/") || name.contains(":/")
 
   /** Resolve a segment/sidecar reference to its filesystem path. */
-  private def segPath(dir: String, name: String): String =
+  private[sources] def segPath(dir: String, name: String): String =
     if (isExternal(name)) name else s"$dir/$name"
 
   /** The store that can address a reference: an EXTERNAL ref may live
@@ -1261,7 +1261,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * to the matching dirs and partition-predicate DELETE/REPLACE WHERE
     * classify whole segments as all-match drops — metadata-only, no
     * row rewrites. Write invariants (CHECK constraints, provided
-    * generated columns) scan the staging ONCE before promotion.
+    * generated columns) scan the promoted segments ONCE, planned from
+    * their record; a violation deletes them.
     * Zero-row batches stage no leaves and return empty. */
   private def newSegments(dir: String, df: DataFrame,
                           applyDefaults: Boolean = true,
@@ -1289,12 +1290,6 @@ private[graft] case class ColStats(typeName: String, min: String,
         else st.list(s"$dir/$staging$rel").filter(_.contains("="))
           .sorted.flatMap(d => leaves(s"$rel/$d", depth + 1))
       val found = leaves("", 0)
-      // the invariant scan reads the staged bytes once, pre-promotion
-      // (the inferred __graft_part_* path columns ride along unused);
-      // a zero-row batch staged no leaves — nothing to validate
-      if (found.nonEmpty)
-        enforceWriteInvariants(dir, staging, snap, providedGen)(
-          df.sparkSession.read.parquet(s"$dir/$staging"))
       val promoted = scala.collection.mutable.ArrayBuffer.empty[String]
       val parts = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Long)]]
       try {
@@ -1319,10 +1314,17 @@ private[graft] case class ColStats(typeName: String, min: String,
           case (seg, (f, _) +: _) =>
             graftshim.LogScan.footerSchema(df.sparkSession, s"$dir/$seg/$f")
         }.flatten.map(_.json)
-        Staged(promoted.toSeq, schema.fold(Map.empty[String, SegFiles])(js =>
+        val staged = Staged(promoted.toSeq, schema.fold(Map.empty[String, SegFiles])(js =>
           promoted.zip(parts).collect {
             case (seg, fs) if fs.nonEmpty => seg -> SegFiles(js, fs)
           }.toMap))
+        // the invariant scan reads the promoted segments once, planned
+        // from their record; a zero-row batch staged no leaves —
+        // nothing to validate
+        if (promoted.nonEmpty)
+          enforceWriteInvariants(dir, staging, snap, providedGen)(scanSegments(
+            df.sparkSession, dir, snap.withFiles(staged.files), staged.segs))
+        staged
       } catch {
         // a mid-promotion failure must not leak the already-renamed
         // half: the caller's reclaim scope sees these names only after
@@ -1477,7 +1479,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     * and its schema inferred. The schema is the one that path picks:
     * `schema` when given; else with `mergeSchema` the union of the
     * segments' schemas in scan order, without it the first segment's. */
-  private def scanSegments(spark: SparkSession, dir: String, s: State,
+  private[sources] def scanSegments(spark: SparkSession, dir: String, s: State,
       segs: Seq[String], mergeSchema: Boolean = false,
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     import org.apache.spark.sql.types.{DataType, StructType}
@@ -1557,31 +1559,37 @@ private[graft] case class ColStats(typeName: String, min: String,
                       schema: Option[org.apache.spark.sql.types.StructType] = None,
                       withMeta: Boolean = false): DataFrame = {
     val base = scanSegments(spark, dir, s, segs, mergeSchema, schema)
-    val probed = segs.flatMap(seg =>
-      s.dvs.getOrElse(seg, Seq.empty).map { case (dv, rows) => (dv, rows) })
-    val dvNames = probed.map(_._1).distinct
-    if (dvNames.isEmpty && !withMeta) return applyMapping(base, s)
-    val withM = base
+    val probed = segs.flatMap(s.dvs.getOrElse(_, Seq.empty))
+    if (probed.isEmpty && !withMeta) return applyMapping(base, s)
+    val applied = applyMapping(dvJoin(spark, dir, base, segs, probed, "left_anti"), s)
+    if (withMeta) applied else applied.drop("__file", "__pos")
+  }
+
+  /** `scan` of `segs` with the per-row (`__file`, `__pos`) provenance
+    * columns, joined by them to the tombstones of the sidecars in
+    * `dvs` — (sidecar, tombstone rows) per (segment, sidecar) pair:
+    * `left_anti` keeps the live rows, `left_semi` the tombstoned
+    * pre-images. The anti join dedupes its tombstones (a row two
+    * sidecars tombstone is one build row); a semi join matches each
+    * row once anyway, so it skips that aggregate's shuffle. The
+    * commit-recorded counts size the broadcast ([[BroadcastDvLimit]]):
+    * a metadata lookup, no Spark job, and only the probed segments'
+    * tombstones count. Any legacy unknown count (-1) keeps the
+    * shuffle, which is always correct. */
+  private def dvJoin(spark: SparkSession, dir: String, scan: DataFrame,
+                     segs: Seq[String], dvs: Seq[(String, Long)],
+                     how: String): DataFrame = {
+    val withM = scan
       .withColumn("__file", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
-    val applied =
-      if (dvNames.isEmpty) withM
-      else {
-        val tomb0 = tombstones(spark, dir, dvNames, segs).distinct()
-        // metadata-only sizing: sum of the commit-recorded tombstone
-        // counts for the probed segments; any legacy unknown (-1)
-        // disables the broadcast (shuffle is always correct)
-        val known = probed.forall(_._2 >= 0)
-        val tombRows = probed.map(_._2).sum
-        val tomb =
-          if (known && tombRows <= BroadcastDvLimit) broadcast(tomb0)
-          else tomb0
-        withM.join(tomb,
-          withM("__file") === tomb("file") && withM("__pos") === tomb("pos"),
-          "left_anti")
-      }
-    if (withMeta) applyMapping(applied, s)
-    else applyMapping(applied, s).drop("__file", "__pos")
+    if (dvs.isEmpty) return withM
+    val coords = tombstones(spark, dir, dvs.map(_._1).distinct, segs)
+    val tomb0 = if (how == "left_anti") coords.distinct() else coords
+    val tomb =
+      if (dvs.forall(_._2 >= 0) && dvs.map(_._2).sum <= BroadcastDvLimit) broadcast(tomb0)
+      else tomb0
+    withM.join(tomb,
+      withM("__file") === tomb("file") && withM("__pos") === tomb("pos"), how)
   }
 
   /** The (file, pos) tombstones of the sidecars `dvNames` on `segs`.
@@ -1630,8 +1638,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * chained renames it can transiently alias two columns onto one
     * name and emit duplicates; the simultaneous form cannot. Names not
     * in the mapping pass through; zero data movement either way. */
-  private[sources] def relabel(df: DataFrame,
-                               mapping: Map[String, String]): DataFrame =
+  private def relabel(df: DataFrame,
+                      mapping: Map[String, String]): DataFrame =
     if (mapping.isEmpty) df
     else df.toDF(df.columns.map(c => mapping.getOrElse(c, c)): _*)
 
@@ -4089,10 +4097,10 @@ private[graft] case class ColStats(typeName: String, min: String,
   /** Typed retention error for HISTORICAL reads whose bytes a vacuum
     * reclaimed — "version N was vacuumed", not a mid-plan
     * PATH_NOT_FOUND that reads like corruption. Only called on
-    * explicitly historical paths (time travel, readCommit): the head
-    * read stays zero-overhead, a vacuum never reclaims head bytes, and
-    * the historical existence probe is O(that version's segments) of
-    * driver metadata. */
+    * explicitly historical paths (time travel, readCommit, the change
+    * feeds): the head read stays zero-overhead, a vacuum never
+    * reclaims head bytes, and the historical existence probe is
+    * O(that version's segments) of driver metadata. */
   private def requireRetained(dir: String, version: Int,
                               paths: Seq[String]): Unit = {
     val gone = missingAdds(dir, paths)
@@ -4215,18 +4223,62 @@ private[graft] case class ColStats(typeName: String, min: String,
       .filter(e => e.add.nonEmpty && !RearrangeOps(e.op))
       .toSeq
     if (newer.isEmpty) // a poll with nothing new: empty, schema-preserving
-      return read(spark, dir, mergeSchema = true).limit(0)
-        .withColumn("_commit_version", lit(0L))
-        .withColumn("_commit_op", lit(""))
+      return noChanges(spark, read(spark, dir, mergeSchema = true).schema)
     val hs = state(dir)
     newer.map { e =>
+      requireRetained(dir, e.version, e.add.map(segPath(dir, _)))
       // mergeSchema + allowMissingColumns: an add-column commit must not
       // break the feed; pre-evolution rows surface null for new columns
-      applyMapping(scanSegments(spark, dir, hs, e.add, mergeSchema = true), hs)
-        .withColumn("_commit_version", lit(e.version.toLong))
-        .withColumn("_commit_op", lit(e.op))
+      applyMapping(commitScan(spark, dir, hs, e, e.add, mergeSchema = true), hs)
     }.reduce(_ unionByName(_, allowMissingColumns = true))
   }
+
+  /** Segments `segs` of commit `e` — its add set, cdc sidecars or
+    * pre-image segments — read through [[scanSegments]] (physical
+    * names) and tagged `_commit_version` and `_commit_op`: the one
+    * segment read of the change surfaces. */
+  private def commitScan(spark: SparkSession, dir: String, s: State, e: Entry,
+      segs: Seq[String], mergeSchema: Boolean = false,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    scanSegments(spark, dir, s, segs, mergeSchema, schema)
+      .withColumn("_commit_version", lit(e.version.toLong))
+      .withColumn("_commit_op", lit(e.op))
+
+  /** The change frame of a poll that found nothing: `data` and the
+    * commit tags, no rows. */
+  private def noChanges(spark: SparkSession,
+                        data: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), data)
+      .withColumn("_commit_version", lit(0L))
+      .withColumn("_commit_op", lit(""))
+
+  /** The stream source's add-set batch: each commit's add set read with
+    * the explicit physical `schema`, relabeled through `s`'s mapping. */
+  private[sources] def addSets(spark: SparkSession, dir: String, s: State,
+      commits: Seq[Entry], schema: org.apache.spark.sql.types.StructType): DataFrame =
+    commits.map(e =>
+      relabel(commitScan(spark, dir, s, e, e.add, schema = Some(schema)), s.renames)
+    ).reduce(_ unionByName _)
+
+  /** `s` with the scan record of the segments `commits` added, read
+    * from their own `file=` lines — a stream's per-batch record without
+    * a state replay. Only a schema id that neither `commits` nor `s`
+    * define (first committed after `s`, outside `commits`) takes one
+    * head-state replay for the record. */
+  private[sources] def withCommits(dir: String, s: State, commits: Seq[Entry]): State = {
+    def defs(st: State) = st.files.valuesIterator.map(f => f.schemaId -> f.schema).toMap
+    val fs = commits.flatMap(_.files)
+    val known = defs(s) ++ commits.flatMap(_.schemas)
+    s.withFiles(segFilesOf(fs,
+      (if (fs.forall(f => known.contains(f._2))) known else defs(state(dir)) ++ known).get))
+  }
+
+  /** What the row-level change feed reads of commit `e`: its cdc
+    * sidecars when it recorded them, else its add set plus the DV
+    * sidecars and the base segments their pre-images resolve against. */
+  private[sources] def changeReads(e: Entry): Seq[String] =
+    if (e.cdc.nonEmpty) e.cdc.map(_._1)
+    else (e.add ++ e.dvs.map(_._1) ++ e.dvs.map(_._2)).distinct
 
   /** Row-level CHANGE DATA FEED (Delta's CDF surface, completing the
     * add-only [[readChangesSince]]): every row-level change of the
@@ -4263,10 +4315,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     val data = read(spark, dir, mergeSchema = true).schema
     changeFeedSlice(spark, dir, fromVersion + 1, headVersion(dir), data,
         coarseRewrites)
-      .getOrElse(read(spark, dir, mergeSchema = true).limit(0)
-        .withColumn("_commit_version", lit(0L))
-        .withColumn("_commit_op", lit(""))
-        .withColumn("_change_type", lit("")))
+      .getOrElse(noChanges(spark, data).withColumn("_change_type", lit("")))
   }
 
   /** Commit ops that provably change NO logical row — the table is
@@ -4297,7 +4346,6 @@ private[graft] case class ColStats(typeName: String, min: String,
     val hs = state(dir)
     val physData = org.apache.spark.sql.types.StructType(
       data.map(f => f.copy(name = hs.physCol(f.name))))
-    def relabel(df: DataFrame): DataFrame = TxLog.relabel(df, hs.renames)
     val inRange = (math.max(0, from) to to).iterator
       .filter(v => st.exists(entryPath(dir, v)))
       .map(v => readEntry(dir, v))
@@ -4345,56 +4393,40 @@ private[graft] case class ColStats(typeName: String, min: String,
               "such commits.")
         }
     }
-    def tagged(df: DataFrame, v: Int, op: String, ct: String): DataFrame =
-      relabel(df).withColumn("_commit_version", lit(v.toLong))
-        .withColumn("_commit_op", lit(op))
-        .withColumn("_change_type", lit(ct))
+    def tagged(df: DataFrame, ct: String): DataFrame =
+      relabel(df, hs.renames).withColumn("_change_type", lit(ct))
+    def scan(e: Entry, segs: Seq[String]): DataFrame =
+      commitScan(spark, dir, hs, e, segs, schema = Some(physData))
     val parts = newer.flatMap { e =>
+      // typed retention error, not a mid-job FileNotFound: the log
+      // plans recorded segments without touching their directories, and
+      // vacuum reclaims segments, DV and cdc sidecars past the version
+      // horizon, so a feed read past retention degrades exactly like
+      // time travel
+      requireRetained(dir, e.version, changeReads(e).map(segPath(dir, _)))
       // a commit that RECORDED its row-level changes (CoW DML under
       // enableChangeDataFeed) is exact by construction: emit its cdc
       // sidecars with their recorded change types and NOTHING else —
       // the add set is rewrite output (kept rows / post-DML segments),
       // not changes
-      if (e.cdc.nonEmpty) {
-        // typed retention error, not a mid-job FileNotFound: cdc
-        // sidecars age out with the version horizon, so a feed read
-        // past retention degrades exactly like time travel
-        requireRetained(dir, e.version, e.cdc.map(f => segPath(dir, f._1)))
+      if (e.cdc.nonEmpty)
         e.cdc.groupBy(_._2).toSeq.sortBy(_._1).map { case (ct, fs) =>
-          tagged(spark.read.schema(physData)
-            .parquet(fs.map(f => segPath(dir, f._1)): _*), e.version, e.op, ct)
+          tagged(scan(e, fs.map(_._1)), ct)
         }
-      }
       else {
       val added =
         if (e.add.isEmpty) None
-        else {
-          val ct = if (e.op == "update_mor") "update_postimage" else "insert"
-          Some(tagged(spark.read.schema(physData)
-            .parquet(e.add.map(s => segPath(dir, s)): _*), e.version, e.op, ct))
-        }
+        else Some(tagged(scan(e, e.add),
+          if (e.op == "update_mor") "update_postimage" else "insert"))
       val removed =
         if (e.dvs.isEmpty) None
         else {
-          val ct = if (e.op == "update_mor") "update_preimage" else "delete"
-          val segs = e.dvs.map(_._1).distinct
-          val dvNames = e.dvs.map(_._2).distinct
-          val coords = tombstones(spark, dir, dvNames, segs)
           // pre-images from the raw segment bytes (the current state
           // has them tombstoned; the segments themselves are immutable)
-          val scan = spark.read.schema(physData)
-            .parquet(segs.map(s => segPath(dir, s)): _*)
-            .withColumn("__file", col("_metadata.file_path"))
-            .withColumn("__pos", col("_metadata.row_index"))
-          // commit-recorded counts size the broadcast, like segScan
-          val small = e.dvs.forall(_._3 >= 0) &&
-            e.dvs.map(_._3).sum <= BroadcastDvLimit
-          val side = if (small) broadcast(coords) else coords
-          val pre = scan.join(side,
-              scan("__file") === side("file") && scan("__pos") === side("pos"),
-              "left_semi")
-            .drop("__file", "__pos")
-          Some(tagged(pre, e.version, e.op, ct))
+          val segs = e.dvs.map(_._1).distinct
+          val pre = dvJoin(spark, dir, scan(e, segs), segs,
+            e.dvs.map(d => (d._2, d._3)), "left_semi").drop("__file", "__pos")
+          Some(tagged(pre, if (e.op == "update_mor") "update_preimage" else "delete"))
         }
       added.toSeq ++ removed.toSeq
       }
@@ -4503,18 +4535,11 @@ private[graft] case class ColStats(typeName: String, min: String,
   }
 
   /** Head-state column mapping, PHYSICAL → logical — what the
-    * streaming source needs to scan stored bytes under a
-    * logical-labeled schema. Physical names are stable for a table's
-    * lifetime, so resolving once per stream start is exact. */
+    * streaming sink needs to write a logical-labeled batch as stored
+    * bytes. Physical names are stable for a table's lifetime, so
+    * resolving once per stream start is exact. */
   private[sources] def columnMapping(dir: String): Map[String, String] =
     state(dir).renames
-
-  /** Head-state DROPPED physical names — the streaming source's
-    * schema-drift guard must treat these as KNOWN (their bytes persist
-    * in pre-drop segments; footer inference over such a segment is not
-    * evidence of a new column). */
-  private[sources] def droppedColumns(dir: String): Set[String] =
-    state(dir).dropped
 
   /** The user-facing column list of a snapshot: physical footer names
     * minus drops, mapped through renames. */
@@ -4741,34 +4766,6 @@ private[graft] case class ColStats(typeName: String, min: String,
     entries(dir)
       .map(e => (e.version.toLong, e.op, e.add.size.toLong, e.remove.size.toLong))
       .toDF("version", "op", "n_added", "n_removed")
-  }
-
-  /** (op, added segment paths, isRewrite, dropped physical names,
-    * DV-referenced paths) of commit `version` for the streaming
-    * source's per-batch triage — ONE entry read answers all five
-    * questions. A commit is a REWRITE when it both adds and removes
-    * segments: its add set re-materializes rows that already streamed
-    * (compact/optimize/replace_where/CoW DML/restore/dv_coalesce's
-    * re-add) — delivering it would push the whole rewritten table
-    * through every tailing stream. Remove-only and DV-only commits are
-    * NOT rewrites: they add no bytes to deliver (the add-set contract
-    * skips them rowlessly, the documented deletion posture). The drops
-    * feed the mid-stream drift guard: every post-start drop commit
-    * passes through exactly one batch range (offsets are dense
-    * versions), so scanning the range's own entries catches it with
-    * ZERO extra metadata reads — no per-batch state replay. The DV
-    * paths (sidecars + the base segments their pre-images resolve
-    * against) and cdc sidecar paths feed the change-feed mode's vacuum
-    * interlock: CDF reads them even when the commit adds nothing, and
-    * for a cdc-recording commit it reads the cdc files INSTEAD of the
-    * adds. */
-  private[sources] def commitChange(dir: String, version: Int
-      ): (String, Seq[String], Boolean, Seq[String], Seq[String], Seq[String]) = {
-    val e = readEntry(dir, version)
-    val dvPaths = (e.dvs.map(_._1) ++ e.dvs.map(_._2)).distinct
-      .map(segPath(dir, _))
-    (e.op, e.add.map(segPath(dir, _)), e.add.nonEmpty && e.remove.nonEmpty,
-      e.drops, dvPaths, e.cdc.map(c => segPath(dir, c._1)))
   }
 
   /** Added paths of a pending stream batch that no longer exist — a

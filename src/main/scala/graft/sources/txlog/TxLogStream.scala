@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -73,10 +72,11 @@ import graft.sources.TxLog
   * a commit adding a column after the stream started — FAILS the
   * stream loud (Delta's streaming contract) instead of silently
   * dropping the new column from every subsequent batch: each batch
-  * runs one footer-read inference over ITS OWN add set (O(batch),
-  * bounded by the trigger cap — never the table) and compares field
-  * names against the construction-time schema; the fix is restarting
-  * the query, which re-resolves the merged schema. */
+  * reads the schema the log records for ITS OWN add set (O(batch),
+  * bounded by the trigger cap — never the table; no Spark job on
+  * recorded segments) and compares field names against the
+  * construction-time schema; the fix is restarting the query, which
+  * re-resolves the merged schema. */
 class TxLogSourceProvider extends StreamSourceProvider
     with org.apache.spark.sql.connector.catalog.TableProvider
     with DataSourceRegister {
@@ -395,18 +395,22 @@ private[graft] object TxLogSource {
       case None => Some(DefaultMaxCommitsPerTrigger)
     }
 
-  /** ADDED-column mid-stream drift guard: one footer-read inference
-    * over the BATCH's own read set (bounded by the admission cap, never
-    * the table), failing loud on any field outside the stream's
-    * start-time schema. */
+  /** ADDED-column mid-stream drift guard: the merged schema `s`
+    * records for the BATCH's own read set `segs` (segment or sidecar
+    * names; bounded by the admission cap, never the table — no Spark
+    * job on recorded segments, an inference over unrecorded ones),
+    * failing loud on any field outside the stream's start-time schema
+    * `physData`. Physical names `s` has DROPPED count as known: their
+    * bytes persist in pre-drop segments, so a batch schema showing them
+    * is history, not drift (without this, any batch touching a pre-drop
+    * segment would fail the stream — and a restart could never fix
+    * it). */
   def addedColumnDriftGuard(spark: org.apache.spark.sql.SparkSession,
-      dir: String, paths: Seq[String], physData: StructType,
-      droppedPhys: Set[String]): Unit =
-    if (paths.nonEmpty) {
-      val known = physData.fieldNames.toSet ++ droppedPhys
-      val drifted = spark.read.option("mergeSchema", "true")
-        .parquet(paths: _*).schema.fieldNames
-        .filterNot(known)
+      dir: String, s: TxLog.State, segs: Seq[String], physData: StructType): Unit =
+    if (segs.nonEmpty) {
+      val known = physData.fieldNames.toSet ++ s.dropped
+      val drifted = TxLog.scanSegments(spark, dir, s, segs, mergeSchema = true)
+        .schema.fieldNames.filterNot(known)
       if (drifted.nonEmpty)
         throw new IllegalStateException(
           s"txlog stream over $dir: table schema changed mid-stream " +
@@ -442,22 +446,18 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
   override val schema: StructType = StructType(data ++
     (if (changeFeed) TxLogSource.CdfMetaFields else TxLogSource.MetaFields))
 
-  // COLUMN MAPPING, resolved once per stream start: `data` carries
-  // LOGICAL labels, segment bytes carry PHYSICAL names — scan physical,
-  // re-label each batch. Physical names are stable for the table's
-  // lifetime, so a mid-stream rename cannot invalidate this (it only
-  // changes labels, which this stream pinned at start).
-  private val mapping: Map[String, String] = TxLog.columnMapping(dir)
-  private val physByLogical: Map[String, String] = mapping.map(_.swap)
+  // The head state at stream start: its COLUMN MAPPING (`data`
+  // carries LOGICAL labels, segment bytes carry PHYSICAL names — scan
+  // physical, re-label each batch), its DROPPED physical names and the
+  // scan record each batch's own entries extend. Physical names are
+  // stable for the table's lifetime, so a mid-stream rename cannot
+  // invalidate this (it only changes labels, which this stream pinned
+  // at start).
+  private val startState: TxLog.State = TxLog.state(dir)
+  private val physByLogical: Map[String, String] = startState.renames.map(_.swap)
   private val physData: StructType =
     StructType(data.map(f =>
       f.copy(name = physByLogical.getOrElse(f.name, f.name))))
-  // physical names DROPPED as of stream start: their bytes persist in
-  // pre-drop segments, so footer inference seeing them is history, not
-  // schema drift (without this, any batch touching a pre-drop segment
-  // would fail the stream — and a restart could never fix it)
-  private val droppedPhys: Set[String] = TxLog.droppedColumns(dir)
-  private def relabel(df: DataFrame): DataFrame = TxLog.relabel(df, mapping)
 
   /** Highest commit version the engine has planned or committed —
     * the anchor the per-trigger cap advances from. Learned from
@@ -544,18 +544,16 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
     noteProgress(ver(end))
     val from = math.max(floor.toLong, start.map(ver(_) + 1).getOrElse(floor.toLong)).toInt
     val to = ver(end).toInt
-    val entries = (from to to).map { v =>
-      val (op, add, rw, drops, dvPaths, cdcPaths) = TxLog.commitChange(dir, v)
-      (v, op, add, rw, drops, dvPaths, cdcPaths)
-    }
-    // DROPPED-column drift guard (the add-column twin lives below):
-    // footer inference cannot see a drop — new segments simply lack
+    val entries = (from to to).map(TxLog.readEntry(dir, _))
+    // DROPPED-column drift guard (the add-column twin lives below): a
+    // segment's schema cannot show a drop — new segments simply lack
     // the physical column and the explicit schema backfills null — so
     // catch the drop COMMIT itself as it streams through its batch
     // range. Every post-start drop passes through exactly one range
-    // (offsets are dense versions); pre-start drops are in droppedPhys
-    // and deliver fine. Zero extra reads: the entries are read anyway.
-    val lost = entries.flatMap(_._5).filterNot(droppedPhys)
+    // (offsets are dense versions); pre-start drops are in
+    // `startState.dropped` and deliver fine. Zero extra reads: the
+    // entries are read anyway.
+    val lost = entries.flatMap(_.drops).filterNot(startState.dropped)
       .filter(physData.fieldNames.contains)
       .distinct
     if (lost.nonEmpty)
@@ -564,8 +562,6 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
           "dropped mid-stream. Restart the query to pick up the evolved " +
           "schema — continuing would silently deliver null where the " +
           "stream's consumers still expect the dropped column's data.")
-    val changes = entries.filter(_._3.nonEmpty)
-      .map { case (v, op, add, rw, _, _, _) => (v, op, add, rw) }
     // REWRITE commits (add+remove) re-materialize rows that already
     // streamed — in add-set mode, delivering one would push the whole
     // rewritten table through this stream as if it were new rows (an
@@ -579,24 +575,25 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
     // loud by default (Delta's posture for change commits);
     // skipRewrites=true advances past them rowlessly too. changeFeed
     // mode resolves changes row-level instead and emits nothing for
-    // pure rearrangements.
-    val parts =
-      if (changeFeed) changes.map { case (v, op, add, _) => (v, op, add) }
+    // pure rearrangements. Remove-only and DV-only commits are not
+    // rewrites: they add no bytes to deliver.
+    val deliverable =
+      if (changeFeed) Seq.empty
       else {
-        val (rewrites, deliverable) = changes.partition(_._4)
-        val contentChanging = rewrites.filterNot(r => TxLog.RearrangeOps(r._2))
-        if (contentChanging.nonEmpty && !skipRewrites) {
-          val (v, op, _, _) = contentChanging.head
-          throw new IllegalStateException(
-            s"txlog stream over $dir: commit $v is a content-changing " +
-              s"rewrite (op=$op) — its add set re-materializes rows this " +
-              "stream already delivered; continuing would re-emit the " +
-              "rewritten data as new rows. Set " +
-              ".option(\"skipRewrites\", \"true\") to advance past rewrite " +
-              "commits rowlessly, or read .option(\"changeFeed\", \"true\") " +
-              "for row-level changes.")
-        }
-        deliverable.map { case (v, op, add, _) => (v, op, add) }
+        val (rewrites, adds) = entries.filter(_.add.nonEmpty)
+          .partition(_.remove.nonEmpty)
+        if (!skipRewrites)
+          rewrites.find(r => !TxLog.RearrangeOps(r.op)).foreach { r =>
+            throw new IllegalStateException(
+              s"txlog stream over $dir: commit ${r.version} is a content-changing " +
+                s"rewrite (op=${r.op}) — its add set re-materializes rows this " +
+                "stream already delivered; continuing would re-emit the " +
+                "rewritten data as new rows. Set " +
+                ".option(\"skipRewrites\", \"true\") to advance past rewrite " +
+                "commits rowlessly, or read .option(\"changeFeed\", \"true\") " +
+                "for row-level changes.")
+          }
+        adds
       }
     // VACUUM↔READER interlock: a vacuum that ran past this stream's
     // unprocessed offset must surface as a typed retention error, not
@@ -612,21 +609,20 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
     // wedge a legitimate restart whose already-delivered bytes were
     // since vacuumed, while a batch that genuinely needs the data
     // still dies with the typed error the moment it runs.
-    // (version, add paths to read, all paths this mode will read):
+    // (version, rows' segments, every name this mode will read):
     // change-feed mode reads DV sidecars and their base segments even
     // for add-empty commits, skips pure rearrangements entirely, and
     // for a cdc-recording commit (CoW DML under enableChangeDataFeed)
     // reads the cdc sidecars INSTEAD of the rewrite's add set
     val toRead: Seq[(Int, Seq[String], Seq[String])] =
       if (changeFeed)
-        entries.filterNot(e => TxLog.RearrangeOps(e._2))
-          .filter(e => e._3.nonEmpty || e._6.nonEmpty || e._7.nonEmpty)
-          .map(e =>
-            if (e._7.nonEmpty) (e._1, e._7, e._7)
-            else (e._1, e._3, e._3 ++ e._6))
-      else parts.map { case (v, _, add) => (v, add, add) }
+        entries.filterNot(e => TxLog.RearrangeOps(e.op))
+          .filter(e => e.add.nonEmpty || e.dvs.nonEmpty || e.cdc.nonEmpty)
+          .map(e => (e.version, if (e.cdc.nonEmpty) e.cdc.map(_._1) else e.add,
+            TxLog.changeReads(e)))
+      else deliverable.map(e => (e.version, e.add, e.add))
     for ((v, _, all) <- toRead) {
-      val gone = TxLog.missingAdds(dir, all)
+      val gone = TxLog.missingAdds(dir, all.map(TxLog.segPath(dir, _)))
       if (gone.nonEmpty)
         return dataLossBatch(from,
           s"txlog stream over $dir: commit $v's data was vacuumed " +
@@ -636,16 +632,16 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
     }
     // schema-drift guard, ADDED-column side (the drop guard lives
     // above; Delta's fail-loud streaming contract — a restart
-    // re-resolves the merged schema): one footer-read inference over
-    // THIS BATCH's read set only — O(batch), bounded by the trigger
-    // cap, never a table-wide listing — any field outside the
+    // re-resolves the merged schema): the schema the log records for
+    // THIS BATCH's delivered segments only — O(batch), bounded by the
+    // trigger cap, never a table-wide listing — any field outside the
     // start-time schema fails the stream (continuing would silently
     // drop it from every row). Scoped to `toRead`, never a skipped
     // rewrite or rearrangement: their (possibly vacuumed) files are
     // not delivered, and an added column always trips the guard on the
     // add-column commit's own batch anyway.
-    TxLogSource.addedColumnDriftGuard(spark, dir, toRead.flatMap(_._2),
-      physData, droppedPhys)
+    val record = TxLog.withCommits(dir, startState, entries)
+    TxLogSource.addedColumnDriftGuard(spark, dir, record, toRead.flatMap(_._2), physData)
     if (changeFeed) {
       // row-level mode: the slice may contain a semi JOIN (deletion-
       // vector pre-image resolution), so it is wrapped as ONE
@@ -669,14 +665,8 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
             "accept op-tagged rewrite output, or restart from a newer " +
             "startingVersion]")
       }
-    } else if (parts.isEmpty) ColumnShim.emptyStreaming(spark, schema)
-    else {
-      ColumnShim.asStreaming(parts.map { case (v, op, add) =>
-        relabel(spark.read.schema(physData).parquet(add: _*)) // resolved paths
-          .withColumn("_commit_version", lit(v.toLong))
-          .withColumn("_commit_op", lit(op))
-      }.reduce(_ unionByName _))
-    }
+    } else if (deliverable.isEmpty) ColumnShim.emptyStreaming(spark, schema)
+    else ColumnShim.asStreaming(TxLog.addSets(spark, dir, record, deliverable, physData))
   }
 
   /** The vacuum↔reader interlock's failure shape. LAZY by default (a

@@ -215,6 +215,25 @@ class TxLogCdfCowSpec extends SparkTestBase {
     assert(TxLog.readChangeFeed(spark, dir, fromVersion = 4).count() == 1)
   }
 
+  test("a change read past segment retention fails typed: vacuumed adds and DV pre-images") {
+    val dir = freshDir()
+    seed(dir)                              // v0, v1
+    TxLog.deleteMoR(spark, dir, "id = 3")  // v2: a deletion vector on v0's segment
+    TxLog.compact(spark, dir)              // v3: every segment rewritten
+    TxLog.append(Seq((500L, 1L)).toDF("id", "cents"), dir) // v4
+    TxLog.vacuum(dir, keepVersions = 2)    // reclaims v0-v2's segments and sidecar
+    def vacuumed(feed: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[IllegalStateException](feed.count())
+      assert(e.getMessage.contains("was vacuumed"), s"wrong error: ${e.getMessage}")
+    }
+    vacuumed(TxLog.readChangesSince(spark, dir, fromVersion = -1)) // v0's add set
+    vacuumed(TxLog.readChangeFeed(spark, dir, fromVersion = -1))
+    vacuumed(TxLog.readChangeFeed(spark, dir, fromVersion = 1))    // v2's pre-images
+    // inside retention both feeds still read
+    assert(TxLog.readChangesSince(spark, dir, fromVersion = 3).count() == 1)
+    assert(TxLog.readChangeFeed(spark, dir, fromVersion = 3).count() == 1)
+  }
+
   test("restore rolls the CDF flag back with the rest of governance") {
     val dir = freshDir()
     seed(dir)                        // v0, v1

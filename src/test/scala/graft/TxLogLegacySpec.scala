@@ -42,6 +42,34 @@ class TxLogLegacySpec extends SparkTestBase {
     assert(TxLog.readRange(spark, dir, "id", Some("2"), Some("3")).count() == 2)
   }
 
+  test("the change feeds and the stream's drift guard read the unrecorded segments") {
+    val dir = install()
+    val all = ('a' to 'j').zipWithIndex.map { case (n, i) => (i + 1L, n.toString, (i + 1L) * 100) }
+    def version(id: Long) = if (id <= 4) 0L else if (id <= 8) 1L else 2L
+    def note(id: Long) = if (id >= 9) "new" else null
+    // add sets as written: the deletion vector does not apply to them
+    val since = TxLog.readChangesSince(spark, dir, -1)
+    assert(since.columns.toSeq ==
+      Seq("id", "name", "cents", "_commit_version", "_commit_op", "note"))
+    assert(since.orderBy("id").collect().map(_.toSeq).toSeq == all.map { case (i, n, c) =>
+      Seq(i, n, c, version(i), "append", note(i)) })
+    // the row-level feed adds the merge-on-read delete's pre-image
+    val feed = TxLog.readChangeFeed(spark, dir, -1)
+    assert(feed.columns.toSeq == Seq("id", "name", "cents", "note",
+      "_commit_version", "_commit_op", "_change_type"))
+    assert(feed.orderBy("id", "_commit_version").collect().map(_.toSeq).toSeq ==
+      all.flatMap { case (i, n, c) =>
+        Seq(Seq(i, n, c, note(i), version(i), "append", "insert")) ++
+          (if (i == 6) Seq(Seq(i, n, c, null, 3L, "delete_mor", "delete")) else Nil)
+      })
+    // a stream started on the first segment's schema sees `note` arrive
+    val e = intercept[IllegalStateException](
+      graft.sources.txlog.TxLogSource.addedColumnDriftGuard(spark, dir,
+        TxLog.state(dir), TxLog.liveSegments(dir), TxLog.read(spark, dir).schema))
+    assert(e.getMessage.contains("schema changed mid-stream") &&
+      e.getMessage.contains("note"), e.getMessage)
+  }
+
   test("merge and update on a copy of the legacy table: recorded and legacy segments mix") {
     val dir = install()
     val legacy = TxLog.liveSegments(dir).toSet

@@ -74,6 +74,21 @@ class TxLogPartitionSpec extends SparkTestBase {
     assert(e.getMessage.contains("partition column"))
   }
 
+  test("a CHECK violation fails a partitioned append and leaves nothing behind") {
+    val dir = freshDir()
+    TxLog.setPartitionColumns(dir, Seq("day"))
+    TxLog.append(rows(1 to 2, perDay = 3), dir) // cents 0, 10, 20
+    TxLog.addConstraint(spark, dir, "cents_cap", "cents < 25")
+    val head = TxLog.headVersion(dir)
+    def dirs = new java.io.File(dir).list().toSet
+    val before = dirs
+    val e = intercept[IllegalArgumentException](TxLog.append(rows(3 to 4), dir))
+    assert(e.getMessage.contains("cents_cap"), e.getMessage)
+    assert(TxLog.headVersion(dir) == head, "no log entry for the failed append")
+    assert(dirs == before, s"left behind: ${dirs -- before}")
+    assert(content(dir).map(_._1) == Seq(100L, 101L, 102L, 200L, 201L, 202L))
+  }
+
   test("partition-predicate DELETE drops whole segments: zero rows read, zero added") {
     val dir = freshDir()
     TxLog.setPartitionColumns(dir, Seq("day"))

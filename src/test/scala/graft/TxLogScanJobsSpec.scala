@@ -43,6 +43,12 @@ class TxLogScanJobsSpec extends SparkTestBase {
       TxLog.read(spark, dir, mergeSchema = true).queryExecution.executedPlan
       TxLog.read(spark, dir).queryExecution.executedPlan
     }
+    // so does building the change feeds over every commit: add sets,
+    // cdc sidecars and deletion-vector pre-images plan from the log
+    count("change feed plans") {
+      TxLog.readChangeFeed(spark, dir, 0).queryExecution.executedPlan
+      TxLog.readChangesSince(spark, dir, 0).queryExecution.executedPlan
+    }
     // an update whose predicate the stats rule out entirely resolves
     // the table schema and triages from the log alone
     count("no-match update")(TxLog.update(spark, dir, "bucket = 1000",
@@ -51,9 +57,12 @@ class TxLogScanJobsSpec extends SparkTestBase {
     // jobs included): optimize 8, deleteRange 5, merge 33, update 12,
     // deleteMoR 6, scan plans 4, no-match update 2; merge then ran 23
     // while a limit(1).count() (two jobs) probed its insert sidecar for
-    // rows, which the sidecar's footers now answer
+    // rows, which the sidecar's footers now answer. The change feed
+    // plans started 0 jobs before they planned from the log too: each
+    // listing here stays under Spark's parallel-listing threshold
     val want = Map("optimize" -> 5, "deleteRange" -> 3, "merge" -> 21,
-      "update" -> 7, "deleteMoR" -> 3, "scan plans" -> 0, "no-match update" -> 0)
+      "update" -> 7, "deleteMoR" -> 3, "scan plans" -> 0,
+      "change feed plans" -> 0, "no-match update" -> 0)
     assert(jobs.toMap == want, s"jobs per statement: $jobs")
     // the statements did what the tape model says
     val got = TxLog.read(spark, dir)
@@ -61,5 +70,23 @@ class TxLogScanJobsSpec extends SparkTestBase {
     assert(got.filter("doc_id >= 5000").count() == 19) // 5007 sits in bucket 7
     assert(got.filter("bucket = 42").agg(min("rev")).head().getInt(0) >= 10)
     assert(got.filter("bucket = 77 AND doc_id % 3 = 0").isEmpty)
+  }
+
+  test("the stream's added-column drift guard reads recorded schemas: no job") {
+    val dir = freshDir()
+    TxLog.append(docs(0L until 10L, 0), dir)
+    TxLog.append(docs(10L until 20L, 0).withColumn("extra", lit("x")), dir)
+    val segs = TxLog.liveSegments(dir)
+    // the stream's start-time schema: the first segment's, no `extra`
+    val start = TxLog.read(spark, dir).schema
+    val guard = graft.sources.txlog.TxLogSource.addedColumnDriftGuard(
+      spark, dir, TxLog.state(dir), _: Seq[String], start)
+    val (_, quiet) = countOwnJobs(guard(segs.take(1)))
+    val (e, drifted) = countOwnJobs(intercept[IllegalStateException](guard(segs)))
+    assert(e.getMessage.contains("schema changed mid-stream") &&
+      e.getMessage.contains("extra"), e.getMessage)
+    // before the guard read the record: one footer-inference job each
+    // (1, 1)
+    assert((quiet, drifted) == ((0, 0)), s"jobs: $quiet, $drifted")
   }
 }
