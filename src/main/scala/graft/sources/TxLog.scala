@@ -812,7 +812,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     name.startsWith("/") || name.contains(":/")
 
   /** Resolve a segment/sidecar reference to its filesystem path. */
-  private[sources] def segPath(dir: String, name: String): String =
+  private def segPath(dir: String, name: String): String =
     if (isExternal(name)) name else s"$dir/$name"
 
   /** The store that can address a reference: an EXTERNAL ref may live
@@ -1561,35 +1561,34 @@ private[graft] case class ColStats(typeName: String, min: String,
     val base = scanSegments(spark, dir, s, segs, mergeSchema, schema)
     val probed = segs.flatMap(s.dvs.getOrElse(_, Seq.empty))
     if (probed.isEmpty && !withMeta) return applyMapping(base, s)
-    val applied = applyMapping(dvJoin(spark, dir, base, segs, probed, "left_anti"), s)
+    // a row two sidecars tombstone is one build row
+    val live =
+      if (probed.isEmpty) rowCoords(base)
+      else dvJoin(base, tombstones(spark, dir, probed.map(_._1).distinct, segs).distinct(),
+        probed.map(_._2), "left_anti")
+    val applied = applyMapping(live, s)
     if (withMeta) applied else applied.drop("__file", "__pos")
   }
 
-  /** `scan` of `segs` with the per-row (`__file`, `__pos`) provenance
-    * columns, joined by them to the tombstones of the sidecars in
-    * `dvs` — (sidecar, tombstone rows) per (segment, sidecar) pair:
-    * `left_anti` keeps the live rows, `left_semi` the tombstoned
-    * pre-images. The anti join dedupes its tombstones (a row two
-    * sidecars tombstone is one build row); a semi join matches each
-    * row once anyway, so it skips that aggregate's shuffle. The
-    * commit-recorded counts size the broadcast ([[BroadcastDvLimit]]):
-    * a metadata lookup, no Spark job, and only the probed segments'
-    * tombstones count. Any legacy unknown count (-1) keeps the
-    * shuffle, which is always correct. */
-  private def dvJoin(spark: SparkSession, dir: String, scan: DataFrame,
-                     segs: Seq[String], dvs: Seq[(String, Long)],
-                     how: String): DataFrame = {
-    val withM = scan
-      .withColumn("__file", col("_metadata.file_path"))
+  /** `scan` with the per-row (`__file`, `__pos`) provenance columns. */
+  private def rowCoords(scan: DataFrame): DataFrame =
+    scan.withColumn("__file", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
-    if (dvs.isEmpty) return withM
-    val coords = tombstones(spark, dir, dvs.map(_._1).distinct, segs)
-    val tomb0 = if (how == "left_anti") coords.distinct() else coords
-    val tomb =
-      if (dvs.forall(_._2 >= 0) && dvs.map(_._2).sum <= BroadcastDvLimit) broadcast(tomb0)
-      else tomb0
-    withM.join(tomb,
-      withM("__file") === tomb("file") && withM("__pos") === tomb("pos"), how)
+
+  /** [[rowCoords]] of `scan` joined by them to the (file, pos)
+    * tombstones `tomb` of one or more DV sidecars, whose recorded row
+    * counts are `counts`: `left_anti` keeps the live rows, `left_semi`
+    * the tombstoned pre-images. The counts size the broadcast
+    * ([[BroadcastDvLimit]]): a metadata lookup, no Spark job. Any
+    * legacy unknown count (-1) keeps the shuffle, which is always
+    * correct. */
+  private def dvJoin(scan: DataFrame, tomb: DataFrame, counts: Seq[Long],
+                     how: String): DataFrame = {
+    require(counts.nonEmpty, "a DV join needs at least one sidecar")
+    val withM = rowCoords(scan)
+    val t =
+      if (counts.forall(_ >= 0) && counts.sum <= BroadcastDvLimit) broadcast(tomb) else tomb
+    withM.join(t, withM("__file") === t("file") && withM("__pos") === t("pos"), how)
   }
 
   /** The (file, pos) tombstones of the sidecars `dvNames` on `segs`.
@@ -2369,7 +2368,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // time travel gets the typed retention error (head reads skip the
     // probe: a vacuum never reclaims the head's live set)
     if (asOf >= 0)
-      requireRetained(dir, asOf, s.live.map(segPath(dir, _)))
+      requireRetained(dir, asOf, s.live)
     lazy val whole = segScan(spark, dir, s, s.live, mergeSchema)
     val kept = triageByBounds(s,
       bounds(c => whole.schema.find(_.name == c).map(_.dataType)), Some(spark))
@@ -3643,7 +3642,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       resolved: Dsv2Snapshot): Seq[Dsv2Seg] = {
     val snap = resolved.snap
     if (asOf >= 0)
-      requireRetained(dir, asOf, snap.live.map(segPath(dir, _)))
+      requireRetained(dir, asOf, snap.live)
     triageByBounds(snap, conjunctBoundsOf(exprs), Some(spark)).map { seg =>
       Dsv2Seg(segPath(dir, seg), seg, snap.dvs.getOrElse(seg, Seq.empty))
     }
@@ -4089,7 +4088,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     if (e.add.isEmpty && e.remove.isEmpty && e.op == "append")
       return read(spark, dir, asOf = version).limit(0)
     require(e.add.nonEmpty, s"commit $version of $dir added no segments")
-    requireRetained(dir, version, e.add.map(segPath(dir, _)))
+    requireRetained(dir, version, e.add)
     val hs = state(dir)
     applyMapping(scanSegments(spark, dir, hs, e.add), hs)
   }
@@ -4102,8 +4101,8 @@ private[graft] case class ColStats(typeName: String, min: String,
     * reclaims head bytes, and the historical existence probe is
     * O(that version's segments) of driver metadata. */
   private def requireRetained(dir: String, version: Int,
-                              paths: Seq[String]): Unit = {
-    val gone = missingAdds(dir, paths)
+                              names: Seq[String]): Unit = {
+    val gone = missingAdds(dir, names)
     if (gone.nonEmpty)
       throw new IllegalStateException(
         s"version $version of $dir was vacuumed (${gone.size} segment(s) " +
@@ -4226,7 +4225,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       return noChanges(spark, read(spark, dir, mergeSchema = true).schema)
     val hs = state(dir)
     newer.map { e =>
-      requireRetained(dir, e.version, e.add.map(segPath(dir, _)))
+      requireRetained(dir, e.version, e.add)
       // mergeSchema + allowMissingColumns: an add-column commit must not
       // break the feed; pre-evolution rows surface null for new columns
       applyMapping(commitScan(spark, dir, hs, e, e.add, mergeSchema = true), hs)
@@ -4262,16 +4261,13 @@ private[graft] case class ColStats(typeName: String, min: String,
 
   /** `s` with the scan record of the segments `commits` added, read
     * from their own `file=` lines — a stream's per-batch record without
-    * a state replay. Only a schema id that neither `commits` nor `s`
-    * define (first committed after `s`, outside `commits`) takes one
-    * head-state replay for the record. */
-  private[sources] def withCommits(dir: String, s: State, commits: Seq[Entry]): State = {
-    def defs(st: State) = st.files.valuesIterator.map(f => f.schemaId -> f.schema).toMap
-    val fs = commits.flatMap(_.files)
-    val known = defs(s) ++ commits.flatMap(_.schemas)
-    s.withFiles(segFilesOf(fs,
-      (if (fs.forall(f => known.contains(f._2))) known else defs(state(dir)) ++ known).get))
-  }
+    * a state replay. A segment whose schema id neither `s` nor
+    * `commits` define stays undescribed: its scan takes the listing
+    * path. */
+  private[sources] def withCommits(s: State, commits: Seq[Entry]): State =
+    s.withFiles(segFilesOf(commits.flatMap(_.files),
+      (s.files.valuesIterator.map(f => f.schemaId -> f.schema).toMap ++
+        commits.flatMap(_.schemas)).get))
 
   /** What the row-level change feed reads of commit `e`: its cdc
     * sidecars when it recorded them, else its add set plus the DV
@@ -4403,7 +4399,7 @@ private[graft] case class ColStats(typeName: String, min: String,
       // vacuum reclaims segments, DV and cdc sidecars past the version
       // horizon, so a feed read past retention degrades exactly like
       // time travel
-      requireRetained(dir, e.version, changeReads(e).map(segPath(dir, _)))
+      requireRetained(dir, e.version, changeReads(e))
       // a commit that RECORDED its row-level changes (CoW DML under
       // enableChangeDataFeed) is exact by construction: emit its cdc
       // sidecars with their recorded change types and NOTHING else —
@@ -4423,9 +4419,11 @@ private[graft] case class ColStats(typeName: String, min: String,
         else {
           // pre-images from the raw segment bytes (the current state
           // has them tombstoned; the segments themselves are immutable)
+          // (a semi join matches each row once: no tombstone dedupe)
           val segs = e.dvs.map(_._1).distinct
-          val pre = dvJoin(spark, dir, scan(e, segs), segs,
-            e.dvs.map(d => (d._2, d._3)), "left_semi").drop("__file", "__pos")
+          val pre = dvJoin(scan(e, segs),
+            tombstones(spark, dir, e.dvs.map(_._2).distinct, segs),
+            e.dvs.map(_._3), "left_semi").drop("__file", "__pos")
           Some(tagged(pre, if (e.op == "update_mor") "update_preimage" else "delete"))
         }
       added.toSeq ++ removed.toSeq
@@ -4768,12 +4766,16 @@ private[graft] case class ColStats(typeName: String, min: String,
       .toDF("version", "op", "n_added", "n_removed")
   }
 
-  /** Added paths of a pending stream batch that no longer exist — a
-    * vacuum ran past the reader's offset. Checked BEFORE planning the
-    * scan so the stream dies with a typed retention error instead of a
-    * mid-job FileNotFoundException that reads like corruption. */
-  private[sources] def missingAdds(dir: String, paths: Seq[String]): Seq[String] =
-    paths.filterNot(p => store(dir).isDirectory(p))
+  /** Paths of the referenced segments/sidecars `names` that no longer
+    * exist — a vacuum ran past the reader's version. Checked BEFORE
+    * planning the scan so the read dies with a typed retention error
+    * instead of a mid-job FileNotFoundException that reads like
+    * corruption. Each reference is probed through [[refStore]]: a
+    * shallow clone's borrowed refs may be addressed differently from
+    * the table. */
+  private[sources] def missingAdds(dir: String, names: Seq[String]): Seq[String] =
+    names.filterNot(n => refStore(dir, n).isDirectory(segPath(dir, n)))
+      .map(segPath(dir, _))
 
   /** The op recorded by commit `version` (append/overwrite/delete/compact). */
   def commitOp(dir: String, version: Int): String = {
@@ -4795,7 +4797,7 @@ private[graft] case class ColStats(typeName: String, min: String,
     // time travel gets the typed retention error (head reads skip the
     // probe: a vacuum never reclaims the head's live set)
     if (asOf >= 0)
-      requireRetained(dir, asOf, s.live.map(segPath(dir, _)))
+      requireRetained(dir, asOf, s.live)
     segScan(spark, dir, s, s.live, mergeSchema)
   }
 }

@@ -454,10 +454,8 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
   // invalidate this (it only changes labels, which this stream pinned
   // at start).
   private val startState: TxLog.State = TxLog.state(dir)
-  private val physByLogical: Map[String, String] = startState.renames.map(_.swap)
   private val physData: StructType =
-    StructType(data.map(f =>
-      f.copy(name = physByLogical.getOrElse(f.name, f.name))))
+    StructType(data.map(f => f.copy(name = startState.physCol(f.name))))
 
   /** Highest commit version the engine has planned or committed —
     * the anchor the per-trigger cap advances from. Learned from
@@ -622,7 +620,7 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
             TxLog.changeReads(e)))
       else deliverable.map(e => (e.version, e.add, e.add))
     for ((v, _, all) <- toRead) {
-      val gone = TxLog.missingAdds(dir, all.map(TxLog.segPath(dir, _)))
+      val gone = TxLog.missingAdds(dir, all)
       if (gone.nonEmpty)
         return dataLossBatch(from,
           s"txlog stream over $dir: commit $v's data was vacuumed " +
@@ -640,7 +638,7 @@ private[txlog] class TxLogSource(ctx: SQLContext, dir: String, floor: Int,
     // rewrite or rearrangement: their (possibly vacuumed) files are
     // not delivered, and an added column always trips the guard on the
     // add-column commit's own batch anyway.
-    val record = TxLog.withCommits(dir, startState, entries)
+    val record = TxLog.withCommits(startState, entries)
     TxLogSource.addedColumnDriftGuard(spark, dir, record, toRead.flatMap(_._2), physData)
     if (changeFeed) {
       // row-level mode: the slice may contain a semi JOIN (deletion-

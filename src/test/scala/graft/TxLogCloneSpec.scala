@@ -145,6 +145,16 @@ class TxLogCloneSpec extends SparkTestBase {
     TxLog.append(sampleDF(2100).filter(col("id") >= 2000), src)
     TxLog.cloneShallow(src, clone)
     assert(TxLog.read(spark, clone).count() == 2100)
+    // the change feeds' retention probes must resolve the borrowed refs
+    // through their own scheme too: probed through the target's, every
+    // one would read as vacuumed
+    val all = (0L until 2100L).toSeq
+    val since = TxLog.readChangesSince(spark, clone, -1)
+    assert(since.select("id").as[Long].collect().sorted.toSeq == all)
+    assert(since.select("_commit_version").distinct().as[Long].collect().toSeq == Seq(0L))
+    val feed = TxLog.readChangeFeed(spark, clone, -1)
+    assert(feed.select("id").as[Long].collect().sorted.toSeq == all)
+    assert(feed.select("_change_type").distinct().as[String].collect().toSeq == Seq("insert"))
     // external sizes must resolve through the REF's own scheme: if they
     // probed as 0 bytes, both borrowed segments would count as "small"
     // and get rewritten here
